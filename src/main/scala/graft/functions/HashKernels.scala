@@ -24,8 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-character string array per row; this expression participates in
   * whole-stage codegen via `doGenCode` (static-call kernel, the same
   * shape as TextKernels.BoundedLevenshtein) and walks the string once.
-  * Measured in ScaleProbe `ops`: the 100M-token count-min counter build
-  * drops from 26 s (interpreted, C2-warm) to ~3 s.
+  * Measured in SCALE.md § "Round-6 extension operators": the 100M-token
+  * count-min counter build drops from 26 s (interpreted, C2-warm) to
+  * ~3 s.
   *
   * Equality with the HOF form is pinned two ways: a randomized unit spec
   * (ASCII + multibyte) and the 86-query DuckDB oracle gate, which

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   * `Quantize`'s plan-literal formulation unrolls k×m distance expressions
   * into the generated code; at 64 codes/subspace the projection method
   * overflows janino's 64 KB limit and the whole stage falls out of
-  * codegen (measured in ScaleProbe `ops10`). Production PQ runs 256
-  * codes/subspace, so the codebook must NOT live in the source text.
+  * codegen (measured in SCALE.md § "Round-10 probe: IVF-PQ / IVFADC").
+  * Production PQ runs 256 codes/subspace, so the codebook must NOT live
+  * in the source text.
   * Here it rides the plan as a REFERENCE OBJECT (`ctx.addReferenceObj` —
   * a field on the generated class, like any broadcast scalar): the
   * generated code is a fixed-size kernel call regardless of k, and the

@@ -570,11 +570,11 @@ object Datasheet {
     * sums carry a two-field (sum, isEmpty) buffer each, push the
     * buffer past `spark.sql.codegen.maxFields`, and drop the whole
     * stage to interpreted Decimal boxing — measured 40 s vs 3.4 s at
-    * 500k×64 in ScaleProbe ops20), so the reduction happens in the
-    * aggregation buffer with NO row fan-out and the exchange carries
-    * sources-cardinality wide rows. Everything downstream (centroid
-    * table, dim-keyed pair join, sources²-sized output) is metadata;
-    * no vector ever crosses an exchange.
+    * 500k×64, SCALE.md § "Round-13 probes (… `ops20` …)"), so the
+    * reduction happens in the aggregation buffer with NO row fan-out
+    * and the exchange carries sources-cardinality wide rows. Everything
+    * downstream (centroid table, dim-keyed pair join, sources²-sized
+    * output) is metadata; no vector ever crosses an exchange.
     *
     * Long-sum safety is GUARDED, not assumed: the same pass tracks
     * per-source `n` and `max|v9|`, and the finish projection

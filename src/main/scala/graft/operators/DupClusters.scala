@@ -77,12 +77,12 @@ object DupClusters {
     * incident count, and a coalesce(1) contraction task on top — job
     * scheduling latency was the contention amplifier in two rounds of
     * bench artifacts). The 1M-edge default is MEASURED, not guessed
-    * (ScaleProbe `uf` mode, chains-of-5 shape, local[32]): local wins
-    * 8.4 s vs 14.5 s at 1M edges, ties at 2M (21.0 vs 19.1), loses at 4M
-    * (41.6 vs 19.9) — the crossover sits near 2M and the default stays on
-    * its safe side. The primitive long→long parent table ([[LongLongMap]])
-    * holds ~19 MB at the threshold (vs several hundred MB for a boxed
-    * HashMap[Any,Any]). Above the threshold the iterative
+    * (SCALE.md § "Union-find crossover", chains-of-5 shape, local[32]):
+    * local wins 8.4 s vs 14.5 s at 1M edges, ties at 2M (21.0 vs 19.1),
+    * loses at 4M (41.6 vs 19.9) — the crossover sits near 2M and the
+    * default stays on its safe side. The primitive long→long parent table
+    * ([[LongLongMap]]) holds ~19 MB at the threshold (vs several hundred
+    * MB for a boxed HashMap[Any,Any]). Above the threshold the iterative
     * min-label/pointer-jumping path below takes over.
     *
     * Exiting at `maxIter` without convergence means long-chain components

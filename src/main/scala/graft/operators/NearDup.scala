@@ -673,8 +673,8 @@ object NearDup {
     * (b) one per-id max-score table (one shuffle of 2·|pairs| id rows,
     * map-side combined) folded by the same |T|-conditional aggregate.
     * No distinct over a pairs×|T| explosion (measured 11.4 s → this
-    * shape at 5M pairs in ScaleProbe ops20). Thresholds with zero
-    * surviving pairs still report 0. */
+    * shape at 5M pairs, SCALE.md § "Round-13 probes (… `ops20` …)").
+    * Thresholds with zero surviving pairs still report 0. */
   def thresholdCurve(pairs: DataFrame, idA: Column, idB: Column,
                      score: Column, thresholds: Seq[Double],
                      builtAt: Double): DataFrame = {

@@ -37,7 +37,8 @@ object Quantize {
     * tests and the q95 oracle.
     *
     * Was 32 (the unrolled k×m distance expressions overflow janino's
-    * 64 KB method limit around 64 codes/subspace — ScaleProbe `ops10`).
+    * 64 KB method limit around 64 codes/subspace — SCALE.md § "Round-10
+    * probe: IVF-PQ / IVFADC").
     * r18 set it to 0 — kernels ALWAYS — after measuring where the wall
     * time of the literal path actually goes: not task compute but DRIVER
     * planning/codegen of the unrolled expression trees. Per plan
@@ -555,9 +556,9 @@ object Quantize {
   /** [[bqHamming]] unrolled at plan time for a KNOWN word count: a flat
     * `Σ_w popcount(a[w] ^ b[w])` with no lambda frames or per-row array
     * allocation — the HOF form measurably dominates the 1M-row scan
-    * (ScaleProbe `ops12`: the zip_with/aggregate scan cost as much as
-    * the full float32 dot scan; unrolled, the signature scan is the
-    * cheap pass it exists to be). */
+    * (SCALE.md § "Round-11 probes (… `ops12` …)": the zip_with/aggregate
+    * scan cost as much as the full float32 dot scan; unrolled, the
+    * signature scan is the cheap pass it exists to be). */
   private def bqHammingUnrolled(a: Column, b: Column, nWords: Int): Column =
     (0 until nWords).map { w =>
       bit_count(element_at(a, w + 1).bitwiseXOR(element_at(b, w + 1)))

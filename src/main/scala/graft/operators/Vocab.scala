@@ -24,7 +24,8 @@ object Vocab {
     * lambda would re-run the whitespace split per element access —
     * higher-order functions evaluate interpreted, with no CSE into
     * lambda bodies, so the once-per-row projection below is worth ~4× on
-    * the pair stream (measured in ScaleProbe ops, 8k-doc corpus).
+    * the pair stream (measured on the 8k-doc corpus of SCALE.md
+    * § "Round-6 extension operators").
     * Docs with < 2 tokens contribute nothing. */
   private[operators] def pairRows(df: DataFrame, idOpt: Option[Column],
       text: Column): DataFrame = {
@@ -416,7 +417,8 @@ object Vocab {
     * (split+explode+count over every sequence) per merge round. Kept as
     * the independently-derived witness for [[bpeTrain]]'s delta
     * maintenance (VocabSpec pins identical merge tables) and as the
-    * ScaleProbe `bpe` baseline; unusable beyond K ≈ 10² rounds. */
+    * baseline in SCALE.md § "BPE training K-scaling"; unusable beyond
+    * K ≈ 10² rounds. */
   def bpeTrainRecount(df: DataFrame, text: Column, rounds: Int): DataFrame = {
     require(rounds >= 1, s"need rounds >= 1, got $rounds")
     val spark = df.sparkSession

@@ -959,7 +959,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
 
   /** Per-query hit counts of an approximate arm against its exact
     * baseline — the raw recall table the floors below assert over (and
-    * what Smoke prints when re-measuring the documented figures). */
+    * what RecallMeasure prints when re-measuring the documented figures). */
   private[queries] def recallHits(qset: DataFrame, ann: DataFrame,
                          exact: DataFrame): DataFrame = {
     val hitCounts = ann.select("query_id", "neighbor_id")
@@ -1341,10 +1341,8 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     // so the fits run as concurrent driver threads and the wall is
     // max(fits), not the sum. Each fit is deterministic (seed 42, fixed
     // data) regardless of scheduling, so arm contents are unchanged.
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(q251Configs.size)
-    val armFutures = try q251Configs.map { case (nl, np) => pool.submit(
-      new java.util.concurrent.Callable[DataFrame] { override def call(): DataFrame = {
+    graft.streaming.PollOps.inParallel(q251Configs.map { case (nl, np) =>
+      () => {
       val coarse = graft.operators.Quantize.learnedCoarse(embs,
         col("embedding"), nLists = nl, seed = 42L)
       val probed = origQ.select(col("vec_id").as("query_id"),
@@ -1356,8 +1354,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
         .join(broadcast(probed), Seq("query_id"))
         .select(lit(nl).as("n_lists"), lit(np).as("n_probe"),
           array_contains(col("__probes"), col("n_list")).as("hit"))
-    }})} finally pool.shutdown()
-    armFutures.map(_.get()).reduce(_ unionByName _)
+    }}).reduce(_ unionByName _)
       .groupBy(col("n_lists"), col("n_probe"))
       .agg(count(lit(1)).as("n_exact"),
         sum(when(col("hit"), 1L).otherwise(0L)).as("n_ceiling"))
@@ -1441,10 +1438,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     // concurrent driver threads; their Spark jobs interleave on the one
     // scheduler and the wall is max(m-arms), not the sum. Each arm's
     // content is unchanged (deterministic, own dirs), so results are too.
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(q253Ms.size)
-    val armFutures = try q253Ms.map { m => pool.submit(
-      new java.util.concurrent.Callable[DataFrame] { override def call(): DataFrame = {
+    graft.streaming.PollOps.inParallel(q253Ms.map { m => () => {
       // per-m: OPQ rotation + residual codebooks + the codes index,
       // built once and re-read by all R arms (serving reads files,
       // q248/q97's discipline)
@@ -1516,8 +1510,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
           .select(lit(m).as("pq_m"), lit(r).as("shortlist_r"),
             coalesce(col("__hit"), lit(false)).as("hit"))
       }.reduce(_ unionByName _)
-    }})} finally pool.shutdown()
-    armFutures.map(_.get()).reduce(_ unionByName _)
+    }}).reduce(_ unionByName _)
       .groupBy(col("pq_m"), col("shortlist_r"))
       .agg(count(lit(1)).as("n_exact"),
         sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))

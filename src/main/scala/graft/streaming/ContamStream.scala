@@ -57,7 +57,8 @@ import graft.operators.SketchState
   * compaction both) commits data + marker in one rename, so no crash
   * point can leave a reader pruning with a modulus the layout doesn't
   * have. Passing `nBuckets > 0` pins the legacy fixed layout (the spec's
-  * exactness-at-any-modulus sweep and ScaleProbe's pruning-law witness
+  * exactness-at-any-modulus sweep and the pruning-law witness of SCALE.md
+  * § "Round-15 probe: bucket-pruned ContamStream gram index"
   * need a deterministic N).
   *
   * Scale shape per batch: one shingle explode of the BATCH (never the

@@ -44,8 +44,8 @@ import graft.operators.{NearDup, SketchState}
   * task-scheduling overhead dwarf the data I/O). When a dir's part-file
   * count exceeds max(`compactAfterFiles`, 2 × ideal) — ideal =
   * ceil(bytes / spark.sql.files.maxPartitionBytes), the layout a fresh
-  * scan would want; see `compactIfNeeded` for why the trigger must be
-  * excess-based — the ingest rewrites it to ideal files via
+  * scan would want; see [[SketchState.compactIfNeeded]] for why the
+  * trigger must be excess-based — the ingest rewrites it to ideal files via
   * [[SketchState.swapReplace]]'s write-swap-delete-rename discipline, so
   * a crash mid-compaction never loses state (a complete swap is adopted
   * by the next read; sinks get the same adoption via the entry probe).
@@ -60,20 +60,6 @@ object NearDupStream {
 
   case class BatchResult(newDocs: Long, verifiedPairs: Long)
 
-  // SketchState.exists: also ADOPTS a complete compaction swap left by a
-  // crash between the live-dir delete and the rename (the state dirs share
-  // SketchState's swap-replace protocol since compaction landed)
-  private def exists(spark: SparkSession, path: String): Boolean =
-    SketchState.exists(spark, path)
-
-  /** The shared excess-triggered compaction ([[SketchState
-    * .compactIfNeeded]] — ONE implementation for every streaming store;
-    * the trigger rationale lives on that scaladoc). Kept as the
-    * package-local seam the specs and sibling streams call. */
-  private[streaming] def compactIfNeeded(spark: SparkSession, path: String,
-      maxFiles: Int): Boolean =
-    SketchState.compactIfNeeded(spark, path, maxFiles)
-
   /** One micro-batch increment: band the new docs, probe the accumulated
     * index, verify, append sink + state. `newDocs` must carry columns
     * (id, text); ids must be globally unique across the stream's life.
@@ -84,12 +70,12 @@ object NearDupStream {
     * cost tracks the candidate set, not the corpus. Below it the plain
     * full-corpus shingle projection wins — the extra broadcast job costs
     * more than shingling a small store saves. The default crossover is
-    * MEASURED (ScaleProbe `nd` mode, SCALE.md): full-scan wins at ratio
-    * 8 (7.9 vs 10.4 s), ~tie at 32, semi-join 2× at 125 and 5.8× at 500
-    * (26.4 vs 4.5 s) — full-scan cost grows with the corpus while the
-    * semi-join's stays candidate-bounded; at corpus ≫ batch (the steady
-    * state of any long-lived stream — and any 100 TB deployment) the
-    * semi-join is the only shape that works. */
+    * MEASURED (SCALE.md § "NearDupStream verify-side crossover"):
+    * full-scan wins at ratio 8 (7.9 vs 10.4 s), ~tie at 32, semi-join 2×
+    * at 125 and 5.8× at 500 (26.4 vs 4.5 s) — full-scan cost grows with
+    * the corpus while the semi-join's stays candidate-bounded; at corpus
+    * ≫ batch (the steady state of any long-lived stream — and any 100 TB
+    * deployment) the semi-join is the only shape that works. */
   def ingestBatch(spark: SparkSession, newDocs: DataFrame, stateDir: String,
                   sinkDir: String, n: Int, bands: Int, rowsPerBand: Int,
                   threshold: Double,
@@ -100,7 +86,7 @@ object NearDupStream {
     // adopt a crash-interrupted SINK compaction swap BEFORE this batch's
     // append can recreate the live dir and orphan it (state dirs get the
     // same adoption via their own exists() probes below)
-    exists(spark, sinkDir)
+    SketchState.exists(spark, sinkDir)
     val nd = newDocs.select(col("id"), col("text")).persist()
     try {
       val nNew = nd.count() // materialize before the multi-reference fan-out
@@ -116,7 +102,7 @@ object NearDupStream {
         val probe = newBands.select(
           col("band"), col("bucket"), col("id").as("id_new"))
         val candOld =
-          if (exists(spark, bandsPath))
+          if (SketchState.exists(spark, bandsPath))
             probe.join(
               spark.read.parquet(bandsPath)
                 .select(col("band"), col("bucket"), col("id").as("id_old")),
@@ -146,7 +132,8 @@ object NearDupStream {
         //    construction for sane banding configs.
         // The ratio switch picks per batch; crossover measured in SCALE.md.
         val priorDocs =
-          if (exists(spark, docsPath)) Some(spark.read.parquet(docsPath))
+          if (SketchState.exists(spark, docsPath))
+            Some(spark.read.parquet(docsPath))
           else None
         val corpus = priorDocs.map(_.unionByName(nd)).getOrElse(nd)
         // zero-column parquet scan: footer-row-count work, not data I/O
@@ -202,10 +189,8 @@ object NearDupStream {
           // for the stream's life — same excess-triggered rewrite; rows
           // unchanged, layout-only, spec pins identical output), each
           // individually crash-safe → concurrent.
-          PollOps.inParallel(Seq(
-            () => compactIfNeeded(spark, bandsPath, compactAfterFiles),
-            () => compactIfNeeded(spark, docsPath, compactAfterFiles),
-            () => compactIfNeeded(spark, sinkDir, compactAfterFiles)))
+          PollOps.inParallel(Seq(bandsPath, docsPath, sinkDir).map(pth =>
+            () => SketchState.compactIfNeeded(spark, pth, compactAfterFiles)))
           BatchResult(nNew, nPairs)
         } finally {
           if (restrict) candMat.unpersist()

@@ -37,8 +37,8 @@ import graft.operators.{Dedup, SketchState}
   * new segments only, and the small-file wall — for the state index AND
   * the append sink, each accumulating one file-set per batch — is handled
   * by the same excess-triggered swap-replace compaction as
-  * [[NearDupStream]] (see `compactIfNeeded` for the trigger's
-  * amortization argument).
+  * [[NearDupStream]] (see [[SketchState.compactIfNeeded]] for the
+  * trigger's amortization argument).
   */
 object SegDedupStream {
 
@@ -83,8 +83,8 @@ object SegDedupStream {
           .write.mode("append").parquet(segsPath)
         val nKept = obs.get.get("n").flatMap(Option(_))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
-        NearDupStream.compactIfNeeded(spark, segsPath, compactAfterFiles)
-        NearDupStream.compactIfNeeded(spark, sinkDir, compactAfterFiles)
+        SketchState.compactIfNeeded(spark, segsPath, compactAfterFiles)
+        SketchState.compactIfNeeded(spark, sinkDir, compactAfterFiles)
         BatchResult(nNew, nKept)
       } finally fresh.unpersist()
     } finally base.unpersist()

@@ -59,7 +59,7 @@ import graft.operators.{Similarity, SketchState}
   * selection is batch × batch. State grows by distinct NEW vector values
   * only (dim × 4 B + 24 B per row), and both state and sink ride the
   * shared excess-triggered swap-replace compaction
-  * ([[NearDupStream.compactIfNeeded]]).
+  * ([[SketchState.compactIfNeeded]]).
   */
 object SemDedupStream {
 
@@ -175,8 +175,8 @@ object SemDedupStream {
               .select(col("h1"), col("h2"), col("bucket"), col("v"),
                 col("n2"))
               .write.mode("append").parquet(vecsPath)
-            NearDupStream.compactIfNeeded(spark, vecsPath, compactAfterFiles)
-            NearDupStream.compactIfNeeded(spark, sinkDir, compactAfterFiles)
+            SketchState.compactIfNeeded(spark, vecsPath, compactAfterFiles)
+            SketchState.compactIfNeeded(spark, sinkDir, compactAfterFiles)
             BatchResult(nNew, nKept)
           }
         } finally verdicts.unpersist()

@@ -6,20 +6,10 @@ import org.apache.spark.sql.SparkSession
   * Usage: sbt "runMain graft.tools.Smoke [sfDir]"
   * Not part of the driver contract — Verify/Bench are; this is the
   * fast local loop for eyeballing operator output + plans.
-  *
-  * One-off measurement probes live behind a leading mode arg so the
-  * default invocation always exercises the CORE operator surface
-  * (the r17 q251 sweep briefly replaced it wholesale — r17 ADVICE):
-  * `runMain graft.tools.Smoke q251 [sfDir]` re-runs the coarse-ceiling
-  * sweep + served-hits comparison from SCALE.md round-17.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val (mode, sfDir) = args.toList match {
-      case "q251" :: rest => ("q251", rest.headOption.getOrElse("/root/testdata/sf0.001"))
-      case "q242cc" :: rest => ("q242cc", rest.headOption.getOrElse("/root/testdata/sf0.1"))
-      case other => ("smoke", other.headOption.getOrElse("/root/testdata/sf0.001"))
-    }
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
@@ -28,35 +18,6 @@ object Smoke {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
-
-    if (mode == "q242cc") {
-      // r19 VERDICT #4 evidence: q242's connectedComponents call uses the
-      // DEFAULT localMaxEdges=1M driver union-find gate. This probe counts
-      // the LSH candidate pairs over the UNFILTERED corpus — a strict
-      // superset of q242's post-dedup edge set (dropping docs only drops
-      // pairs) — so a count <= 1M proves q242's CC runs the 3-job driver
-      // small regime, not the iterative rounds.
-      val docs = graft.sources.Tables.documents(spark, sfDir)
-      val n = graft.operators.NearDup.minhashLshPairs(docs, col("doc_id"),
-        col("text"), n = 3, bands = 16, rowsPerBand = 2, threshold = 0.8).count()
-      println(s"q242cc: LSH pair upper bound on $sfDir = $n (gate 1000000)")
-      spark.stop()
-      return
-    }
-
-    if (mode == "q251") {
-      println(s"== q251 coarse-ceiling sweep on $sfDir ==")
-      graft.queries.TestdataQueries.q251CeilingTable(spark, sfDir)
-        .orderBy("n_lists").show(20, false)
-      println(s"== served hits: q248 (8,4) vs q252 (32,16) on $sfDir ==")
-      graft.queries.TestdataQueries.q248HitsTable(spark, sfDir)
-        .agg(sum(col("hits")).as("q248_hits_sum")).show()
-      graft.queries.TestdataQueries.q248HitsTable(spark, sfDir,
-          nLists = 32, nProbe = 16)
-        .agg(sum(col("hits")).as("q252_hits_sum")).show()
-      spark.stop()
-      return
-    }
 
     import graft.functions.TextExprs
     import graft.operators.NearDup
