@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TimeExprs
 import graft.operators.Dedup
+import graft.sources.ParquetContract
 
 /** The flagship OMM trip-cancellation pipeline, re-expressed Spark-first.
   *
@@ -38,14 +39,24 @@ object CancellationPipeline {
                        vjt: DataFrame, kvv: DataFrame, kvt: DataFrame,
                        kt: DataFrame, ot: DataFrame)
 
+  object OmmTables {
+    /** The 11 relations, each looked up by its source table name. */
+    def byName(t: String => DataFrame): OmmTables = OmmTables(
+      dc = t("deviation_cases"), ad = t("affected_departures"),
+      blm = t("bulletin_localized_messages"), b = t("bulletins"),
+      dvj = t("DatedVehicleJourney"), vj = t("VehicleJourney"),
+      vjt = t("VehicleJourneyTemplate"), kvv = t("KeyVariantValue"),
+      kvt = t("KeyVariantType"), kt = t("KeyType"), ot = t("ObjectType"))
+  }
+
+  /** The 11 tables as `<dir>/<table>.parquet`, each opened with its
+    * `OmmSchemas` contract: no schema-inference job, and a footer check
+    * that fails loudly on a missing or retyped contract column. */
   def loadTables(spark: SparkSession, dir: String): OmmTables = {
-    def rd(t: String): DataFrame = spark.read.parquet(s"$dir/$t.parquet")
-    OmmTables(
-      dc = rd("deviation_cases"), ad = rd("affected_departures"),
-      blm = rd("bulletin_localized_messages"), b = rd("bulletins"),
-      dvj = rd("DatedVehicleJourney"), vj = rd("VehicleJourney"),
-      vjt = rd("VehicleJourneyTemplate"), kvv = rd("KeyVariantValue"),
-      kvt = rd("KeyVariantType"), kt = rd("KeyType"), ot = rd("ObjectType"))
+    val tables = OmmSchemas.contracts.map { case (name, schema) =>
+      name -> ParquetContract.read(spark, name, s"$dir/$name.parquet", schema)
+    }.toMap
+    OmmTables.byName(tables)
   }
 
   private val wallClockFmt =

@@ -73,11 +73,20 @@ object OmmSchemas {
     StructField("Number", IntegerType, nullable = false),
     StructField("Name", StringType)))
 
-  val tableNames: Seq[String] = Seq(
-    "deviation_cases", "affected_departures", "bulletin_localized_messages",
-    "bulletins", "DatedVehicleJourney", "VehicleJourney",
-    "VehicleJourneyTemplate", "KeyVariantValue", "KeyVariantType",
-    "KeyType", "ObjectType")
+  /** Source table name → its schema contract: the one list the parquet
+    * loader opens (`CancellationPipeline.loadTables`). */
+  val contracts: Seq[(String, StructType)] = Seq(
+    "deviation_cases" -> deviationCases,
+    "affected_departures" -> affectedDepartures,
+    "bulletin_localized_messages" -> bulletinLocalizedMessages,
+    "bulletins" -> bulletins,
+    "DatedVehicleJourney" -> datedVehicleJourney,
+    "VehicleJourney" -> vehicleJourney,
+    "VehicleJourneyTemplate" -> vehicleJourneyTemplate,
+    "KeyVariantValue" -> keyVariantValue,
+    "KeyVariantType" -> keyVariantType,
+    "KeyType" -> keyType,
+    "ObjectType" -> objectType)
 
   // --- Enum allow-lists (U4). Values are engine configuration; the fixture
   // data exercises both in-list and out-of-list values.

@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkException
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -132,10 +135,11 @@ object Mix {
     * the wrong answer to a typo'd target). Target shares are
     * normalized driver-side.
     *
-    * Scale shape: a cats-cardinality count table, a 1-row min (T), the
-    * rate table broadcast back onto a map-side filtered scan — the
-    * corpus never shuffles; the panel's realized counts are one more
-    * map-side conditional count. */
+    * Scale shape: a cats-cardinality count table collected to the
+    * driver once (T is its min), the rate table broadcast back as a local
+    * relation onto a map-side filtered scan — the corpus never shuffles;
+    * the panel's realized counts are one more map-side conditional
+    * count. */
   def rebalanceToTarget(df: DataFrame, id: Column, cat: Column,
       targets: Seq[(String, Double)], scale: Int = 1000000)
       : DataFrame = {
@@ -187,21 +191,26 @@ object Mix {
       when(col("cat") === norm.head._1, lit(norm.head._2))) {
       case (acc, (c, s)) => acc.when(col("cat") === c, lit(s))
     }
-    val cnt = df.select(cat.as("cat"))
+    // the per-target-category counts (at most one row per target) are
+    // collected once: every plan using the rates reads a local table
+    // instead of re-aggregating the corpus, and an absent target fails
+    // here as one SparkException — raised inside the plan, it failed
+    // several broadcast stages at once, and AQE surfaced a different
+    // exception type depending on how many failed before it stopped
+    val counted = df.select(cat.as("cat"))
       .filter(col("cat").isin(norm.map(_._1): _*))
       .groupBy(col("cat")).agg(count(lit(1)).as("n"))
       .select(col("cat"), col("n"), tgt.as("tgt"))
-    // a target category absent from the corpus caps T at 0 — fail fast
-    val nCats = cnt.agg(count(lit(1)).as("k"),
-      min(col("n").cast("double") / col("tgt")).as("t"))
-      .select(when(col("k") < norm.size, raise_error(lit(
-        s"rebalanceToTarget: a target category is absent from the " +
-          s"corpus (found fewer than ${norm.size} target categories)"))
-        .cast("double")).otherwise(col("t")).as("t"))
-    cnt.crossJoin(broadcast(nCats))
+    val counts = counted.collect()
+    if (counts.length < norm.size) throw new SparkException(
+      s"rebalanceToTarget: a target category is absent from the " +
+        s"corpus (found fewer than ${norm.size} target categories)")
+    // T = min(n/t): the same double division Spark's Divide makes
+    val t = counts.map(r => r.getLong(1).toDouble / r.getDouble(2)).min
+    df.sparkSession.createDataFrame(counts.toSeq.asJava, counted.schema)
       .select(col("cat"), col("n"), col("tgt"),
         least(lit(scale.toLong), floor(round(
-          col("t") * col("tgt") / col("n").cast("double") *
+          lit(t) * col("tgt") / col("n").cast("double") *
             scale.toLong, 6)).cast("long")).as("rate_bp"))
   }
 

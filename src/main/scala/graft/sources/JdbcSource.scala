@@ -49,13 +49,6 @@ object JdbcSource {
     * names; tests map to an embedded database's identifiers). */
   def loadTables(spark: SparkSession, url: String,
                  options: Map[String, String] = Map.empty,
-                 nameFor: String => String = referenceNames): OmmTables = {
-    def t(name: String): DataFrame = table(spark, url, nameFor(name), options)
-    OmmTables(
-      dc = t("deviation_cases"), ad = t("affected_departures"),
-      blm = t("bulletin_localized_messages"), b = t("bulletins"),
-      dvj = t("DatedVehicleJourney"), vj = t("VehicleJourney"),
-      vjt = t("VehicleJourneyTemplate"), kvv = t("KeyVariantValue"),
-      kvt = t("KeyVariantType"), kt = t("KeyType"), ot = t("ObjectType"))
-  }
+                 nameFor: String => String = referenceNames): OmmTables =
+    OmmTables.byName(name => table(spark, url, nameFor(name), options))
 }

@@ -7,9 +7,10 @@ import java.time.ZoneId
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.omm.{CancellationPipeline => P}
-import graft.operators.Dedup
+import graft.sources.ParquetContract
 
 /** S5/S4: the polling scheduler re-expressed as Structured Streaming
   * micro-batches (≙ Main.java:25,53–66 scheduleAtFixedRate + the Pulsar
@@ -38,13 +39,16 @@ object CancellationStream {
 
   case class PollResult(sent: Long, newTrips: Long, repeatedTrips: Long)
 
-  /** One poll ≙ one micro-batch: snapshot → parse → dedup, A2 diff against
-    * the previous poll's key set, append the envelope to the keyed sink,
-    * replace the state. Returns the per-poll counts (A3 metrics,
-    * ≙ Hand:223–224). */
   /** Slow-poll warning threshold ≙ OmmConnector.java:86–89. */
   val slowPollWarnMs = 4000L
 
+  /** The cross-poll state: the previous poll's distinct trip ids. */
+  private val stateSchema: StructType = StructType(Seq(StructField("trip_id", StringType)))
+
+  /** One poll ≙ one micro-batch: snapshot → parse → dedup, A2 diff against
+    * the previous poll's key set, append the envelope to the keyed sink,
+    * replace the state. One action fills the per-poll cache and returns
+    * all three counts (A3 metrics, ≙ Hand:223–224). */
   def pollOnce(spark: SparkSession, tablesDir: String, sinkDir: String,
                stateDir: String, mode: P.Mode, nowInstant: Instant,
                lookbackSeconds: Long, zone: String,
@@ -59,30 +63,35 @@ object CancellationStream {
       .format(DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
     // One poll = ONE evaluation of the 10-join snapshot+parse+dedup: the
     // result is persisted, the first action below materializes the cache,
-    // and the diff/count/sink/state actions all read the InMemoryRelation
-    // (asserted in CancellationStreamSpec). Without the persist each action
-    // re-ran the whole pipeline — 4 evaluations per poll, the first thing
-    // to blow the 30 s poll budget at scale.
+    // and the sink and state actions read the InMemoryRelation (asserted
+    // in CancellationStreamSpec). Without the persist each action re-ran
+    // the whole pipeline — 4 evaluations per poll, the first thing to blow
+    // the 30 s poll budget at scale.
     val tables = tableLoader.getOrElse(
       (s: SparkSession) => P.loadTables(s, tablesDir))(spark)
     val deduped = P.dedup(P.parse(
       P.snapshot(tables, mode, now, today, lookback), zone))
       .persist()
     try {
-      val sent = deduped.count() // materializes the cache
-
-      // A2: hash anti-join against the checkpointed previous key set.
-      val prevKeys: Option[DataFrame] =
+      // A2 + A3 in ONE action, which is also the one that fills the cache:
+      // rows per trip, left-joined to the previous poll's key set (a
+      // checkpointed parquet read by its contract), summed to the sent
+      // count and split into new and repeated trips. An empty snapshot
+      // gives 0 for all three.
+      val perTrip = deduped.groupBy(col("trip_id")).agg(count(lit(1)).as("n"))
+      val diffed =
         if (new java.io.File(stateDir).exists)
-          Some(spark.read.parquet(stateDir))
-        else None
-      val (newT, repT) = prevKeys match {
-        case Some(prev) =>
-          val d = Dedup.batchDiffCounts(deduped, prev, "trip_id")
-            .collect()(0)
-          (d.getLong(0), d.getLong(1))
-        case None => (deduped.select("trip_id").distinct().count(), 0L)
-      }
+          perTrip.join(ParquetContract.read(spark, "omm_state", stateDir,
+              stateSchema).select(col("trip_id").as("prev_trip")).distinct(),
+            col("trip_id") === col("prev_trip"), "left")
+        else perTrip.withColumn("prev_trip", lit(null).cast("string"))
+      val counts = diffed.agg(
+        coalesce(sum(col("n")), lit(0L)).as("sent"),
+        count(when(col("prev_trip").isNull, 1)).as("new"),
+        count(when(col("prev_trip").isNotNull, 1)).as("repeated"))
+        .collect()(0)
+      val (sent, newT, repT) =
+        (counts.getLong(0), counts.getLong(1), counts.getLong(2))
 
       // S4: keyed envelope appended per poll (≙ per-record producer.send),
       // in DC.last_modified send order (O1, applied here at the sink).

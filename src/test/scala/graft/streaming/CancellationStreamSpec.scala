@@ -3,8 +3,10 @@ package graft.streaming
 import java.nio.file.Files
 import java.time.Instant
 
+import org.apache.spark.sql.SparkSession
+
 import graft.SparkSpec
-import graft.omm.{CancellationPipeline => P, OmmFixtures => F}
+import graft.omm.{CancellationPipeline => P, OmmFixtures => F, OmmSchemas}
 
 /** S5 polling semantics: per-poll now-binding, A2 cross-poll diff via
   * checkpointed state, keyed sink accumulation, and the streaming wrapper.
@@ -43,26 +45,90 @@ class CancellationStreamSpec extends SparkSpec {
     assert(sunk.select("poll_time").distinct().count() === 2)
   }
 
+  /** Per SQL execution `f` runs: its action call site and how many
+    * parquet scans in its executed plan produced rows in it. The plan
+    * graph of an execution that reads the per-poll cache also holds the
+    * cached plan's scans, but their row metrics only count in the
+    * execution whose jobs ran them. */
+  private def scansRunBy(f: => Unit): Seq[(String, Int)] = {
+    val store = spark.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).toSet
+    f
+    // the status listener consumes events in order: once a later
+    // sentinel execution has ended, every execution of `f` has too
+    spark.range(1).tail(1)
+    val deadline = System.nanoTime() + 30_000_000_000L
+    def ended = store.executionsList().filterNot(e => before(e.executionId))
+      .filter(_.completionTime.isDefined)
+    while (!ended.exists(_.description.startsWith("tail at")) &&
+      System.nanoTime() < deadline) Thread.sleep(50)
+    val execs = ended.filterNot(_.description.startsWith("tail at"))
+    assert(execs.nonEmpty, "no SQL execution of the poll reached the status store")
+    execs.map { e =>
+      val values = store.executionMetrics(e.executionId)
+      val ran = store.planGraph(e.executionId).allNodes
+        .filter(_.name.startsWith("Scan parquet"))
+        .count(_.metrics.exists(m => m.name == "number of output rows" &&
+          values.get(m.accumulatorId).exists(_ != "0")))
+      (e.description, ran)
+    }.toSeq
+  }
+
   test("one poll evaluates the snapshot pipeline once: downstream actions " +
     "read the persisted InMemoryRelation") {
     F.ensure(spark)
-    // replicate pollOnce's structure: persist + materialize, then check the
-    // sink-side plan reads the cache instead of re-running the 10-join tree
-    val deduped = P.run(spark, F.dir, P.FromNow, F.now, F.today,
-      F.lookbackSeconds, F.zone).persist()
-    try {
-      deduped.count()
-      val envPlan = P.envelope(P.sendOrdered(deduped))
-        .queryExecution.executedPlan.toString
-      assert(envPlan.contains("InMemoryTableScan"),
-        "envelope action should scan the persisted dedup result, not " +
-          "re-evaluate the snapshot pipeline")
-      // the only parquet scans in the plan string are inside the
-      // InMemoryRelation's *origin* subtree (printed for provenance) — the
-      // executed path must hit the cache first
-      assert(envPlan.indexOf("InMemoryTableScan") < envPlan.indexOf("Scan parquet"),
-        "parquet scan precedes the cache scan — pipeline re-evaluated")
-    } finally deduped.unpersist()
+    val base = Files.createTempDirectory("streamonce").toString
+    // a poll with prior state, so the diff also scans the previous key set
+    CancellationStream.pollOnce(spark, F.dir, s"$base/sink", s"$base/state",
+      P.FromNow, t1, F.lookbackSeconds, F.zone)
+    var r: CancellationStream.PollResult = null
+    val execs = scansRunBy {
+      r = CancellationStream.pollOnce(spark, F.dir, s"$base/sink",
+        s"$base/state", P.FromNow, t2, F.lookbackSeconds, F.zone)
+    }
+    assert(r === CancellationStream.PollResult(6, 2, 3))
+    assert(execs.size >= 3, s"expected counts + sink + state, got $execs")
+    val scanning = execs.filter(_._2 > 0)
+    assert(scanning.size === 1,
+      s"the 11-table join tree ran in ${scanning.size} of the poll's " +
+        s"executions, expected one: $execs")
+    // the one action that runs it is the counting action, which also fills
+    // the cache the sink and state writes read: 11 table scans + the state
+    val (site, ran) = scanning.head
+    assert(site.startsWith("collect at CancellationStream"), site)
+    assert(ran === OmmSchemas.contracts.size + 1, s"$site ran $ran scans")
+  }
+
+  test("an empty snapshot counts 0 sent, new and repeated, with and " +
+    "without prior state") {
+    F.ensure(spark)
+    val base = Files.createTempDirectory("streamempty").toString
+    val (sink, state) = (s"$base/sink", s"$base/state")
+    val empty = Some { (s: SparkSession) =>
+      val t = P.loadTables(s, F.dir); t.copy(dc = t.dc.limit(0)) }
+    def poll(loader: Option[SparkSession => P.OmmTables]) =
+      CancellationStream.pollOnce(spark, F.dir, sink, state, P.FromNow, t2,
+        F.lookbackSeconds, F.zone, loader)
+    val none = CancellationStream.PollResult(0, 0, 0)
+    assert(poll(empty) === none, "empty snapshot, no prior state")
+    // the empty poll's state is an empty key set: every trip is new next
+    assert(poll(None) === CancellationStream.PollResult(6, 5, 0))
+    assert(poll(empty) === none, "empty snapshot over a 5-trip state")
+  }
+
+  test("duplicate trip ids in the state leave the counts unchanged") {
+    F.ensure(spark)
+    import spark.implicits._
+    def pollOver(prev: Seq[String]) = {
+      val base = Files.createTempDirectory("streamdup").toString
+      prev.toDF("trip_id").write.parquet(s"$base/state")
+      CancellationStream.pollOnce(spark, F.dir, s"$base/sink", s"$base/state",
+        P.FromNow, t2, F.lookbackSeconds, F.zone)
+    }
+    // t2's trips are 601, 602, 603, 604, 613
+    val distinctState = pollOver(Seq("601", "602", "999"))
+    assert(distinctState === CancellationStream.PollResult(6, 3, 2))
+    assert(pollOver(Seq("601", "601", "602", "999", "602", "601")) === distinctState)
   }
 
   test("streaming wrapper runs polls on the trigger heartbeat") {
