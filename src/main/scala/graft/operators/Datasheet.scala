@@ -359,10 +359,10 @@ object Datasheet {
         min(col("n2")).as("mn"), max(col("n2")).as("mx"))
   }
 
-  /** Merge two raw health tables (the stream's per-batch fold). */
-  def embeddingHealthMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("grp"))
+  /** Collapse unioned raw health rows to one per group (the stream's
+    * per-batch fold over state ∪ batch). */
+  def embeddingHealthMerge(raw: DataFrame): DataFrame =
+    raw.groupBy(col("grp"))
       .agg(sum(col("n_vecs")).as("n_vecs"),
         min(col("dim_min")).as("dim_min"), max(col("dim_max")).as("dim_max"),
         sum(col("n_zero")).as("n_zero"), sum(col("s9")).as("s9"),
@@ -617,12 +617,12 @@ object Datasheet {
     base.groupBy(col("src")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Merge two raw affinity states (the stream's per-batch fold). */
-  def sourceAffinityMerge(a: DataFrame, b: DataFrame, dims: Int)
-      : DataFrame = {
+  /** Collapse unioned raw affinity rows to one per source (the stream's
+    * per-batch fold over state ∪ batch). */
+  def sourceAffinityMerge(raw: DataFrame, dims: Int): DataFrame = {
     val aggs = Seq(sum(col("n")).as("n"), max(col("smax")).as("smax")) ++
       (0 until dims).map(i => sum(col(s"s$i")).as(s"s$i"))
-    a.unionByName(b).groupBy(col("src")).agg(aggs.head, aggs.tail: _*)
+    raw.groupBy(col("src")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Finish a raw affinity state into the reported pair panel. */

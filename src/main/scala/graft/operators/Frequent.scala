@@ -141,13 +141,11 @@ object Frequent {
     val nBatch = partials.collect { case (null, np) => np }.sum
     val batchSketch = partials.filter(_._1 != null)
       .groupMapReduce(_._1)(_._2)(_ + _)
-    val (priorSketch, priorN) =
-      if (SketchState.exists(spark, statePath)) {
-        val rows = SketchState.read(spark, statePath)
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        (rows.filter(_._1 != null).toMap,
-          rows.collect { case (null, n) => n }.sum)
-      } else (Map.empty[String, Long], 0L)
+    val prior = SketchState.readOpt(spark, statePath)
+      .fold(Array.empty[(String, Long)])(
+        _.collect().map(r => (r.getString(0), r.getLong(1))))
+    val priorSketch = prior.filter(_._1 != null).toMap
+    val priorN = prior.collect { case (null, n) => n }.sum
     val merged = compress(
       (priorSketch.keySet ++ batchSketch.keySet).map(k =>
         k -> (priorSketch.getOrElse(k, 0L) + batchSketch.getOrElse(k, 0L)))

@@ -263,11 +263,9 @@ object Mix {
           s"temperatureSampleIngestBatch: negative weight in ${r.getString(0)}")
         r.getString(0) -> r.getLong(1)
       }.toMap
-    val prior: Map[String, Long] =
-      if (SketchState.exists(spark, statePath))
-        SketchState.read(spark, statePath).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-      else Map.empty
+    val prior: Map[String, Long] = SketchState.readOpt(spark, statePath)
+      .fold(Map.empty[String, Long])(
+        _.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     val merged = (prior.keySet ++ batchTotals.keySet).toSeq.map { g =>
       g -> (prior.getOrElse(g, 0L) + batchTotals.getOrElse(g, 0L))
     }

@@ -209,10 +209,8 @@ object Sketch {
     import spark.implicits._
     val batchMin: Array[Long] = kBoundedHashes(batch, key, k)
       .distinct().orderBy(col("value").asc).limit(k).collect()
-    val prior: Array[Long] =
-      if (SketchState.exists(spark, statePath))
-        SketchState.read(spark, statePath).as[Long].collect()
-      else Array.empty[Long]
+    val prior: Array[Long] = SketchState.readOpt(spark, statePath)
+      .fold(Array.empty[Long])(_.as[Long].collect())
     val merged = (prior ++ batchMin).distinct.sorted.take(k)
     // crash-safe swap; state is ≤ k longs (see SketchState)
     SketchState.write(merged.toSeq.toDF("h"), statePath)
@@ -385,11 +383,9 @@ object Sketch {
     import spark.implicits._
     val batchMin: Array[(Long, Double)] = bottomKPairs(batch, value, uniq, k)
       .distinct().orderBy(col("_1").asc, col("_2").asc).limit(k).collect()
-    val prior: Array[(Long, Double)] =
-      if (SketchState.exists(spark, statePath))
-        SketchState.read(spark, statePath)
-          .collect().map(r => (r.getLong(0), r.getDouble(1)))
-      else Array.empty
+    val prior: Array[(Long, Double)] = SketchState.readOpt(spark, statePath)
+      .fold(Array.empty[(Long, Double)])(
+        _.collect().map(r => (r.getLong(0), r.getDouble(1))))
     val merged = (prior ++ batchMin).distinct.sorted.take(k)
     SketchState.write(merged.toSeq.toDF("h", "v"), statePath)
   }
@@ -498,11 +494,9 @@ object Sketch {
     import spark.implicits._
     val batchMap = countMinCounters(batch, key, depth, width)
       .collect().map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-    val prior: Map[(Int, Long), Long] =
-      if (SketchState.exists(spark, statePath))
-        SketchState.read(spark, statePath).collect()
-          .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap
-      else Map.empty
+    val prior: Map[(Int, Long), Long] = SketchState.readOpt(spark, statePath)
+      .fold(Map.empty[(Int, Long), Long])(_.collect()
+        .map(r => ((r.getInt(0), r.getLong(1)), r.getLong(2))).toMap)
     val merged = (prior.keySet ++ batchMap.keySet).toSeq.map { k =>
       (k._1, k._2, prior.getOrElse(k, 0L) + batchMap.getOrElse(k, 0L))
     }
@@ -618,11 +612,9 @@ object Sketch {
     val batchMap = hllRegistersByGroup(batch, group.cast("string"), key, p)
       .collect().map(r => ((r.getString(0), r.getLong(1)), r.getInt(2)))
       .toMap
-    val prior: Map[(String, Long), Int] =
-      if (SketchState.exists(spark, statePath))
-        SketchState.read(spark, statePath).collect()
-          .map(r => ((r.getString(0), r.getLong(1)), r.getInt(2))).toMap
-      else Map.empty
+    val prior: Map[(String, Long), Int] = SketchState.readOpt(spark, statePath)
+      .fold(Map.empty[(String, Long), Int])(_.collect()
+        .map(r => ((r.getString(0), r.getLong(1)), r.getInt(2))).toMap)
     val merged = (prior.keySet ++ batchMap.keySet).toSeq.map { k =>
       (k._1, k._2,
         math.max(prior.getOrElse(k, 0), batchMap.getOrElse(k, 0)))

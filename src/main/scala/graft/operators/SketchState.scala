@@ -19,11 +19,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  3. rename the swap dir onto the live path.
   * A crash in (1) leaves the live state untouched; a crash between (2)
   * and (3) leaves a COMPLETE swap dir (parquet's `_SUCCESS` marker is the
-  * completeness witness) that [[exists]]/[[read]] adopt on the next call,
-  * so the accumulated state survives every crash point. A complete swap
-  * alongside a live dir (crash inside (2), or before it) is NOT adopted:
-  * the writer never reported success for that batch, so at-most-once is
-  * the correct recovery.
+  * completeness witness) that [[exists]]/[[readOpt]] adopt on the next
+  * call, so the accumulated state survives every crash point. A complete
+  * swap alongside a live dir (crash inside (2), or before it) is NOT
+  * adopted: the writer never reported success for that batch, so
+  * at-most-once is the correct recovery.
+  *
+  * No other module knows this protocol: ingests open prior state through
+  * [[readOpt]] (one recovery gate, then the read), rewrite-fold streams
+  * commit through [[fold]] (state ∪ increment → merge → swap), and every
+  * other commit is a [[swapReplace]]/[[swapReplaceMany]] or an append
+  * maintained by [[compactIfNeeded]]/[[foldDelta]].
   */
 object SketchState {
 
@@ -31,6 +37,10 @@ object SketchState {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def swapPath(statePath: String) = new Path(statePath + ".__swap")
+
+  /** The hidden delta segment (`<path>/_delta`) an LSM-style store
+    * appends to between [[foldDelta]]s. */
+  private[graft] val deltaDir = "_delta"
 
   private def mergeLogPath(statePath: String) = new Path(statePath + ".__mlog")
   private def mergeStagePath(statePath: String) = new Path(statePath + ".__mstage")
@@ -108,12 +118,47 @@ object SketchState {
     fs.delete(stage, true)
   }
 
+  /** The live state, or None when no state was ever written: ONE
+    * [[exists]] (which recovers an interrupted swap or merge first), then
+    * the read. The gate every ingest opens its prior state through. */
+  def readOpt(spark: SparkSession, statePath: String): Option[DataFrame] =
+    if (exists(spark, statePath)) Some(spark.read.parquet(statePath))
+    else None
+
   /** The live state as a DataFrame (recovers an interrupted swap first).
     * Throws like `spark.read.parquet` when no state was ever written. */
-  def read(spark: SparkSession, statePath: String): DataFrame = {
+  def read(spark: SparkSession, statePath: String): DataFrame =
+    readOpt(spark, statePath).getOrElse(spark.read.parquet(statePath))
+
+  /** [[readOpt]] for a [[swapReplaceMany]] state: the gate runs once on
+    * the PARENT path (subtables have no swap of their own), and the
+    * returned reader opens one subtable by name. */
+  def readManyOpt(spark: SparkSession,
+                  statePath: String): Option[String => DataFrame] =
+    if (exists(spark, statePath))
+      Some(name => spark.read.parquet(new Path(statePath, name).toString))
+    else None
+
+  /** One subtable of a [[swapReplaceMany]] state (recovers the parent
+    * first). Throws like `spark.read.parquet` when no state was ever
+    * written. */
+  def readPart(spark: SparkSession, statePath: String,
+               name: String): DataFrame = {
     exists(spark, statePath)
-    spark.read.parquet(statePath)
+    spark.read.parquet(new Path(statePath, name).toString)
   }
+
+  /** The one rewrite fold of a mergeable state: with no state yet the
+    * increment IS the state; otherwise `merge` collapses state ∪ `inc`
+    * (unioned by name, state first) back to one row per key, and the
+    * result replaces the state through [[swapReplace]] — crash-safe, the
+    * caller's layout. `merge` must be associative over the union (sum,
+    * max, min, distinct — mergeable summaries), which is what makes every
+    * arrival split fold to the one-shot table. */
+  def fold(inc: DataFrame, statePath: String)(
+      merge: DataFrame => DataFrame): Unit =
+    swapReplace(readOpt(inc.sparkSession, statePath)
+      .fold(inc)(st => merge(st.unionByName(inc))), statePath)
 
   /** Replace the state with `df` (state is metadata-sized, so the
     * single-partition layout IS the right one). */
@@ -144,9 +189,8 @@ object SketchState {
     * exists once ALL subtables finished) is adopted by [[exists]] as one
     * unit. The pair is never observable half-committed.
     *
-    * Read subtables with `spark.read.parquet(s"$statePath/$name")` after
-    * an [[exists]] check on the PARENT path (subpaths have no swap of
-    * their own). */
+    * Read subtables through [[readManyOpt]] or [[readPart]], which gate
+    * on the PARENT path (subpaths have no swap of their own). */
   def swapReplaceMany(spark: SparkSession, parts: Seq[(String, DataFrame)],
                       statePath: String): Unit = {
     require(parts.nonEmpty, "swapReplaceMany needs at least one table")
@@ -170,14 +214,6 @@ object SketchState {
       spark.catalog.refreshByPath(new Path(statePath, name).toString)
     }
   }
-
-  /** [[swapReplace]] for a hive-partitioned state layout (e.g. the
-    * streaming IVF-PQ codes index partitioned by list_id): same
-    * write-swap / delete / rename discipline, the swap just carries the
-    * partition directories. */
-  def swapReplacePartitioned(df: DataFrame, statePath: String,
-                             partitionCols: String*): Unit =
-    swapReplaceWrite(df, statePath, _.partitionBy(partitionCols: _*))
 
   /** Marker files: tiny layout-metadata files (`_graft_*` — the leading
     * underscore keeps them invisible to Spark's parquet reader, like
@@ -384,18 +420,11 @@ object SketchState {
   /** Merge every over-full (partition dir, size band) group into one
     * file per group's partition dir, crash-safely WITHOUT rewriting the
     * untouched chunks (a whole-dir swap must copy every byte; this
-    * publishes by file-level rename):
-    *  1. ONE Spark job reads exactly the merge-set files (basePath keeps
-    *     hive partition columns) and writes them — clustered one file
-    *     per partition dir — into the sibling `.__mstage` dir;
-    *  2. the `.__mlog` manifest commits the plan: staged relpaths (S)
-    *     and retired originals (R);
-    *  3. [[completeMerge]] executes it — rename staged files into the
-    *     live layout, delete retired ones, drop manifest + staging.
-    * A crash before (2) leaves an orphan staging dir (clobbered by the
-    * next merge); after (2), [[exists]] replays (3) idempotently before
-    * any SketchState-gated read can observe the directory, so no reader
-    * sees duplicates. Returns false when no group is over-full. */
+    * publishes by file-level rename): ONE Spark job reads exactly the
+    * merge-set files (basePath keeps hive partition columns) and stages
+    * them — clustered one file per partition dir — for [[publishStaged]],
+    * which retires the merge set. Returns false when no group is
+    * over-full. */
   private def tieredMerge(spark: SparkSession, path: String,
       partitionCols: Seq[String],
       files: Seq[(org.apache.hadoop.fs.Path, Long)]): Boolean = {
@@ -409,29 +438,55 @@ object SketchState {
     if (mergeSet.isEmpty) return false
     val mergeKeys = mergeSet.toSet
     val live = new Path(path)
-    val fs = fsOf(spark, live)
-    val qualifiedLive = fs.makeQualified(live)
-    val stage = mergeStagePath(path)
-    val mlog = mergeLogPath(path)
-    fs.delete(stage, true) // orphan of a pre-manifest crash
-    val df = spark.read.option("basePath", qualifiedLive.toString)
-      .parquet(mergeSet.map(_.toString): _*)
-    val shaped =
+    publishStaged(spark, path, mergeSet) { stage =>
+      val df = spark.read
+        .option("basePath", fsOf(spark, live).makeQualified(live).toString)
+        .parquet(mergeSet.map(_.toString): _*)
       if (partitionCols.isEmpty) {
         val bytes = files.collect {
           case (f, len) if mergeKeys.contains(f) => len }.sum
         val target = spark.sessionState.conf.filesMaxPartitionBytes
         df.coalesce(math.max(1L, (bytes + target - 1) / target).toInt)
-          .write.mode("overwrite")
+          .write.mode("overwrite").parquet(stage)
       } else
         df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
           .write.mode("overwrite").partitionBy(partitionCols: _*)
-    shaped.parquet(stage.toString)
-    // relpaths of staged part files (mirroring the live layout) and of
-    // the retired originals — the manifest IS the commit point
-    val stageQ = fs.makeQualified(stage)
-    def rel(base: Path, f: org.apache.hadoop.fs.Path): String = {
-      val b = base.toString + "/"
+          .parquet(stage)
+    }
+    true
+  }
+
+  /** The one manifest commit both file-level publishers share
+    * ([[tieredMerge]], [[foldDelta]]):
+    *  1. clear an orphan staging dir (a pre-manifest crash's), then
+    *     `stageWrite` runs ONE Spark job writing the new files into
+    *     `.__mstage`, mirroring the live layout;
+    *  2. the `.__mlog` manifest commits the plan — staged relpaths (S)
+    *     and the `retired` originals (R). It IS the commit point, so its
+    *     creation must be atomic: a direct create+write can crash
+    *     mid-stream and leave a TRUNCATED manifest whose surviving S lines
+    *     publish staged files while the lost R lines never retire the
+    *     originals — [[completeMerge]] would then commit duplicate rows
+    *     with no later repair possible. So the full bytes go to a temp
+    *     sibling and rename; a crash before the rename is a clean
+    *     no-commit (orphan staging dir, clobbered by the next publish);
+    *  3. [[completeMerge]] executes it — rename staged files into the
+    *     live layout, delete retired ones, drop manifest + staging — and
+    *     stale listings of the path are invalidated (the renames bypass
+    *     Spark's writer path, as in [[swapReplaceWrite]]).
+    * After (2), a crash is repaired by [[exists]], which replays (3)
+    * idempotently before any SketchState-gated read can observe the
+    * directory, so no reader sees duplicates. */
+  private def publishStaged(spark: SparkSession, path: String,
+      retired: Seq[Path])(stageWrite: String => Unit): Unit = {
+    val live = new Path(path)
+    val fs = fsOf(spark, live)
+    val stage = mergeStagePath(path)
+    val mlog = mergeLogPath(path)
+    fs.delete(stage, true) // orphan of a pre-manifest crash
+    stageWrite(stage.toString)
+    def rel(base: Path, f: Path): String = {
+      val b = fs.makeQualified(base).toString + "/"
       val s = fs.makeQualified(f).toString
       require(s.startsWith(b), s"$f not under $base")
       s.drop(b.length)
@@ -442,19 +497,12 @@ object SketchState {
       while (sit.hasNext) {
         val s = sit.next()
         if (s.getPath.getName.startsWith("part-"))
-          out += rel(stageQ, s.getPath)
+          out += rel(stage, s.getPath)
       }
       out.toVector
     }
     val manifest = (staged.map("S\t" + _) ++
-      mergeSet.map(f => "R\t" + rel(qualifiedLive, f))).mkString("\n")
-    // the manifest IS the commit point, so its creation must be atomic:
-    // a direct create+write can crash mid-stream and leave a TRUNCATED
-    // manifest whose surviving S lines publish staged files while the
-    // lost R lines never retire the originals — completeMerge would then
-    // commit duplicate rows with no later repair possible. Write the full
-    // bytes to a temp sibling and rename; a crash before the rename is a
-    // clean no-commit (orphan staging dir, clobbered by the next merge).
+      retired.map(f => "R\t" + rel(live, f))).mkString("\n")
     val mlogTmp = new Path(mlog.toString + ".tmp")
     val out = fs.create(mlogTmp, true)
     try out.write(manifest.getBytes("UTF-8")) finally out.close()
@@ -462,7 +510,7 @@ object SketchState {
       throw new java.io.IOException(
         s"SketchState: manifest commit rename $mlogTmp -> $mlog failed")
     completeMerge(fs, path)
-    true
+    spark.catalog.refreshByPath(path)
   }
 
   /** LSM fold of a flat hidden delta segment (`<path>/_delta`) into the
@@ -472,15 +520,13 @@ object SketchState {
     * touched partition (per-batch small-file pressure O(batch bytes),
     * not O(partitions touched) — guide §6; see IvfPqStream).
     *
-    * Crash-safe through the SAME manifest machinery as the tiered merge:
-    *  1. ONE Spark job reads exactly the delta part files (the partition
-    *     key rides as a regular column there), clusters by `partitionCols`
-    *     and stages the partition-dir layout under `.__mstage`;
-    *  2. the `.__mlog` manifest commits the plan (S staged relpaths,
-    *     R retired `_delta/...` files) — atomically, via temp + rename;
-    *  3. [[completeMerge]] publishes by file-level rename and retires the
-    *     delta files; [[exists]] replays an interrupted fold idempotently
-    *     before any SketchState-gated read can observe duplicates.
+    * Crash-safe through the SAME manifest commit as the tiered merge:
+    * ONE Spark job reads exactly the delta part files (the partition key
+    * rides as a regular column there), clusters by `partitionCols` and
+    * stages the partition-dir layout for [[publishStaged]], which retires
+    * the `_delta/...` files; [[exists]] replays an interrupted fold
+    * idempotently before any SketchState-gated read can observe
+    * duplicates.
     * Cost is O(delta), never O(accumulated): the live partitions are not
     * read or rewritten (their band compaction remains [[compactIfNeeded]]'s
     * job, which the caller should run AFTER a fold — the live layout only
@@ -489,58 +535,29 @@ object SketchState {
     * Returns false (no job) while the delta holds ≤ `maxDeltaFiles` part
     * files. Single-writer contract, like everything here. */
   def foldDelta(spark: SparkSession, path: String,
-                partitionCols: Seq[String], maxDeltaFiles: Int,
-                deltaName: String = "_delta"): Boolean = {
+                partitionCols: Seq[String], maxDeltaFiles: Int): Boolean = {
     if (!exists(spark, path)) return false // also replays a pending fold
     val live = new Path(path)
     val fs = fsOf(spark, live)
-    val delta = new Path(live, deltaName)
+    val delta = new Path(live, deltaDir)
     if (!fs.exists(delta)) return false
     val deltaFiles = fs.listStatus(delta).iterator
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .map(_.getPath).toVector
     if (deltaFiles.size <= maxDeltaFiles) return false
-    val qualifiedLive = fs.makeQualified(live)
-    val stage = mergeStagePath(path)
-    val mlog = mergeLogPath(path)
-    fs.delete(stage, true) // orphan of a pre-manifest crash
-    spark.read.parquet(deltaFiles.map(_.toString): _*)
-      .repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(stage.toString)
-    val stageQ = fs.makeQualified(stage)
-    def rel(base: Path, f: Path): String = {
-      val b = base.toString + "/"
-      val s = fs.makeQualified(f).toString
-      require(s.startsWith(b), s"$f not under $base")
-      s.drop(b.length)
+    publishStaged(spark, path, deltaFiles) { stage =>
+      spark.read.parquet(deltaFiles.map(_.toString): _*)
+        .repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+        .write.mode("overwrite").partitionBy(partitionCols: _*)
+        .parquet(stage)
     }
-    val staged = {
-      val sit = fs.listFiles(stage, true)
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (sit.hasNext) {
-        val s = sit.next()
-        if (s.getPath.getName.startsWith("part-"))
-          out += rel(stageQ, s.getPath)
-      }
-      out.toVector
-    }
-    val manifest = (staged.map("S\t" + _) ++
-      deltaFiles.map(f => "R\t" + rel(qualifiedLive, f))).mkString("\n")
-    val mlogTmp = new Path(mlog.toString + ".tmp")
-    val out = fs.create(mlogTmp, true)
-    try out.write(manifest.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(mlogTmp, mlog))
-      throw new java.io.IOException(
-        s"SketchState: manifest commit rename $mlogTmp -> $mlog failed")
-    completeMerge(fs, path)
-    spark.catalog.refreshByPath(path)
     true
   }
 
-  /** [[swapReplacePartitioned]] plus `_graft_*` marker files written into
-    * the swap BEFORE the rename — layout metadata and the relaid data
-    * commit as one atomic unit (ContamStream's adaptive rebucket). */
+  /** [[swapReplace]] for a hive-partitioned layout, plus `_graft_*`
+    * marker files written into the swap BEFORE the rename — layout
+    * metadata and the relaid data commit as one atomic unit
+    * (ContamStream's adaptive rebucket). */
   def swapReplacePartitionedKeeping(df: DataFrame, statePath: String,
                                     partitionCols: Seq[String],
                                     markers: Map[String, String]): Unit =

@@ -15,7 +15,7 @@ import graft.operators.{Funnel, SketchState}
   * verbatim. State is keys-bounded (one long per key — the smallest
   * exact state a converted-ever rate admits); the bucket is a pure
   * hash of the key, recomputed at read time, never stored. Crash-safe
-  * via the shared [[SketchState.swapReplace]]. */
+  * via the shared [[SketchState.fold]]. */
 object AbTestStream {
 
   private def convPath(stateDir: String) = s"$stateDir/key_conv"
@@ -24,14 +24,9 @@ object AbTestStream {
   def ingestBatch(spark: SparkSession, batch: DataFrame, key: Column,
                   typ: Column, convertType: String,
                   stateDir: String): Unit = {
-    val path = convPath(stateDir)
-    val inc = Funnel.abKeyConv(batch, key, typ, convertType)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("k")).agg(max(col("conv")).as("conv"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Funnel.abKeyConv(batch, key, typ, convertType),
+      convPath(stateDir))(
+      _.groupBy(col("k")).agg(max(col("conv")).as("conv")))
   }
 
   /** The A/B verdict of the ACCUMULATED ingest — exactly

@@ -23,7 +23,7 @@ import graft.operators.{Funnel, SketchState}
   *    double-counts), unlike the idempotent grain.
   * Both reads equal the one-shot operators EXACTLY, so the registered
   * queries share q227's/q229's oracles verbatim. Crash-safe via the
-  * shared [[SketchState.swapReplace]]. */
+  * shared [[SketchState.fold]]. */
 object ActiveStream {
 
   private def grainPath(stateDir: String) = s"$stateDir/key_day_grain"
@@ -32,21 +32,11 @@ object ActiveStream {
   /** Fold one batch of events into both state tables. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, key: Column,
                   typ: Column, ts: Column, stateDir: String): Unit = {
-    val gp = grainPath(stateDir)
-    val gInc = Funnel.activeGrain(batch, key, ts)
-    val gMerged =
-      if (SketchState.exists(spark, gp))
-        SketchState.read(spark, gp).unionByName(gInc).distinct()
-      else gInc
-    SketchState.swapReplace(gMerged, gp)
-    val vp = volPath(stateDir)
-    val vInc = Funnel.volumeCounts(batch, typ, ts)
-    val vMerged =
-      if (SketchState.exists(spark, vp))
-        SketchState.read(spark, vp).unionByName(vInc)
-          .groupBy(col("t"), col("dd")).agg(sum(col("n")).as("n"))
-      else vInc
-    SketchState.swapReplace(vMerged, vp)
+    SketchState.fold(Funnel.activeGrain(batch, key, ts),
+      grainPath(stateDir))(_.distinct())
+    SketchState.fold(Funnel.volumeCounts(batch, typ, ts),
+      volPath(stateDir))(
+      _.groupBy(col("t"), col("dd")).agg(sum(col("n")).as("n")))
   }
 
   /** DAU/WAU of the ACCUMULATED ingest — exactly

@@ -20,7 +20,7 @@ import graft.operators.{Datasheet, SketchState}
   *
   * Per poll: one wide hash aggregate of the BATCH (map-side, codegen'd
   * — the ops20-measured shape) and one sources-sized merge with state,
-  * via the shared crash-safe [[SketchState.swapReplace]]. The read
+  * via the shared crash-safe [[SketchState.fold]]. The read
   * applies [[Datasheet.sourceAffinityFinish]] — including its
   * n·max|v9| Long-overflow guard, whose inputs merge correctly even if
   * a component sum has already wrapped, so a wrapped sum can never
@@ -32,14 +32,8 @@ object AffinityStream {
   /** Fold one batch of embeddings into the per-source wide state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, vec: Column,
                   grp: Column, dims: Int, stateDir: String): Unit = {
-    val path = rawPath(stateDir)
-    val inc = Datasheet.sourceAffinityRaw(batch, vec, grp, dims)
-    val merged =
-      if (SketchState.exists(spark, path))
-        Datasheet.sourceAffinityMerge(
-          SketchState.read(spark, path), inc, dims)
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Datasheet.sourceAffinityRaw(batch, vec, grp, dims),
+      rawPath(stateDir))(Datasheet.sourceAffinityMerge(_, dims))
   }
 
   /** Affinity pairs of the ACCUMULATED ingest — exactly

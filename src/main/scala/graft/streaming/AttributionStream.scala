@@ -69,10 +69,8 @@ object AttributionStream {
       .groupBy(col("k"), col("ts").as("tts"))
       .agg(max_by(col("typ"), col("eid")).as("channel"),
         max(col("eid")).as("eid"))
-    val prior =
-      if (SketchState.exists(spark, pairP)) // adopts an interrupted swap
-        Some(spark.read.parquet(s"$pairP/$touchSub"))
-      else None
+    val state = SketchState.readManyOpt(spark, pairP)
+    val prior = state.map(_(touchSub))
     // eligible touches for THIS batch's conversions: each conversion
     // key's stored last touch ∪ the batch's own touches (instants never
     // repeat across batches under the ts-value split)
@@ -86,9 +84,9 @@ object AttributionStream {
         eligible.select("k", "tts", "channel"), lookbackSeconds)
       .groupBy(col("channel"))
       .agg(count(lit(1)).as("n"), sum(col("vc")).as("s"))
-    val mergedRollup = prior match {
-      case Some(_) =>
-        spark.read.parquet(s"$pairP/$rollupSub").unionByName(partial)
+    val mergedRollup = state match {
+      case Some(part) =>
+        part(rollupSub).unionByName(partial)
           .groupBy(col("channel"))
           .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
       case None => partial
@@ -114,10 +112,7 @@ object AttributionStream {
   /** The accumulated attribution — [[Funnel.attributionFinish]] over
     * the additive channel partials; equals the one-shot batch operator
     * under the arrival contract. */
-  def readAttribution(spark: SparkSession, stateDir: String): DataFrame = {
-    val pairP = pairPath(stateDir)
-    SketchState.exists(spark, pairP) // adopt an interrupted swap first
+  def readAttribution(spark: SparkSession, stateDir: String): DataFrame =
     Funnel.attributionFinish(
-      spark.read.parquet(s"$pairP/$rollupSub"))
-  }
+      SketchState.readPart(spark, pairPath(stateDir), rollupSub))
 }

@@ -15,7 +15,7 @@ import graft.operators.{Datasheet, SketchState}
   * and the accumulated table equals the one-shot table EXACTLY (the
   * OovStream argument), so the registered query shares q220's oracle
   * verbatim. State size is sources × categories, with the shared
-  * crash-safe [[SketchState.swapReplace]] per batch.
+  * crash-safe [[SketchState.fold]] per batch.
   *
   * Per poll: one (src, cat) count of the BATCH (map-side combined) and
   * one state-sized merge. The χ² read re-derives totals and the
@@ -27,15 +27,9 @@ object BalanceStream {
   /** Fold one batch into the (src, cat) count state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, grp: Column,
                   cat: Column, stateDir: String): Unit = {
-    val path = cntPath(stateDir)
-    val inc = Datasheet.categoricalCounts(batch, grp, cat)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("src"), col("cat"))
-          .agg(sum(col("o")).as("o"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Datasheet.categoricalCounts(batch, grp, cat),
+      cntPath(stateDir))(
+      _.groupBy(col("src"), col("cat")).agg(sum(col("o")).as("o")))
   }
 
   /** χ² panel of the ACCUMULATED ingest — exactly

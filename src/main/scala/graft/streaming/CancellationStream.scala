@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.omm.{CancellationPipeline => P}
+import graft.operators.SketchState
 import graft.sources.ParquetContract
 
 /** S5/S4: the polling scheduler re-expressed as Structured Streaming
@@ -22,7 +23,9 @@ import graft.sources.ParquetContract
   * source is only the trigger heartbeat. Cross-poll state (A2's
   * `previousCancellations`, Hand:22/225) lives in a checkpointed parquet
   * key set — restart-safe where the reference's in-memory list was not
-  * (SURVEY.md §7 hard part 6).
+  * (SURVEY.md §7 hard part 6) — gated and committed through
+  * [[SketchState]], so a crash between the swap's delete and rename is
+  * adopted on the next poll instead of resending every trip as new.
   *
   * Fail-fast contract: any poll exception propagates and stops the
   * streaming query (≙ Main.java:56–65 shutdown-on-error).
@@ -80,7 +83,7 @@ object CancellationStream {
       // gives 0 for all three.
       val perTrip = deduped.groupBy(col("trip_id")).agg(count(lit(1)).as("n"))
       val diffed =
-        if (new java.io.File(stateDir).exists)
+        if (SketchState.exists(spark, stateDir))
           perTrip.join(ParquetContract.read(spark, "omm_state", stateDir,
               stateSchema).select(col("trip_id").as("prev_trip")).distinct(),
             col("trip_id") === col("prev_trip"), "left")
@@ -100,15 +103,9 @@ object CancellationStream {
         .write.mode("append").parquet(sinkDir)
 
       // Replace state AFTER the sink write (at-least-once on restart — the
-      // reference's semantics are also at-least-once, SURVEY.md §2.9).
-      val tmp = stateDir + "_next"
-      deduped.select("trip_id").distinct()
-        .write.mode("overwrite").parquet(tmp)
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(stateDir), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(stateDir))
+      // reference's semantics are also at-least-once, SURVEY.md §2.9),
+      // through the crash-safe swap the gate above adopts.
+      SketchState.swapReplace(deduped.select("trip_id").distinct(), stateDir)
 
       val elapsedMs = (System.nanoTime() - t0) / 1000000L
       if (elapsedMs > slowPollWarnMs)

@@ -312,15 +312,16 @@ object ClusterStream {
     * keeps the (possibly corpus-sized) vertex scan map-side. */
   def clusters(spark: SparkSession, vertices: DataFrame,
                stateDir: String): DataFrame = {
-    val path = aliasPath(stateDir)
     val v = vertices.select(col("id"))
-    if (!SketchState.exists(spark, path))
-      return v.select(col("id"), col("id").as("cluster_rep"))
-    val resolved = resolveForest(spark, spark.read.parquet(path))
-    v.join(broadcast(resolved.withColumnRenamed("node", "id")), Seq("id"),
-        "left")
-      .select(col("id"),
-        coalesce(col("root"), col("id")).as("cluster_rep"))
+    SketchState.readOpt(spark, aliasPath(stateDir)) match {
+      case None => v.select(col("id"), col("id").as("cluster_rep"))
+      case Some(log) =>
+        val resolved = resolveForest(spark, log)
+        v.join(broadcast(resolved.withColumnRenamed("node", "id")),
+            Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("root"), col("id")).as("cluster_rep"))
+    }
   }
 
   /** Resolve every node of the alias forest to its terminal root.

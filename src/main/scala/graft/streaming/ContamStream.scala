@@ -169,7 +169,7 @@ object ContamStream {
     val nb = newBench.select(col("id"), col("text")).persist()
     try {
       val nNew = nd.count()
-      val haveBenchState = SketchState.exists(spark, benchPath)
+      val benchState = SketchState.readOpt(spark, benchPath)
 
       // benchmark increment: grams NOT already in the accumulated set —
       // the anti-join is what makes re-registered grams count zero
@@ -177,10 +177,7 @@ object ContamStream {
         if (nb.isEmpty) None // emptiness gate only — isEmpty stops at row 1
         else {
           val g = gramHashes(nb, n).select(col("h1"), col("h2")).distinct()
-          Some(if (haveBenchState)
-            g.join(spark.read.parquet(benchPath), Seq("h1", "h2"),
-              "left_anti")
-          else g)
+          Some(benchState.fold(g)(g.join(_, Seq("h1", "h2"), "left_anti")))
         }
       val newBenchGrams = newBenchGrams0.map(_.persist())
       val nBenchInc = newBenchGrams.map(_.count()).getOrElse(0L)
@@ -193,11 +190,9 @@ object ContamStream {
 
       // hits for NEW docs: probe state ∪ increment (the full post-batch
       // benchmark set; state and increment are disjoint by construction)
-      val benchAfter = (haveBenchState, newBenchGrams) match {
-        case (true, Some(inc)) =>
-          Some(spark.read.parquet(benchPath).unionByName(inc))
-        case (true, None) => Some(spark.read.parquet(benchPath))
-        case (false, inc) => inc
+      val benchAfter = (benchState, newBenchGrams) match {
+        case (Some(st), Some(inc)) => Some(st.unionByName(inc))
+        case (st, inc) => st.orElse(inc)
       }
       val hitsNew = (newDocGrams, benchAfter) match {
         case (Some(dg), Some(bg)) =>
@@ -331,12 +326,11 @@ object ContamStream {
     * metadata tables; zero gram or text access. */
   def contamination(spark: SparkSession, stateDir: String): DataFrame = {
     val stats = SketchState.read(spark, p(stateDir, "docstats"))
-    val hitsPath = p(stateDir, "hits")
-    val overlap =
-      if (SketchState.exists(spark, hitsPath))
-        spark.read.parquet(hitsPath)
-          .groupBy(col("id")).agg(sum(col("n_hits")).as("o"))
-      else stats.select(col("id"), lit(0L).as("o")).limit(0)
+    val overlap = SketchState.readOpt(spark, p(stateDir, "hits")) match {
+      case Some(hits) =>
+        hits.groupBy(col("id")).agg(sum(col("n_hits")).as("o"))
+      case None => stats.select(col("id"), lit(0L).as("o")).limit(0)
+    }
     stats.join(overlap, Seq("id"), "left")
       .select(col("id"), col("n_shingles"),
         coalesce(col("o"), lit(0L)).as("n_overlap"),

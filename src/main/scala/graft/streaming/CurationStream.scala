@@ -100,10 +100,8 @@ object CurationStream {
     val batchReps = docs
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    val fresh =
-      if (SketchState.exists(spark, sp))
-        batchReps.join(spark.read.parquet(sp), Seq("h"), "left_anti")
-      else batchReps
+    val fresh = SketchState.readOpt(spark, sp)
+      .fold(batchReps)(batchReps.join(_, Seq("h"), "left_anti"))
     // decontaminate: drop docs with >= half their shingles in the holdout
     val sh = fresh.select(col("id"),
         explode(TextExprs.wordShingles(col("text"), n)).as("g"))

@@ -17,7 +17,7 @@ import graft.operators.{Mix, SketchState}
   * therefore shares q174's oracle verbatim. State size is
   * sources × vocabulary (TYPES-bounded, the same bound as the LM count
   * tables — it grows with DISTINCT tokens, not with corpus rows), with
-  * the shared crash-safe `SketchState.swapReplace` per batch.
+  * the shared crash-safe [[SketchState.fold]] per batch.
   *
   * Per poll: one tokenize of the BATCH collapsing map-side to its
   * distinct (src, token) increment, one vocab-sized merge with state.
@@ -30,15 +30,8 @@ object DoremiStream {
   /** Fold one batch of documents into the (src, token) count state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, text: Column,
                   source: Column, stateDir: String): Unit = {
-    val path = cntPath(stateDir)
-    val inc = Mix.doremiCounts(batch, text, source)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("src"), col("t"))
-          .agg(sum(col("c_st")).as("c_st"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Mix.doremiCounts(batch, text, source), cntPath(stateDir))(
+      _.groupBy(col("src"), col("t")).agg(sum(col("c_st")).as("c_st")))
   }
 
   /** Domain weights of the ACCUMULATED ingest — exactly

@@ -16,7 +16,8 @@ import graft.operators.{Datasheet, SketchState}
   * tables fold into the state EXACTLY under any arrival split (the
   * MixDriftStream argument) and the read equals the one-shot panel.
   * Per batch: one map-side scan of the BATCH collapsing to a
-  * groups-bounded increment, one groups-sized merge, crash-safe swap. */
+  * groups-bounded increment, one groups-sized merge through the
+  * crash-safe [[SketchState.fold]]. */
 object EmbedHealthStream {
 
   private def rawPath(stateDir: String) = s"$stateDir/raw"
@@ -24,13 +25,9 @@ object EmbedHealthStream {
   /** Fold one batch of embeddings into the health state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, vec: Column,
                   group: Column, stateDir: String): Unit = {
-    val path = rawPath(stateDir)
-    val inc = Datasheet.embeddingHealthRaw(batch, vec, group)
-    val merged =
-      if (SketchState.exists(spark, path))
-        Datasheet.embeddingHealthMerge(SketchState.read(spark, path), inc)
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Datasheet.embeddingHealthRaw(batch, vec, group),
+      rawPath(stateDir))(
+      Datasheet.embeddingHealthMerge)
   }
 
   /** The accumulated health panel — identical to the one-shot

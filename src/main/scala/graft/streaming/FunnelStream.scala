@@ -65,10 +65,9 @@ object FunnelStream {
       }.reduceLeft((acc, nxt) =>
         acc.join(nxt, Seq("k"), "left"))
     }
-    val merged =
-      if (!SketchState.exists(spark, path)) widen(ev)
-      else {
-        val st = SketchState.read(spark, path)
+    val merged = SketchState.readOpt(spark, path) match {
+      case None => widen(ev)
+      case Some(st) =>
         val batchKeys = ev.select(col("__ek").as("k")).distinct()
         val touched = st.join(batchKeys, Seq("k"), "left_semi")
         val untouched = st.join(batchKeys, Seq("k"), "left_anti")
@@ -80,7 +79,7 @@ object FunnelStream {
               lit(stages(i)).as("typ"))
         }.reduce(_ unionByName _)
         untouched.unionByName(widen(synthetic.unionByName(ev)))
-      }
+    }
     SketchState.swapReplace(merged, path)
   }
 

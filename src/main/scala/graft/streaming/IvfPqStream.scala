@@ -39,10 +39,21 @@ object IvfPqStream {
 
   case class BatchResult(added: Long, stateFiles: Int)
 
-  private val DeltaDir = "_delta"
-
   private def codesPath(stateDir: String) = s"$stateDir/codes"
-  private def deltaPath(codes: String) = s"$codes/$DeltaDir"
+  private def deltaPath(codes: String) = s"$codes/${SketchState.deltaDir}"
+
+  /** The un-folded delta tail's part files. The segment is read by this
+    * EXPLICIT list: its dir name is `_`-prefixed (hidden from the
+    * partitioned read by design), and a hidden root path is
+    * DataSource-filtered — part files by name are not. */
+  private def deltaFiles(spark: SparkSession, codes: String): Seq[String] = {
+    val delta = new org.apache.hadoop.fs.Path(deltaPath(codes))
+    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(delta)) Seq.empty
+    else fs.listStatus(delta).toSeq
+      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+      .map(_.getPath.toString)
+  }
 
   /** One micro-batch of new vectors. `newVecs` must carry the id and
     * vector under the given columns; ids must be unique stream-wide
@@ -106,24 +117,15 @@ object IvfPqStream {
     val path = codesPath(stateDir)
     SketchState.exists(spark, path)
     val main = SketchState.listPartFiles(spark, path) // delta is hidden
-    // the delta segment is read by EXPLICIT part-file list: its dir name
-    // is `_`-prefixed (hidden from the partitioned read by design), and a
-    // hidden root path is DataSource-filtered — part files by name are not
-    val delta = new org.apache.hadoop.fs.Path(deltaPath(path))
-    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaFiles =
-      if (!fs.exists(delta)) Seq.empty[String]
-      else fs.listStatus(delta).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .map(_.getPath.toString)
-    (main.nonEmpty, deltaFiles.nonEmpty) match {
+    val tail = deltaFiles(spark, path)
+    (main.nonEmpty, tail.nonEmpty) match {
       case (true, true) =>
         // unionByName: the partitioned read appends list_id last, the
         // delta read carries it where pqEncode put it
         spark.read.parquet(path)
-          .unionByName(spark.read.parquet(deltaFiles: _*))
+          .unionByName(spark.read.parquet(tail: _*))
       case (true, false) => spark.read.parquet(path)
-      case (false, true) => spark.read.parquet(deltaFiles: _*)
+      case (false, true) => spark.read.parquet(tail: _*)
       case (false, false) =>
         spark.read.parquet(path) // throws the standard missing-state error
     }
@@ -140,14 +142,7 @@ object IvfPqStream {
     Quantize.ivfPqResidualTopK(indexCodes(spark, stateDir),
       queries, id, vec, coarse, resCentroids, m, dim, nProbe, k)
 
-  private def countFiles(spark: SparkSession, path: String): Int = {
-    val nMain = SketchState.listPartFiles(spark, path).size // skips _delta
-    val delta = new org.apache.hadoop.fs.Path(deltaPath(path))
-    val fs = delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nDelta =
-      if (!fs.exists(delta)) 0
-      else fs.listStatus(delta)
-        .count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    nMain + nDelta
-  }
+  private def countFiles(spark: SparkSession, path: String): Int =
+    SketchState.listPartFiles(spark, path).size + // skips _delta
+      deltaFiles(spark, path).size
 }

@@ -14,7 +14,7 @@ import graft.operators.{SketchState, Trend}
   * in any arrival order or split and the accumulated table equals the
   * one-shot sums EXACTLY (the OovStream argument); the registered query
   * shares q234's oracle verbatim. State is groups-bounded; the
-  * crash-safe [[SketchState.swapReplace]] per batch.
+  * crash-safe [[SketchState.fold]] per batch.
   *
   * Per poll: one map-combined batch aggregate + a groups-sized merge.
   * The read runs the leave-one-out finish over the state table only. */
@@ -25,15 +25,10 @@ object JackknifeStream {
   /** Fold one batch into the per-group (n_g, d_g) sum state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, grp: Column,
                   num: Column, den: Column, stateDir: String): Unit = {
-    val path = sumsPath(stateDir)
-    val inc = Trend.jackknifeGroupSums(batch, grp, num, den)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("grp"))
-          .agg(sum(col("n_g")).as("n_g"), sum(col("d_g")).as("d_g"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Trend.jackknifeGroupSums(batch, grp, num, den),
+      sumsPath(stateDir))(
+      _.groupBy(col("grp"))
+        .agg(sum(col("n_g")).as("n_g"), sum(col("d_g")).as("d_g")))
   }
 
   /** Jackknife summary of the ACCUMULATED ingest — exactly

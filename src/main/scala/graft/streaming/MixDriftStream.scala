@@ -16,7 +16,7 @@ import graft.operators.{Datasheet, SketchState}
   * the state in ANY arrival order or split and the accumulated table
   * equals the whole-corpus volumes EXACTLY — the NgramLmStream
   * batch-equivalence argument, with the same crash-safe
-  * `SketchState.swapReplace` state replace per batch.
+  * [[SketchState.fold]] per batch.
   *
   * Scale shape: per batch, one tokenize of the BATCH collapsing
   * map-side to a sources-bounded increment, one merge of
@@ -32,18 +32,11 @@ object MixDriftStream {
   /** Fold one batch of documents into the per-source volume state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, text: Column,
                   source: Column, stateDir: String): Unit = {
-    val path = volPath(stateDir)
-    val inc = Datasheet.sourceVolumes(batch, text, source)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("src"))
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"))
-      else inc
-    // swapReplace materializes the swap copy before touching the live
-    // dir, so `merged` reading from `path` itself is safe
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Datasheet.sourceVolumes(batch, text, source),
+      volPath(stateDir))(
+      _.groupBy(col("src"))
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_tokens")).as("n_tokens")))
   }
 
   /** Drift of the ACCUMULATED ingest against a reference volume table

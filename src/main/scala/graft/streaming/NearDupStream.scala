@@ -85,7 +85,7 @@ object NearDupStream {
     val docsPath = s"$stateDir/docs"
     // adopt a crash-interrupted SINK compaction swap BEFORE this batch's
     // append can recreate the live dir and orphan it (state dirs get the
-    // same adoption via their own exists() probes below)
+    // same adoption via their own readOpt gates below)
     SketchState.exists(spark, sinkDir)
     val nd = newDocs.select(col("id"), col("text")).persist()
     try {
@@ -101,16 +101,17 @@ object NearDupStream {
         // index; orientation normalized so (id_a < id_b) like the batch op
         val probe = newBands.select(
           col("band"), col("bucket"), col("id").as("id_new"))
-        val candOld =
-          if (SketchState.exists(spark, bandsPath))
+        val candOld = SketchState.readOpt(spark, bandsPath) match {
+          case Some(bandIndex) =>
             probe.join(
-              spark.read.parquet(bandsPath)
+              bandIndex
                 .select(col("band"), col("bucket"), col("id").as("id_old")),
               Seq("band", "bucket"))
               .select(least(col("id_new"), col("id_old")).as("id_a"),
                 greatest(col("id_new"), col("id_old")).as("id_b"))
-          else spark.emptyDataFrame
+          case None => spark.emptyDataFrame
             .select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0)
+        }
         // within-batch candidates: the batch operator's self-join shape
         val candNew = probe
           .join(probe.select(col("band"), col("bucket"),
@@ -131,10 +132,7 @@ object NearDupStream {
         //    band collisions (≤ 2 × candidate pairs), broadcastable by
         //    construction for sane banding configs.
         // The ratio switch picks per batch; crossover measured in SCALE.md.
-        val priorDocs =
-          if (SketchState.exists(spark, docsPath))
-            Some(spark.read.parquet(docsPath))
-          else None
+        val priorDocs = SketchState.readOpt(spark, docsPath)
         val corpus = priorDocs.map(_.unionByName(nd)).getOrElse(nd)
         // zero-column parquet scan: footer-row-count work, not data I/O
         val corpusRows = priorDocs.map(_.count()).getOrElse(0L) + nNew

@@ -59,10 +59,9 @@ object NovelGramStream {
     val obsN = new org.apache.spark.sql.Observation()
     val bg = gramHashes(batch, text, n)
       .observe(obsG, count(lit(1)).as("n"))
-    val novel =
-      (if (SketchState.exists(spark, gp))
-        bg.join(spark.read.parquet(gp), Seq("h1", "h2"), "left_anti")
-      else bg).observe(obsN, count(lit(1)).as("n"))
+    val novel = SketchState.readOpt(spark, gp)
+      .fold(bg)(bg.join(_, Seq("h1", "h2"), "left_anti"))
+      .observe(obsN, count(lit(1)).as("n"))
     novel.write.mode("append").parquet(gp)
     def got(o: org.apache.spark.sql.Observation): Long =
       o.get.get("n").flatMap(Option(_)).map(_.asInstanceOf[Long])

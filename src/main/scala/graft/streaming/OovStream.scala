@@ -17,7 +17,7 @@ import graft.operators.{SketchState, Vocab}
   * argument); the registered query therefore shares q195's oracle
   * verbatim. State size is groups × vocabulary (TYPES-bounded — it
   * grows with DISTINCT tokens, not corpus rows), with the shared
-  * crash-safe [[SketchState.swapReplace]] per batch.
+  * crash-safe [[SketchState.fold]] per batch.
   *
   * Per poll: one tokenize of the BATCH collapsing map-side to its
   * distinct (grp, token) increment, one vocab-sized merge with state.
@@ -31,15 +31,8 @@ object OovStream {
   /** Fold one batch of documents into the (grp, token) count state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, grp: Column,
                   text: Column, stateDir: String): Unit = {
-    val path = cntPath(stateDir)
-    val inc = Vocab.oovCounts(batch, grp, text)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("grp"), col("t"))
-          .agg(sum(col("cnt")).as("cnt"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Vocab.oovCounts(batch, grp, text), cntPath(stateDir))(
+      _.groupBy(col("grp"), col("t")).agg(sum(col("cnt")).as("cnt")))
   }
 
   /** OOV rates of the ACCUMULATED ingest — exactly

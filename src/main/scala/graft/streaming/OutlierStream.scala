@@ -18,7 +18,7 @@ import graft.operators.{Datasheet, SketchState}
   * query shares q177's oracle verbatim. State is bounded by DISTINCT
   * values per source (lengths/counts/snapped scores — the same bound
   * the exact-percentile batch path already carries), with the shared
-  * crash-safe `SketchState.swapReplace` per batch.
+  * crash-safe [[SketchState.fold]] per batch.
   *
   * Per poll: one scan of the BATCH collapsing map-side to its distinct
   * (src, value) increment, one distinct-values-bounded merge. Unlike
@@ -32,15 +32,9 @@ object OutlierStream {
   /** Fold one batch of documents into the (src, value) count state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, value: Column,
                   group: Column, stateDir: String): Unit = {
-    val path = cntPath(stateDir)
-    val inc = Datasheet.valueCounts(batch, value, group)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("src"), col("v"))
-          .agg(sum(col("c")).as("c"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Datasheet.valueCounts(batch, value, group),
+      cntPath(stateDir))(
+      _.groupBy(col("src"), col("v")).agg(sum(col("c")).as("c")))
   }
 
   /** The median/MAD outlier panel of the ACCUMULATED ingest — exactly

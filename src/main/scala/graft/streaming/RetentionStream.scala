@@ -55,10 +55,8 @@ object RetentionStream {
     val bActive = ev
       .select(col("k"), date_trunc("week", col("ts")).cast("date").as("aw"))
       .distinct()
-    val newActive =
-      if (SketchState.exists(spark, ap))
-        bActive.join(spark.read.parquet(ap), Seq("k", "aw"), "left_anti")
-      else bActive
+    val newActive = SketchState.readOpt(spark, ap)
+      .fold(bActive)(bActive.join(_, Seq("k", "aw"), "left_anti"))
     newActive.write.mode("append").parquet(ap)
     Seq(fp, ap).foreach(
       SketchState.compactIfNeeded(spark, _, compactAfterFiles))

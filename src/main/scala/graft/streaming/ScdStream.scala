@@ -51,10 +51,9 @@ object ScdStream {
       Scd.scd2(ev, keys, col(tsCol), col(tieCol), col(attrCol),
         carryAll.map(col))
     val evCols = keys ++ Seq(tsCol, tieCol, attrCol) ++ carryCols
-    val merged =
-      if (!SketchState.exists(spark, path)) build(batch)
-      else {
-        val st = SketchState.read(spark, path)
+    val merged = SketchState.readOpt(spark, path) match {
+      case None => build(batch)
+      case Some(st) =>
         val batchKeys = batch.select(keys.map(col): _*).distinct()
         val cur = st.where(col("is_current"))
         // each touched key's open version, replayed as a change event at
@@ -68,7 +67,7 @@ object ScdStream {
           .unionByName(cur.join(batchKeys, keys, "left_anti"))
         untouched.unionByName(build(
           synthetic.unionByName(batch.select(evCols.map(col): _*))))
-      }
+    }
     SketchState.swapReplace(merged, path)
   }
 

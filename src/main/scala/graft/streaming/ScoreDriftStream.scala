@@ -14,7 +14,7 @@ import graft.operators.{Classify, SketchState}
   * State is the `(bin, n)` histogram ([[Classify.binCounts]]' grain).
   * Bin counts are ADDITIVE, so per-batch histograms fold into the state
   * exactly under any arrival split (the MixDriftStream argument), with
-  * the same crash-safe `SketchState.swapReplace` per batch. The drift
+  * the same crash-safe [[SketchState.fold]] per batch. The drift
   * read is [[Classify.scoreDriftFromCounts]] over a reference histogram
   * (computed once at filter-tuning time) and the state — zero corpus
   * access per poll; per batch, one score+bin scan of the BATCH
@@ -26,14 +26,9 @@ object ScoreDriftStream {
   /** Fold one batch of scored rows into the bin-histogram state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, score: Column,
                   stateDir: String, bins: Int = 10): Unit = {
-    val path = histPath(stateDir)
-    val inc = Classify.binCounts(batch, score, bins)
-    val merged =
-      if (SketchState.exists(spark, path))
-        SketchState.read(spark, path).unionByName(inc)
-          .groupBy(col("bin")).agg(sum(col("n")).as("n"))
-      else inc
-    SketchState.swapReplace(merged, path)
+    SketchState.fold(Classify.binCounts(batch, score, bins),
+      histPath(stateDir))(
+      _.groupBy(col("bin")).agg(sum(col("n")).as("n")))
   }
 
   /** Drift of the ACCUMULATED histogram against a reference `(bin, n)`

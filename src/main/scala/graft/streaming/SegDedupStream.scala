@@ -65,10 +65,9 @@ object SegDedupStream {
         .select(col("skey.h1").as("h1"), col("skey.h2").as("h2"),
           col("f.doc_id").as("doc_id"), col("f.pos").as("pos"))
       // freshness: drop candidates whose hash the stream has already seen
-      val fresh = (if (SketchState.exists(spark, segsPath))
-        batchFirst.join(spark.read.parquet(segsPath),
-          Seq("h1", "h2"), "left_anti")
-      else batchFirst).persist()
+      val fresh = SketchState.readOpt(spark, segsPath)
+        .fold(batchFirst)(batchFirst.join(_, Seq("h1", "h2"), "left_anti"))
+        .persist()
       try {
         val cleaned = Dedup.rebuildFromKept(base, fresh, w)
         // sink first, then state (at-least-once on restart — the same

@@ -113,30 +113,32 @@ object SemDedupStream {
         // verdicts — `cos_hit` (a bucket-mate clears the threshold) and
         // `exact_hit` (state already holds this exact value; also the
         // state-growth signal, so no second state scan is needed)
-        val verdicts = (if (SketchState.exists(spark, vecsPath)) {
-          // zero-column scan: footer row counts, not data I/O
-          val stateRows = spark.read.parquet(vecsPath).count()
-          val probe =
-            if (stateRows / nDistinct.max(1L) > broadcastStateRatio &&
-                nDistinct <= maxBroadcastVecs)
-              broadcast(distinctVals)
-            else distinctVals
-          spark.read.parquet(vecsPath)
-            .select(col("bucket"), col("h1").as("sh1"),
-              col("h2").as("sh2"), col("v").as("sv"), col("n2").as("sn2"))
-            .join(probe, Seq("bucket"))
-            .select(col("h1"), col("h2"),
-              (VectorExprs.dot(col("v"), col("sv")) /
-                (sqrt(col("n2")) * sqrt(col("sn2"))) >= threshold)
-                .as("cos_hit"),
-              (col("sh1") === col("h1") && col("sh2") === col("h2"))
-                .as("exact_hit"))
-            .groupBy(col("h1"), col("h2"))
-            .agg(max(col("cos_hit")).as("cos_hit"),
-              max(col("exact_hit")).as("exact_hit"))
-        } else distinctVals.select(col("h1"), col("h2"),
-          lit(false).as("cos_hit"), lit(false).as("exact_hit")).limit(0))
-          .persist()
+        val verdicts = (SketchState.readOpt(spark, vecsPath) match {
+          case Some(state) =>
+            // zero-column scan: footer row counts, not data I/O
+            val stateRows = state.count()
+            val probe =
+              if (stateRows / nDistinct.max(1L) > broadcastStateRatio &&
+                  nDistinct <= maxBroadcastVecs)
+                broadcast(distinctVals)
+              else distinctVals
+            state
+              .select(col("bucket"), col("h1").as("sh1"),
+                col("h2").as("sh2"), col("v").as("sv"), col("n2").as("sn2"))
+              .join(probe, Seq("bucket"))
+              .select(col("h1"), col("h2"),
+                (VectorExprs.dot(col("v"), col("sv")) /
+                  (sqrt(col("n2")) * sqrt(col("sn2"))) >= threshold)
+                  .as("cos_hit"),
+                (col("sh1") === col("h1") && col("sh2") === col("h2"))
+                  .as("exact_hit"))
+              .groupBy(col("h1"), col("h2"))
+              .agg(max(col("cos_hit")).as("cos_hit"),
+                max(col("exact_hit")).as("exact_hit"))
+          case None => distinctVals.select(col("h1"), col("h2"),
+              lit(false).as("cos_hit"), lit(false).as("exact_hit"))
+              .limit(0)
+        }).persist()
         try {
           val dropHashes = verdicts
             .filter(col("cos_hit") || col("exact_hit"))

@@ -55,11 +55,9 @@ object ShardStream {
     val n = agg.getLong(3)
     if (n == 0L) return 0L
     val (lo, hi, w) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-    val (watermark, total) =
-      if (SketchState.exists(spark, stP)) {
-        val r = SketchState.read(spark, stP).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      } else (Long.MinValue, 0L)
+    val (watermark, total) = SketchState.readOpt(spark, stP)
+      .map { st => val r = st.collect()(0); (r.getLong(0), r.getLong(1)) }
+      .getOrElse((Long.MinValue, 0L))
     if (lo <= watermark) {
       // replay of an already-committed batch: its sink subdir already
       // holds the final assignment — advancing anything would corrupt

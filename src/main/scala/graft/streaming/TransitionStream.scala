@@ -18,8 +18,11 @@ import graft.operators.{Funnel, SketchState}
   * key-partitioned window over the BATCH (its internal adjacencies), a
   * keys-sized join minting boundary pairs from the last-event state, an
   * additive types²-merge, and a max-by-(ts, tie) refresh of the
-  * last-event table — all batch- or state-bounded, with the shared
-  * crash-safe [[SketchState.swapReplace]].
+  * last-event table — all batch- or state-bounded. The two tables are
+  * one joint state (the boundary pairs a batch adds are stitched from the
+  * last events it leaves), so they commit together in ONE
+  * [[SketchState.swapReplaceMany]]: a crash can never land counts that
+  * include a batch whose last events were not advanced.
   *
   * Batch equivalence: under per-key `(ts, tie)`-monotone arrival the
   * stitched counts equal the one-shot table EXACTLY (spec-pinned across
@@ -28,15 +31,16 @@ import graft.operators.{Funnel, SketchState}
   * state. */
 object TransitionStream {
 
-  private def cntPath(stateDir: String) = s"$stateDir/pair_counts"
-  private def lastPath(stateDir: String) = s"$stateDir/last_events"
+  // both tables under ONE swapped parent — their consistency is joint
+  private def pairPath(stateDir: String) = s"$stateDir/state"
+  private val countsSub = "pair_counts"
+  private val lastSub = "last_events"
 
   /** Fold one batch of events into the transition state. */
   def ingestBatch(spark: SparkSession, batch: DataFrame, keys: Seq[String],
                   tsCol: String, tieCol: String, typCol: String,
                   stateDir: String): Unit = {
-    val cPath = cntPath(stateDir)
-    val lPath = lastPath(stateDir)
+    val pairP = pairPath(stateDir)
     val inBatch = Funnel.transitionCounts(batch,
       struct(keys.map(col): _*), col(tsCol), col(tieCol), col(typCol))
     val batchFirsts = batch
@@ -48,10 +52,10 @@ object TransitionStream {
       .agg(max(struct(col(tsCol), col(tieCol), col(typCol))).as("l"))
       .select(keys.map(col) ++ Seq(col(s"l.$tsCol").as(tsCol),
         col(s"l.$tieCol").as(tieCol), col(s"l.$typCol").as(typCol)): _*)
-    val (inc, lasts) =
-      if (!SketchState.exists(spark, lPath)) (inBatch, batchLasts)
-      else {
-        val prevLast = SketchState.read(spark, lPath)
+    val (counts, lasts) = SketchState.readManyOpt(spark, pairP) match {
+      case None => (inBatch, batchLasts)
+      case Some(part) =>
+        val prevLast = part(lastSub)
         // boundary pairs: each key's stored last event → its first event
         // of THIS batch
         val boundary = prevLast
@@ -60,7 +64,8 @@ object TransitionStream {
           .groupBy(col("__prev_typ").as("from_type"),
             col("__first_typ").as("to_type"))
           .agg(count(lit(1)).as("n"))
-        val merged = inBatch.unionByName(boundary)
+        val merged = part(countsSub).unionByName(inBatch)
+          .unionByName(boundary)
           .groupBy(col("from_type"), col("to_type"))
           .agg(sum(col("n")).as("n"))
         // per-key freshest event wins (monotone arrival makes this the
@@ -71,20 +76,17 @@ object TransitionStream {
           .select(keys.map(col) ++ Seq(col(s"l.$tsCol").as(tsCol),
             col(s"l.$tieCol").as(tieCol), col(s"l.$typCol").as(typCol)): _*)
         (merged, refreshed)
-      }
-    val newCounts =
-      if (SketchState.exists(spark, cPath))
-        SketchState.read(spark, cPath).unionByName(inc)
-          .groupBy(col("from_type"), col("to_type"))
-          .agg(sum(col("n")).as("n"))
-      else inc
-    SketchState.swapReplace(newCounts, cPath)
-    SketchState.swapReplace(lasts, lPath)
+    }
+    // ONE commit for the pair: counts that include this batch land only
+    // together with the last events that stitch its successor's boundary
+    SketchState.swapReplaceMany(spark,
+      Seq(countsSub -> counts, lastSub -> lasts), pairP)
   }
 
   /** The accumulated transition matrix — exactly
     * [[Funnel.transitionMatrix]]'s output over everything folded so
     * far. */
   def readMatrix(spark: SparkSession, stateDir: String): DataFrame =
-    Funnel.transitionsFromCounts(SketchState.read(spark, cntPath(stateDir)))
+    Funnel.transitionsFromCounts(
+      SketchState.readPart(spark, pairPath(stateDir), countsSub))
 }

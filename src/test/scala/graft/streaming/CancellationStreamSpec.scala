@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.time.Instant
 
 import org.apache.spark.sql.SparkSession
@@ -243,6 +243,24 @@ class CancellationStreamSpec extends SparkSpec {
         .map(c => String.valueOf(c.getMessage)).toSeq
     assert(causes(e).exists(_.contains("poisoned poll")),
       s"poll error must propagate, got: ${causes(e)}")
+  }
+
+  test("a crash between the state swap's delete and rename is adopted: " +
+    "the next poll repeats every trip instead of resending it as new") {
+    F.ensure(spark)
+    val base = Files.createTempDirectory("streamswap").toString
+    val (sink, state) = (s"$base/sink", s"$base/state")
+    def poll() = CancellationStream.pollOnce(spark, F.dir, sink, state,
+      P.FromNow, t2, F.lookbackSeconds, F.zone)
+    val r1 = poll()
+    val trips = r1.newTrips + r1.repeatedTrips
+    // the crash point: live key set deleted, its complete replacement
+    // (with `_SUCCESS`) still under the swap name
+    Files.move(Paths.get(state), Paths.get(s"$state.__swap"))
+    val r2 = poll()
+    assert(r2.newTrips === 0 && r2.repeatedTrips === trips,
+      s"the adopted key set must mark every trip repeated, got $r2")
+    assert(spark.read.parquet(state).count() === trips)
   }
 
   test("restart: checkpoint + state dir survive a kill and resume at-least-once") {

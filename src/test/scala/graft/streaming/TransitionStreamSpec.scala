@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{FailingRenameFs, SparkSpec}
 import graft.operators.Funnel
 
 /** Streaming transition matrix: exact batch equivalence under
@@ -30,11 +30,12 @@ class TransitionStreamSpec extends SparkSpec {
   private def tmp() =
     java.nio.file.Files.createTempDirectory("trans_spec").toString
 
+  private def oneShot = Funnel.transitionMatrix(events, col("user_id"),
+      col("ts"), col("event_id"), col("event_type"))
+    .collect().map(_.toSeq).toSet
+
   test("accumulated matrix equals the one-shot build under ANY " +
     "ts-monotone split (boundary pairs stitched)") {
-    val oneShot = Funnel.transitionMatrix(events, col("user_id"),
-        col("ts"), col("event_id"), col("event_type"))
-      .collect().map(_.toSeq).toSet
     Seq(Seq(1L to 7L),
         Seq(1L to 2L, 3L to 5L, 6L to 7L),
         Seq(1L to 1L, 2L to 2L, 3L to 3L, 4L to 7L))
@@ -67,5 +68,31 @@ class TransitionStreamSpec extends SparkSpec {
       ("a", "b", 2L, 1.0),
       ("b", "a", 1L, 1.0),
       ("c", "a", 1L, 0.5), ("c", "c", 1L, 0.5)))
+  }
+
+  test("a crash after the count table commits leaves the previous " +
+    "matrix; redelivering the batch converges to the one-shot build") {
+    FailingRenameFs.install(spark)
+    val state = FailingRenameFs.path(tmp())
+    def ingest(lo: Long, hi: Long): Unit =
+      TransitionStream.ingestBatch(spark,
+        events.filter(col("event_id").between(lo, hi)),
+        Seq("user_id"), "ts", "event_id", "event_type", state)
+    def matrix = TransitionStream.readMatrix(spark, state)
+      .collect().map(_.toSeq).toSet
+    ingest(1L, 3L)
+    val afterFirst = matrix
+    // the second batch's counts are written, then publishing its last
+    // events fails: every rename into that table throws
+    intercept[Exception] {
+      FailingRenameFs.failingRenames(_.contains("last_events")) {
+        ingest(4L, 5L)
+      }
+    }
+    assert(matrix === afterFirst,
+      "counts must not include a batch whose last events were not stored")
+    ingest(4L, 5L)
+    ingest(6L, 7L)
+    assert(matrix === oneShot)
   }
 }
