@@ -134,13 +134,6 @@ object TextExprs {
 
   def bpeishTokenCount(text: Column): Column = size(bpeishTokens(text))
 
-  /** Fraction of tokens that are stopwords (quality-score feature). */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val ts = tokens(lower(text))
-    val hits = size(array_intersect(ts, array(stopwords.map(lit): _*)))
-    hits.cast("double") / greatest(size(ts), lit(1)).cast("double")
-  }
-
   val defaultStopwords: Seq[String] = Seq(
     "the", "a", "an", "of", "and", "to", "in", "is", "it", "that", "for",
     "on", "with", "as", "was", "at", "by", "be", "this", "are")

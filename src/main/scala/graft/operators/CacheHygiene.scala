@@ -2,8 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import scala.collection.mutable
-
 /** Session cache hygiene for loop-shaped operators.
   *
   * Iterative operators (BPE training, connected components) bound their
@@ -43,12 +41,12 @@ object CacheHygiene {
     } finally cleanupLock.unlock()
   }
 
-  // JVM-lifetime spill dirs, removed by one shutdown hook. Registered
-  // lazily so plain batch jobs never pay for the hook.
-  private val spillDirs = mutable.Buffer.empty[java.io.File]
-  private lazy val hookInstalled: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      spillDirs.synchronized { spillDirs.foreach(deleteRecursively) }))
+  // JVM-lifetime temp dirs live under one root, removed by one shutdown
+  // hook. Created lazily so plain batch jobs never pay for the hook.
+  private[graft] lazy val jvmTempRoot: java.io.File = {
+    val root = java.nio.file.Files.createTempDirectory("graft_jvm").toFile
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(root)))
+    root
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -57,14 +55,13 @@ object CacheHygiene {
     f.delete(); ()
   }
 
-  /** Register an externally-created temp dir for the JVM-exit sweep —
-    * for harness code whose returned plan reads files it created (e.g.
-    * the q91 streaming sim's state + sink), so repeated invocations in
-    * one process don't orphan directories past process exit. */
-  def registerForCleanup(dir: java.io.File): Unit = {
-    hookInstalled
-    spillDirs.synchronized { spillDirs += dir; () }
-  }
+  /** A fresh dir (absolute path) under [[jvmTempRoot]], swept at JVM
+    * exit — for files a returned plan still reads (spills, the registry's
+    * streaming-sim state and sinks), so repeated invocations in one
+    * process never orphan directories past process exit. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(jvmTempRoot.toPath, prefix)
+      .toString
 
   /** Decouple a BOUNDED result from the caches it reads: collect and
     * rebuild as a driver-local relation. Only for outputs whose row count
@@ -84,10 +81,7 @@ object CacheHygiene {
     * sized data (a dup-cluster label table, ids+label at 16 B/row), not
     * corpus-sized relations; the spill files live until JVM exit. */
   def spillToTempParquet(df: DataFrame, prefix: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    hookInstalled
-    spillDirs.synchronized { spillDirs += dir; () }
-    val path = new java.io.File(dir, "data").getAbsolutePath
+    val path = s"${tempDir(prefix)}/data"
     df.write.mode("overwrite").parquet(path)
     df.sparkSession.read.parquet(path)
   }

@@ -194,17 +194,6 @@ object NearDup {
           least(col("n_a"), col("n_b")).cast("double"), 6).as("sim"))
   }
 
-  /** MinHash signature: for each of `numPerms` hash functions take the min of
-    * `xxhash64(shingle, seed_i)` over the doc's shingle set. Pure map-side
-    * (aggregate over the shingle array) — no shuffle to build signatures. */
-  def minhashSignature(text: Column, n: Int, numPerms: Int): Column = {
-    val sh = TextExprs.wordShingles(text, n)
-    val mins = (0 until numPerms).map { i =>
-      array_min(transform(sh, s => xxhash64(s, lit(i))))
-    }
-    array(mins: _*)
-  }
-
   /** MinHash+LSH candidate pairs, verified with exact shingle Jaccard.
     * bands×rowsPerBand hash functions; docs sharing any band bucket become
     * candidates. Returns (id_a, id_b, jaccard ≥ threshold).

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextExprs, TimeExprs, VectorExprs}
-import graft.operators.{Dedup, NearDup, Similarity}
+import graft.operators.{CacheHygiene, Dedup, NearDup, Similarity}
 import graft.sources.Tables
 
 /** Relational/reference surface: aggregation, the deep join tree, filters, scalar projections, dedup/diff analogs, windows, pivot, formats.
@@ -21,8 +21,10 @@ private[queries] trait TdqCore { this: TestdataQueries.type =>
   // ---------------------------------------------------------------- A3 / P1
   // Grouped aggregation over the fact table (per-poll count metrics analog).
   private[queries] def q1Agg(s: SparkSession, d: String): DataFrame =
-    Tables.lineitem(s, d)
-      .groupBy("l_returnflag", "l_linestatus")
+    q1Body(Tables.lineitem(s, d))
+
+  private def q1Body(lineitem: DataFrame): DataFrame =
+    lineitem.groupBy("l_returnflag", "l_linestatus")
       .agg(
         dsum(col("l_quantity")).as("sum_qty"),
         dsum(col("l_extendedprice")).as("sum_price"),
@@ -527,15 +529,9 @@ private[queries] trait TdqCore { this: TestdataQueries.type =>
   // format edge is content-transparent.
   private[queries] def q79FormatRoundtrip(s: SparkSession, d: String): DataFrame = {
     val base = Tables.lineitem(s, d)
-    val dir = java.nio.file.Files.createTempDirectory("orc_rt")
-      .toString + "/lineitem"
+    val dir = CacheHygiene.tempDir("orc_rt") + "/lineitem"
     graft.sources.Formats.write(base, dir, "orc",
       partitionBy = Seq("l_returnflag"))
-    graft.sources.Formats.read(s, dir, "orc", base.schema)
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice")).as("sum_price"),
-        count(lit(1)).as("n_rows"))
+    q1Body(graft.sources.Formats.read(s, dir, "orc", base.schema))
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextExprs, TimeExprs, VectorExprs}
-import graft.operators.{Dedup, NearDup, Similarity}
+import graft.operators.{CacheHygiene, Dedup, NearDup, Similarity}
 import graft.sources.Tables
 
 /** Embedding similarity and ANN: PQ/IVF/SQ8/BQ/OPQ quantization, kNN serving, semantic dedup, MMR, silhouette, embedding health.
@@ -129,20 +129,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       k = 5, nCentroids = 8, nProbe = 2, seed = 42L)
     val exact = Similarity.bruteForceTopK(embs, qset, "vec_id", "embedding",
       k = 5)
-    val hitCounts = ann.select("query_id", "neighbor_id")
-      .join(exact.select("query_id", "neighbor_id"),
-        Seq("query_id", "neighbor_id"), "left_semi")
-      .groupBy("query_id").agg(count(lit(1)).as("hits"))
-    qset.select(col("vec_id").as("query_id"))
-      .join(hitCounts, Seq("query_id"), "left")
-      .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .select(col("query_id"),
-        // always-zero non-foldable key over the ≤|Q|-row recall table:
-        // explicit partition spec, no empty-spec global window (see
-        // Sketch.quantilesFromSample's scaladoc for the repo-wide rule)
-        (col("hits") >= q31PerQueryFloor &&
-          sum(col("hits")).over(Window.partitionBy(pmod(col("hits"), lit(1L))))
-            >= q31TotalFloor).as("recall_ok"))
+    recallFloor(recallHits(qset, ann, exact), q31PerQueryFloor, q31TotalFloor)
   }
 
   private[queries] lazy val q31Sql =
@@ -360,18 +347,27 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
   // shape as q93 — the residual flavor is what the published system
   // runs, trading a per-list table rebuild (nProbe × m tiny tables,
   // broadcast side) for materially lower quantization distortion.
+
+  /** The residual IVF-PQ index of `embs`: each vector's coarse list and
+    * the PQ codes of its residual against that list's centroid. */
+  private[queries] def ivfResidualCodes(embs: DataFrame,
+      coarse: Seq[(Int, Seq[Double])], rb: Seq[(Int, Seq[Double])])
+      : DataFrame = {
+    val listC = graft.operators.Quantize.ivfListCol(col("embedding"), coarse)
+    graft.operators.Quantize.pqEncode(embs, col("vec_id"),
+        graft.operators.Quantize.ivfResidualCol(col("embedding"), coarse,
+          listC),
+        rb, pqM, pqDim, keep = Seq(listC.as("list_id")))
+      .drop("distortion")
+  }
+
   private[queries] def q94IvfPqResidual(s: SparkSession, d: String): DataFrame = {
     val embs = Tables.embeddings(s, d)
     val coarse = graft.operators.Quantize.seedCodebook(embs, col("vec_id"),
       col("embedding"), ivfCoarseIds)
     val rb = graft.operators.Quantize.residualSeedCodebook(embs,
       col("vec_id"), col("embedding"), pqSeedIds, coarse)
-    val listC = graft.operators.Quantize.ivfListCol(col("embedding"), coarse)
-    val codes = graft.operators.Quantize.pqEncode(embs, col("vec_id"),
-        graft.operators.Quantize.ivfResidualCol(col("embedding"), coarse,
-          listC),
-        rb, pqM, pqDim, keep = Seq(listC.as("list_id")))
-      .drop("distortion")
+    val codes = ivfResidualCodes(embs, coarse, rb)
     graft.operators.Quantize.ivfPqResidualTopK(codes,
       embs.filter(col("vec_id") < 5), "vec_id", "embedding",
       coarse, rb, pqM, pqDim, ivfNProbe, k = 3)
@@ -477,12 +473,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       col("embedding"), q95CoarseIds)
     val rb = graft.operators.Quantize.residualSeedCodebook(embs,
       col("vec_id"), col("embedding"), q95SeedIds, coarse)
-    val listC = graft.operators.Quantize.ivfListCol(col("embedding"), coarse)
-    val codes = graft.operators.Quantize.pqEncode(embs, col("vec_id"),
-        graft.operators.Quantize.ivfResidualCol(col("embedding"), coarse,
-          listC),
-        rb, pqM, pqDim, keep = Seq(listC.as("list_id")))
-      .drop("distortion")
+    val codes = ivfResidualCodes(embs, coarse, rb)
     graft.operators.Quantize.ivfPqResidualTopK(codes,
       embs.filter(col("vec_id") < 5), "vec_id", "embedding",
       coarse, rb, pqM, pqDim, nProbe = 4, k = 3)
@@ -922,12 +913,16 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
   // pipeline diagnostic rather than a test-only figure. Both arms are
   // the registered queries' own plans; the oracle composes both
   // registered oracles verbatim.
-  private[queries] def q141AnnRecall(s: SparkSession, d: String): DataFrame = {
-    val exact = q21CosineTopK(s, d)
-      .select(col("query_id"), col("neighbor_id"))
-    val approx = q22CosineIvf(s, d)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
-    exact.join(approx,
+  private[queries] def q141AnnRecall(s: SparkSession, d: String): DataFrame =
+    annRecall(q21CosineTopK(s, d), q22CosineIvf(s, d))
+
+  /** Per-query recall@k of an approximate top-k (`ann`) against its exact
+    * baseline (`exact`), both `(query_id, neighbor_id)` tables: `n_hit`
+    * exact neighbors found, `recall` = n_hit / k snapped to 6 places —
+    * the `ex LEFT JOIN ap` body every composed recall oracle replays. */
+  private[graft] def annRecall(exact: DataFrame, ann: DataFrame): DataFrame =
+    exact.select(col("query_id"), col("neighbor_id"))
+      .join(ann.select(col("query_id").as("aq"), col("neighbor_id").as("an")),
         col("query_id") === col("aq") && col("neighbor_id") === col("an"),
         "left")
       .groupBy(col("query_id"))
@@ -935,7 +930,6 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       .select(col("query_id"), col("n_hit"),
         round(col("n_hit").cast("double") / col("k").cast("double"), 6)
           .as("recall"))
-  }
 
   private[queries] lazy val q141Sql =
     s"""WITH ex AS (SELECT query_id, neighbor_id FROM ($q21Sql)),
@@ -971,8 +965,20 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       .select(col("query_id"), coalesce(col("hits"), lit(0L)).as("hits"))
   }
 
-  /** q31's floor tail: `recall_ok` = per-query floor AND total floor
-    * (the bounded-window form of the repo-wide rule). */
+  /** [[recallHits]] of the two-stage serving shape every learned-coarse
+    * floor query measures: `shortlist` exact-L2 re-ranked to the top 5
+    * per query of `qset`, against the exact L2 top 5. */
+  private[queries] def rerankL2Hits(embs: DataFrame, qset: DataFrame,
+                                    shortlist: DataFrame): DataFrame =
+    recallHits(qset,
+      graft.operators.Quantize.rerankL2(shortlist, embs, qset,
+        "vec_id", "embedding", k = 5),
+      Similarity.bruteForceTopKL2(embs, qset, "vec_id", "embedding", k = 5))
+
+  /** q31's floor tail: `recall_ok` = per-query floor AND total floor.
+    * The total runs over an always-zero non-foldable key on the ≤|Q|-row
+    * recall table: an explicit partition spec, never an empty-spec global
+    * window (see Sketch.quantilesFromSample's scaladoc for the rule). */
   private[queries] def recallFloor(hits: DataFrame, perQueryFloor: Long,
                           totalFloor: Long): DataFrame =
     hits.select(col("query_id"),
@@ -1015,11 +1021,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     // via shortlist misses, the standard IVFADC deployment shape
     val shortlist = graft.operators.Quantize.ivfPqTopK(codes, qset,
       "vec_id", "embedding", coarse, cb, pqM, pqDim, q145NProbe, k = q145Shortlist)
-    val ann = graft.operators.Quantize.rerankL2(shortlist, embs, qset,
-      "vec_id", "embedding", k = 5)
-    val exact = Similarity.bruteForceTopKL2(embs, qset,
-      "vec_id", "embedding", k = 5)
-    recallHits(qset, ann, exact)
+    rerankL2Hits(embs, qset, shortlist)
   }
 
   private[queries] def q145IvfPqLearnedRecall(s: SparkSession, d: String): DataFrame =
@@ -1036,18 +1038,9 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val qset = embs.filter(col("vec_id") < 5)
     val ann = graft.operators.Quantize.sq8TopK(embs, qset,
       "vec_id", "embedding", k = 3)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
     val exact = Similarity.bruteForceTopKDot(embs, qset,
       "vec_id", "embedding", k = 3)
-      .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann,
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("an")).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("k").cast("double"), 6)
-          .as("recall"))
+    annRecall(exact, ann)
   }
 
   private[queries] lazy val q146Sql =
@@ -1074,18 +1067,9 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val embs = Tables.embeddings(s, d)
     val qset = embs.filter(col("vec_id") < 5)
     val ann = q104BqTopK(s, d)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
     val exact = Similarity.bruteForceTopK(embs, qset,
       "vec_id", "embedding", k = 3)
-      .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann,
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("an")).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("k").cast("double"), 6)
-          .as("recall"))
+    annRecall(exact, ann)
   }
 
   private[queries] lazy val q147Sql =
@@ -1119,20 +1103,11 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       col("embedding"), nLists = 8, seed = 42L)
     val rb = graft.operators.Quantize.residualSeedCodebook(embs,
       col("vec_id"), col("embedding"), pqSeedIds, coarse)
-    val listC = graft.operators.Quantize.ivfListCol(col("embedding"), coarse)
-    val codes = graft.operators.Quantize.pqEncode(embs, col("vec_id"),
-        graft.operators.Quantize.ivfResidualCol(col("embedding"), coarse,
-          listC),
-        rb, pqM, pqDim, keep = Seq(listC.as("list_id")))
-      .drop("distortion")
+    val codes = ivfResidualCodes(embs, coarse, rb)
     val qset = embs.filter(col("vec_id") < 10)
     val shortlist = graft.operators.Quantize.ivfPqResidualTopK(codes, qset,
       "vec_id", "embedding", coarse, rb, pqM, pqDim, q145NProbe, k = q145Shortlist)
-    val ann = graft.operators.Quantize.rerankL2(shortlist, embs, qset,
-      "vec_id", "embedding", k = 5)
-    val exact = Similarity.bruteForceTopKL2(embs, qset,
-      "vec_id", "embedding", k = 5)
-    recallHits(qset, ann, exact)
+    rerankL2Hits(embs, qset, shortlist)
   }
 
   private[queries] def q148IvfadcLearnedRecall(s: SparkSession, d: String): DataFrame =
@@ -1170,11 +1145,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val shortlist = graft.operators.Quantize.ivfPqResidualTopK(codes,
       qset, "vec_id", "embedding", coarse, rb, pqM, pqDim, q145NProbe,
       k = q145Shortlist)
-    val ann = graft.operators.Quantize.rerankL2(shortlist, embs, qset,
-      "vec_id", "embedding", k = 5)
-    val exact = Similarity.bruteForceTopKL2(embs, qset,
-      "vec_id", "embedding", k = 5)
-    recallHits(qset, ann, exact)
+    rerankL2Hits(embs, qset, shortlist)
   }
 
   private[queries] def q243LearnedPqRecall(s: SparkSession, d: String): DataFrame =
@@ -1210,11 +1181,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val shortlist = graft.operators.Quantize.pqAdcTopK(codes, qset,
       "vec_id", "rvec", cb, pqM, pqDim, k = q145Shortlist)
     val origQ = embs.filter(col("vec_id") < 10)
-    val ann = graft.operators.Quantize.rerankL2(shortlist, embs, origQ,
-      "vec_id", "embedding", k = 5)
-    val exact = Similarity.bruteForceTopKL2(embs, origQ,
-      "vec_id", "embedding", k = 5)
-    recallHits(origQ, ann, exact)
+    rerankL2Hits(embs, origQ, shortlist)
   }
 
   private[queries] def q247LearnedOpqRecall(s: SparkSession, d: String): DataFrame =
@@ -1278,10 +1245,8 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val codes = graft.operators.Quantize.pqEncode(rot, col("vec_id"),
         rResC, rcb, m, pqDim, keep = Seq(rListC.as("list_id")))
       .drop("distortion")
-    val dirFile = java.nio.file.Files.createTempDirectory("opq_ivf").toFile
     // serving reads the index files — JVM-exit sweep (q97's precedent)
-    graft.operators.CacheHygiene.registerForCleanup(dirFile)
-    val dir = dirFile.getAbsolutePath + "/codes"
+    val dir = CacheHygiene.tempDir("opq_ivf") + "/codes"
     codes.repartition(col("list_id")).write.mode("overwrite")
       .partitionBy("list_id").parquet(dir)
     val qset = rot.filter(col("vec_id") < 10)
@@ -1289,11 +1254,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       s.read.parquet(dir), qset, "vec_id", "rvec", rotCoarse, rcb, m,
       pqDim, nProbe, k = shortlist)
     val origQ = embs.filter(col("vec_id") < 10)
-    val ann = graft.operators.Quantize.rerankL2(short, embs, origQ,
-      "vec_id", "embedding", k = 5)
-    val exact = Similarity.bruteForceTopKL2(embs, origQ,
-      "vec_id", "embedding", k = 5)
-    recallHits(origQ, ann, exact)
+    rerankL2Hits(embs, origQ, short)
   }
 
   private[queries] def q248OpqIvfRecall(s: SparkSession, d: String): DataFrame =
@@ -1457,9 +1418,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       val codes = graft.operators.Quantize.pqEncode(rot, col("vec_id"),
           rResC, rcb, m, pqDim, keep = Seq(rListC.as("list_id")))
         .drop("distortion")
-      val dirFile = java.nio.file.Files.createTempDirectory("q253_ivf").toFile
-      graft.operators.CacheHygiene.registerForCleanup(dirFile)
-      val dir = dirFile.getAbsolutePath + "/codes"
+      val dir = CacheHygiene.tempDir("q253_ivf") + "/codes"
       codes.repartition(col("list_id")).write.mode("overwrite")
         .partitionBy("list_id").parquet(dir)
       val qset = rot.filter(col("vec_id") < 10)
@@ -1586,16 +1545,12 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val rotCoarse = coarse.map { case (l, c) =>
       l -> rotM.map(row => row.zip(c).map { case (a, b) => a * b }.sum)
     }
-    val dirFile = java.nio.file.Files.createTempDirectory("opq_stream")
-      .toFile
-    graft.operators.CacheHygiene.registerForCleanup(dirFile)
-    val dir = dirFile.getAbsolutePath
+    val dir = CacheHygiene.tempDir("opq_stream")
     val rot = embs.select(col("vec_id"),
       Similarity.rpProject(col("embedding").cast("array<double>"), rotM)
         .as("rvec"))
-    (0 until 3).foreach { b =>
-      graft.streaming.IvfPqStream.ingestBatch(s,
-        rot.filter(col("vec_id") % 3 === b), dir,
+    StreamSim.modSplits(rot, col("vec_id")).foreach { b =>
+      graft.streaming.IvfPqStream.ingestBatch(s, b, dir,
         col("vec_id"), col("rvec"), rotCoarse, rcb, pqM, pqDim)
     }
     val qset = rot.filter(col("vec_id") < 10)
@@ -1603,11 +1558,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       "vec_id", "rvec", rotCoarse, rcb, pqM, pqDim, q145NProbe,
       k = q145Shortlist)
     val origQ = embs.filter(col("vec_id") < 10)
-    val ann = graft.operators.Quantize.rerankL2(shortlist, embs, origQ,
-      "vec_id", "embedding", k = 5)
-    val exact = Similarity.bruteForceTopKL2(embs, origQ,
-      "vec_id", "embedding", k = 5)
-    recallHits(origQ, ann, exact)
+    rerankL2Hits(embs, origQ, shortlist)
   }
 
   private[queries] def q250StreamingOpqIvf(s: SparkSession, d: String): DataFrame =
@@ -1644,19 +1595,10 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val shortlist = graft.operators.Quantize.pqAdcTopK(codes, qset,
       "vec_id", "rvec", cb, pqM, pqDim, k = q173Shortlist)
     val ann = graft.operators.Quantize.rerankL2(shortlist, embs,
-        embs.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
+      embs.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3)
     val exact = Similarity.bruteForceTopKL2(embs,
-        embs.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3)
-      .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann,
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(lit(1)).as("k"), count(col("an")).as("n_hit"))
-      .select(col("query_id"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("k").cast("double"), 6)
-          .as("recall"))
+      embs.filter(col("vec_id") < 5), "vec_id", "embedding", k = 3)
+    annRecall(exact, ann)
   }
 
   private[queries] lazy val q173Sql = {

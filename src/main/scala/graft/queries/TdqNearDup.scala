@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextExprs, TimeExprs, VectorExprs}
-import graft.operators.{Dedup, NearDup, Similarity}
+import graft.operators.{CacheHygiene, Dedup, NearDup, Similarity}
 import graft.sources.Tables
 
 /** Near-duplicate detection (MinHash-LSH, SimHash, winnowing, containment), duplicate clusters, effective sizes, perceptual media dedup, recall QA.
@@ -103,13 +103,11 @@ private[queries] trait TdqNearDup { this: TestdataQueries.type =>
   // batches, exercising the cross-generation index-probe path, not just
   // the within-batch self-join.
   private[queries] def q57StreamingNeardup(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("neardup_stream")
-      .toString
+    val base = CacheHygiene.tempDir("neardup_stream")
     val docs = Tables.documents(s, d)
       .select(col("doc_id").as("id"), col("text"))
-    (0 until 3).foreach { b =>
-      graft.streaming.NearDupStream.ingestBatch(s,
-        docs.filter(col("id") % 3 === b),
+    StreamSim.modSplits(docs, col("id")).foreach { b =>
+      graft.streaming.NearDupStream.ingestBatch(s, b,
         s"$base/state", s"$base/sink",
         n = 3, bands = 16, rowsPerBand = 2, threshold = 0.8)
     }

@@ -452,16 +452,20 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // a mixture. One scan, one metadata row, exact counts, snap-6 ratios.
   private[queries] lazy val q136Thresholds = Seq(0.3, 0.5, 0.7)
 
-  private[queries] def q136FilterEval(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.evalBinary(labeled, col("score"), col("y"),
-      q136Thresholds)
-  }
+  /** q77's scores (`id`, `score`) joined to the label `y` = "is English"
+    * and any `extra` document columns — the labeled table every
+    * filter-eval query below reads (its oracles' `lb` CTE). */
+  private[queries] def q77Labeled(s: SparkSession, d: String,
+                                  extra: Column*): DataFrame =
+    graft.operators.Classify.hashedLinearScore(
+        Tables.documents(s, d), col("doc_id"), col("text"),
+        q77Weights, q77Bias)
+      .join(Tables.documents(s, d).select((col("doc_id").as("id") +: extra) :+
+        (col("lang") === "en").cast("int").as("y"): _*), Seq("id"))
+
+  private[queries] def q136FilterEval(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.evalBinary(q77Labeled(s, d), col("score"),
+      col("y"), q136Thresholds)
 
   private[queries] lazy val q136Sql = {
     val aggs = q136Thresholds.zipWithIndex.map { case (t, i) =>
@@ -497,15 +501,8 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // Threshold-free filter quality over q77's scores: Mann–Whitney pair
   // statistic via the distinct-score count table (score grain bounds
   // it), integer 2×-scaled numerator, one snap-6 division.
-  private[queries] def q137Auc(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.aucRoc(labeled, col("score"), col("y"))
-  }
+  private[queries] def q137Auc(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.aucRoc(q77Labeled(s, d), col("score"), col("y"))
 
   private[queries] lazy val q137Sql =
     s"""WITH sc AS (SELECT doc_id, score FROM ($q77Sql)),
@@ -535,16 +532,9 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // completes the filter-eval family (q136 sweep, q137 AUC).
   private[queries] lazy val q138Bins = 10
 
-  private[queries] def q138Calibration(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.calibrationBins(labeled, col("score"),
+  private[queries] def q138Calibration(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.calibrationBins(q77Labeled(s, d), col("score"),
       col("y"), q138Bins)
-  }
 
   private[queries] lazy val q138Sql =
     s"""WITH sc AS (SELECT doc_id, score FROM ($q77Sql)),
@@ -564,18 +554,11 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // ------------------- per-source AUC (§2.10 ext)
   // q137 sliced by source — the filter-bias diagnostic: a classifier
   // ranking well globally can be near-random on one source.
-  private[queries] def q142AucBySource(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"), col("source"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.aucRocByGroup(labeled, col("score"),
-      col("y"), col("source"))
+  private[queries] def q142AucBySource(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.aucRocByGroup(q77Labeled(s, d, col("source")),
+        col("score"), col("y"), col("source"))
       .select(col("grp").as("source"), col("n_pos"), col("n_neg"),
         col("auc"))
-  }
 
   private[queries] lazy val q142Sql =
     s"""WITH sc AS (SELECT doc_id, score FROM ($q77Sql)),
@@ -655,15 +638,9 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // distinct-score count-table shape as q137; per-threshold precision
   // is one IEEE division, terms snap to 9 and sum in DECIMAL, one
   // snap-6 division by n_pos.
-  private[queries] def q144AvgPrecision(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.averagePrecision(labeled, col("score"), col("y"))
-  }
+  private[queries] def q144AvgPrecision(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.averagePrecision(q77Labeled(s, d), col("score"),
+      col("y"))
 
   private[queries] lazy val q144Sql =
     s"""WITH sc AS (SELECT doc_id, score FROM ($q77Sql)),
@@ -695,17 +672,10 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // q144 sliced by source — AP is prevalence-sensitive by design, so the
   // only fair read of a source's ranking quality compares its AP to its
   // OWN prevalence; that needs the per-group table.
-  private[queries] def q149ApBySource(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"), col("source"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.averagePrecisionByGroup(labeled, col("score"),
-      col("y"), col("source"))
+  private[queries] def q149ApBySource(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.averagePrecisionByGroup(
+        q77Labeled(s, d, col("source")), col("score"), col("y"), col("source"))
       .select(col("grp").as("source"), col("n_pos"), col("n_neg"), col("ap"))
-  }
 
   private[queries] lazy val q149Sql =
     s"""WITH sc AS (SELECT doc_id, score FROM ($q77Sql)),
@@ -801,16 +771,9 @@ private[queries] trait TdqRetrievalEval { this: TestdataQueries.type =>
   // q138's reliability diagram reduced to the standard scalar:
   // ECE = Σ_b (n_b/N)·|frac_pos − mean_score| over the same exact bins
   // (snap-6 per-bin values, snap-9 weighted gaps, one snap-6 division).
-  private[queries] def q154Ece(s: SparkSession, d: String): DataFrame = {
-    val scores = graft.operators.Classify.hashedLinearScore(
-      Tables.documents(s, d), col("doc_id"), col("text"),
-      q77Weights, q77Bias)
-    val labeled = scores.join(
-      Tables.documents(s, d).select(col("doc_id").as("id"),
-        (col("lang") === "en").cast("int").as("y")), Seq("id"))
-    graft.operators.Classify.calibrationError(labeled, col("score"),
+  private[queries] def q154Ece(s: SparkSession, d: String): DataFrame =
+    graft.operators.Classify.calibrationError(q77Labeled(s, d), col("score"),
       col("y"), q138Bins)
-  }
 
   private[queries] lazy val q154Sql =
     s"""WITH bins AS ($q138Sql)

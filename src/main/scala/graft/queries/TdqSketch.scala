@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextExprs, TimeExprs, VectorExprs}
-import graft.operators.{Dedup, NearDup, Similarity}
+import graft.operators.{CacheHygiene, Dedup, NearDup, Similarity}
 import graft.sources.Tables
 
 /** Bounded-state sketches: KMV, quantile, count-min, HyperLogLog, heavy hitters, column profile.
@@ -102,12 +102,9 @@ private[queries] trait TdqSketch { this: TestdataQueries.type =>
   // BIT-IDENTICAL to the batch sketch for any arrival split: q65 shares
   // q56's oracle verbatim.
   private[queries] def q65StreamingKmv(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("kmv_stream")
-      .toString + "/state"
-    val li = Tables.lineitem(s, d)
-    (0 until 3).foreach { b =>
-      graft.operators.Sketch.kmvIngestBatch(
-        li.filter(col("l_orderkey") % 3 === b), col("l_partkey"), q56K, state)
+    val state = CacheHygiene.tempDir("kmv_stream") + "/state"
+    StreamSim.modSplits(Tables.lineitem(s, d), col("l_orderkey")).foreach { b =>
+      graft.operators.Sketch.kmvIngestBatch(b, col("l_partkey"), q56K, state)
     }
     graft.operators.Sketch.kmvFromState(s, state, q56K)
   }

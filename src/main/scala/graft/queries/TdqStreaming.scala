@@ -5,10 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextExprs, TimeExprs, VectorExprs}
-import graft.operators.{Dedup, NearDup, Similarity}
+import graft.operators.{CacheHygiene, Dedup, NearDup, Similarity}
 import graft.sources.Tables
 
 /** Streaming arms: every family's incremental form over SketchState-backed micro-batch ingest.
+  * Each sim's state dir and arrival split come from [[StreamSim]].
   *
   * One domain slice of the query registry (split from the single-file
   * registry in round 15 — same members, same semantics). Members are
@@ -57,25 +58,14 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // arrival split — topK over the index must therefore match q95's
   // oracle verbatim.
   private[queries] def q97StreamingIvfPq(s: SparkSession, d: String): DataFrame = {
-    val dirFile = java.nio.file.Files.createTempDirectory("ivfpq_stream")
-      .toFile
-    // the returned plan reads the index files — JVM-exit sweep, not an
-    // eager delete (Bench reps would orphan state dirs otherwise)
-    graft.operators.CacheHygiene.registerForCleanup(dirFile)
-    val dir = dirFile.getAbsolutePath
+    val dir = CacheHygiene.tempDir("ivfpq_stream")
     val embs = Tables.embeddings(s, d)
     val coarse = graft.operators.Quantize.seedCodebook(embs, col("vec_id"),
       col("embedding"), q95CoarseIds)
     val rb = graft.operators.Quantize.residualSeedCodebook(embs,
       col("vec_id"), col("embedding"), q95SeedIds, coarse)
-    val mm = embs.agg(min(col("vec_id")), max(col("vec_id"))).collect()(0)
-    val lo = mm.getLong(0)
-    val span = mm.getLong(1) - lo + 1
-    val bounds = Seq(lo, lo + span / 3, lo + 2 * span / 3, Long.MaxValue)
-    (0 until 3).foreach { b =>
-      graft.streaming.IvfPqStream.ingestBatch(s,
-        embs.filter(col("vec_id") >= bounds(b) &&
-          col("vec_id") < bounds(b + 1)),
+    StreamSim.idThirds(embs, "vec_id").foreach { b =>
+      graft.streaming.IvfPqStream.ingestBatch(s, b,
         dir, col("vec_id"), col("embedding"), coarse, rb, pqM, pqDim)
     }
     graft.streaming.IvfPqStream.topK(s, dir,
@@ -90,14 +80,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // equals the batch operator's output for ANY arrival split — q75
   // shares q58's oracle, like q65 shares q56's.
   private[queries] def q75StreamingHh(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("mg_stream")
-      .toString + "/state"
-    val toks = (b: Int) => Tables.documents(s, d)
-      .filter(col("doc_id") % 3 === b)
-      .select(explode(TextExprs.tokens(col("text"))).as("item"))
-    (0 until 3).foreach { b =>
+    val state = CacheHygiene.tempDir("mg_stream") + "/state"
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
       graft.operators.Frequent.mgIngestBatch(
-        toks(b), col("item"), counters = 256, state)
+        b.select(explode(TextExprs.tokens(col("text"))).as("item")),
+        col("item"), counters = 256, state)
     }
     graft.operators.Frequent.heavyHittersFromState(state,
       Tables.documents(s, d)
@@ -111,12 +98,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // q76 shares q67's oracle — completing the streaming-sketch family
   // (q65 KMV, q75 Misra-Gries, q76 quantiles).
   private[queries] def q76StreamingQuantile(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("qt_stream")
-      .toString + "/state"
-    val li = Tables.lineitem(s, d)
-    (0 until 3).foreach { b =>
-      graft.operators.Sketch.quantileIngestBatch(
-        li.filter(col("l_orderkey") % 3 === b), col("l_extendedprice"),
+    val state = CacheHygiene.tempDir("qt_stream") + "/state"
+    StreamSim.modSplits(Tables.lineitem(s, d), col("l_orderkey")).foreach { b =>
+      graft.operators.Sketch.quantileIngestBatch(b, col("l_extendedprice"),
         col("l_orderkey") * 10 + col("l_linenumber"), q67K, state)
     }
     graft.operators.Sketch.quantilesFromState(s, state, q67K, q67Probs)
@@ -128,14 +112,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // q78 shares q70's oracle, closing the streaming-sketch family
   // (q65 KMV, q75 MG, q76 quantiles, q78 count-min).
   private[queries] def q78StreamingCountmin(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("cm_stream")
-      .toString + "/state"
-    val toks = (b: Int) => Tables.documents(s, d)
-      .filter(col("doc_id") % 3 === b)
-      .select(explode(TextExprs.tokens(col("text"))).as("tok"))
-    (0 until 3).foreach { b =>
+    val state = CacheHygiene.tempDir("cm_stream") + "/state"
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
       graft.operators.Sketch.countMinIngestBatch(
-        toks(b), col("tok"), q70Depth, q70Width, state)
+        b.select(explode(TextExprs.tokens(col("text"))).as("tok")),
+        col("tok"), q70Depth, q70Width, state)
     }
     graft.operators.Sketch.countMinEstimatesFromState(state,
       Tables.documents(s, d)
@@ -148,24 +129,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // through SegDedupStream must reproduce the batch operator exactly, so
   // the oracle IS q88's SQL (the q57/q19 equivalence pattern).
   private[queries] def q91StreamingSegDedup(s: SparkSession, d: String): DataFrame = {
-    val dirFile = java.nio.file.Files.createTempDirectory("segdedup_stream")
-      .toFile
-    // the returned plan READS the sink files, so the dir can't be deleted
-    // here — register it for the JVM-exit sweep instead (Bench's 3+ reps
-    // would otherwise orphan one state+sink dir per rep past process exit)
-    graft.operators.CacheHygiene.registerForCleanup(dirFile)
-    val dir = dirFile.getAbsolutePath
+    val dir = CacheHygiene.tempDir("segdedup_stream")
     val docs = Tables.documents(s, d)
       .select(col("doc_id").as("id"), col("text"))
-    // batch bounds from the ACTUAL id range (min may be negative or
-    // nonzero; assuming ids >= 0 would silently starve batch 1)
-    val mm = docs.agg(min(col("id")), max(col("id"))).collect()(0)
-    val lo = mm.getLong(0)
-    val span = mm.getLong(1) - lo + 1
-    val bounds = Seq(lo, lo + span / 3, lo + 2 * span / 3, Long.MaxValue)
-    (0 until 3).foreach { b =>
-      graft.streaming.SegDedupStream.ingestBatch(s,
-        docs.filter(col("id") >= bounds(b) && col("id") < bounds(b + 1)),
+    StreamSim.idThirds(docs, "id").foreach { b =>
+      graft.streaming.SegDedupStream.ingestBatch(s, b,
         s"$dir/state", s"$dir/sink", w = q88W)
     }
     s.read.parquet(s"$dir/sink")
@@ -177,20 +145,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // through SemDedupStream must reproduce the batch operator exactly, so
   // the oracle IS q89's SQL (the q91/q57 equivalence pattern).
   private[queries] def q92StreamingSemDedup(s: SparkSession, d: String): DataFrame = {
-    val dirFile = java.nio.file.Files.createTempDirectory("semdedup_stream")
-      .toFile
-    // the returned plan READS the sink files — JVM-exit cleanup, like q91
-    graft.operators.CacheHygiene.registerForCleanup(dirFile)
-    val dir = dirFile.getAbsolutePath
+    val dir = CacheHygiene.tempDir("semdedup_stream")
     val embs = Tables.embeddings(s, d)
       .select(col("vec_id").as("id"), col("embedding").as("emb"))
-    val mm = embs.agg(min(col("id")), max(col("id"))).collect()(0)
-    val lo = mm.getLong(0)
-    val span = mm.getLong(1) - lo + 1
-    val bounds = Seq(lo, lo + span / 3, lo + 2 * span / 3, Long.MaxValue)
-    (0 until 3).foreach { b =>
-      graft.streaming.SemDedupStream.ingestBatch(s,
-        embs.filter(col("id") >= bounds(b) && col("id") < bounds(b + 1)),
+    StreamSim.idThirds(embs, "id").foreach { b =>
+      graft.streaming.SemDedupStream.ingestBatch(s, b,
         s"$dir/state", s"$dir/sink",
         dim = 64, bits = 4, seed = 7L, threshold = 0.4)
     }
@@ -203,19 +162,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // accumulated tables equal the batch tables EXACTLY for any split — the
   // oracle is q98's SQL verbatim (the q96/q97 oracle-reuse precedent).
   private[queries] def q103StreamingLmCounts(s: SparkSession, d: String): DataFrame = {
-    val dirFile = java.nio.file.Files.createTempDirectory("q103lm").toFile
-    graft.operators.CacheHygiene.registerForCleanup(dirFile)
-    val dir = dirFile.getAbsolutePath
+    val dir = CacheHygiene.tempDir("q103lm")
     val docs = Tables.documents(s, d)
     val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-    val mm = train.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    val lo = mm.getLong(0)
-    val span = mm.getLong(1) - lo + 1
-    val bounds = Seq(lo, lo + span / 3, lo + 2 * span / 3, Long.MaxValue)
-    (0 until 3).foreach { b =>
-      graft.streaming.NgramLmStream.ingestBatch(s,
-        train.filter(col("doc_id") >= bounds(b) &&
-          col("doc_id") < bounds(b + 1)),
+    StreamSim.idThirds(train, "doc_id").foreach { b =>
+      graft.streaming.NgramLmStream.ingestBatch(s, b,
         col("doc_id"), col("text"), s"$dir/state")
     }
     graft.streaming.NgramLmStream.scoreFromState(s, s"$dir/state",
@@ -231,13 +182,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // the streaming-sketch family (q65 KMV, q75 MG, q76 quantiles, q78
   // count-min) with its fifth member.
   private[queries] def q129StreamingHll(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("hll_stream")
-      .toString + "/state"
-    (0 until 3).foreach { b =>
+    val state = CacheHygiene.tempDir("hll_stream") + "/state"
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
       graft.operators.Sketch.hllIngestBatch(
-        Tables.documents(s, d).filter(col("doc_id") % 3 === b)
-          .select(col("source"),
-            explode(TextExprs.tokens(col("text"))).as("tok")),
+        b.select(col("source"),
+          explode(TextExprs.tokens(col("text"))).as("tok")),
         col("source"), col("tok"), q127P, state)
     }
     graft.operators.Sketch.hllEstimatesFromState(s, state, q127P)
@@ -250,13 +199,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // batch). The oracle unrolls the three batches with cumulative-total
   // rate CTEs — every batch's drifting rates replay exactly.
   private[queries] def q139StreamingTempMix(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("tmix_stream")
-      .toString + "/state"
-    val batches = (0 until 3).map { b =>
-      graft.operators.Mix.temperatureSampleIngestBatch(
-        Tables.documents(s, d).filter(col("doc_id") % 3 === b)
-          .select(col("doc_id"), col("source"),
-            TextExprs.tokenCount(col("text")).as("n_toks")),
+    val state = CacheHygiene.tempDir("tmix_stream") + "/state"
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("source"),
+      TextExprs.tokenCount(col("text")).as("n_toks"))
+    val batches = StreamSim.modSplits(docs, col("doc_id")).map { b =>
+      graft.operators.Mix.temperatureSampleIngestBatch(b,
         col("doc_id"), col("source"), col("n_toks"),
         q126Alpha, q126Budget, q126Scale, state)
     }
@@ -306,14 +253,12 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // read against the reference volumes. Identical output to q152 by
   // construction, so the oracle is q152's SQL verbatim.
   private[queries] def q153StreamingMixDrift(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("mixdrift_stream")
-      .toString
+    val state = CacheHygiene.tempDir("mixdrift_stream")
     val docs = Tables.documents(s, d)
     val newer = docs.filter(col("source") =!= "src3" &&
       !(col("source") === "src7" && col("doc_id") % 2 === 0))
-    (0 until 3).foreach { b =>
-      graft.streaming.MixDriftStream.ingestBatch(s,
-        newer.filter(col("doc_id") % 3 === b),
+    StreamSim.modSplits(newer, col("doc_id")).foreach { b =>
+      graft.streaming.MixDriftStream.ingestBatch(s, b,
         col("text"), col("source"), state)
     }
     graft.streaming.MixDriftStream.driftVsReference(s, state,
@@ -330,12 +275,10 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // the one-shot batch operator for any arrival split and q62's oracle
   // certifies this query verbatim.
   private[queries] def q156StreamingContam(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("contam_stream")
-      .toString
+    val state = CacheHygiene.tempDir("contam_stream")
     val docs = Tables.documents(s, d)
       .select(col("doc_id").as("id"), col("text"))
-    (0 until 3).foreach { b =>
-      val arrivals = docs.filter(col("id") % 3 === b)
+    StreamSim.modSplits(docs, col("id")).foreach { arrivals =>
       graft.streaming.ContamStream.ingestBatch(s,
         newDocs = arrivals.filter(col("id") % q62BenchMod =!= 0),
         newBench = arrivals.filter(col("id") % q62BenchMod === 0),
@@ -364,23 +307,22 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // after it — the third poll only repeated that at ~35 Spark jobs of
   // fixture cost (SCALE.md ops28: the floor is job count, not data).
   private[queries] def q249ContamAdaptive(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("contam_adaptive")
-      .toString
+    val state = CacheHygiene.tempDir("contam_adaptive")
     val docs = Tables.documents(s, d)
       .filter(col("doc_id") % 4 === 0)
       .select(col("doc_id").as("id"), col("text"))
-    (0 until 2).foreach { b =>
-      val arrivals = docs.filter(col("id") % 2 === b)
-      graft.streaming.ContamStream.ingestBatch(s,
-        newDocs = arrivals.filter(col("id") % q62BenchMod =!= 0),
-        newBench = arrivals.filter(col("id") % q62BenchMod === 0),
-        stateDir = state, n = 3,
-        bucketTargetBytes = 1L << 14, maxBuckets = 32)
-      if (b == 0) // the growth WITNESS: poll 1 must append + probe GROWN
-        require(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(s"$state/grams/_graft_nbuckets")))
-          .trim.toInt > 1,
-          "q249 growth witness: index must rebucket after poll 0")
+    StreamSim.modSplits(docs, col("id"), k = 2).zipWithIndex.foreach {
+      case (arrivals, b) =>
+        graft.streaming.ContamStream.ingestBatch(s,
+          newDocs = arrivals.filter(col("id") % q62BenchMod =!= 0),
+          newBench = arrivals.filter(col("id") % q62BenchMod === 0),
+          stateDir = state, n = 3,
+          bucketTargetBytes = 1L << 14, maxBuckets = 32)
+        if (b == 0) // the growth WITNESS: poll 1 must append + probe GROWN
+          require(new String(java.nio.file.Files.readAllBytes(
+            java.nio.file.Paths.get(s"$state/grams/_graft_nbuckets")))
+            .trim.toInt > 1,
+            "q249 growth witness: index must rebucket after poll 0")
     }
     graft.streaming.ContamStream.contamination(s, state)
       .select(col("id").as("doc_id"), col("n_shingles"), col("n_overlap"),
@@ -410,12 +352,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // one-shot table EXACTLY under any arrival split, so the streaming
   // read shares q174's oracle verbatim.
   private[queries] def q181StreamingDoremi(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("doremi_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.DoremiStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b),
+    val state = CacheHygiene.tempDir("doremi_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.DoremiStream.ingestBatch(s, b,
         col("text"), col("source"), state)
     }
     graft.streaming.DoremiStream.readWeights(s, state,
@@ -429,12 +368,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // exact state; the read equals the one-shot panel bit for bit and
   // shares q177's oracle verbatim.
   private[queries] def q184StreamingOutliers(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("outlier_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.OutlierStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b),
+    val state = CacheHygiene.tempDir("outlier_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.OutlierStream.ingestBatch(s, b,
         graft.functions.TextExprs.tokenCount(col("text")), col("source"),
         state)
     }
@@ -448,13 +384,12 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // batch where it FIRST appears — so the oracle is a first-batch
   // attribution over the same deterministic id % 3 split.
   private[queries] def q169NoveltySeries(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("novel_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.NovelGramStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b), col("text"), b.toLong, state)
-    }
+    val state = CacheHygiene.tempDir("novel_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).zipWithIndex
+      .foreach { case (batch, b) =>
+        graft.streaming.NovelGramStream.ingestBatch(s, batch, col("text"),
+          b.toLong, state)
+      }
     graft.streaming.NovelGramStream.noveltySeries(s, state)
   }
 
@@ -489,15 +424,13 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // exactly (ClusterStreamSpec pins it under arbitrary arrival splits),
   // so q44's oracle keeps certifying this query verbatim.
   private[queries] def q170StreamingClusters(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory("cluster_stream")
-      .toString
+    val base = CacheHygiene.tempDir("cluster_stream")
     val docs = Tables.documents(s, d)
       .select(col("doc_id").as("id"), col("text"))
-    (0 until 3).foreach { b =>
+    StreamSim.modSplits(docs, col("id")).zipWithIndex.foreach { case (batch, b) =>
       // per-batch sink subdir: the poll's NEW pairs are exactly this
       // dir's rows (pair discovery is exactly-once across polls)
-      graft.streaming.NearDupStream.ingestBatch(s,
-        docs.filter(col("id") % 3 === b),
+      graft.streaming.NearDupStream.ingestBatch(s, batch,
         s"$base/state", s"$base/sink/b$b",
         n = 3, bands = 16, rowsPerBand = 2, threshold = 0.8)
       graft.streaming.ClusterStream.ingestPairs(s,
@@ -517,16 +450,14 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // (its oracle certifies this query).
   private[queries] def q163StreamingScoreDrift(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("scoredrift_stream")
-      .toString
+    val state = CacheHygiene.tempDir("scoredrift_stream")
     val docs = Tables.documents(s, d)
     def scored(df: DataFrame) = graft.operators.Classify.hashedLinearScore(
       df, col("doc_id"), col("text"), q77Weights, q77Bias)
     val newer = docs.filter(col("source") =!= "src3" &&
       !(col("source") === "src7" && col("doc_id") % 2 === 0))
-    (0 until 3).foreach { b =>
-      graft.streaming.ScoreDriftStream.ingestBatch(s,
-        scored(newer.filter(col("doc_id") % 3 === b)),
+    StreamSim.modSplits(newer, col("doc_id")).foreach { b =>
+      graft.streaming.ScoreDriftStream.ingestBatch(s, scored(b),
         col("score"), state, q138Bins)
     }
     graft.streaming.ScoreDriftStream.driftVsReference(s, state,
@@ -542,13 +473,10 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // oracle certifies this query verbatim.
   private[queries] def q172StreamingEmbedHealth(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("embhealth_stream")
-      .toString
-    val embs = Tables.embeddings(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.EmbedHealthStream.ingestBatch(s,
-        embs.filter(col("vec_id") % 3 === b),
-        col("embedding"), col("label"), state)
+    val state = CacheHygiene.tempDir("embhealth_stream")
+    StreamSim.modSplits(Tables.embeddings(s, d), col("vec_id")).foreach { b =>
+      graft.streaming.EmbedHealthStream.ingestBatch(s, b, col("embedding"),
+        col("label"), state)
     }
     graft.streaming.EmbedHealthStream.health(s, state)
   }
@@ -559,16 +487,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // key's event order, so the accumulated table equals one-shot scd2
   // exactly and q203 shares q190's oracle verbatim.
   private[queries] def q203StreamingScd(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("scd_stream")
-      .toString
-    val ev = Tables.events(s, d).withColumn("tsu", unix_micros(col("ts")))
-    val cuts = ev.stat.approxQuantile("tsu", Array(0.33, 0.66), 0.0)
-    val batches = Seq(
-      ev.where(col("tsu") < cuts(0)),
-      ev.where(col("tsu") >= cuts(0) && col("tsu") < cuts(1)),
-      ev.where(col("tsu") >= cuts(1)))
-    batches.foreach { b =>
-      graft.streaming.ScdStream.ingestBatch(s, b.drop("tsu"),
+    val state = CacheHygiene.tempDir("scd_stream")
+    tsValueBatches(s, d).foreach { b =>
+      graft.streaming.ScdStream.ingestBatch(s, b,
         Seq("user_id"), "ts", "event_id", "event_type", Seq("value"),
         state)
     }
@@ -580,12 +501,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // one sufficient statistic serving both the coverage and the
   // corpus-health monitor; shares q205's oracle verbatim.
   private[queries] def q209StreamingZipf(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("zipf_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.OovStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b),
+    val state = CacheHygiene.tempDir("zipf_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.OovStream.ingestBatch(s, b,
         col("source"), col("text"), state)
     }
     graft.streaming.OovStream.readZipf(s, state)
@@ -598,12 +516,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // split, so q212 shares q210's oracle verbatim.
   private[queries] def q212StreamingConcentration(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("conc_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.OovStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b),
+    val state = CacheHygiene.tempDir("conc_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.OovStream.ingestBatch(s, b,
         col("source"), col("text"), state)
     }
     graft.streaming.OovStream.readConcentration(s, state)
@@ -615,13 +530,10 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // one-shot raw table exactly — q221 shares q216's oracle verbatim.
   private[queries] def q221StreamingAffinity(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("aff_stream")
-      .toString
-    val embs = Tables.embeddings(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.AffinityStream.ingestBatch(s,
-        embs.filter(col("vec_id") % 3 === b),
-        col("embedding"), col("label"), dims = 64, state)
+    val state = CacheHygiene.tempDir("aff_stream")
+    StreamSim.modSplits(Tables.embeddings(s, d), col("vec_id")).foreach { b =>
+      graft.streaming.AffinityStream.ingestBatch(s, b, col("embedding"),
+        col("label"), dims = 64, state)
     }
     graft.streaming.AffinityStream.readAffinity(s, dims = 64, state)
   }
@@ -632,13 +544,10 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // q220's oracle verbatim.
   private[queries] def q225StreamingBalance(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("bal_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.BalanceStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b),
-        col("source"), col("lang"), state)
+    val state = CacheHygiene.tempDir("bal_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.BalanceStream.ingestBatch(s, b, col("source"),
+        col("lang"), state)
     }
     graft.streaming.BalanceStream.readBalance(s, state)
   }
@@ -650,12 +559,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // q227's oracle verbatim.
   private[queries] def q230StreamingActive(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("act_stream")
-      .toString
-    val ev = Tables.events(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.ActiveStream.ingestBatch(s,
-        ev.filter(col("event_id") % 3 === b),
+    val state = CacheHygiene.tempDir("act_stream")
+    StreamSim.modSplits(Tables.events(s, d), col("event_id")).foreach { b =>
+      graft.streaming.ActiveStream.ingestBatch(s, b,
         col("user_id"), col("event_type"), col("ts"), state)
     }
     graft.streaming.ActiveStream.readActive(s, windowDays = 7, state)
@@ -667,12 +573,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // q229's oracle verbatim.
   private[queries] def q233StreamingVolume(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("vol_stream")
-      .toString
-    val ev = Tables.events(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.ActiveStream.ingestBatch(s,
-        ev.filter(col("event_id") % 3 === b),
+    val state = CacheHygiene.tempDir("vol_stream")
+    StreamSim.modSplits(Tables.events(s, d), col("event_id")).foreach { b =>
+      graft.streaming.ActiveStream.ingestBatch(s, b,
         col("user_id"), col("event_type"), col("ts"), state)
     }
     graft.streaming.ActiveStream.readVolume(s, q229Z, state)
@@ -684,12 +587,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // q238 shares q234's oracle verbatim.
   private[queries] def q238StreamingJackknife(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("jack_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.JackknifeStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b), col("source"),
+    val state = CacheHygiene.tempDir("jack_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.JackknifeStream.ingestBatch(s, b, col("source"),
         graft.functions.TextExprs.tokenCount(col("text")), lit(1L),
         state)
     }
@@ -702,13 +602,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // verdict equals one-shot exactly and q239 shares q236's oracle.
   private[queries] def q239StreamingAbTest(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("ab_stream")
-      .toString
-    val ev = Tables.events(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.AbTestStream.ingestBatch(s,
-        ev.filter(col("event_id") % 3 === b),
-        col("user_id"), col("event_type"), "purchase", state)
+    val state = CacheHygiene.tempDir("ab_stream")
+    StreamSim.modSplits(Tables.events(s, d), col("event_id")).foreach { b =>
+      graft.streaming.AbTestStream.ingestBatch(s, b, col("user_id"), col("event_type"), "purchase", state)
     }
     graft.streaming.AbTestStream.readVerdict(s, state)
   }
@@ -721,8 +617,7 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // equals one-shot exactly and q240 shares q196's oracle verbatim.
   private[queries] def q240StreamingFunnel(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("funnel_stream")
-      .toString
+    val state = CacheHygiene.tempDir("funnel_stream")
     tsValueBatches(s, d).foreach { b =>
       graft.streaming.FunnelStream.ingestBatch(s, b, "user_id", "ts",
         "event_type", q191Stages, Some(q196GapSeconds), state)
@@ -738,8 +633,7 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // oracle verbatim.
   private[queries] def q241StreamingAttribution(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("attr_stream")
-      .toString
+    val state = CacheHygiene.tempDir("attr_stream")
     tsValueBatches(s, d).foreach { b =>
       graft.streaming.AttributionStream.ingestBatch(s, b, "user_id",
         "ts", "event_type", "event_id", "value", "purchase",
@@ -769,16 +663,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // equals the one-shot build exactly, so q207 shares q202's oracle.
   private[queries] def q207StreamingTransitions(s: SparkSession, d: String)
       : DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("trans_stream")
-      .toString
-    val ev = Tables.events(s, d).withColumn("tsu", unix_micros(col("ts")))
-    val cuts = ev.stat.approxQuantile("tsu", Array(0.33, 0.66), 0.0)
-    val batches = Seq(
-      ev.where(col("tsu") < cuts(0)),
-      ev.where(col("tsu") >= cuts(0) && col("tsu") < cuts(1)),
-      ev.where(col("tsu") >= cuts(1)))
-    batches.foreach { b =>
-      graft.streaming.TransitionStream.ingestBatch(s, b.drop("tsu"),
+    val state = CacheHygiene.tempDir("trans_stream")
+    tsValueBatches(s, d).foreach { b =>
+      graft.streaming.TransitionStream.ingestBatch(s, b,
         Seq("user_id"), "ts", "event_id", "event_type", state)
     }
     graft.streaming.TransitionStream.readMatrix(s, state)
@@ -790,12 +677,9 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // one-shot table exactly under any arrival split — the read shares
   // q195's oracle verbatim.
   private[queries] def q199StreamingOov(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("oov_stream")
-      .toString
-    val docs = Tables.documents(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.OovStream.ingestBatch(s,
-        docs.filter(col("doc_id") % 3 === b),
+    val state = CacheHygiene.tempDir("oov_stream")
+    StreamSim.modSplits(Tables.documents(s, d), col("doc_id")).foreach { b =>
+      graft.streaming.OovStream.ingestBatch(s, b,
         col("source"), col("text"), state)
     }
     graft.streaming.OovStream.readRates(s, state, q195MinCount)
@@ -809,13 +693,11 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // USER HASH, not time (each batch spans the whole timeline), to
   // register that freedom; q244 shares q192's oracle verbatim.
   private[queries] def q244StreamingRetention(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("ret_stream")
-      .toString
-    val ev = Tables.events(s, d)
-    (0 until 3).foreach { b =>
-      graft.streaming.RetentionStream.ingestBatch(s,
-        ev.filter(pmod(xxhash64(col("user_id")), lit(3L)) === b),
-        "user_id", "ts", state)
+    val state = CacheHygiene.tempDir("ret_stream")
+    StreamSim.modSplits(Tables.events(s, d),
+        pmod(xxhash64(col("user_id")), lit(3L))).foreach { b =>
+      graft.streaming.RetentionStream.ingestBatch(s, b, "user_id", "ts",
+        state)
     }
     graft.streaming.RetentionStream.readRetention(s, state)
   }
@@ -828,20 +710,12 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // so q245 shares q60's oracle verbatim. Arrival splits on the doc_id
   // value (the ScdStream contract on the order column).
   private[queries] def q245StreamingShards(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("shard_stream")
-      .toString
+    val state = CacheHygiene.tempDir("shard_stream")
     val docs = Tables.documents(s, d).select(col("doc_id"),
       graft.functions.TextExprs.tokenCount(col("text")).cast("long")
         .as("n_tok"))
-    val mm = docs.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    val lo = mm.getLong(0) - 1
-    val span = mm.getLong(1) - lo
-    val bounds = Seq(lo, lo + span / 3, lo + 2 * span / 3, Long.MaxValue)
-    (0 until 3).foreach { b =>
-      graft.streaming.ShardStream.ingestBatch(s,
-        docs.filter(col("doc_id") > bounds(b) &&
-          col("doc_id") <= bounds(b + 1)),
-        "doc_id", "n_tok", q60Budget, state)
+    StreamSim.idThirds(docs, "doc_id").foreach { b =>
+      graft.streaming.ShardStream.ingestBatch(s, b, "doc_id", "n_tok", q60Budget, state)
     }
     graft.streaming.ShardStream.readShards(s, state)
   }
@@ -857,22 +731,14 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // row-identical to the one-shot quality → exact-dedup → decontaminate
   // → shard cascade the oracle replays.
   private[queries] def q246StreamingCuration(s: SparkSession, d: String): DataFrame = {
-    val state = java.nio.file.Files.createTempDirectory("curation_stream")
-      .toString
+    val state = CacheHygiene.tempDir("curation_stream")
     val docs = Tables.documents(s, d)
     graft.streaming.CurationStream.installBenchmark(s,
       docs.filter(col("doc_id") % q62BenchMod === 0), "text", n = 3,
       stateDir = state)
     val corpus = docs.filter(col("doc_id") % q62BenchMod =!= 0)
-    val mm = corpus.agg(min(col("doc_id")), max(col("doc_id"))).collect()(0)
-    val lo = mm.getLong(0) - 1
-    val span = mm.getLong(1) - lo
-    val bounds = Seq(lo, lo + span / 3, lo + 2 * span / 3, Long.MaxValue)
-    (0 until 3).foreach { b =>
-      graft.streaming.CurationStream.ingestBatch(s,
-        corpus.filter(col("doc_id") > bounds(b) &&
-          col("doc_id") <= bounds(b + 1)),
-        "doc_id", "text", q55QualityFloor, n = 3, budget = q60Budget,
+    StreamSim.idThirds(corpus, "doc_id").foreach { b =>
+      graft.streaming.CurationStream.ingestBatch(s, b, "doc_id", "text", q55QualityFloor, n = 3, budget = q60Budget,
         stateDir = state)
     }
     graft.streaming.CurationStream.readCurated(s, state)

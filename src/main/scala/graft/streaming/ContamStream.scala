@@ -164,6 +164,10 @@ object ContamStream {
     // the modulus this batch appends AND probes with; a rebucket (end of
     // batch) only affects the NEXT batch's reads
     val nB = currentBuckets(spark, gramsPath, nBuckets)
+    // adopt crash-interrupted compaction swaps BEFORE this batch's
+    // appends can recreate the live dirs and orphan them (bench adopts in
+    // readOpt below, grams in currentBuckets' readMarker above)
+    Seq(statsPath, hitsPath).foreach(SketchState.exists(spark, _))
 
     val nd = newDocs.select(col("id"), col("text")).persist()
     val nb = newBench.select(col("id"), col("text")).persist()
@@ -233,13 +237,19 @@ object ContamStream {
       // batch adds at most min(nB, its distinct buckets) files — at
       // nB == 1 (adaptive initial) the clustering shuffle buys nothing
       // (one bucket) and is skipped; compaction owns the file count.
-      // r19 (guide §2.6): the four appends land in four INDEPENDENT state
-      // dirs with no mutual ordering contract (marker-before-data is
-      // internal to the grams unit), so they run as concurrent jobs —
-      // per-poll wall at fixture scale is mostly driver-side plan/commit
-      // latency, which overlaps instead of summing. Crash class unchanged:
-      // an interrupted poll leaves a partial batch across dirs and is
-      // re-run, exactly as with the sequential appends.
+      // r19 (guide §2.6): the hits, docstats and grams appends land in
+      // INDEPENDENT state dirs with no mutual ordering contract
+      // (marker-before-data is internal to the grams unit), so they run as
+      // concurrent jobs — per-poll wall at fixture scale is mostly
+      // driver-side plan/commit latency, which overlaps instead of
+      // summing. The bench append runs AFTER them: its commit refreshes
+      // every cached plan reading benchPath (newBenchGrams is one), and
+      // that refresh re-lists benchState's file index IN PLACE — a hits
+      // job still running would then read this batch's bench grams in
+      // both benchState and the increment and count their hits twice
+      // (q156 over-counted in about half of its runs). Crash class
+      // unchanged: an interrupted poll leaves a partial batch across dirs
+      // and is re-run, exactly as with sequential appends.
       val appendUnits = Seq.newBuilder[() => Unit]
       hits.foreach(h => appendUnits += (() =>
         h.observe(hitsObs, coalesce(sum(col("n_hits")), lit(0L)).as("n"))
@@ -265,9 +275,8 @@ object ContamStream {
             .write.mode("append").partitionBy("b").parquet(gramsPath)
         })
       }
-      newBenchGrams.foreach(bg => appendUnits +=
-        (() => bg.write.mode("append").parquet(benchPath)))
       PollOps.inParallel(appendUnits.result())
+      newBenchGrams.foreach(_.write.mode("append").parquet(benchPath))
       val nHits = if (hits.isEmpty) 0L
         else hitsObs.get.get("n").flatMap(Option(_))
           .map(_.asInstanceOf[Long]).getOrElse(0L)

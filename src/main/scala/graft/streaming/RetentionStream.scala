@@ -47,6 +47,9 @@ object RetentionStream {
                   compactAfterFiles: Int = 64): Unit = {
     val fp = fPath(stateDir)
     val ap = aPath(stateDir)
+    // adopt a crash-interrupted compaction swap BEFORE the append can
+    // recreate the live dir and orphan it (`active` adopts in readOpt)
+    SketchState.exists(spark, fp)
     val ev = batch.select(col(keyCol).as("k"),
         col(tsCol).cast("timestamp").as("ts"))
       .where(col("k").isNotNull)

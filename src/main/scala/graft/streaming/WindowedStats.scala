@@ -23,15 +23,6 @@ object WindowedStats {
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col(key), col("n"))
 
-  /** Sliding-window event counts (overlapping windows). */
-  def slidingCounts(df: DataFrame, eventTime: String, windowLen: String,
-                    slide: String, lateness: String): DataFrame =
-    df.withWatermark(eventTime, lateness)
-      .groupBy(window(col(eventTime), windowLen, slide))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"),
-        col("window.end").as("window_end"), col("n"))
-
   /** Keyed dedup that is safe under at-least-once re-emission (F2b's PAST
     * mode resends rows): duplicates of (key) arriving within the watermark
     * horizon are dropped, and the state ages out with the watermark —

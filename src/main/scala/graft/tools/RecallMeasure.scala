@@ -29,17 +29,11 @@ object RecallMeasure {
       cb, m = 8, dim = 64, k = 200)
     val origQ = embs.filter(col("vec_id") < 10)
     val ann = Quantize.rerankL2(shortlist, embs, origQ, "vec_id",
-        "embedding", k = 5)
-      .select(col("query_id").as("aq"), col("neighbor_id").as("an"))
+      "embedding", k = 5)
     val exact = Similarity.bruteForceTopKL2(embs, origQ, "vec_id",
-        "embedding", k = 5)
-      .select(col("query_id"), col("neighbor_id"))
-    exact.join(ann,
-        col("query_id") === col("aq") && col("neighbor_id") === col("an"),
-        "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("an")).as("hits"))
-      .select(col("query_id"), col("hits"))
+      "embedding", k = 5)
+    graft.queries.TestdataQueries.annRecall(exact, ann)
+      .select(col("query_id"), col("n_hit").as("hits"))
   }
 
   /** The COARSE-PROBE CEILING for the q148/q243/q248 serving config:

@@ -69,6 +69,27 @@ class ContamStreamSpec extends SparkSpec {
     }
   }
 
+  test("a crash between compaction swaps' delete and rename on `docstats` " +
+    "and `hits` is adopted by the next ingest instead of orphaned") {
+    val state = Files.createTempDirectory("contamstream").toString
+    // batch 0 holds doc 2 and bench 100, so it already appends both a
+    // docstats row and a hit row
+    ContamStream.ingestBatch(spark, corpus.filter(col("id") % 2 === 0),
+      bench.filter(col("id") % 2 === 0), state, n = 3)
+    // the crash point for each dir: live dir deleted, its complete
+    // replacement (with `_SUCCESS`) still under the swap name
+    Seq("docstats", "hits").foreach { name =>
+      Files.move(java.nio.file.Paths.get(s"$state/$name"),
+        java.nio.file.Paths.get(s"$state/$name.__swap"))
+      assert(new java.io.File(s"$state/$name.__swap/_SUCCESS").exists)
+    }
+    ContamStream.ingestBatch(spark, corpus.filter(col("id") % 2 === 1),
+      bench.filter(col("id") % 2 === 1), state, n = 3)
+    val got = ContamStream.contamination(spark, state)
+      .as[(Long, Long, Long, Boolean)].collect().toSet
+    assert(got === oneShot, "batch 0's docstats or hits were dropped")
+  }
+
   test("benchmark-after-docs: hits land when the gram side arrives late") {
     val state = Files.createTempDirectory("contamstream").toString
     // all docs first, benchmark only in the second batch

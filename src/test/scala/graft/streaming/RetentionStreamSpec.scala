@@ -76,4 +76,21 @@ class RetentionStreamSpec extends SparkSpec {
       assert(got === oneShot, s"split $cuts diverged")
     }
   }
+
+  test("a crash between a compaction swap's delete and rename on `first` " +
+    "is adopted by the next ingest instead of orphaned") {
+    val state = tmp()
+    RetentionStream.ingestBatch(spark, events.filter(col("event_id") <= 3L),
+      "user_id", "ts", state)
+    // the crash point: live `first` deleted, its complete replacement
+    // (with `_SUCCESS`) still under the swap name
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$state/first"),
+      java.nio.file.Paths.get(s"$state/first.__swap"))
+    assert(new java.io.File(s"$state/first.__swap/_SUCCESS").exists)
+    RetentionStream.ingestBatch(spark, events.filter(col("event_id") > 3L),
+      "user_id", "ts", state)
+    val got = RetentionStream.readRetention(spark, state)
+      .collect().map(_.toSeq).toSet
+    assert(got === oneShot, "batch 0's cohort minima were dropped")
+  }
 }
