@@ -332,10 +332,6 @@ object NearDup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  def simhashNearDupPairs(docs: DataFrame, id: Column, text: Column,
-                          maxHamming: Int = 3): DataFrame =
-    hammingBandPairs(simhashSignatures(docs, id, text), maxHamming)
-
   /** Recall QA for [[hammingBandPairs]] — the q158 sampled-audit shape
     * for the banded-Hamming family: above radius 3 the 4×16 pigeonhole
     * guarantee lapses (a pair can spread its differing bits across all

@@ -66,6 +66,38 @@ object Quantize {
     df.select((keep ++ subCols): _*)
   }
 
+  /** `keep` columns plus the m ADC lookup tables `__t0..__t{m-1}` of
+    * `vec`: per subspace, its exact distance to every code's centroid, in
+    * code order. One kernel call per row, or (literal path) the distances
+    * over the staged subvectors. */
+  private def adcTables(df: DataFrame, keep: Seq[Column], vec: Column,
+                        centroids: Seq[(Int, Seq[Double])], m: Int,
+                        sub: Int): DataFrame = {
+    if (centroids.size > maxLiteralCodes) {
+      val tt = df.select((keep :+ graft.functions.PqKernels.adcTablesCol(
+        vec, centroids, m, sub).as("__tt")): _*)
+      val carried = tt.columns.filter(_ != "__tt").map(col).toSeq
+      return tt.select((carried ++ (0 until m).map(j =>
+        element_at(col("__tt"), j + 1).as(s"__t$j"))): _*)
+    }
+    val staged = stageSubvectors(df, keep, vec, m, sub)
+    val carried = staged.columns.filterNot(_.startsWith("__s")).map(col).toSeq
+    staged.select((carried ++ (0 until m).map { j =>
+      array(centroids.sortBy(_._1).map { case (_, cv) =>
+        VectorExprs.l2sq(col(s"__s$j"), centroidSub(cv, j, sub))
+      }: _*).as(s"__t$j")
+    }): _*)
+  }
+
+  /** Per-query ADC top-k over code rows joined to their query's
+    * [[adcTables]]: a row's distance is `Σ_j __t_j[c_j]`, summed in
+    * subspace order (the order the oracle replays). */
+  private def adcTopK(joined: DataFrame, m: Int, k: Int): DataFrame =
+    TopK.rank(joined.filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("adc_dist", (0 until m).map(j =>
+          element_at(col(s"__t$j"), col(s"c$j") + 1)).reduce(_ + _)),
+      "adc_dist", ascending = true, k, 6)
+
   /** Encode: for each row, `m` code columns `c0..c{m-1}` plus the exact
     * reconstruction distortion (sum of per-subspace min distances).
     * `centroids` must be a small relation (code, cv) — it is collected to
@@ -114,41 +146,10 @@ object Quantize {
   def pqAdcTopK(codes: DataFrame, queries: DataFrame, id: String, vec: String,
                 centroids: Seq[(Int, Seq[Double])], m: Int, dim: Int,
                 k: Int): DataFrame = {
-    val sub = dim / m
-    // per query: m arrays of per-code distances (the ADC lookup tables),
-    // built over the staged query subvectors — m slices per query row
-    // (literal path) or one kernel call (large codebooks)
-    val q =
-      if (centroids.size > maxLiteralCodes)
-        queries.select(col(id).as("query_id"),
-            graft.functions.PqKernels.adcTablesCol(col(vec), centroids,
-              m, sub).as("__tt"))
-          .select((col("query_id") +:
-            (0 until m).map(j => element_at(col("__tt"), j + 1)
-              .as(s"__t$j"))): _*)
-      else {
-        val qStaged = stageSubvectors(queries, Seq(col(id).as("query_id")),
-          col(vec), m, sub)
-        val tables = (0 until m).map { j =>
-          array(centroids.sortBy(_._1).map { case (_, cv) =>
-            VectorExprs.l2sq(col(s"__s$j"), centroidSub(cv, j, sub))
-          }: _*).as(s"__t$j")
-        }
-        qStaged.select((col("query_id") +: tables): _*)
-      }
-    val adc = (0 until m).map(j =>
-      element_at(col(s"__t$j"), col(s"c$j") + 1)).reduce(_ + _)
-    val scored = codes.withColumnRenamed("id", "neighbor_id")
-      .crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", adc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adc_dist"), 6).as("adc_dist"))
+    val q = adcTables(queries, Seq(col(id).as("query_id")), col(vec),
+      centroids, m, dim / m)
+    adcTopK(codes.withColumnRenamed("id", "neighbor_id")
+      .crossJoin(broadcast(q)), m, k)
   }
 
   /** Coarse-quantizer assignment for IVF: each row gets the id of its
@@ -159,25 +160,17 @@ object Quantize {
     * returned `list_id` is the partitioning/bucketing key for the codes
     * table, which is what makes query-time probing a partition-pruned
     * read instead of a full scan. */
-  def ivfListCol(vec: Column, coarse: Seq[(Int, Seq[Double])]): Column = {
-    if (coarse.size > maxLiteralCodes)
-      return element_at(graft.functions.PqKernels.nearestListsCol(
-        vec, coarse, coarse.head._2.length, 1), 1)
-    val v = vec.cast("array<double>")
-    val cands = coarse.map { case (listId, cv) =>
-      struct(VectorExprs.l2sq(v, array(cv.map(lit): _*)).as("dist"),
-        lit(listId).as("list"))
-    }
-    array_min(array(cands: _*)).getField("list")
-  }
+  def ivfListCol(vec: Column, coarse: Seq[(Int, Seq[Double])]): Column =
+    element_at(ivfProbesCol(vec, coarse, 1), 1)
 
   def ivfAssign(embs: DataFrame, id: Column, vec: Column,
                 coarse: Seq[(Int, Seq[Double])]): DataFrame =
     embs.select(id.as("id"), ivfListCol(vec, coarse).as("list_id"))
 
   /** The `nProbe` nearest coarse lists per row, as an int array — the
-    * probe-selection expression [[ivfPqTopK]]/[[ivfPqResidualTopK]] rank
-    * probes with, exposed for coarse-stage diagnostics (the q251 ceiling
+    * probe selection of [[ivfPqTopK]], [[ivfPqResidualTopK]] and
+    * [[sq8IvfTopK]] (and, at nProbe = 1, [[ivfListCol]]'s assignment),
+    * exposed for coarse-stage diagnostics (the q251 ceiling
     * sweep: recall lost to probing the WRONG lists is invisible to ADC
     * tuning, so it needs its own measured dial). Map-side: the centroid
     * table rides the plan as literals (or the codegen'd kernel past
@@ -256,71 +249,31 @@ object Quantize {
                         vec: String, coarse: Seq[(Int, Seq[Double])],
                         resCentroids: Seq[(Int, Seq[Double])], m: Int,
                         dim: Int, nProbe: Int, k: Int): DataFrame = {
-    val sub = dim / m
     val q0 = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("__qv"))
-    val large = resCentroids.size > maxLiteralCodes ||
-      coarse.size > maxLiteralCodes
-    val q = if (large) {
-      // kernel probes; per-probed-list centroid arrives via a broadcast
-      // RELATION (nLists rows of data, not nLists×dim source literals),
-      // residual is one zip_with, tables one kernel call over it
-      val spark = queries.sparkSession
-      import spark.implicits._
-      val centDf = broadcast(
-        coarse.sortBy(_._1).toDF("list_id", "__cc"))
-      q0.withColumn("__probes",
-          graft.functions.PqKernels.nearestListsCol(col("__qv"), coarse,
-            dim, nProbe))
-        .withColumn("list_id", explode(col("__probes")))
-        .join(centDf, Seq("list_id"))
-        .withColumn("__qr",
-          zip_with(col("__qv"), col("__cc"), (a, b) => a - b))
-        .withColumn("__tt",
-          graft.functions.PqKernels.adcTablesCol(col("__qr"), resCentroids,
-            m, sub))
-        .select((col("query_id") +: col("list_id") +:
-          (0 until m).map(j => element_at(col("__tt"), j + 1)
-            .as(s"__t$j"))): _*)
-    } else {
-      val coarseCands = coarse.map { case (listId, cv) =>
-        struct(VectorExprs.l2sq(col("__qv"), array(cv.map(lit): _*)).as("dist"),
-          lit(listId).as("list"))
-      }
-      val probed = transform(
-        slice(array_sort(array(coarseCands: _*)), 1, nProbe),
-        s => s.getField("list"))
-      // per (query, probed list): the query's residual vs THAT list's
-      // centroid, staged once, then the m ADC lookup tables over it
-      val q1 = q0.select(col("query_id"), col("__qv"), probed.as("__probes"))
-        .withColumn("list_id", explode(col("__probes")))
-        .withColumn("__qr",
+        col(vec).cast("array<double>").as("__qv"))
+      .withColumn("list_id",
+        explode(ivfProbesCol(col("__qv"), coarse, nProbe)))
+    // per (query, probed list): the query's residual vs THAT list's
+    // centroid, then the m ADC lookup tables over it
+    val residual =
+      if (resCentroids.size > maxLiteralCodes ||
+          coarse.size > maxLiteralCodes) {
+        // the probed list's centroid arrives via a broadcast RELATION
+        // (nLists rows of data, not nLists×dim source literals); the
+        // residual is one zip_with
+        val spark = queries.sparkSession
+        import spark.implicits._
+        q0.join(broadcast(coarse.sortBy(_._1).toDF("list_id", "__cc")),
+            Seq("list_id"))
+          .withColumn("__qr",
+            zip_with(col("__qv"), col("__cc"), (a, b) => a - b))
+      } else
+        q0.withColumn("__qr",
           ivfResidualCol(col("__qv"), coarse, col("list_id")))
-      val slices = (0 until m).map(j =>
-        slice(col("__qr"), j * sub + 1, sub).as(s"__s$j"))
-      val qStaged = q1.select(
-        (col("query_id") +: col("list_id") +: slices): _*)
-      val tables = (0 until m).map { j =>
-        array(resCentroids.sortBy(_._1).map { case (_, cv) =>
-          VectorExprs.l2sq(col(s"__s$j"), centroidSub(cv, j, sub))
-        }: _*).as(s"__t$j")
-      }
-      qStaged.select(
-        (col("query_id") +: col("list_id") +: tables): _*)
-    }
-    val adc = (0 until m).map(j =>
-      element_at(col(s"__t$j"), col(s"c$j") + 1)).reduce(_ + _)
-    val scored = codes.withColumnRenamed("id", "neighbor_id")
-      .join(broadcast(q), Seq("list_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", adc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adc_dist"), 6).as("adc_dist"))
+    val q = adcTables(residual, Seq(col("query_id"), col("list_id")),
+      col("__qr"), resCentroids, m, dim / m)
+    adcTopK(codes.withColumnRenamed("id", "neighbor_id")
+      .join(broadcast(q), Seq("list_id")), m, k)
   }
 
   /** IVFADC (Jégou, Douze, Schmid 2011): inverted-file probe + asymmetric-
@@ -350,9 +303,6 @@ object Quantize {
                 vec: String, coarse: Seq[(Int, Seq[Double])],
                 centroids: Seq[(Int, Seq[Double])], m: Int, dim: Int,
                 nProbe: Int, k: Int): DataFrame = {
-    val sub = dim / m
-    val large = centroids.size > maxLiteralCodes ||
-      coarse.size > maxLiteralCodes
     // r19 (guide §2.2/§3.1): RAW-codes ADC tables depend only on the
     // query, not the probed list, so broadcasting them on the exploded
     // (query, probed-list) relation shipped every query's m·k-double
@@ -363,53 +313,13 @@ object Quantize {
     // the heavy side. Same expressions over the same rows → the joined
     // table VALUES, and therefore adc_dist, are bit-identical
     // (spec-pinned: nProbe = nLists ≡ full ADC scan).
-    val (qProbes, qTables) = if (large) {
-      // kernel path: probe ranking and ADC tables as reference-object
-      // kernel calls — generated code size independent of k and nLists
-      (queries.select(col(id).as("query_id"),
-          explode(graft.functions.PqKernels.nearestListsCol(col(vec),
-            coarse, dim, nProbe)).as("list_id")),
-        queries.select(col(id).as("query_id"),
-            graft.functions.PqKernels.adcTablesCol(col(vec), centroids,
-              m, sub).as("__tt"))
-          .select((col("query_id") +:
-            (0 until m).map(j => element_at(col("__tt"), j + 1)
-              .as(s"__t$j"))): _*))
-    } else {
-      val qStaged = stageSubvectors(queries,
-        Seq(col(id).as("query_id"), col(vec).cast("array<double>").as("__qv")),
-        col(vec), m, sub)
-      val tables = (0 until m).map { j =>
-        array(centroids.sortBy(_._1).map { case (_, cv) =>
-          VectorExprs.l2sq(col(s"__s$j"), centroidSub(cv, j, sub))
-        }: _*).as(s"__t$j")
-      }
-      // nProbe nearest coarse lists, lexicographic (dist, list) tiebreak —
-      // array_sort over plan-literal structs, fully map-side
-      val coarseCands = coarse.map { case (listId, cv) =>
-        struct(VectorExprs.l2sq(col("__qv"), array(cv.map(lit): _*)).as("dist"),
-          lit(listId).as("list"))
-      }
-      val probed = transform(
-        slice(array_sort(array(coarseCands: _*)), 1, nProbe),
-        s => s.getField("list"))
-      (qStaged.select(col("query_id"), explode(probed).as("list_id")),
-        qStaged.select((col("query_id") +: tables): _*))
-    }
-    val adc = (0 until m).map(j =>
-      element_at(col(s"__t$j"), col(s"c$j") + 1)).reduce(_ + _)
-    val scored = codes.withColumnRenamed("id", "neighbor_id")
+    val qProbes = queries.select(col(id).as("query_id"),
+      explode(ivfProbesCol(col(vec), coarse, nProbe)).as("list_id"))
+    val qTables = adcTables(queries, Seq(col(id).as("query_id")), col(vec),
+      centroids, m, dim / m)
+    adcTopK(codes.withColumnRenamed("id", "neighbor_id")
       .join(broadcast(qProbes), Seq("list_id"))
-      .join(broadcast(qTables), Seq("query_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc_dist", adc)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("adc_dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("adc_dist"), 6).as("adc_dist"))
+      .join(broadcast(qTables), Seq("query_id")), m, k)
   }
 
   /** Int8 scalar quantization (SQ8) — the OTHER standard serving layout
@@ -461,17 +371,10 @@ object Quantize {
     val codes = sq8Encode(embs, col(id), col(vec))
       .select(col("id").as("neighbor_id"), col("scale"),
         col("codes").cast("array<double>").as("cd"))
-    val q = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("qv"))
-    val scored = codes.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    val scored = Similarity.allPairs(codes, Similarity.vecs(queries, id,
+        col(vec).cast("array<double>"), query = true))
       .withColumn("score", col("scale") * VectorExprs.dot(col("cd"), col("qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    TopK.rank(scored, "score", ascending = false, k, 4)
   }
 
   /** SQ8 × IVF: the [[sq8TopK]] scoring over the [[ivfPqTopK]] scan
@@ -490,36 +393,21 @@ object Quantize {
         keep = Seq(ivfListCol(col(vec), coarse).as("list_id")))
       .select(col("id").as("neighbor_id"), col("list_id"), col("scale"),
         col("codes").cast("array<double>").as("cd"))
-    // nProbe nearest coarse lists per query, lexicographic (dist, list)
-    // tiebreak — fully map-side (the q93 probe-selection shape)
-    val coarseCands = coarse.map { case (listId, cv) =>
-      struct(VectorExprs.l2sq(col("__qv"), array(cv.map(lit): _*)).as("dist"),
-        lit(listId).as("list"))
-    }
-    val probed = transform(
-      slice(array_sort(array(coarseCands: _*)), 1, nProbe),
-      s => s.getField("list"))
     // r19 (guide §2.2/§3.1): the query VECTOR is probe-independent, so the
     // old single broadcast shipped each dim-double qv nProbe times. Split:
     // skinny (query_id, list_id) keys the scan's equi-join (same pruning),
     // the vectors ride a per-query broadcast joined on query_id —
     // ivfPqTopK's discipline. Same qv values reach the same rows → scores
     // bit-identical (spec-pinned: nProbe = nLists ≡ full scan).
-    val q0 = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("__qv"))
-    val qProbes = q0.select(col("query_id"), explode(probed).as("list_id"))
-    val qVecs = q0.select(col("query_id"), col("__qv").as("qv"))
+    val qProbes = queries.select(col(id).as("query_id"),
+      explode(ivfProbesCol(col(vec), coarse, nProbe)).as("list_id"))
+    val qVecs = Similarity.vecs(queries, id, col(vec).cast("array<double>"),
+      query = true)
     val scored = codes.join(broadcast(qProbes), Seq("list_id"))
       .join(broadcast(qVecs), Seq("query_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("score", col("scale") * VectorExprs.dot(col("cd"), col("qv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    TopK.rank(scored, "score", ascending = false, k, 4)
   }
 
   /** Sign-bit binary quantization: `dim` floats → `ceil(dim/32)` packed
@@ -544,22 +432,14 @@ object Quantize {
       }))
   }
 
-  /** Hamming distance between two [[bqEncode]] signatures: popcount of
-    * the per-word XOR, summed — integer ops only, the whole point of the
-    * binary regime (no float math touches the full corpus). General
-    * (width-agnostic) HOF form; the hot scan path uses the unrolled
-    * variant below. */
-  def bqHamming(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y)).cast("long")),
-      lit(0L), (acc, c) => acc + c)
-
-  /** [[bqHamming]] unrolled at plan time for a KNOWN word count: a flat
-    * `Σ_w popcount(a[w] ^ b[w])` with no lambda frames or per-row array
-    * allocation — the HOF form measurably dominates the 1M-row scan
-    * (SCALE.md § "Round-11 probes (… `ops12` …)": the zip_with/aggregate
-    * scan cost as much as the full float32 dot scan; unrolled, the
-    * signature scan is the cheap pass it exists to be). */
-  private def bqHammingUnrolled(a: Column, b: Column, nWords: Int): Column =
+  /** Hamming distance between two [[bqEncode]] signatures of `nWords`
+    * words: popcount of the per-word XOR, summed — integer ops only, the
+    * whole point of the binary regime (no float math touches the full
+    * corpus). Unrolled at plan time into a flat `Σ_w popcount(a[w] ^
+    * b[w])` with no lambda frames or per-row array allocation: the
+    * zip_with/aggregate form cost as much as the full float32 dot scan
+    * (SCALE.md § "Round-11 probes (… `ops12` …)"). */
+  private[operators] def bqHamming(a: Column, b: Column, nWords: Int): Column =
     (0 until nWords).map { w =>
       bit_count(element_at(a, w + 1).bitwiseXOR(element_at(b, w + 1)))
         .cast("long")
@@ -577,61 +457,46 @@ object Quantize {
     *    popcount over 1-bit/dim codes (32× less I/O than the floats),
     *    and the per-query candidate rank prunes map-side
     *    (WindowGroupLimit) carrying only `(ids, hamming)`;
-    *  - pass 2 is a broadcast semi-filter of the corpus by the
-    *    queries×rerank candidate set (metadata-sized), so full float
-    *    vectors are read only for candidates — at 10⁹ vectors the float
-    *    column is never scanned in full.
+    *  - pass 2 ([[rerankCosine]]) is a broadcast semi-filter of the
+    *    corpus by the queries×rerank candidate set (metadata-sized), so
+    *    full float vectors are read only for candidates — at 10⁹ vectors
+    *    the float column is never scanned in full.
     * Both passes are exactly replayable: sign tests and popcounts are
     * integer-exact, the rerank is [[Similarity.bruteForceTopK]]'s IEEE
     * op sequence — the oracle checks real semantics, not a recall proxy. */
   def bqTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
-             dim: Int, k: Int, rerank: Int): DataFrame =
-    bqTopKFromSigs(
-      corpus.select(col(id).as("id"), bqEncode(col(vec), dim).as("sig")),
-      corpus, queries, id, vec, dim, k, rerank)
-
-  /** [[bqTopK]] over a PRE-ENCODED signature table `(id, sig)` — the
-    * serving layout: at query time pass 1 scans ONLY the 1-bit/dim
-    * signature table (16 B/row at 512 dims vs 2 KB of floats; the
-    * [[pqAdcTopK]]-from-codes contract), so the float column is touched
-    * exclusively by the candidate rerank. `bqEncode` being a pure
-    * per-row function, the signature table is maintainable by any
-    * append/ingest path with no ordering caveat. */
-  def bqTopKFromSigs(sigs: DataFrame, corpus: DataFrame, queries: DataFrame,
-                     id: String, vec: String, dim: Int, k: Int,
-                     rerank: Int): DataFrame = {
+             dim: Int, k: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank window $rerank must be >= k = $k")
-    val nWords = (dim + 31) / 32
-    val c = sigs.select(col("id").as("neighbor_id"), col("sig").as("csig"))
+    val c = corpus.select(col(id).as("neighbor_id"),
+      bqEncode(col(vec), dim).as("csig"))
     val q = queries.select(col(id).as("query_id"),
       bqEncode(col(vec), dim).as("qsig"))
-    val ham = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+    val ham = Similarity.allPairs(c, q)
       .withColumn("hamming",
-        bqHammingUnrolled(col("csig"), col("qsig"), nWords))
-    val wH = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("hamming").asc, col("neighbor_id").asc)
-    val cand = ham.withColumn("hrank", row_number().over(wH))
-      .filter(col("hrank") <= rerank)
+        bqHamming(col("csig"), col("qsig"), (dim + 31) / 32))
+    val cand = TopK.cut(ham, rerank, col("hamming").asc)
       .select(col("query_id"), col("neighbor_id"), col("hamming"))
-    val qv = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("qv"),
-      VectorExprs.norm2(col(vec).cast("array<double>")).as("qn2"))
-    val candQ = cand.join(qv, Seq("query_id"))
-    val cv = corpus.select(col(id).as("neighbor_id"),
-      col(vec).cast("array<double>").as("cv"),
-      VectorExprs.norm2(col(vec).cast("array<double>")).as("cn2"))
-    val den = sqrt(col("qn2")) * sqrt(col("cn2"))
-    val scored = cv.join(broadcast(candQ), Seq("neighbor_id"))
-      .withColumn("cos", when(den === 0.0, lit(null).cast("double"))
-        .otherwise(VectorExprs.dot(col("qv"), col("cv")) / den))
-    val wC = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("hamming"), round(col("cos"), 4).as("cos"))
+    rerankCosine(cand, corpus, queries, id, vec, k, col("hamming"))
+  }
+
+  /** Exact cosine re-rank of a candidate shortlist (`query_id`,
+    * `neighbor_id`, carried columns) — pass 2 of [[bqTopK]] and
+    * [[Similarity.rpTopK]]. The candidates join their query vectors and
+    * are broadcast into the corpus scan as a semi-filter, so full-width
+    * vectors are read only for candidates; the score is
+    * [[Similarity.bruteForceTopK]]'s cosine. Emits `query_id, rank,
+    * neighbor_id`, the `carry` columns, `cos` snapped to 4. */
+  private[operators] def rerankCosine(cands: DataFrame, corpus: DataFrame,
+      queries: DataFrame, id: String, vec: String, k: Int,
+      carry: Column*): DataFrame = {
+    val v = col(vec).cast("array<double>")
+    val candQ = cands.join(
+      Similarity.vecs(queries, id, v, query = true, norm = true),
+      Seq("query_id"))
+    val scored = Similarity.vecs(corpus, id, v, query = false, norm = true)
+      .join(broadcast(candQ), Seq("neighbor_id"))
+      .withColumn("cos", Similarity.cosine)
+    TopK.rank(scored, "cos", ascending = false, k, 4, carry: _*)
   }
 
   /** Exact L2 re-rank of an ANN candidate shortlist — the second half
@@ -650,21 +515,14 @@ object Quantize {
     * [[Similarity.bruteForceTopKL2]]'s contract. */
   def rerankL2(cands: DataFrame, corpus: DataFrame, queries: DataFrame,
                id: String, vec: String, k: Int): DataFrame = {
-    val c = corpus.select(col(id).as("neighbor_id"),
-      col(vec).cast("array<double>").as("cv"))
+    val v = col(vec).cast("array<double>")
+    val c = Similarity.vecs(corpus, id, v, query = false)
       .join(broadcast(cands.select(col("query_id"), col("neighbor_id"))),
         Seq("neighbor_id"))
-    val q = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("qv"))
-    val scored = c.join(broadcast(q), Seq("query_id"))
+    val scored = c.join(broadcast(Similarity.vecs(queries, id, v,
+        query = true)), Seq("query_id"))
       .withColumn("dist", VectorExprs.l2sq(col("qv"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("dist"), 6).as("dist"))
+    TopK.rank(scored, "dist", ascending = true, k, 6)
   }
 
   /** LEARNED coarse centroid table for the IVF family: sampled k-means
@@ -683,15 +541,19 @@ object Quantize {
     * q31 recall-floor oracle pattern rather than exact pins. */
   def learnedCoarse(embs: DataFrame, vec: Column, nLists: Int, seed: Long,
                     maxTrainRows: Long = 100000L): Seq[(Int, Seq[Double])] = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val fv = embs.select(
-      array_to_vector(vec.cast("array<double>")).as("features"))
-    val (model, _) =
-      Similarity.fitQuantizer(fv, nLists, seed, maxTrainRows)
+    val (model, _) = Similarity.fitQuantizer(coarseFeatures(embs, vec),
+      nLists, seed, maxTrainRows)
     model.clusterCenters.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       (i, c.toArray.toIndexedSeq)
     }
   }
+
+  /** The training relation [[learnedCoarse]] fits on. Concurrent fits
+    * over one corpus persist it once around all of them, so no fit drops
+    * the cache another is still reading ([[Similarity.fitQuantizer]]). */
+  def coarseFeatures(embs: DataFrame, vec: Column): DataFrame =
+    embs.select(org.apache.spark.ml.functions.array_to_vector(
+      vec.cast("array<double>")).as("features"))
 
   /** LEARNED per-subspace PQ codebook — the k-means upgrade over
     * [[seedCodebook]]/[[residualSeedCodebook]] (Jégou et al. 2011's

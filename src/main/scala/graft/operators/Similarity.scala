@@ -31,24 +31,36 @@ object Similarity {
       .otherwise(VectorExprs.dot(qv, cv) / den)
   }
 
+  /** [[pairCosine]] over the [[vecs]] column names of both sides. */
+  private[operators] def cosine: Column =
+    pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2"))
+
+  /** One side of a scored pair relation: `(query_id, qv)` rows of the
+    * query side or `(neighbor_id, cv)` rows of the corpus side, plus the
+    * squared norm `qn2`/`cn2` when `norm` (one per row, for [[cosine]])
+    * and the `extra` columns. */
+  private[operators] def vecs(df: DataFrame, id: String, v: Column,
+      query: Boolean, norm: Boolean = false,
+      extra: Seq[Column] = Nil): DataFrame = {
+    val p = if (query) "q" else "c"
+    df.select((Seq(col(id).as(if (query) "query_id" else "neighbor_id"),
+        v.as(s"${p}v")) ++
+      (if (norm) Seq(VectorExprs.norm2(v).as(s"${p}n2")) else Nil) ++
+      extra): _*)
+  }
+
+  /** The all-pairs candidate set: every corpus row against the broadcast
+    * query set, self-pairs excluded. */
+  private[operators] def allPairs(c: DataFrame, q: DataFrame): DataFrame =
+    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+
   /** Exact cosine top-k: for each query vector, the k most similar corpus
     * vectors (excluding itself). Queries are broadcast — they must be small. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
-                     id: String, vec: String, k: Int): DataFrame = {
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      VectorExprs.norm2(col(vec)).as("qn2"))
-    val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
-      VectorExprs.norm2(col(vec)).as("cn2"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-  }
+                     id: String, vec: String, k: Int): DataFrame =
+    TopK.rank(allPairs(vecs(corpus, id, col(vec), query = false, norm = true),
+        vecs(queries, id, col(vec), query = true, norm = true))
+      .withColumn("cos", cosine), "cos", ascending = false, k, 4)
 
   /** Exact EUCLIDEAN top-k — the gold-standard baseline for the PQ/ADC
     * family, which ranks by (approximate) L2 distance, not cosine:
@@ -59,18 +71,11 @@ object Similarity {
     * neighbor id, output distance snapped to 6. */
   def bruteForceTopKL2(corpus: DataFrame, queries: DataFrame,
                        id: String, vec: String, k: Int): DataFrame = {
-    val q = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("qv"))
-    val c = corpus.select(col(id).as("neighbor_id"),
-      col(vec).cast("array<double>").as("cv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("dist", VectorExprs.l2sq(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("dist"), 6).as("dist"))
+    val v = col(vec).cast("array<double>")
+    TopK.rank(allPairs(vecs(corpus, id, v, query = false),
+        vecs(queries, id, v, query = true))
+      .withColumn("dist", VectorExprs.l2sq(col("qv"), col("cv"))),
+      "dist", ascending = true, k, 6)
   }
 
   /** Exact DOT-PRODUCT top-k — the gold-standard baseline for the SQ8
@@ -80,18 +85,11 @@ object Similarity {
     * [[bruteForceTopK]]; output score snapped to 4 (the q99/q21 grain). */
   def bruteForceTopKDot(corpus: DataFrame, queries: DataFrame,
                         id: String, vec: String, k: Int): DataFrame = {
-    val q = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("qv"))
-    val c = corpus.select(col(id).as("neighbor_id"),
-      col(vec).cast("array<double>").as("cv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("score", VectorExprs.dot(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 4).as("score"))
+    val v = col(vec).cast("array<double>")
+    TopK.rank(allPairs(vecs(corpus, id, v, query = false),
+        vecs(queries, id, v, query = true))
+      .withColumn("score", VectorExprs.dot(col("qv"), col("cv"))),
+      "score", ascending = false, k, 4)
   }
 
   /** k-NN majority-vote classification over a LABELED embedding corpus —
@@ -118,25 +116,16 @@ object Similarity {
   def knnClassify(labeled: DataFrame, queries: DataFrame, id: String,
       vec: String, label: String, k: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      VectorExprs.norm2(col(vec)).as("qn2"))
-    val c = labeled.select(col(id).as("neighbor_id"), col(label).as("lab"),
-      col(vec).as("cv"), VectorExprs.norm2(col(vec)).as("cn2"))
+    val q = vecs(queries, id, col(vec), query = true, norm = true)
+    val c = vecs(labeled, id, col(vec), query = false, norm = true,
+      extra = Seq(col(label).as("lab")))
     val joinCond =
       if (excludeSelf) col("query_id") =!= col("neighbor_id") else lit(true)
-    val scored = c.join(broadcast(q), joinCond)
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val wVote = Window.partitionBy(col("query_id"))
-      .orderBy(col("votes").desc, col("lab").asc)
-    scored.withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
+    val scored = c.join(broadcast(q), joinCond).withColumn("cos", cosine)
+    val votes = TopK.cut(scored, k, col("cos").desc)
       .groupBy(col("query_id"), col("lab"))
       .agg(count(lit(1)).as("votes"))
-      .withColumn("__r", row_number().over(wVote))
-      .filter(col("__r") === 1)
+    TopK.cut(votes, 1, col("votes").desc, id = "lab")
       .select(col("query_id"), col("lab").as("pred_label"), col("votes"))
   }
 
@@ -157,24 +146,49 @@ object Similarity {
   def hardNegatives(labeled: DataFrame, queries: DataFrame, id: String,
       vec: String, label: String, k: Int,
       maxCos: Double = 0.995): DataFrame = {
-    val q = queries.select(col(id).as("query_id"),
-      col(label).as("query_label"), col(vec).as("qv"),
-      VectorExprs.norm2(col(vec)).as("qn2"))
-    val c = labeled.select(col(id).as("neighbor_id"),
-      col(label).as("neighbor_label"), col(vec).as("cv"),
-      VectorExprs.norm2(col(vec)).as("cn2"))
+    val q = vecs(queries, id, col(vec), query = true, norm = true,
+      extra = Seq(col(label).as("query_label")))
+    val c = vecs(labeled, id, col(vec), query = false, norm = true,
+      extra = Seq(col(label).as("neighbor_label")))
     val scored = c.join(broadcast(q),
         col("query_label") =!= col("neighbor_label"))
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
+      .withColumn("cos", cosine)
       .filter(col("cos") <= maxCos)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    TopK.cut(scored, k, col("cos").desc)
       .select(col("query_id"), col("query_label"), col("rank"),
         col("neighbor_id"), col("neighbor_label"),
         round(col("cos"), 4).as("cos"))
+  }
+
+  /** Train the coarse quantizer on a BOUNDED sample of the corpus: k-means
+    * over every row of a 100 TB corpus is an unbounded MLlib job before any
+    * query runs, and centroid quality converges long before full-corpus
+    * training. Assignment (done by the caller) still covers the full corpus.
+    * Returns the model plus the actual training row count so tests can pin
+    * the bound.
+    *
+    * The training relation is persisted for the fit only when it is not
+    * cached already: concurrent fits over one shared relation (q251's
+    * arms) have the caller cache it once, and no fit's `unpersist` drops
+    * it under the others (the cache manager keys entries by plan, with no
+    * reference count). */
+  def fitQuantizer(corpusVec: DataFrame, nCentroids: Int, seed: Long,
+                   maxTrainRows: Long): (org.apache.spark.ml.clustering.KMeansModel, Long) = {
+    import org.apache.spark.ml.clustering.KMeans
+    val n = corpusVec.count()
+    val train =
+      if (n <= maxTrainRows) corpusVec
+      else corpusVec.sample(withReplacement = false,
+        maxTrainRows.toDouble / n, seed)
+    val owned =
+      train.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (owned) train.persist()
+    try {
+      val cnt = train.count()
+      val model = new KMeans().setK(nCentroids).setSeed(seed)
+        .setFeaturesCol("features").fit(train)
+      (model, cnt)
+    } finally if (owned) train.unpersist()
   }
 
   /** IVF with a LEARNED coarse quantizer (k-means, MLlib) and multi-probe:
@@ -184,29 +198,6 @@ object Similarity {
     * centroid id is the shuffle key; the centroid table itself is tiny and
     * broadcast. Training uses MLlib's parallel k-means on the (sampled)
     * corpus — the model is dimension-scale driver state, like any IVF index. */
-  /** Train the coarse quantizer on a BOUNDED sample of the corpus: k-means
-    * over every row of a 100 TB corpus is an unbounded MLlib job before any
-    * query runs, and centroid quality converges long before full-corpus
-    * training. Assignment (done by the caller) still covers the full corpus.
-    * Returns the model plus the actual training row count so tests can pin
-    * the bound. */
-  def fitQuantizer(corpusVec: DataFrame, nCentroids: Int, seed: Long,
-                   maxTrainRows: Long): (org.apache.spark.ml.clustering.KMeansModel, Long) = {
-    import org.apache.spark.ml.clustering.KMeans
-    val n = corpusVec.count()
-    val train =
-      if (n <= maxTrainRows) corpusVec
-      else corpusVec.sample(withReplacement = false,
-        maxTrainRows.toDouble / n, seed)
-    val cached = train.persist()
-    try {
-      val cnt = cached.count()
-      val model = new KMeans().setK(nCentroids).setSeed(seed)
-        .setFeaturesCol("features").fit(cached)
-      (model, cnt)
-    } finally cached.unpersist()
-  }
-
   def ivfKmeansTopK(corpus: DataFrame, queries: DataFrame, id: String,
                     vec: String, k: Int, nCentroids: Int, nProbe: Int,
                     seed: Long, maxTrainRows: Long = 100000L): DataFrame = {
@@ -228,26 +219,17 @@ object Similarity {
       .toDF("centroid_id", "center")
 
     // each query probes its nProbe nearest centroids (L2 on the tiny table)
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      VectorExprs.norm2(col(vec)).as("qn2"))
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cdist").asc, col("centroid_id").asc)
-    val probes = q.crossJoin(broadcast(centers))
-      .withColumn("cdist", VectorExprs.l2sq(col("qv"), col("center")))
-      .withColumn("crank", row_number().over(probeW))
-      .filter(col("crank") <= nProbe)
+    val probes = TopK.cut(
+        vecs(queries, id, col(vec), query = true, norm = true)
+          .crossJoin(broadcast(centers))
+          .withColumn("cdist", VectorExprs.l2sq(col("qv"), col("center"))),
+        nProbe, col("cdist").asc, id = "centroid_id")
       .select(col("query_id"), col("qv"), col("qn2"), col("centroid_id"))
 
     val scored = assigned.join(broadcast(probes), Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+      .withColumn("cos", cosine)
+    TopK.rank(scored, "cos", ascending = false, k, 4)
   }
 
   /** IVF-style ANN: corpus is pre-bucketed by LSH; each query MULTI-PROBES
@@ -259,24 +241,18 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
               k: Int, dim: Int, bits: Int, seed: Long,
               probeHamming: Int = 1): DataFrame = {
-    val bucket = (v: Column) => VectorExprs.lshBucket(v, dim, bits, seed)
-    val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
-      bucket(col(vec)).as("bucket"), VectorExprs.norm2(col(vec)).as("cn2"))
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      bucket(col(vec)).as("qbucket"), VectorExprs.norm2(col(vec)).as("qn2"))
+    val bucket = VectorExprs.lshBucket(col(vec), dim, bits, seed)
+    val c = vecs(corpus, id, col(vec), query = false, norm = true,
+      extra = Seq(bucket.as("bucket")))
+    val q = vecs(queries, id, col(vec), query = true, norm = true,
+        extra = Seq(bucket.as("qbucket")))
       .withColumn("bucket",
         explode(VectorExprs.probeBuckets(col("qbucket"), bits, probeHamming)))
       .drop("qbucket")
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
+      .withColumn("cos", cosine)
+    TopK.rank(scored, "cos", ascending = false, k, 4)
   }
 
   /** The nprobe OPERATING CURVE of [[ivfTopK]]: recall@k against an exact
@@ -441,39 +417,19 @@ object Similarity {
   def rpTopK(corpus: DataFrame, queries: DataFrame, id: String, vec: String,
              matrix: Seq[Seq[Double]], k: Int, rerank: Int): DataFrame = {
     require(rerank >= k, s"rerank window $rerank must be >= k = $k")
-    val c = corpus.select(col(id).as("neighbor_id"),
-        rpProject(col(vec).cast("array<double>"), matrix).as("pc"))
-      .select(col("neighbor_id"), col("pc"),
-        VectorExprs.norm2(col("pc")).as("pcn2"))
-    val q = queries.select(col(id).as("query_id"),
-        rpProject(col(vec).cast("array<double>"), matrix).as("pq"))
-      .select(col("query_id"), col("pq"),
-        VectorExprs.norm2(col("pq")).as("pqn2"))
-    val approx = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("approx_cos",
-        pairCosine(col("pq"), col("pc"), col("pqn2"), col("pcn2")))
-    val wA = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_cos").desc, col("neighbor_id").asc)
-    val cand = approx.withColumn("arank", row_number().over(wA))
-      .filter(col("arank") <= rerank)
+    // project in a select of its own, so the norm reads the projected
+    // column instead of projecting a second time
+    def projected(df: DataFrame, query: Boolean): DataFrame =
+      vecs(df.select(col(id),
+          rpProject(col(vec).cast("array<double>"), matrix).as("__p")),
+        id, col("__p"), query, norm = true)
+    val approx = allPairs(projected(corpus, query = false),
+        projected(queries, query = true))
+      .withColumn("approx_cos", cosine)
+    val cand = TopK.cut(approx, rerank, col("approx_cos").desc)
       .select(col("query_id"), col("neighbor_id"), col("approx_cos"))
-    val qv = queries.select(col(id).as("query_id"),
-      col(vec).cast("array<double>").as("qv"),
-      VectorExprs.norm2(col(vec).cast("array<double>")).as("qn2"))
-    val candQ = cand.join(qv, Seq("query_id"))
-    val cv = corpus.select(col(id).as("neighbor_id"),
-      col(vec).cast("array<double>").as("cv"),
-      VectorExprs.norm2(col(vec).cast("array<double>")).as("cn2"))
-    val scored = cv.join(broadcast(candQ), Seq("neighbor_id"))
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
-    val wC = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(wC))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("approx_cos"), 4).as("approx_cos"),
-        round(col("cos"), 4).as("cos"))
+    Quantize.rerankCosine(cand, corpus, queries, id, vec, k,
+      round(col("approx_cos"), 4).as("approx_cos"))
   }
 
   /** Exact cosine top-k with NEITHER side broadcast — the block-
@@ -513,8 +469,7 @@ object Similarity {
     * PRODUCT, so sizing for a cluster is cheap: `Qs = Cs = 32` already
     * yields 1024-way parallelism at 32× replication of each side. Do
     * NOT size shards for memory alone on a big cluster — pick
-    * `max(shards-for-memory, shards-for-cores)` per side, or use
-    * [[shardedTopKAuto]] which derives both from row counts. The
+    * `max(shards-for-memory, shards-for-cores)` per side. The
     * shard-pair join is PINNED to sort-merge (spill-safe block
     * buffering): without the hint, Catalyst — or AQE at runtime —
     * happily broadcasts a "small" replicated embedding side at test
@@ -527,77 +482,24 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(queryShards >= 1 && corpusShards >= 1,
       s"shard counts must be >= 1, got $queryShards x $corpusShards")
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-        VectorExprs.norm2(col(vec)).as("qn2"),
-        pmod(xxhash64(col(id)), lit(queryShards.toLong)).cast("int")
-          .as("qs"))
-      .withColumn("cs", explode(sequence(lit(0), lit(corpusShards - 1))))
-    val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
-        VectorExprs.norm2(col(vec)).as("cn2"),
-        pmod(xxhash64(col(id)), lit(corpusShards.toLong)).cast("int")
-          .as("cs"))
-      .withColumn("qs", explode(sequence(lit(0), lit(queryShards - 1))))
+    // each side hashes into its own shards, then replicates to every
+    // shard of the other side
+    def shardOf(n: Int): Column =
+      pmod(xxhash64(col(id)), lit(n.toLong)).cast("int")
+    def everyShard(n: Int): Column = explode(sequence(lit(0), lit(n - 1)))
+    val q = vecs(queries, id, col(vec), query = true, norm = true,
+        extra = Seq(shardOf(queryShards).as("qs")))
+      .withColumn("cs", everyShard(corpusShards))
+    val c = vecs(corpus, id, col(vec), query = false, norm = true,
+        extra = Seq(shardOf(corpusShards).as("cs")))
+      .withColumn("qs", everyShard(queryShards))
     val scored = q.join(c.hint("merge"), Seq("qs", "cs"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        pairCosine(col("qv"), col("cv"), col("qn2"), col("cn2")))
-    val w1 = Window.partitionBy(col("query_id"), col("cs"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    val cand = scored.withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= k)
+      .withColumn("cos", cosine)
+    val cand = TopK.cut(scored, k, col("cos").desc,
+        keys = Seq("query_id", "cs"))
       .select(col("query_id"), col("neighbor_id"), col("cos"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    cand.withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("cos"), 4).as("cos"))
-  }
-
-  /** [[shardedTopK]] with shard counts DERIVED from the data instead of
-    * guessed by the caller — the two failure modes of hand-picked
-    * shards are (a) a block too big for task memory and (b) a task
-    * count far below the cluster's cores (the Qs×Cs parallelism
-    * bound). This derives both:
-    *
-    *  - memory: each side gets `ceil(|side| / targetBlockRows)` shards,
-    *    so no block holds more than `targetBlockRows` rows of that side
-    *    (at 64 float dims ≈ 260 B/row, the 500k default is a ~130 MB
-    *    block — comfortable beside a few-GB task heap);
-    *  - cores: shards then grow until `Qs × Cs >= minTasks` (default:
-    *    the session's `defaultParallelism`), always bumping the side
-    *    whose replication is cheaper to raise — incrementing Qs copies
-    *    the corpus once more (|C| extra rows), incrementing Cs copies
-    *    the queries (|Q| extra rows) — so the added shuffle bytes are
-    *    minimal for the parallelism bought.
-    *
-    * Costs two column-pruned `count()` jobs up front — O(rows) scans of
-    * the id column only, noise next to the pair scan they size. */
-  def shardedTopKAuto(corpus: DataFrame, queries: DataFrame, id: String,
-      vec: String, k: Int, targetBlockRows: Long = 500000L,
-      minTasksOpt: Option[Int] = None): DataFrame = {
-    require(targetBlockRows >= 1L,
-      s"targetBlockRows must be >= 1, got $targetBlockRows")
-    val nQ = queries.select(col(id)).count()
-    val nC = corpus.select(col(id)).count()
-    val minTasks = minTasksOpt.getOrElse(
-      corpus.sparkSession.sparkContext.defaultParallelism)
-    def forMemory(n: Long): Int =
-      math.min(Int.MaxValue.toLong,
-        math.max(1L, (n + targetBlockRows - 1L) / targetBlockRows)).toInt
-    var qs = forMemory(nQ)
-    var cs = forMemory(nC)
-    while (qs.toLong * cs < minTasks && (nQ > qs || nC > cs)) {
-      // bump the side that adds the fewer replicated rows — raising qs
-      // copies the corpus once more (|C| rows), raising cs copies the
-      // queries (|Q| rows) — but never past one row per shard (more
-      // shards than rows buys nothing)
-      val canQs = nQ > qs
-      val canCs = nC > cs
-      if (canQs && (!canCs || nC <= nQ)) qs += 1
-      else cs += 1
-    }
-    shardedTopK(corpus, queries, id, vec, k, qs, cs)
+    TopK.rank(cand, "cos", ascending = false, k, 4)
   }
 
   /** Margin-based alignment of two embedding sets (Artetxe & Schwenk

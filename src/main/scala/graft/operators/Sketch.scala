@@ -588,12 +588,6 @@ object Sketch {
         .otherwise(col("raw")), 4).as("est_distinct"))
   }
 
-  /** Whole-input HLL distinct estimate: [[hllDistinctByGroup]] with a
-    * constant group — `(regs_hit, est_distinct)`, one row. */
-  def hllDistinct(df: DataFrame, key: Column, p: Int = 8): DataFrame =
-    hllDistinctByGroup(df, org.apache.spark.sql.functions.lit(0), key, p)
-      .drop("grp")
-
   /** Incremental per-group HLL over micro-batches (fifth streaming-sketch
     * variant, with KMV, Misra–Gries, quantiles, and count-min): register
     * max-merge is exact, commutative, and idempotent, so the accumulated

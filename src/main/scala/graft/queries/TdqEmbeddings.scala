@@ -1296,14 +1296,20 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
           Seq("neighbor_id")),
       "q251_neigh")
     // r19 (guide §2.6, q253's discipline): the four (nLists, nProbe) arms
-    // are mutually independent — each fits its OWN seeded MLlib coarse
-    // quantizer (fitQuantizer persists/unpersists its own relation, no
-    // shared state) and the rest of the arm is lazy plan construction —
-    // so the fits run as concurrent driver threads and the wall is
-    // max(fits), not the sum. Each fit is deterministic (seed 42, fixed
-    // data) regardless of scheduling, so arm contents are unchanged.
-    graft.streaming.PollOps.inParallel(q251Configs.map { case (nl, np) =>
-      () => {
+    // are independent apart from their training relation — each fits its
+    // OWN seeded MLlib coarse quantizer, and the rest of the arm is lazy
+    // plan construction — so the fits run as concurrent driver threads
+    // and the wall is max(fits), not the sum. All four fit on the same
+    // feature projection, cached once here: the cache manager keys
+    // entries by plan with no reference count, so a per-fit cache would
+    // be dropped by the first arm to finish while the others still read
+    // it (fitQuantizer leaves a relation it finds cached alone). Each fit
+    // is deterministic (seed 42, fixed data) regardless of scheduling, so
+    // arm contents are unchanged.
+    val features = graft.operators.Quantize
+      .coarseFeatures(embs, col("embedding")).persist()
+    val arms = try graft.streaming.PollOps.inParallel(q251Configs.map {
+      case (nl, np) => () => {
       val coarse = graft.operators.Quantize.learnedCoarse(embs,
         col("embedding"), nLists = nl, seed = 42L)
       val probed = origQ.select(col("vec_id").as("query_id"),
@@ -1315,7 +1321,8 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
         .join(broadcast(probed), Seq("query_id"))
         .select(lit(nl).as("n_lists"), lit(np).as("n_probe"),
           array_contains(col("__probes"), col("n_list")).as("hit"))
-    }}).reduce(_ unionByName _)
+    }}) finally features.unpersist()
+    arms.reduce(_ unionByName _)
       .groupBy(col("n_lists"), col("n_probe"))
       .agg(count(lit(1)).as("n_exact"),
         sum(when(col("hit"), 1L).otherwise(0L)).as("n_ceiling"))

@@ -23,15 +23,6 @@ object WindowedStats {
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col(key), col("n"))
 
-  /** Keyed dedup that is safe under at-least-once re-emission (F2b's PAST
-    * mode resends rows): duplicates of (key) arriving within the watermark
-    * horizon are dropped, and the state ages out with the watermark —
-    * unbounded-state-free exactly-once-per-key delivery downstream. */
-  def dedupWithinWatermark(df: DataFrame, eventTime: String,
-                           keys: Seq[String], lateness: String): DataFrame =
-    df.withWatermark(eventTime, lateness)
-      .dropDuplicatesWithinWatermark(keys)
-
   /** Gap-based session aggregates via the built-in `session_window`
     * (merging event-time windows + watermark state eviction) — the
     * STREAMING counterpart of `operators.Sessionize` (which additionally

@@ -1,6 +1,7 @@
 package graft
 
 import graft.omm.OmmFixtures
+import graft.operators.CacheHygiene
 
 /** Physical-plan regression guards: the optimizations SCALE.md claims are
   * asserted against the actual formatted plans, so a refactor that silently
@@ -61,8 +62,14 @@ class PlanShapeSpec extends SparkSpec {
   test("top-k windows prune map-side (WindowGroupLimit): q14/q21/q22") {
     // the brute-force/ANN top-k scale story depends on rank pruning before
     // the shuffle — each partition forwards only its local top k, not every
-    // scored pair (q31 shares q21/q22's window code path)
-    Seq("q14_topn", "q21_cosine_topk", "q22_cosine_ivf").foreach { q =>
+    // scored pair (q31 shares q21/q22's window code path). One query per
+    // operator that ranks through the shared top-k kernel (operators.TopK).
+    Seq("q14_topn", "q21_cosine_topk", "q22_cosine_ivf",
+        "q28_media_embed_topk", "q51_pq_adc_topk", "q85_knn_classify",
+        "q93_ivfpq_topk", "q94_ivfpq_residual", "q99_sq8_topk",
+        "q100_sq8_ivf", "q104_bq_hamming", "q107_rp_topk",
+        "q114_hard_negatives", "q134_margin_align",
+        "q145_ivfpq_learned_recall").foreach { q =>
       assert(plan(q).contains("WindowGroupLimit"),
         s"$q lost map-side rank pruning")
     }
@@ -368,7 +375,7 @@ class PlanShapeSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("ndplan").toString
+      val base = CacheHygiene.tempDir("ndplan")
       val fam = Seq(
         1L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa",
         2L -> "alpha beta gamma delta epsilon zeta eta theta iota kappa x",

@@ -1,6 +1,5 @@
 package graft.omm
 
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -12,6 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.omm.{CancellationPipeline => P, OmmFixtures => F}
+import graft.operators.CacheHygiene
 
 /** `loadTables` opens the 11 OMM tables by their `OmmSchemas` contracts:
   * no Spark job runs while opening, and a table whose footer breaks its
@@ -51,7 +51,7 @@ class ContractReadSpec extends SparkSpec {
   /** A copy of the OMM fixture with `table` rewritten by `edit`. */
   private def fixtureWith(table: String)(edit: DataFrame => DataFrame): String = {
     F.ensure(spark)
-    val dir = Files.createTempDirectory("omm-contract").toString
+    val dir = CacheHygiene.tempDir("omm-contract")
     FileUtils.copyDirectory(new java.io.File(F.dir), new java.io.File(dir))
     val path = s"$dir/$table.parquet"
     FileUtils.deleteDirectory(new java.io.File(path))

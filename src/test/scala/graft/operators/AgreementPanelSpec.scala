@@ -91,8 +91,7 @@ class AgreementPanelSpec extends SparkSpec {
     Seq(Seq(Seq(0L, 1L, 2L, 3L, 4L, 5L)),
         Seq(Seq(0L), Seq(1L, 2L, 3L), Seq(4L, 5L)),
         Seq(Seq(5L, 4L), Seq(3L, 2L), Seq(1L, 0L))).foreach { split =>
-      val state = java.nio.file.Files
-        .createTempDirectory("aff_spec").toString
+      val state = CacheHygiene.tempDir("aff_spec")
       split.foreach { ids =>
         graft.streaming.AffinityStream.ingestBatch(spark,
           embs.filter(col("vec_id").isin(ids.map(lit): _*)),

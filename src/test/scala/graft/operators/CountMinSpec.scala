@@ -66,8 +66,7 @@ class CountMinSpec extends SparkSpec {
     val batch = Sketch.countMinEstimates(df, col("key"), 3, 16, probes)
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     for (nb <- Seq(2, 5)) {
-      val state = java.nio.file.Files
-        .createTempDirectory("cmspec").toString + "/s"
+      val state = CacheHygiene.tempDir("cmspec") + "/s"
       (0 until nb).foreach { b =>
         Sketch.countMinIngestBatch(
           df.filter(pmod(hash(col("key")), lit(nb)) === b),

@@ -119,8 +119,7 @@ class EventPanelsSpec extends SparkSpec {
     val df = ev(rows: _*)
     val oneShot = Funnel.abTest(df, col("user_id"), col("event_type"),
       "purchase").collect().map(_.toSeq).toSet
-    val state = java.nio.file.Files
-      .createTempDirectory("ab_spec").toString
+    val state = CacheHygiene.tempDir("ab_spec")
     // batch 2 redelivers batch 1's events entirely — max-merge folds it
     Seq(df.filter(col("event_id") % 2 === 0),
         df.filter(col("event_id") % 2 === 0),
@@ -169,8 +168,7 @@ class EventPanelsSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     val oneShotV = Funnel.volumeAnomaly(df, col("event_type"),
       col("ts"), 2.0).collect().map(_.toSeq).toSet
-    val state = java.nio.file.Files
-      .createTempDirectory("act_spec").toString
+    val state = CacheHygiene.tempDir("act_spec")
     Seq(Seq(1L, 3L), Seq(2L, 4L), Seq(5L)).foreach { ids =>
       graft.streaming.ActiveStream.ingestBatch(spark,
         df.filter(col("event_id").isin(ids.map(lit): _*)),

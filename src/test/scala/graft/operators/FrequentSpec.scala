@@ -102,8 +102,7 @@ class FrequentSpec extends SparkSpec {
       (0 until 4).map(b => df.filter(col("b") === b)) -> "hash split",
       Seq(df.filter(col("item") <= "w2"), df.filter(col("item") > "w2")) ->
         "sorted-run split")) {
-      val state = java.nio.file.Files
-        .createTempDirectory("mgspec").toString + "/s"
+      val state = CacheHygiene.tempDir("mgspec") + "/s"
       splits.foreach(s => Frequent.mgIngestBatch(s, col("item"), 128, state))
       val inc = Frequent.heavyHittersFromState(state, df, col("item"),
         0.02, 128)
@@ -155,8 +154,7 @@ class FrequentSpec extends SparkSpec {
   }
 
   test("incremental state stays bounded at counters+1 rows") {
-    val state = java.nio.file.Files
-      .createTempDirectory("mgspec2").toString + "/s"
+    val state = CacheHygiene.tempDir("mgspec2") + "/s"
     // 3 batches of mostly-unique noise: the state must never exceed
     // counters candidates no matter how much distinct vocabulary flows by
     val batches = (0 until 3).map { b =>

@@ -14,18 +14,20 @@ class HllSpec extends SparkSpec {
     concat(lit(s"k$salt-"), col("id")).as("k"))
 
   test("estimate lands inside the 1.04/sqrt(m) envelope at 100k distinct") {
-    val est = Sketch.hllDistinct(keys(100000L, 0), col("k"), p = 8)
+    val est = Sketch.hllDistinctByGroup(keys(100000L, 0), lit(0), col("k"),
+        p = 8)
       .select("est_distinct").as[Double].head()
     // 3 sigma at p=8 is ~19.5%
     assert(math.abs(est - 100000.0) / 100000.0 < 0.2, s"est $est")
   }
 
   test("duplicates do not move the estimate (distinct semantics)") {
-    val once = Sketch.hllDistinct(keys(5000L, 1), col("k"), p = 8)
+    val once = Sketch.hllDistinctByGroup(keys(5000L, 1), lit(0), col("k"),
+        p = 8)
       .select("est_distinct").as[Double].head()
-    val tripled = Sketch.hllDistinct(
+    val tripled = Sketch.hllDistinctByGroup(
       keys(5000L, 1).unionAll(keys(5000L, 1)).unionAll(keys(5000L, 1)),
-      col("k"), p = 8)
+      lit(0), col("k"), p = 8)
       .select("est_distinct").as[Double].head()
     assert(once === tripled)
   }
@@ -42,13 +44,15 @@ class HllSpec extends SparkSpec {
       whole.collect().map(_.toSeq).toSet)
     val eMerged = Sketch.hllEstimateFromRegisters(merged, 8)
       .select("est_distinct").as[Double].head()
-    val eWhole = Sketch.hllDistinct(a.unionAll(b), col("k"), 8)
+    val eWhole = Sketch.hllDistinctByGroup(a.unionAll(b), lit(0),
+        col("k"), 8)
       .select("est_distinct").as[Double].head()
     assert(eMerged === eWhole)
   }
 
   test("small cardinalities take the linear-counting branch, near-exact") {
-    val est = Sketch.hllDistinct(keys(20L, 4), col("k"), p = 8)
+    val est = Sketch.hllDistinctByGroup(keys(20L, 4), lit(0), col("k"),
+        p = 8)
       .select("est_distinct").as[Double].head()
     assert(math.abs(est - 20.0) < 2.0, s"est $est")
   }
@@ -57,8 +61,7 @@ class HllSpec extends SparkSpec {
     val two = spark.range(9000).select(
       when(col("id") % 2 === 0, "even").otherwise("odd").as("grp"),
       (col("id") % 4000).cast("string").as("k"))
-    val state = java.nio.file.Files.createTempDirectory("hllspec")
-      .toString + "/s"
+    val state = CacheHygiene.tempDir("hllspec") + "/s"
     Seq(0, 1, 2).foreach { b =>
       Sketch.hllIngestBatch(two.filter(col("id") % 3 === b), col("grp"),
         col("k"), 8, state)

@@ -43,8 +43,8 @@ class LayoutSpec extends SparkSpec {
     // decorrelated columns: every (x, y) combination occurs
     val df = spark.range(n).select(
       (col("id") % 317).as("x"), ((col("id") * 7919) % 311).as("y"))
-    val zDir = java.nio.file.Files.createTempDirectory("zorder").toString
-    val xDir = java.nio.file.Files.createTempDirectory("xsort").toString
+    val zDir = CacheHygiene.tempDir("zorder")
+    val xDir = CacheHygiene.tempDir("xsort")
     Layout.writeZOrdered(df, zDir, "x", "y", 0L, 316L, 0L, 310L,
       files = 16, bits = 8)
     df.repartitionByRange(16, col("x")).sortWithinPartitions("x")

@@ -68,13 +68,6 @@ class MarginAlignSpec extends SparkSpec {
       .shardedTopK(cs, qs, "vec_id", "embedding", 5, 1, 1)
       .collect().map(_.toSeq).toSet
     assert(oneBlock === brute)
-    // size-derived sharding (tiny blocks force real multi-sharding on
-    // this fixture) — still identical
-    val auto = Similarity
-      .shardedTopKAuto(cs, qs, "vec_id", "embedding", 5,
-        targetBlockRows = 10L, minTasksOpt = Some(12))
-      .collect().map(_.toSeq).toSet
-    assert(auto === brute)
   }
 
   test("marginAlign(shards = 4) == marginAlign(shards = 1) row-for-row") {

@@ -49,8 +49,9 @@ class NearDupSpec extends SparkSpec {
     assert(agg.length === 4) // empty doc has no signature
   }
 
-  test("simhashNearDupPairs finds near-identical docs, not distinct ones") {
-    val pairs = NearDup.simhashNearDupPairs(docs, col("id"), col("text"),
+  test("simhash band pairs find near-identical docs, not distinct ones") {
+    val pairs = NearDup.hammingBandPairs(
+        NearDup.simhashSignatures(docs, col("id"), col("text")),
         maxHamming = 6)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((1L, 4L))) // identical → hamming 0

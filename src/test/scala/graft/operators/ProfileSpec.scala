@@ -49,8 +49,7 @@ class ProfileSpec extends SparkSpec {
     ).toDF("doc_id", "src", "lang")
     val oneShot = Datasheet.categoricalBalance(docs, col("src"),
       col("lang")).collect().map(_.toSeq).toSet
-    val state = java.nio.file.Files
-      .createTempDirectory("bal_spec").toString
+    val state = CacheHygiene.tempDir("bal_spec")
     (0 until 3).foreach { b =>
       graft.streaming.BalanceStream.ingestBatch(spark,
         docs.filter(col("doc_id") % 3 === b),

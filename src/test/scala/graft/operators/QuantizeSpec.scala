@@ -386,7 +386,7 @@ class QuantizeSpec extends SparkSpec {
     val pairs = embs.select($"vec_id".as("a"), $"v".as("va"))
       .crossJoin(embs.select($"vec_id".as("b"), $"v".as("vb")))
       .withColumn("h", Quantize.bqHamming(
-        Quantize.bqEncode($"va", 64), Quantize.bqEncode($"vb", 64)))
+        Quantize.bqEncode($"va", 64), Quantize.bqEncode($"vb", 64), 2))
       .select($"a", $"b", $"h", $"va", $"vb")
       .as[(Long, Long, Long, Seq[Double], Seq[Double])].collect()
     pairs.foreach { case (a, b, h, va, vb) =>

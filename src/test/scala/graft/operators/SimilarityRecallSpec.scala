@@ -58,6 +58,29 @@ class SimilarityRecallSpec extends SparkSpec {
     assert(recall >= 0.3, s"sampled-fit recall $recall collapsed")
   }
 
+  test("fitQuantizer leaves a relation it finds cached in the cache, " +
+    "and releases one it cached itself") {
+    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.storage.StorageLevel
+    def features = embs.select(
+      array_to_vector(col("embedding").cast("array<double>")).as("features"))
+    val shared = features.persist()
+    try {
+      Similarity.fitQuantizer(shared, nCentroids = 4, seed = 42L,
+        maxTrainRows = 100000L)
+      assert(shared.storageLevel !== StorageLevel.NONE,
+        "a fit dropped the cache of a relation its caller shares")
+      // q251's arms: learnedCoarse fits on the same plan the caller cached
+      Quantize.learnedCoarse(embs, col("embedding"), nLists = 4, seed = 42L)
+      assert(Quantize.coarseFeatures(embs, col("embedding")).storageLevel
+        !== StorageLevel.NONE)
+    } finally shared.unpersist(blocking = true)
+    val own = features.filter(col("features").isNotNull)
+    Similarity.fitQuantizer(own, nCentroids = 4, seed = 42L,
+      maxTrainRows = 100000L)
+    assert(own.storageLevel === StorageLevel.NONE, "a fit leaked its cache")
+  }
+
   test("PQ ADC top-k recalls exact-L2 neighbors despite 32x compression") {
     import graft.operators.Quantize
     import graft.functions.VectorExprs

@@ -62,8 +62,7 @@ class SketchSpec extends SparkSpec {
     val df = spark.range(20000).select((col("id") * 13 % 7000).as("key"))
     val batch = Sketch.kmvDistinct(df, col("key"), 256).collect().head
     for (splits <- Seq(1, 2, 5)) {
-      val state = java.nio.file.Files
-        .createTempDirectory("kmvinc").toString + "/state"
+      val state = CacheHygiene.tempDir("kmvinc") + "/state"
       (0 until splits).foreach { b =>
         Sketch.kmvIngestBatch(df.filter(col("id") % splits === b),
           col("key"), 256, state)
@@ -75,8 +74,7 @@ class SketchSpec extends SparkSpec {
 
   test("incremental: empty batches leave the state unchanged") {
     val df = spark.range(1000).select(col("id").as("key"))
-    val state = java.nio.file.Files
-      .createTempDirectory("kmvempty").toString + "/state"
+    val state = CacheHygiene.tempDir("kmvempty") + "/state"
     Sketch.kmvIngestBatch(df, col("key"), 64, state)
     val before = Sketch.kmvFromState(spark, state, 64).collect().head
     Sketch.kmvIngestBatch(df.limit(0), col("key"), 64, state)
@@ -155,8 +153,7 @@ class SketchSpec extends SparkSpec {
     val batchOut = Sketch.quantileSketch(df, col("v"), col("uid"), 128,
       Seq(0.5, 0.9, 0.99)).orderBy("prob").collect().toSeq
     for ((nb, label) <- Seq(2 -> "2 batches", 5 -> "5 batches")) {
-      val state = java.nio.file.Files
-        .createTempDirectory("qtspec").toString + "/s"
+      val state = CacheHygiene.tempDir("qtspec") + "/s"
       (0 until nb).foreach { b =>
         Sketch.quantileIngestBatch(df.filter(col("uid") % nb === b),
           col("v"), col("uid"), 128, state)

@@ -9,8 +9,7 @@ class SketchStateSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshPath(): String =
-    java.nio.file.Files.createTempDirectory("sketchstate")
-      .resolve("state").toString
+    CacheHygiene.tempDir("sketchstate") + "/state"
 
   test("write then read round-trips, and a rewrite replaces the state") {
     val p = freshPath()

@@ -35,7 +35,7 @@ class SkewAndSinksSpec extends SparkSpec {
   }
 
   test("writePartitioned lays out one directory per partition value") {
-    val base = java.nio.file.Files.createTempDirectory("part").toString
+    val base = CacheHygiene.tempDir("part")
     Sinks.writePartitioned(
       Seq(("20240516", 1L), ("20240517", 2L)).toDF("day", "id"),
       base, Seq("day"))

@@ -53,8 +53,7 @@ class TemperatureMixSpec extends SparkSpec {
   }
 
   test("streaming ingest anneals: early batches keep more, totals exact") {
-    val state = java.nio.file.Files.createTempDirectory("tmixspec")
-      .toString + "/s"
+    val state = CacheHygiene.tempDir("tmixspec") + "/s"
     val perBatch = (0 until 3).map { b =>
       Mix.temperatureSampleIngestBatch(
         corpus.filter(col("id") % 3 === b), col("id"), col("src"),

@@ -86,8 +86,7 @@ class TrendSpec extends SparkSpec {
     ).toDF("src", "v").withColumn("id", monotonically_increasing_id())
     val oneShot = Trend.jackknifeSummary(df, col("src"), col("v"),
       lit(1L)).collect().map(_.toSeq).toSet
-    val state = java.nio.file.Files
-      .createTempDirectory("jack_spec").toString
+    val state = CacheHygiene.tempDir("jack_spec")
     Seq(Seq("g1"), Seq("g2", "g3"), Seq[String]()).foreach { srcs =>
       graft.streaming.JackknifeStream.ingestBatch(spark,
         df.filter(col("src").isin(srcs.map(lit): _*)),

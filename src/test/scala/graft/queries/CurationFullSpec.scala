@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.CacheHygiene
 
 /** q242's end-to-end curation composition on a hand corpus where every
   * stage has a designed witness:
@@ -45,8 +46,7 @@ class CurationFullSpec extends SparkSpec {
 
   test("every stage drops exactly its designed victims; survivors " +
     "shard deterministically") {
-    val dir = java.nio.file.Files.createTempDirectory("curation_full")
-      .toString
+    val dir = CacheHygiene.tempDir("curation_full")
     docs.toDF("doc_id", "lang", "text").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = TestdataQueries.q242CurationFull(spark, dir)

@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.CacheHygiene
 
 /** Interchange formats: content-identical round trips, ORC pushdown +
   * pruning, CSV flatness enforcement, no inference anywhere. */
@@ -16,7 +15,7 @@ class FormatsSpec extends SparkSpec {
     val base = Tables.lineitem(spark, sf)
     val want = base.collect().map(_.toSeq).sortBy(_.toString).toSeq
     for (fmt <- Seq("orc", "json", "csv")) {
-      val dir = Files.createTempDirectory(s"fmt_$fmt").toString + "/t"
+      val dir = CacheHygiene.tempDir(s"fmt_$fmt") + "/t"
       Formats.write(base, dir, fmt)
       val got = Formats.read(spark, dir, fmt, base.schema)
         .collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -26,7 +25,7 @@ class FormatsSpec extends SparkSpec {
 
   test("ORC reads push filters and prune columns like parquet") {
     val base = Tables.lineitem(spark, sf)
-    val dir = Files.createTempDirectory("fmt_orc_p").toString + "/t"
+    val dir = CacheHygiene.tempDir("fmt_orc_p") + "/t"
     Formats.write(base, dir, "orc")
     val q = Formats.read(spark, dir, "orc", base.schema)
       .filter(col("l_quantity") > 30.0)
@@ -42,7 +41,7 @@ class FormatsSpec extends SparkSpec {
   test("hive-partitioned layout prunes partitions on read") {
     val base = Tables.lineitem(spark, sf)
       .withColumn("rf", col("l_returnflag"))
-    val dir = Files.createTempDirectory("fmt_orc_part").toString + "/t"
+    val dir = CacheHygiene.tempDir("fmt_orc_part") + "/t"
     Formats.write(base, dir, "orc", partitionBy = Seq("rf"))
     val q = Formats.read(spark, dir, "orc",
       org.apache.spark.sql.types.StructType(base.schema.fields))

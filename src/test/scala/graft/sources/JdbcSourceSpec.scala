@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.omm.{CancellationPipeline => P, OmmFixtures => F}
+import graft.operators.CacheHygiene
 
 /** S1 integration smoke over an embedded Derby database (the only JDBC
   * engine on this classpath): proves the option plumbing end-to-end — the
@@ -64,7 +65,7 @@ class JdbcSourceSpec extends SparkSpec {
 
   test("a full poll runs through the JDBC table loader (service wiring)") {
     loadIntoDerby
-    val base = java.nio.file.Files.createTempDirectory("jdbcpoll").toString
+    val base = CacheHygiene.tempDir("jdbcpoll")
     val r = graft.streaming.CancellationStream.pollOnce(spark,
       tablesDir = null, s"$base/sink", s"$base/state", P.FromNow,
       java.time.Instant.parse("2024-05-15T09:00:00Z"), 1800L, F.zone,

@@ -1,11 +1,10 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
+import graft.operators.CacheHygiene
 
 /** The driver regenerates the parquet fixtures between rounds and the `ts`
   * physical encoding has drifted across generations (nanos, micros-NTZ,
@@ -20,7 +19,7 @@ class TablesSpec extends SparkSpec {
   private val micros = Seq(1710055800123456L, 1710055801123456L)
 
   private def writeEvents(df: org.apache.spark.sql.DataFrame): String = {
-    val dir = Files.createTempDirectory("tables_events").toString
+    val dir = CacheHygiene.tempDir("tables_events")
     df.coalesce(1).write.parquet(s"$dir/events.parquet")
     dir
   }

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Funnel
+import graft.operators.{CacheHygiene, Funnel}
 
 /** Streaming last-touch attribution: exact batch equivalence under
   * ts-monotone splits — cross-batch credit (touch in one batch, its
@@ -41,7 +41,7 @@ class AttributionStreamSpec extends SparkSpec {
     .withColumn("ts", col("ts").cast("timestamp"))
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("attr_stream_spec").toString
+    CacheHygiene.tempDir("attr_stream_spec")
 
   private def oneShot = Funnel.lastTouchAttribution(events,
     col("user_id"), col("ts"), col("event_type"), col("event_id"),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.SparkSpec
 import graft.omm.{CancellationPipeline => P, OmmFixtures => F, OmmSchemas}
+import graft.operators.CacheHygiene
 
 /** S5 polling semantics: per-poll now-binding, A2 cross-poll diff via
   * checkpointed state, keyed sink accumulation, and the streaming wrapper.
@@ -26,7 +27,7 @@ class CancellationStreamSpec extends SparkSpec {
 
   test("two polls: state diff matches the golden A2 counts") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("stream").toString
+    val base = CacheHygiene.tempDir("stream")
     val (sink, state) = (s"$base/sink", s"$base/state")
 
     // poll 1 at the later evaluation point (4 trips → 3 distinct: 601 ×2 cases)
@@ -77,7 +78,7 @@ class CancellationStreamSpec extends SparkSpec {
   test("one poll evaluates the snapshot pipeline once: downstream actions " +
     "read the persisted InMemoryRelation") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamonce").toString
+    val base = CacheHygiene.tempDir("streamonce")
     // a poll with prior state, so the diff also scans the previous key set
     CancellationStream.pollOnce(spark, F.dir, s"$base/sink", s"$base/state",
       P.FromNow, t1, F.lookbackSeconds, F.zone)
@@ -102,7 +103,7 @@ class CancellationStreamSpec extends SparkSpec {
   test("an empty snapshot counts 0 sent, new and repeated, with and " +
     "without prior state") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamempty").toString
+    val base = CacheHygiene.tempDir("streamempty")
     val (sink, state) = (s"$base/sink", s"$base/state")
     val empty = Some { (s: SparkSession) =>
       val t = P.loadTables(s, F.dir); t.copy(dc = t.dc.limit(0)) }
@@ -120,7 +121,7 @@ class CancellationStreamSpec extends SparkSpec {
     F.ensure(spark)
     import spark.implicits._
     def pollOver(prev: Seq[String]) = {
-      val base = Files.createTempDirectory("streamdup").toString
+      val base = CacheHygiene.tempDir("streamdup")
       prev.toDF("trip_id").write.parquet(s"$base/state")
       CancellationStream.pollOnce(spark, F.dir, s"$base/sink", s"$base/state",
         P.FromNow, t2, F.lookbackSeconds, F.zone)
@@ -133,7 +134,7 @@ class CancellationStreamSpec extends SparkSpec {
 
   test("streaming wrapper runs polls on the trigger heartbeat") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamq").toString
+    val base = CacheHygiene.tempDir("streamq")
     val q = CancellationStream.start(spark, F.dir, s"$base/sink",
       s"$base/state", s"$base/ckpt", P.FromNow,
       intervalSeconds = 1, lookbackSeconds = F.lookbackSeconds,
@@ -161,7 +162,7 @@ class CancellationStreamSpec extends SparkSpec {
 
   test("multi-poll end-to-end: advancing now, sink accumulation, state replacement") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamm").toString
+    val base = CacheHygiene.tempDir("streamm")
     // S2 per-poll binding: the clock ADVANCES between triggers — poll 1
     // evaluates at t1 (the later wall-clock, 4 rows), every poll after at
     // t2 (the canonical now, 6 rows)
@@ -186,7 +187,7 @@ class CancellationStreamSpec extends SparkSpec {
 
   test("cache hygiene: ~30 polls leave no accumulating persisted state") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamh").toString
+    val base = CacheHygiene.tempDir("streamh")
     val sc = spark.sparkContext
     // stable baseline: drain residue earlier suites may have left behind
     // (suites run sequentially in this forked JVM, so nothing is in flight)
@@ -225,7 +226,7 @@ class CancellationStreamSpec extends SparkSpec {
 
   test("fail-fast: a poisoned poll stops the query and propagates the error") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamf").toString
+    val base = CacheHygiene.tempDir("streamf")
     // ≙ Main.java:56-65 shutdown-on-error: any poll exception must kill
     // the stream, not be swallowed and retried forever
     val q = CancellationStream.start(spark, F.dir, s"$base/sink",
@@ -248,7 +249,7 @@ class CancellationStreamSpec extends SparkSpec {
   test("a crash between the state swap's delete and rename is adopted: " +
     "the next poll repeats every trip instead of resending it as new") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamswap").toString
+    val base = CacheHygiene.tempDir("streamswap")
     val (sink, state) = (s"$base/sink", s"$base/state")
     def poll() = CancellationStream.pollOnce(spark, F.dir, sink, state,
       P.FromNow, t2, F.lookbackSeconds, F.zone)
@@ -265,7 +266,7 @@ class CancellationStreamSpec extends SparkSpec {
 
   test("restart: checkpoint + state dir survive a kill and resume at-least-once") {
     F.ensure(spark)
-    val base = Files.createTempDirectory("streamr").toString
+    val base = CacheHygiene.tempDir("streamr")
     def run(now: Instant, nBatches: Int): Unit = {
       val q = CancellationStream.start(spark, F.dir, s"$base/sink",
         s"$base/state", s"$base/ckpt", P.FromNow,
@@ -289,7 +290,7 @@ class CancellationStreamSpec extends SparkSpec {
     // at-least-once, not exactly-once: a crash AFTER the sink write but
     // BEFORE the state replacement re-sends on recovery (≙ the reference,
     // which loses its in-memory previousCancellations entirely on crash)
-    val crashBase = Files.createTempDirectory("streamc").toString
+    val crashBase = CacheHygiene.tempDir("streamc")
     val r1 = CancellationStream.pollOnce(spark, F.dir, s"$crashBase/sink",
       s"$crashBase/state", P.FromNow, t2, F.lookbackSeconds, F.zone)
     // simulate the torn poll: sink kept, state replacement lost

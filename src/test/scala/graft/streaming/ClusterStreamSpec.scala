@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.DupClusters
+import graft.operators.{CacheHygiene, DupClusters}
 
 /** Alias-log union-find: labeling equals connectedComponents under
   * arbitrary pair arrival splits, replay idempotence, write-time path
@@ -36,7 +34,7 @@ class ClusterStreamSpec extends SparkSpec {
 
   private def streamed(splits: Seq[Seq[(Long, Long)]],
                        compactAfterFiles: Int = 64): Map[Long, Long] = {
-    val base = Files.createTempDirectory("clstream").toString
+    val base = CacheHygiene.tempDir("clstream")
     splits.foreach { s =>
       ClusterStream.ingestPairs(spark, s.toDF("id_a", "id_b"), base,
         compactAfterFiles = compactAfterFiles)
@@ -63,7 +61,7 @@ class ClusterStreamSpec extends SparkSpec {
 
   test("replay idempotence: re-ingesting any poll's pairs appends " +
     "nothing and leaves labels unchanged") {
-    val base = Files.createTempDirectory("clstream_rp").toString
+    val base = CacheHygiene.tempDir("clstream_rp")
     val r1 = ClusterStream.ingestPairs(spark, pairs.toDF("id_a", "id_b"),
       base)
     assert(r1.merges > 0)
@@ -82,7 +80,7 @@ class ClusterStreamSpec extends SparkSpec {
 
   test("write-time path compression: each poll's aliases point straight " +
     "at the poll's final root") {
-    val base = Files.createTempDirectory("clstream_pc").toString
+    val base = CacheHygiene.tempDir("clstream_pc")
     // one poll containing a 4-way chain merge: without write-time
     // compression 4→3→2→1 would land as stepwise aliases
     ClusterStream.ingestPairs(spark,
@@ -102,7 +100,7 @@ class ClusterStreamSpec extends SparkSpec {
     assert(got === want)
     // and a fresh state ingested the same way has a depth-1 forest:
     // every parent is terminal (never appears as a node)
-    val base = Files.createTempDirectory("clstream_cp").toString
+    val base = CacheHygiene.tempDir("clstream_cp")
     pairs.foreach(p => ClusterStream.ingestPairs(spark,
       Seq(p).toDF("id_a", "id_b"), base, compactAfterFiles = 0))
     val al = spark.read.parquet(s"$base/aliases")
@@ -118,8 +116,8 @@ class ClusterStreamSpec extends SparkSpec {
     "and labels (the size gate changes cost, never state)") {
     val want = expected
     val splits = pairs.map(Seq(_)) // one pair per poll: deepest chains
-    val baseL = Files.createTempDirectory("clstream_l").toString
-    val baseD = Files.createTempDirectory("clstream_d").toString
+    val baseL = CacheHygiene.tempDir("clstream_l")
+    val baseD = CacheHygiene.tempDir("clstream_d")
     splits.foreach { s =>
       ClusterStream.ingestPairs(spark, s.toDF("id_a", "id_b"), baseL)
       // localMaxAliasBytes = 0: every poll past the first takes the
@@ -149,9 +147,9 @@ class ClusterStreamSpec extends SparkSpec {
     "path and append IDENTICAL alias logs and labels") {
     val want = expected
     val splits = Seq(pairs.take(3), pairs.slice(3, 5), pairs.drop(5))
-    val baseL = Files.createTempDirectory("clstream_gl").toString
-    val baseB = Files.createTempDirectory("clstream_gb").toString
-    val baseM = Files.createTempDirectory("clstream_gm").toString
+    val baseL = CacheHygiene.tempDir("clstream_gl")
+    val baseB = CacheHygiene.tempDir("clstream_gb")
+    val baseM = CacheHygiene.tempDir("clstream_gm")
     splits.zipWithIndex.foreach { case (s, i) =>
       ClusterStream.ingestPairs(spark, s.toDF("id_a", "id_b"), baseL)
       // maxLocalPairs = 0: EVERY non-empty batch is "oversized" and must
@@ -182,7 +180,7 @@ class ClusterStreamSpec extends SparkSpec {
   }
 
   test("empty polls and unknown-singleton vertices label themselves") {
-    val base = Files.createTempDirectory("clstream_e").toString
+    val base = CacheHygiene.tempDir("clstream_e")
     val r = ClusterStream.ingestPairs(spark,
       Seq.empty[(Long, Long)].toDF("id_a", "id_b"), base)
     assert(r === ClusterStream.BatchResult(0, 0))

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Contamination
+import graft.operators.{CacheHygiene, Contamination}
 
 /** Incremental decontamination: batch equivalence for any arrival split
   * of EITHER side (docs and benchmark grams each count a hit exactly
@@ -35,7 +35,7 @@ class ContamStreamSpec extends SparkSpec {
 
   test("any arrival split of docs AND benchmark equals the batch operator") {
     for (nSplits <- Seq(1, 2, 3)) {
-      val state = Files.createTempDirectory("contamstream").toString
+      val state = CacheHygiene.tempDir("contamstream")
       (0 until nSplits).foreach { b =>
         ContamStream.ingestBatch(spark,
           newDocs = corpus.filter(col("id") % nSplits === b),
@@ -51,7 +51,7 @@ class ContamStreamSpec extends SparkSpec {
   test("gram index is hive-bucketed and the bucket-pruned probe is " +
     "exact at any nBuckets (incl. 1 = no pruning possible)") {
     for (nb <- Seq(1, 7, 64)) {
-      val state = Files.createTempDirectory("contamstream").toString
+      val state = CacheHygiene.tempDir("contamstream")
       // docs first, benchmark second — forces the bucket-pruned
       // old-docs probe to produce EVERY hit
       ContamStream.ingestBatch(spark, corpus, bench.limit(0), state,
@@ -71,7 +71,7 @@ class ContamStreamSpec extends SparkSpec {
 
   test("a crash between compaction swaps' delete and rename on `docstats` " +
     "and `hits` is adopted by the next ingest instead of orphaned") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     // batch 0 holds doc 2 and bench 100, so it already appends both a
     // docstats row and a hit row
     ContamStream.ingestBatch(spark, corpus.filter(col("id") % 2 === 0),
@@ -91,7 +91,7 @@ class ContamStreamSpec extends SparkSpec {
   }
 
   test("benchmark-after-docs: hits land when the gram side arrives late") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     // all docs first, benchmark only in the second batch
     ContamStream.ingestBatch(spark, corpus, bench.limit(0), state, n = 3)
     val preBench = ContamStream.contamination(spark, state)
@@ -104,7 +104,7 @@ class ContamStreamSpec extends SparkSpec {
   }
 
   test("re-registering the same benchmark suite changes nothing") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     ContamStream.ingestBatch(spark, corpus, bench, state, n = 3)
     val r = ContamStream.ingestBatch(spark, corpus.limit(0), bench, state,
       n = 3)
@@ -116,7 +116,7 @@ class ContamStreamSpec extends SparkSpec {
   }
 
   test("empty-doc rows produce no stats row (the batch operator's grain)") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     ContamStream.ingestBatch(spark, corpus, bench, state, n = 3)
     val ids = ContamStream.contamination(spark, state)
       .select("id").as[Long].collect().toSet
@@ -125,7 +125,7 @@ class ContamStreamSpec extends SparkSpec {
 
   test("adaptive layout: starts at 1 bucket, grows via rebucket, and the " +
     "grown probe is still exact") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     // docs only, two batches, 1-byte bucket target: the first batch
     // seeds at modulus 1, the post-append rebucket grows the layout, the
     // second batch appends INTO the grown layout
@@ -152,7 +152,7 @@ class ContamStreamSpec extends SparkSpec {
 
   test("modulus marker survives the stream's state maintenance; a pinned " +
     "caller that disagrees with the layout is rejected") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     // force growth AND per-batch compaction in the same stream
     (0 until 3).foreach { b =>
       ContamStream.ingestBatch(spark,
@@ -177,7 +177,7 @@ class ContamStreamSpec extends SparkSpec {
 
   test("crash residue between the first marker stamp and the first data " +
     "append (marker-only grams dir) is recovered, not tripped over") {
-    val state = Files.createTempDirectory("contamstream_mk").toString
+    val state = CacheHygiene.tempDir("contamstream_mk")
     // the residue the marker-first stamp order can leave: a grams dir
     // holding ONLY the modulus marker, no parquet
     graft.operators.SketchState.writeMarker(spark, s"$state/grams",
@@ -201,7 +201,7 @@ class ContamStreamSpec extends SparkSpec {
 
   test("an adaptive open REFUSES a non-empty unmarked gram index instead " +
     "of guessing modulus 1 against an unknown layout") {
-    val state = Files.createTempDirectory("contamstream_um").toString
+    val state = CacheHygiene.tempDir("contamstream_um")
     // fabricate pre-marker-era residue: partitioned gram data, no marker
     corpus.select(col("id"), xxhash64(col("text")).as("h1"),
         xxhash64(col("text"), lit(1)).as("h2"))
@@ -215,7 +215,7 @@ class ContamStreamSpec extends SparkSpec {
   }
 
   test("compaction keeps results identical") {
-    val state = Files.createTempDirectory("contamstream").toString
+    val state = CacheHygiene.tempDir("contamstream")
     (0 until 3).foreach { b =>
       ContamStream.ingestBatch(spark,
         newDocs = corpus.filter(col("id") % 3 === b),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.CacheHygiene
 
 /** Streaming curation: every stage has a designed victim across batch
   * boundaries — cross-batch dedup, repeated contamination of the same
@@ -39,7 +40,7 @@ class CurationStreamSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("curation_stream").toString
+    CacheHygiene.tempDir("curation_stream")
 
   test("cross-batch dedup, repeated contamination, quality floor, " +
     "mid-stream shard boundary; replay is a no-op") {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{Mix, SketchState}
+import graft.operators.{CacheHygiene, Mix, SketchState}
 
 /** Streaming DoReMi: exact batch equivalence (the (src, token) count
   * state is additive), arrival-split invariance, and the weight read
@@ -18,7 +18,7 @@ class DoremiStreamSpec extends SparkSpec {
   ).toDF("doc_id", "source", "text")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("doremi_spec").toString
+    CacheHygiene.tempDir("doremi_spec")
 
   test("accumulated count state equals one-shot counts under ANY split") {
     val oneShot = Mix.doremiCounts(docs, col("text"), col("source"))

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Datasheet
+import graft.operators.{CacheHygiene, Datasheet}
 
 /** Streaming embedding health: the raw aggregate is associative, so any
   * arrival split reproduces the one-shot panel exactly. */
@@ -27,7 +25,7 @@ class EmbedHealthStreamSpec extends SparkSpec {
 
   test("any arrival split reproduces the one-shot panel exactly") {
     for (nSplits <- Seq(1, 2, 3)) {
-      val state = Files.createTempDirectory("embhealth").toString
+      val state = CacheHygiene.tempDir("embhealth")
       (0 until nSplits).foreach { b =>
         EmbedHealthStream.ingestBatch(spark,
           embs.filter(col("id") % nSplits === b),

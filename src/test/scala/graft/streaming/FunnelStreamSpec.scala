@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Funnel
+import graft.operators.{CacheHygiene, Funnel}
 
 /** Streaming funnel: exact batch equivalence under ts-monotone splits,
   * including the cross-boundary conversion (stage-1 in one batch,
@@ -34,7 +34,7 @@ class FunnelStreamSpec extends SparkSpec {
     .withColumn("ts", col("ts").cast("timestamp"))
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("funnel_stream_spec").toString
+    CacheHygiene.tempDir("funnel_stream_spec")
 
   private def splits = Seq(
     Seq("2024-01-01 12:00:00"),                                // one batch

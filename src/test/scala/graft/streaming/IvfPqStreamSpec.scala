@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Quantize
+import graft.operators.{CacheHygiene, Quantize}
 import graft.sources.Tables
 
 /** Streaming IVF-PQ index: encoding is a pure per-row function of the
@@ -30,7 +28,7 @@ class IvfPqStreamSpec extends SparkSpec {
 
   test("accumulated topK equals the batch operator under an uneven split") {
     val (embs, coarse, rb) = setup()
-    val dir = Files.createTempDirectory("ivfpq_spec").toString
+    val dir = CacheHygiene.tempDir("ivfpq_spec")
     // deliberately uneven, id-NON-monotone arrival: odds before evens
     for (parity <- Seq(1, 0)) {
       IvfPqStream.ingestBatch(spark,
@@ -55,7 +53,7 @@ class IvfPqStreamSpec extends SparkSpec {
   test("delta fold + compaction bound the index file count across many " +
       "tiny batches; every row survives exactly once") {
     val (embs, coarse, rb) = setup()
-    val dir = Files.createTempDirectory("ivfpq_compact").toString
+    val dir = CacheHygiene.tempDir("ivfpq_compact")
     val ceiling = 16
     var lastFiles = 0
     // 10 batches of 50 vectors, each touching up to 8 list partitions —

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Datasheet
+import graft.operators.{CacheHygiene, Datasheet}
 
 /** Streaming mix drift: exact batch equivalence (volumes are additive),
   * arrival-split invariance, and state survival through the shared
@@ -18,7 +18,7 @@ class MixDriftStreamSpec extends SparkSpec {
   ).toDF("doc_id", "src_col", "text")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("mixdrift_spec").toString
+    CacheHygiene.tempDir("mixdrift_spec")
 
   test("accumulated state equals one-shot volumes under ANY batch split") {
     val oneShot = Datasheet.sourceVolumes(docs, col("text"), col("src_col"))

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.NearDup
+import graft.operators.{CacheHygiene, NearDup}
 
 /** Incremental MinHash-LSH: batch equivalence across arbitrary arrival
   * splits, exactly-once pair emission, state accumulation, and the
@@ -40,7 +38,7 @@ class NearDupStreamSpec extends SparkSpec {
     // broadcast semi-join (the corpus ≫ batch shape)
     for (ratio <- Seq(Long.MaxValue, 0L);
          splits <- Seq(Seq(0L), Seq(0L, 1L), Seq(0L, 1L, 2L))) {
-      val base = Files.createTempDirectory("ndstream").toString
+      val base = CacheHygiene.tempDir("ndstream")
       val results = splits.map { s =>
         NearDupStream.ingestBatch(spark,
           docs.filter(col("id") % splits.length === s),
@@ -59,7 +57,7 @@ class NearDupStreamSpec extends SparkSpec {
 
   test("state accumulates: a later batch pairs with every earlier generation") {
     val (n, b, r, t) = params
-    val base = Files.createTempDirectory("ndgen").toString
+    val base = CacheHygiene.tempDir("ndgen")
     // families arrive one member per batch: the third 'alpha' member must
     // pair with BOTH earlier generations via the index, not the self-join
     val r1 = NearDupStream.ingestBatch(spark, docs.filter(col("id") === 5),
@@ -85,7 +83,7 @@ class NearDupStreamSpec extends SparkSpec {
       else d.listFiles.count(f => f.isFile && f.getName.startsWith("part-"))
     }
     def run(compactAfter: Int): (String, Int, Int) = {
-      val base = Files.createTempDirectory(s"ndcompact$compactAfter").toString
+      val base = CacheHygiene.tempDir(s"ndcompact$compactAfter")
       // one doc per batch — 7 ingests, each appending its own part files
       docs.orderBy("id").as[(Long, String)].collect().foreach { case (id, _) =>
         NearDupStream.ingestBatch(spark, docs.filter(col("id") === id),
@@ -128,7 +126,7 @@ class NearDupStreamSpec extends SparkSpec {
     // 8 identical one-doc batches: every batch after the first emits its
     // pairs against ALL prior docs, so the sink gets >= 7 append
     // file-sets without compaction; ceiling 2 must keep it bounded
-    val base = Files.createTempDirectory("ndsink").toString
+    val base = CacheHygiene.tempDir("ndsink")
     (1L to 8L).foreach { id =>
       NearDupStream.ingestBatch(spark,
         Seq(id -> "the quick brown fox jumps over the lazy dog again")
@@ -150,7 +148,7 @@ class NearDupStreamSpec extends SparkSpec {
 
   test("file-source streaming wrapper: dropped files become increments") {
     val (n, b, r, t) = params
-    val base = Files.createTempDirectory("ndq").toString
+    val base = CacheHygiene.tempDir("ndq")
     val incoming = s"$base/incoming"
     new java.io.File(incoming).mkdirs()
     val q = NearDupStream.start(spark, incoming, s"$base/state",

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Vocab
+import graft.operators.{CacheHygiene, Vocab}
 
 /** Incremental LM count tables: any-split batch equivalence (counts are
   * additive — the one streaming operator with NO ordering caveat) and
@@ -25,7 +23,7 @@ class NgramLmStreamSpec extends SparkSpec {
       .toSet
 
   private def streamResult(splits: Seq[Seq[Long]]) = {
-    val dir = Files.createTempDirectory("lmspec").toString
+    val dir = CacheHygiene.tempDir("lmspec")
     val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     splits.foreach { ids =>
       NgramLmStream.ingestBatch(spark,
@@ -64,7 +62,7 @@ class NgramLmStreamSpec extends SparkSpec {
     // file bands, never rows), so the score still matches the batch
     // operator bit-for-bit
     val expected = batchResult()
-    val dir = Files.createTempDirectory("lmspec-lsm").toString
+    val dir = CacheHygiene.tempDir("lmspec-lsm")
     val train = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     Seq(1L, 2L, 3L, 4L, 6L, 7L, 8L).foreach { id =>
       NgramLmStream.ingestBatch(spark, train.filter(col("doc_id") === id),
@@ -91,7 +89,7 @@ class NgramLmStreamSpec extends SparkSpec {
   }
 
   test("state stores RAW counts; marginals are derived at scoring time") {
-    val dir = Files.createTempDirectory("lmspec").toString
+    val dir = CacheHygiene.tempDir("lmspec")
     NgramLmStream.ingestBatch(spark, docs.filter(col("doc_id") < 3),
       col("doc_id"), col("text"), s"$dir/state")
     val tri = spark.read.parquet(s"$dir/state/tri")

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.TextExprs
+import graft.operators.CacheHygiene
 
 /** Novelty series: first-seen attribution, the Σ n_novel conservation
   * law under any arrival order, and compaction transparency. */
@@ -24,7 +23,7 @@ class NovelGramStreamSpec extends SparkSpec {
       .select("g").distinct().count()
 
   test("first-seen attribution: exact per-batch novelty counts") {
-    val state = Files.createTempDirectory("novel").toString
+    val state = CacheHygiene.tempDir("novel")
     // batch 0: doc 1 → 3 grams, all novel
     // batch 1: docs 2,3 → 5 grams, "x y z","y z w" novel (2)
     // batch 2: doc 4 → 2 grams, "d e f" novel (1)
@@ -48,7 +47,7 @@ class NovelGramStreamSpec extends SparkSpec {
     "ANY arrival order; compaction changes nothing") {
     for (order <- Seq(Seq(1L, 2L, 3L, 4L), Seq(4L, 3L, 2L, 1L),
         Seq(3L, 1L, 4L, 2L))) {
-      val state = Files.createTempDirectory("novel").toString
+      val state = CacheHygiene.tempDir("novel")
       val total = order.zipWithIndex.map { case (id, b) =>
         NovelGramStream.ingestBatch(spark, docs.filter(col("id") === id),
           col("text"), b.toLong, state, compactAfterFiles = 1).nNovel

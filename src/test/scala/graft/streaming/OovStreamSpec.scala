@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{SketchState, Vocab}
+import graft.operators.{CacheHygiene, SketchState, Vocab}
 
 /** Streaming OOV: exact batch equivalence (the (grp, token) count state
   * is additive), arrival-split invariance, and the rate read matching
@@ -18,7 +18,7 @@ class OovStreamSpec extends SparkSpec {
   ).toDF("doc_id", "source", "text")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("oov_spec").toString
+    CacheHygiene.tempDir("oov_spec")
 
   test("accumulated count state equals one-shot counts under ANY split") {
     val oneShot = Vocab.oovCounts(docs, col("source"), col("text"))

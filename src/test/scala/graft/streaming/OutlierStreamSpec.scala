@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.{Datasheet, SketchState}
+import graft.operators.{CacheHygiene, Datasheet, SketchState}
 
 /** Streaming robust outliers: exact batch equivalence (value counts
   * are additive), arrival-split invariance, and the panel read
@@ -16,7 +16,7 @@ class OutlierStreamSpec extends SparkSpec {
     (15L, "B", 8)).toDF("doc_id", "src_col", "v")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("outlier_spec").toString
+    CacheHygiene.tempDir("outlier_spec")
 
   test("accumulated count state equals one-shot counts under ANY split") {
     val oneShot = Datasheet.valueCounts(docs, col("v"), col("src_col"))

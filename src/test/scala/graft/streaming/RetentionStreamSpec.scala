@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Funnel
+import graft.operators.{CacheHygiene, Funnel}
 
 /** Streaming retention: the loosest-contract stream — BOTH sufficient
   * statistics are order-free (min-merge cohort, distinct activity
@@ -30,7 +30,7 @@ class RetentionStreamSpec extends SparkSpec {
     .withColumn("ts", col("ts").cast("timestamp"))
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("retention_stream").toString
+    CacheHygiene.tempDir("retention_stream")
 
   private def oneShot = Funnel.weeklyRetention(events, col("user_id"),
     col("ts")).collect().map(_.toSeq).toSet

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Scd
+import graft.operators.{CacheHygiene, Scd}
 
 /** Streaming SCD2: exact batch equivalence under ts-monotone arrival,
   * including the two cross-boundary behaviors that make the incremental
@@ -31,7 +31,7 @@ class ScdStreamSpec extends SparkSpec {
     .toDF("event_id", "user_id", "ts", "event_type", "value")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("scd_stream_spec").toString
+    CacheHygiene.tempDir("scd_stream_spec")
 
   private def oneShot = Scd.scd2(events, Seq("user_id"), col("ts"),
     col("event_id"), col("event_type"), Seq(col("value")))

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Classify
+import graft.operators.{CacheHygiene, Classify}
 
 /** Streaming score drift: additive histogram state equals the one-shot
   * binning for any arrival split, so the drift read reproduces the batch
@@ -22,7 +20,7 @@ class ScoreDriftStreamSpec extends SparkSpec {
 
   test("any arrival split of the current snapshot equals the batch drift") {
     for (nSplits <- Seq(1, 2, 3)) {
-      val state = Files.createTempDirectory("sdrift").toString
+      val state = CacheHygiene.tempDir("sdrift")
       val rows = cur.withColumn("rn",
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(pmod(lit(0L), lit(1L))).orderBy(col("score"))))
@@ -39,7 +37,7 @@ class ScoreDriftStreamSpec extends SparkSpec {
   }
 
   test("empty batches are no-ops") {
-    val state = Files.createTempDirectory("sdrift").toString
+    val state = CacheHygiene.tempDir("sdrift")
     ScoreDriftStream.ingestBatch(spark, cur, col("score"), state)
     ScoreDriftStream.ingestBatch(spark, cur.limit(0), col("score"), state)
     val got = ScoreDriftStream.driftVsReference(spark, state,

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{CacheHygiene, Dedup}
 
 /** Incremental segment dedup: batch equivalence under monotone splits,
   * first-arrival semantics out of order, state growth by distinct
@@ -37,7 +35,7 @@ class SegDedupStreamSpec extends SparkSpec {
   test("monotone splits accumulate exactly the batch operator's output") {
     for (bounds <- Seq(Seq(0L, 100L), Seq(0L, 4L, 100L),
         Seq(0L, 2L, 5L, 100L))) {
-      val base = Files.createTempDirectory("segstream").toString
+      val base = CacheHygiene.tempDir("segstream")
       val results = bounds.sliding(2).toSeq.map { case Seq(lo, hi) =>
         SegDedupStream.ingestBatch(spark,
           docs.filter(col("id") >= lo && col("id") < hi),
@@ -51,7 +49,7 @@ class SegDedupStreamSpec extends SparkSpec {
   }
 
   test("kept-segment counts decompose across batches (no double emission)") {
-    val base = Files.createTempDirectory("segstream").toString
+    val base = CacheHygiene.tempDir("segstream")
     val r1 = SegDedupStream.ingestBatch(spark,
       docs.filter(col("id") <= 2), s"$base/state", s"$base/sink", w)
     val r2 = SegDedupStream.ingestBatch(spark,
@@ -66,7 +64,7 @@ class SegDedupStreamSpec extends SparkSpec {
   }
 
   test("out-of-order arrival degrades to first-arrival-wins, one survivor") {
-    val base = Files.createTempDirectory("segstream").toString
+    val base = CacheHygiene.tempDir("segstream")
     // doc 3 arrives BEFORE doc 1: "a b" survives in doc 3, not doc 1
     SegDedupStream.ingestBatch(spark,
       docs.filter(col("id") === 3), s"$base/state", s"$base/sink", w)
@@ -81,7 +79,7 @@ class SegDedupStreamSpec extends SparkSpec {
   }
 
   test("empty batches are no-ops; compaction keeps the file count bounded") {
-    val base = Files.createTempDirectory("segstream").toString
+    val base = CacheHygiene.tempDir("segstream")
     assert(SegDedupStream.ingestBatch(spark, docs.limit(0),
       s"$base/state", s"$base/sink", w) === SegDedupStream.BatchResult(0, 0))
     // 6 one-doc batches with a 2-file ceiling: without compaction the segs

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{CacheHygiene, Similarity}
 
 /** Incremental semantic dedup: batch equivalence under monotone splits,
   * dropped-vector justification across batches, the exact-copy hash path,
@@ -41,7 +39,7 @@ class SemDedupStreamSpec extends SparkSpec {
   test("monotone splits accumulate exactly the batch operator's decisions") {
     for (bounds <- Seq(Seq(0L, 100L), Seq(0L, 5L, 100L),
         Seq(0L, 3L, 7L, 100L))) {
-      val base = Files.createTempDirectory("semstream").toString
+      val base = CacheHygiene.tempDir("semstream")
       bounds.sliding(2).foreach { case Seq(lo, hi) =>
         SemDedupStream.ingestBatch(spark,
           vecs.filter(col("id") >= lo && col("id") < hi),
@@ -57,7 +55,7 @@ class SemDedupStreamSpec extends SparkSpec {
     // id 2 kept (first of its family), id 6 dropped by 2; id 9 arrives in
     // a LATER batch and must be dropped even though its in-state matches
     // include the dropped id 6 — the state keeps dropped values too
-    val base = Files.createTempDirectory("semstream").toString
+    val base = CacheHygiene.tempDir("semstream")
     SemDedupStream.ingestBatch(spark, vecs.filter(col("id") <= 6),
       s"$base/state", s"$base/sink", dim, bits, seed, threshold)
     SemDedupStream.ingestBatch(spark, vecs.filter(col("id") > 6),
@@ -74,7 +72,7 @@ class SemDedupStreamSpec extends SparkSpec {
       "threshold 1.0") {
     // cos(v, v) can land just below 1.0 in float; the content-hash path
     // must drop the copy regardless
-    val base = Files.createTempDirectory("semstream").toString
+    val base = CacheHygiene.tempDir("semstream")
     SemDedupStream.ingestBatch(spark, vecs.filter(col("id") === 1),
       s"$base/state", s"$base/sink", dim, bits, seed, 1.0)
     SemDedupStream.ingestBatch(spark, vecs.filter(col("id") === 5),
@@ -86,7 +84,7 @@ class SemDedupStreamSpec extends SparkSpec {
 
   test("out-of-order arrival degrades to first-arrival-wins") {
     // id 5 arrives before its smaller-id copy 1: the earlier ARRIVAL wins
-    val base = Files.createTempDirectory("semstream").toString
+    val base = CacheHygiene.tempDir("semstream")
     SemDedupStream.ingestBatch(spark, vecs.filter(col("id") === 5),
       s"$base/state", s"$base/sink", dim, bits, seed, threshold)
     SemDedupStream.ingestBatch(spark, vecs.filter(col("id") === 1),
@@ -103,7 +101,7 @@ class SemDedupStreamSpec extends SparkSpec {
     // ratio 0 forces the broadcast steady-state shape on every batch;
     // MaxValue forces the sort-merge fallback — decisions must agree
     val outs = Seq(0L, Long.MaxValue).map { ratio =>
-      val base = Files.createTempDirectory("semstream").toString
+      val base = CacheHygiene.tempDir("semstream")
       Seq((0L, 5L), (5L, 100L)).foreach { case (lo, hi) =>
         SemDedupStream.ingestBatch(spark,
           vecs.filter(col("id") >= lo && col("id") < hi),
@@ -118,7 +116,7 @@ class SemDedupStreamSpec extends SparkSpec {
 
   test("empty batches are no-ops; state and sink files stay bounded " +
       "under compaction") {
-    val base = Files.createTempDirectory("semstream").toString
+    val base = CacheHygiene.tempDir("semstream")
     assert(SemDedupStream.ingestBatch(spark, vecs.limit(0),
       s"$base/state", s"$base/sink", dim, bits, seed, threshold)
       === SemDedupStream.BatchResult(0, 0))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.operators.Shard
+import graft.operators.{CacheHygiene, Shard}
 
 /** Streaming sharding: incremental assignments must be ROW-IDENTICAL
   * to the one-shot prefix-sum pass — including across a shard boundary
@@ -19,7 +19,7 @@ class ShardStreamSpec extends SparkSpec {
     .toDF("doc_id", "n_tok")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("shard_stream").toString
+    CacheHygiene.tempDir("shard_stream")
 
   private def oneShot = Shard.byBudget(docs, "doc_id", "n_tok", 10L)
     .collect().map(_.toSeq).toSet

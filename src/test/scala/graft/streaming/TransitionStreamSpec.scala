@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.{FailingRenameFs, SparkSpec}
-import graft.operators.Funnel
+import graft.operators.{CacheHygiene, Funnel}
 
 /** Streaming transition matrix: exact batch equivalence under
   * ts-monotone arrival — the boundary-pair stitching is the whole
@@ -28,7 +28,7 @@ class TransitionStreamSpec extends SparkSpec {
     .toDF("event_id", "user_id", "ts", "event_type")
 
   private def tmp() =
-    java.nio.file.Files.createTempDirectory("trans_spec").toString
+    CacheHygiene.tempDir("trans_spec")
 
   private def oneShot = Funnel.transitionMatrix(events, col("user_id"),
       col("ts"), col("event_id"), col("event_type"))

@@ -7,8 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
 
 /** Watermark + windowed aggregation semantics over a MemoryStream: window
-  * boundaries, late-row drop after watermark advance, and within-watermark
-  * keyed dedup. */
+  * boundaries, late-row drop after watermark advance, and session merging. */
 class WindowedStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -42,27 +41,6 @@ class WindowedStatsSpec extends SparkSpec {
       .map { case (s, _, k, n) => (s.toString, k, n) }.toSet
     assert(rows.contains(("2024-05-15 12:00:00.0", "a", 2L))) // late row NOT counted
     assert(!rows.exists { case (w, k, n) => w == "2024-05-15 12:00:00.0" && k == "a" && n != 2L })
-  }
-
-  test("dedupWithinWatermark drops re-emitted keys (at-least-once → once)") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String)]
-    val deduped = WindowedStats.dedupWithinWatermark(
-      input.toDF().toDF("ts", "trip_id"), "ts", Seq("trip_id"), "10 minutes")
-
-    val q = deduped.writeStream.format("memory").queryName("dedup_wm")
-      .outputMode("append").start()
-    input.addData((ts("2024-05-15 12:00:00"), "601"),
-      (ts("2024-05-15 12:00:30"), "601"), // PAST-mode re-emission
-      (ts("2024-05-15 12:01:00"), "602"))
-    q.processAllAvailable()
-    input.addData((ts("2024-05-15 12:02:00"), "601")) // still within horizon
-    q.processAllAvailable()
-    q.stop()
-
-    val trips = spark.table("dedup_wm").select("trip_id").as[String]
-      .collect().sorted
-    assert(trips === Array("601", "602"))
   }
 
   test("sessionCounts merges gap-adjacent events and closes via watermark") {
