@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import Harness.{json => q, loadavg, stealJiffies}
 
 /** Benchmark main (driver contract): run every registered query against
   * SPARK_GRAFT_SF_DIR. A query that throws is reported explicitly in
@@ -170,7 +170,6 @@ object Bench {
     val benchT0 = System.nanoTime()
     def elapsedSec(): Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val budgetSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
@@ -187,41 +186,14 @@ object Bench {
     // the main pass may spend up to this much; the rest is the quiet
     // pass's reserve (it shrinks further if the main pass overruns)
     val mainBudgetSec = budgetSec * 0.75
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
-    // untimed warmup: JVM/codegen/parquet-footer costs land here, not on
-    // whichever query happens to sort first. OMM fixture generation and a
-    // first read of every table family are warmed too — otherwise the
-    // alphabetically-first omm_* query pays fixture generation for the
-    // whole family and the per-query table misattributes the cost.
-    try {
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      graft.omm.OmmFixtures.ensure(spark)
-      spark.read.parquet(graft.omm.OmmFixtures.path("deviation_cases"))
-        .limit(1).count()
-      Seq("lineitem", "orders", "events", "documents", "embeddings")
-        .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count())
-    } catch { case _: Throwable => () }
+    val spark = Session()
+    val ncpus = spark.sparkContext.defaultParallelism
+    Harness.warmUp(spark, sfDir)
 
     // drop every form of cached state a query (or rep) can leave behind;
     // see the class doc for why clearCache alone is not enough
     def resetJvmState(settle: Boolean): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      Harness.reset(spark)
       if (settle) {
         System.gc()
         Thread.sleep(100)
@@ -236,24 +208,14 @@ object Bench {
     val rawOut = new java.io.PrintStream(
       new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8")
 
-    // 1-minute loadavg: the contention witness. Reading it per query (not
-    // once at the end) is what lets the artifact distinguish "slow operator"
-    // from "busy box" after the fact.
-    def loadavg(): Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.split(' ')(0).toDouble
-      catch { case _: Throwable => -1.0 }
+    // the contention witnesses (Harness.loadavg, Harness.stealJiffies) are
+    // read per query, not once at the end: that is what lets the artifact
+    // distinguish "slow operator" from "busy box" after the fact, and the
+    // steal delta sees the hypervisor co-tenancy loadavg cannot — the
+    // adjudicated confounder of rounds 6–7.
     def uptimeSec(): Double =
       try scala.io.Source.fromFile("/proc/uptime").mkString.split(' ')(0).toDouble
       catch { case _: Throwable => -1.0 }
-    // cumulative CPU-steal jiffies (USER_HZ=100): aggregate "cpu" line,
-    // field 8 after the label (user nice system idle iowait irq softirq
-    // STEAL). Deltas across a query expose hypervisor co-tenancy that
-    // loadavg cannot see — the adjudicated confounder of rounds 6–7.
-    def stealJiffies(): Long =
-      try scala.io.Source.fromFile("/proc/stat").getLines()
-        .find(_.startsWith("cpu "))
-        .map(_.trim.split("\\s+")(8).toLong).getOrElse(-1L)
-      catch { case _: Throwable => -1L }
     // total BUSY jiffies across all cpus (user+nice+system+irq+softirq —
     // not idle/iowait/steal/guest): with the JVM's own jiffies subtracted,
     // the delta across a query is CPU burned by FOREIGN processes on this
@@ -382,9 +344,6 @@ object Bench {
     val loadStart = loadavg()
     val stealStart = stealJiffies()
     var errors = Map.empty[String, String]
-    val ncpus =
-      try cpus.toInt catch { case _: Throwable =>
-        Runtime.getRuntime.availableProcessors }
     // a rep's spread counts as contaminated when max/min exceeds this: an
     // honest fixture-scale rep varies ±2× with JIT state; 3× is outside that
     val SpreadLimit = 3.0
@@ -477,7 +436,7 @@ object Bench {
       }.mkString("{", ",", "}")
       val skipped = skippedAcc.map(q).mkString("[", ",", "]")
       val detail =
-        s"""{"metric":"total","value":$total,"value_min":$totalMin,"flagship_sec":${r3(flagship.map(_.median).getOrElse(-1.0))},"flagship_min":${r3(flagship.map(_.min).getOrElse(-1.0))},"unit":"sec","complete":$done,"queries":$entries,"errors":$es,"n_errors":${errors.size},"n_contended":${results.count(_.contended)},"n_quiet_accepted":${quietAcc.valuesIterator.count(_.min >= 0)},"skipped":$skipped,"n_skipped":${skippedAcc.size},${calibJson()},"reps":$reps,"sf":${q(sfDir)},"cpus":${q(cpus)},"budget_sec":$budgetSec,"elapsed_sec":${r3(elapsedSec())},"load_start":$loadStart,"load_end":${loadavg()},"steal_start":$stealStart,"steal_end":${stealJiffies()},"uptime_sec":${uptimeSec()}}"""
+        s"""{"metric":"total","value":$total,"value_min":$totalMin,"flagship_sec":${r3(flagship.map(_.median).getOrElse(-1.0))},"flagship_min":${r3(flagship.map(_.min).getOrElse(-1.0))},"unit":"sec","complete":$done,"queries":$entries,"errors":$es,"n_errors":${errors.size},"n_contended":${results.count(_.contended)},"n_quiet_accepted":${quietAcc.valuesIterator.count(_.min >= 0)},"skipped":$skipped,"n_skipped":${skippedAcc.size},${calibJson()},"reps":$reps,"sf":${q(sfDir)},"cpus":"$ncpus","budget_sec":$budgetSec,"elapsed_sec":${r3(elapsedSec())},"load_start":$loadStart,"load_end":${loadavg()},"steal_start":$stealStart,"steal_end":${stealJiffies()},"uptime_sec":${uptimeSec()}}"""
       try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       catch { case e: Throwable => System.err.println(s"detail write failed: $e") }

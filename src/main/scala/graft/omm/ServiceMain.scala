@@ -21,7 +21,9 @@ import graft.streaming.CancellationStream
   * The keyed sink directory stands in for the Pulsar producer
   * (`GRAFT_SINK_DIR`; SURVEY.md §1.4 envelope). Config resolution:
   * `GRAFT_CONF_FILE` (HOCON subset) layered with the same env overrides
-  * the reference wires via `${?VAR}`.
+  * the reference wires via `${?VAR}`. The session comes from
+  * [[graft.Session]]: spark-submit's master if one is given, else
+  * `local[cores]`, so the service also starts as a plain `java` process.
   */
 object ServiceMain {
 
@@ -33,11 +35,7 @@ object ServiceMain {
     // silent default (≙ Main.java:36–44 System.exit(1))
     val config = OmmConfig.fromConf(confText)
 
-    val spark = SparkSession.builder()
-      .appName("transitdata-omm-cancellation-source-spark")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val tablesDir = config.connectionString match {
       case Some(_) => null // loadTables goes through JDBC below

@@ -464,7 +464,7 @@ object Classify {
     // logit fold and the gradient entries (the per-token char fold is
     // the dominant map-side cost at 100M tokens — measured 2× win)
     // r18 tried persisting this iteration-invariant table (MEMORY_AND_DISK)
-    // so iterations 2..k skip the re-tokenize; r19 steal-clean BenchOne
+    // so iterations 2..k skip the re-tokenize; r19 steal-clean per-query reps
     // REVERTED it: at q125's 3 iterations the cache write+read costs more
     // than the recompute it saves (persisted 4.56 s clean vs the 4.27 s
     // unpersisted floor; both r18 driver runs agreed). Negative result

@@ -117,10 +117,10 @@ object DupClusters {
         // incident semi-join collect) where the previous shape ran ~8
         // (count, incident count, two broadcast builds, coalesce(1)
         // contraction, labeled collect, plus AQE re-plans); measured via
-        // BenchOne jobs=: q44 18→13, q55 28→23 end to end. Scheduling
-        // latency of many small jobs — not data volume — was what a
-        // contended box amplified 10–20× in two rounds of official bench
-        // artifacts.
+        // the per-query profiler's jobs= (tools.JobProf): q44 18→13, q55
+        // 28→23 end to end. Scheduling latency of many small jobs — not
+        // data volume — was what a contended box amplified 10–20× in two
+        // rounds of official bench artifacts.
         val edgeRows =
           try directed.collect()
           finally directed.unpersist()

@@ -21,72 +21,36 @@ import graft.functions.VectorExprs
   * scoring are pure map-side projections over the corpus (no shuffle);
   * the only shuffle anywhere is the final top-k window by query.
   *
-  * The m row subvectors are materialized ONCE per row in a staging
-  * projection and every centroid distance term references that staged
-  * column — m slices per row, not m×k. The centroid side is sliced at
-  * PLAN time (the codebook is a Scala literal), so no runtime array copy
-  * happens for it at all.
+  * Encoding, probe ranking, residuals and ADC tables all run through the
+  * [[graft.functions.PqKernels]] codegen'd kernels, which carry the
+  * codebook as a reference object and generate fixed-size code at any
+  * k. The unrolled plan-literal formulation (k×m distance expressions
+  * over sliced literal centroids) computes bit-identical results — same
+  * fold order, same (dist, id) tiebreaks — and survives only as the
+  * independent cross-check QuantizeSpec's literal≡kernel tests build
+  * explicitly. It is not served because its wall time goes to DRIVER
+  * planning/codegen of the unrolled expression trees, not task compute:
+  * per plan instantiation at (k=16, m=16, dim=64) it cost 4–11 s of
+  * driver wall against job sums under 2 s (q253 stage attribution,
+  * OPTIMIZATION_r18.md), and past ~64 codes/subspace it overflows
+  * janino's 64 KB method limit (SCALE.md § "Round-10 probe: IVF-PQ /
+  * IVFADC"). The kernel plans are a few nodes regardless of k×m, and
+  * their per-row tight loops over a flat double[] are no slower than the
+  * unrolled zip_with chains.
   */
 object Quantize {
 
-  /** Above this code count the plan-literal formulation is replaced by
-    * the [[graft.functions.PqKernels]] codegen'd kernels, which carry the
-    * codebook as a reference object and generate fixed-size code at any k.
-    * Both paths compute bit-identical results (same fold order, same
-    * (dist, id) tiebreaks) — pinned by QuantizeSpec's literal≡kernel
-    * tests and the q95 oracle.
-    *
-    * Was 32 (the unrolled k×m distance expressions overflow janino's
-    * 64 KB method limit around 64 codes/subspace — SCALE.md § "Round-10
-    * probe: IVF-PQ / IVFADC").
-    * r18 set it to 0 — kernels ALWAYS — after measuring where the wall
-    * time of the literal path actually goes: not task compute but DRIVER
-    * planning/codegen of the unrolled expression trees. Per plan
-    * instantiation at (k=16, m=16, dim=64) the literal formulation cost
-    * 4–11 s of driver wall against job sums under 2 s (q253 stage
-    * attribution, OPTIMIZATION_r18.md); the kernel plans are a few nodes
-    * regardless of k×m, and their per-row tight loops over a flat
-    * double[] are no slower than the unrolled zip_with chains. The
-    * literal formulation stays as the independent cross-check the parity
-    * specs construct explicitly. */
-  private val maxLiteralCodes = 0
-
-  /** The j-th subvector of a literal codebook vector, cut at plan time. */
-  private def centroidSub(cv: Seq[Double], j: Int, sub: Int): Column =
-    array(cv.slice(j * sub, (j + 1) * sub).map(lit): _*)
-
-  /** Staging projection: `keep` columns plus `__s0..__s{m-1}` row
-    * subvectors, computed once and reused by every distance term. The
-    * zip_with fold inside `VectorExprs.l2sq` then runs over the staged
-    * slice — identical IEEE order to slicing inline. */
-  private def stageSubvectors(df: DataFrame, keep: Seq[Column], vec: Column,
-                              m: Int, sub: Int): DataFrame = {
-    val v = vec.cast("array<double>")
-    val subCols = (0 until m).map(j => slice(v, j * sub + 1, sub).as(s"__s$j"))
-    df.select((keep ++ subCols): _*)
-  }
-
   /** `keep` columns plus the m ADC lookup tables `__t0..__t{m-1}` of
     * `vec`: per subspace, its exact distance to every code's centroid, in
-    * code order. One kernel call per row, or (literal path) the distances
-    * over the staged subvectors. */
+    * code order — one kernel call per row. */
   private def adcTables(df: DataFrame, keep: Seq[Column], vec: Column,
                         centroids: Seq[(Int, Seq[Double])], m: Int,
                         sub: Int): DataFrame = {
-    if (centroids.size > maxLiteralCodes) {
-      val tt = df.select((keep :+ graft.functions.PqKernels.adcTablesCol(
-        vec, centroids, m, sub).as("__tt")): _*)
-      val carried = tt.columns.filter(_ != "__tt").map(col).toSeq
-      return tt.select((carried ++ (0 until m).map(j =>
-        element_at(col("__tt"), j + 1).as(s"__t$j"))): _*)
-    }
-    val staged = stageSubvectors(df, keep, vec, m, sub)
-    val carried = staged.columns.filterNot(_.startsWith("__s")).map(col).toSeq
-    staged.select((carried ++ (0 until m).map { j =>
-      array(centroids.sortBy(_._1).map { case (_, cv) =>
-        VectorExprs.l2sq(col(s"__s$j"), centroidSub(cv, j, sub))
-      }: _*).as(s"__t$j")
-    }): _*)
+    val tt = df.select((keep :+ graft.functions.PqKernels.adcTablesCol(
+      vec, centroids, m, sub).as("__tt")): _*)
+    val carried = tt.columns.filter(_ != "__tt").map(col).toSeq
+    tt.select((carried ++ (0 until m).map(j =>
+      element_at(col("__tt"), j + 1).as(s"__t$j"))): _*)
   }
 
   /** Per-query ADC top-k over code rows joined to their query's
@@ -100,42 +64,25 @@ object Quantize {
 
   /** Encode: for each row, `m` code columns `c0..c{m-1}` plus the exact
     * reconstruction distortion (sum of per-subspace min distances).
-    * `centroids` must be a small relation (code, cv) — it is collected to
-    * literals at plan time (codebooks are broadcast-scale by definition).
+    * `centroids` is the small collected (code, cv) codebook — it rides
+    * the kernel as a reference object (codebooks are broadcast-scale by
+    * definition).
     * `keep` columns (aliased) ride the same single projection — how IVF
     * attaches `list_id` without a self-join (see [[ivfListCol]]). */
   def pqEncode(embs: DataFrame, id: Column, vec: Column,
                centroids: Seq[(Int, Seq[Double])], m: Int,
                dim: Int, keep: Seq[Column] = Nil): DataFrame = {
     require(dim % m == 0, s"dim=$dim must divide into m=$m subspaces")
-    val sub = dim / m
-    if (centroids.size > maxLiteralCodes) {
-      // kernel path: one reference-object argmin call per row
-      val enc = embs.select(
-        (id.as("id") +: keep :+
-          graft.functions.PqKernels.encodeCol(vec, centroids, m, sub)
-            .as("__e")): _*)
-      val carried = enc.columns.filter(_ != "__e").map(col).toSeq
-      val codeCols = (0 until m).map(j =>
-        element_at(col("__e").getField("codes"), j + 1).as(s"c$j"))
-      return enc.select((carried ++ codeCols :+
-        round(col("__e").getField("distortion"), 6).as("distortion")): _*)
-    }
-    val staged = stageSubvectors(embs, id.as("id") +: keep, vec, m, sub)
-    val carried = staged.columns.filterNot(_.startsWith("__s")).map(col).toSeq
-    val perSubspace = (0 until m).map { j =>
-      // (dist, code) structs; array_min picks min dist, ties → min code
-      val cands = centroids.map { case (code, cv) =>
-        struct(
-          VectorExprs.l2sq(col(s"__s$j"), centroidSub(cv, j, sub)).as("dist"),
-          lit(code).as("code"))
-      }
-      array_min(array(cands: _*)).as(s"__m$j")
-    }
-    val encoded = staged.select((carried ++ perSubspace): _*)
-    val codeCols = (0 until m).map(j => col(s"__m$j.code").as(s"c$j"))
-    val mse = (0 until m).map(j => col(s"__m$j.dist")).reduce(_ + _)
-    encoded.select((carried ++ codeCols :+ round(mse, 6).as("distortion")): _*)
+    // one reference-object argmin call per row
+    val enc = embs.select(
+      (id.as("id") +: keep :+
+        graft.functions.PqKernels.encodeCol(vec, centroids, m, dim / m)
+          .as("__e")): _*)
+    val carried = enc.columns.filter(_ != "__e").map(col).toSeq
+    val codeCols = (0 until m).map(j =>
+      element_at(col("__e").getField("codes"), j + 1).as(s"c$j"))
+    enc.select((carried ++ codeCols :+
+      round(col("__e").getField("distortion"), 6).as("distortion")): _*)
   }
 
   /** Asymmetric-distance (ADC) top-k: each query precomputes its exact
@@ -155,8 +102,8 @@ object Quantize {
   /** Coarse-quantizer assignment for IVF: each row gets the id of its
     * nearest full-dimension coarse centroid (L2, ties → min list id —
     * the same lexicographic (dist, id) argmin as [[pqEncode]]). The
-    * centroid table is dim×nLists doubles riding the plan as literals, so
-    * assignment is a pure map-side projection; at cluster scale the
+    * centroid table is dim×nLists doubles riding the kernel as a
+    * reference object, so assignment is a pure map-side projection; at cluster scale the
     * returned `list_id` is the partitioning/bucketing key for the codes
     * table, which is what makes query-time probing a partition-pruned
     * read instead of a full scan. */
@@ -172,50 +119,23 @@ object Quantize {
     * [[sq8IvfTopK]] (and, at nProbe = 1, [[ivfListCol]]'s assignment),
     * exposed for coarse-stage diagnostics (the q251 ceiling
     * sweep: recall lost to probing the WRONG lists is invisible to ADC
-    * tuning, so it needs its own measured dial). Map-side: the centroid
-    * table rides the plan as literals (or the codegen'd kernel past
-    * [[maxLiteralCodes]]); ties break on list id like every other
-    * lexicographic (dist, list) argmin here. */
+    * tuning, so it needs its own measured dial). Map-side: one codegen'd
+    * kernel call per row over the reference-object centroid table; ties
+    * break on list id like every other lexicographic (dist, list) argmin
+    * here. */
   def ivfProbesCol(vec: Column, coarse: Seq[(Int, Seq[Double])],
-                   nProbe: Int): Column = {
-    if (coarse.size > maxLiteralCodes)
-      return graft.functions.PqKernels.nearestListsCol(
-        vec, coarse, coarse.head._2.length, nProbe)
-    val v = vec.cast("array<double>")
-    val cands = coarse.map { case (listId, cv) =>
-      struct(VectorExprs.l2sq(v, array(cv.map(lit): _*)).as("dist"),
-        lit(listId).as("list"))
-    }
-    transform(slice(array_sort(array(cands: _*)), 1, nProbe),
-      s => s.getField("list"))
-  }
-
-  /** The coarse centroid table as one plan-literal 2-D array, indexed by
-    * list id (requires the ids to be 0..n-1, which [[seedCodebook]]
-    * mints). `element_at(matrix, list+1)` then selects a row's assigned
-    * centroid map-side — no join. */
-  private def coarseMatrix(coarse: Seq[(Int, Seq[Double])]): Column = {
-    val sorted = coarse.sortBy(_._1)
-    require(sorted.map(_._1) == sorted.indices.toSeq,
-      s"coarse list ids must be contiguous 0..${coarse.size - 1}")
-    array(sorted.map { case (_, cv) => array(cv.map(lit): _*) }: _*)
-  }
+                   nProbe: Int): Column =
+    graft.functions.PqKernels.nearestListsCol(
+      vec, coarse, coarse.head._2.length, nProbe)
 
   /** Residual of `vec` against its assigned coarse centroid — the vector
-    * the RESIDUAL PQ codebook quantizes in full IVFADC. Pure map-side
-    * (centroid matrix is a plan literal, selection via element_at; above
-    * [[maxLiteralCodes]] lists the kernel recomputes the argmin and
-    * subtracts in one pass — `listCol` must therefore BE the argmin
-    * list, which is the only thing callers ever pass here). */
+    * the RESIDUAL PQ codebook quantizes in full IVFADC. Pure map-side: the
+    * kernel recomputes the argmin and subtracts in one pass, so `listCol`
+    * must BE the argmin list, which is the only thing callers ever pass
+    * here. */
   def ivfResidualCol(vec: Column, coarse: Seq[(Int, Seq[Double])],
-                     listCol: Column): Column = {
-    if (coarse.size > maxLiteralCodes)
-      return graft.functions.PqKernels.residualCol(vec, coarse,
-        coarse.head._2.length)
-    zip_with(vec.cast("array<double>"),
-      element_at(coarseMatrix(coarse), listCol + 1),
-      (a, b) => a - b)
-  }
+                     listCol: Column): Column =
+    graft.functions.PqKernels.residualCol(vec, coarse, coarse.head._2.length)
 
   /** Seed-row codebook in RESIDUAL space: each designated row's residual
     * against its own assigned coarse centroid (assignment replayed
@@ -254,22 +174,16 @@ object Quantize {
       .withColumn("list_id",
         explode(ivfProbesCol(col("__qv"), coarse, nProbe)))
     // per (query, probed list): the query's residual vs THAT list's
-    // centroid, then the m ADC lookup tables over it
+    // centroid, then the m ADC lookup tables over it. The probed list's
+    // centroid arrives via a broadcast RELATION (nLists rows of data, not
+    // nLists×dim source literals); the residual is one zip_with
+    val spark = queries.sparkSession
+    import spark.implicits._
     val residual =
-      if (resCentroids.size > maxLiteralCodes ||
-          coarse.size > maxLiteralCodes) {
-        // the probed list's centroid arrives via a broadcast RELATION
-        // (nLists rows of data, not nLists×dim source literals); the
-        // residual is one zip_with
-        val spark = queries.sparkSession
-        import spark.implicits._
-        q0.join(broadcast(coarse.sortBy(_._1).toDF("list_id", "__cc")),
-            Seq("list_id"))
-          .withColumn("__qr",
-            zip_with(col("__qv"), col("__cc"), (a, b) => a - b))
-      } else
-        q0.withColumn("__qr",
-          ivfResidualCol(col("__qv"), coarse, col("list_id")))
+      q0.join(broadcast(coarse.sortBy(_._1).toDF("list_id", "__cc")),
+          Seq("list_id"))
+        .withColumn("__qr",
+          zip_with(col("__qv"), col("__cc"), (a, b) => a - b))
     val q = adcTables(residual, Seq(col("query_id"), col("list_id")),
       col("__qr"), resCentroids, m, dim / m)
     adcTopK(codes.withColumnRenamed("id", "neighbor_id")
@@ -279,7 +193,7 @@ object Quantize {
   /** IVFADC (Jégou, Douze, Schmid 2011): inverted-file probe + asymmetric-
     * distance PQ scan — the standard billion-vector serving layout. Corpus
     * rows carry their PQ codes plus a coarse `list_id`; each query ranks
-    * the nLists coarse centroids (tiny, plan-literal), keeps its `nProbe`
+    * the nLists coarse centroids (tiny, in-kernel), keeps its `nProbe`
     * nearest lists, and ADC-scans ONLY rows assigned to those lists.
     *
     * Relative to [[pqAdcTopK]] (full ADC scan), the crossJoin becomes a
@@ -287,8 +201,8 @@ object Quantize {
     * nProbe/nLists of the corpus, and with the codes table partitioned or
     * bucketed by `list_id` (see [[ivfAssign]]) the untouched lists are
     * never read at all — that pruning, not the local arithmetic, is the
-    * 100 TB win. Probe selection is map-side (array_sort over nLists
-    * plan-literal structs — no window, no shuffle on the query side);
+    * 100 TB win. Probe selection is map-side (one kernel call per query
+    * over the nLists centroids — no window, no shuffle on the query side);
     * the only shuffle in the plan is the final per-query top-k window.
     *
     * This variant encodes RAW vectors (codes shared with [[pqEncode]]),

@@ -30,9 +30,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Install per session:
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftGuards")
-  *   ...
+  * graft.Session(conf = Seq("spark.sql.extensions" -> "graft.plans.GraftGuards"))
   * }}}
   * Escape hatch (per session or per scope):
   * `spark.conf.set("spark.graft.guards.enabled", "false")`.

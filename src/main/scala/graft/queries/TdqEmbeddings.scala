@@ -458,12 +458,12 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
   private[queries] lazy val q94Sql = mkIvfResidualSql(ivfCoarseIds, pqSeedIds, ivfNProbe)
 
   // ---------- IVF-PQ above the plan-literal ceiling (§2.10, q95)
-  // 64 coarse lists × 64 residual codes: BOTH codebooks exceed
-  // maxLiteralCodes, so assignment, probe ranking, residuals, encode,
-  // and ADC tables all run through the PqKernels codegen'd expressions
-  // (reference-object codebooks, fixed-size generated code) — and the
-  // oracle replays the identical semantics relationally, certifying the
-  // kernel path end-to-end, not just against the literal path's spec.
+  // 64 coarse lists × 64 residual codes: assignment, probe ranking,
+  // residuals, encode, and ADC tables all run through the PqKernels
+  // codegen'd expressions (reference-object codebooks, fixed-size
+  // generated code) — and the oracle replays the identical semantics
+  // relationally, certifying the kernel path end-to-end, not just
+  // against the literal path's spec.
   private[queries] lazy val q95CoarseIds: Seq[Long] = (100L to 163L)
   private[queries] lazy val q95SeedIds: Seq[Long] = (10L to 73L)
 

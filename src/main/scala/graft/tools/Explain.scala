@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan inspection: prints `explain("formatted")` for the named
   * registered queries (or a default set of the structurally interesting
   * ones). Usage: sbt "runMain graft.tools.Explain [sfDir] [q1 q2 ...]"
@@ -19,13 +17,7 @@ object Explain {
       "q68_bm25_topk", "q70_countmin", "q71_bpe_pairs", "q72_bigram_nll",
       "q73_mix_sample", "q74_pack_examples", "q84_doc_chunks",
       "q85_knn_classify")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     names.foreach { n =>
       println(s"\n######## $n ########")
       graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.omm.OmmFixtures
 
 /** Force-regenerate the OMM fixture parquet (ignores the `_GENERATED`
@@ -9,13 +7,7 @@ import graft.omm.OmmFixtures
   * never silently reused). Run: `sbt "runMain graft.tools.GenFixtures"`. */
 object GenFixtures {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     OmmFixtures.generate(spark)
     println(s"[gen-fixtures] regenerated ${OmmFixtures.dir}")
     spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end proof of the GraftGuards EXTENSION WIRING (the
   * GraftGuardsSpec tests the rule object directly; this drives the
   * `spark.sql.extensions` config path in a fresh session, which a unit
@@ -12,13 +10,8 @@ import org.apache.spark.sql.SparkSession
   * violation of the expected verdicts. */
 object GuardsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.extensions", "graft.plans.GraftGuards")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(
+      conf = Seq("spark.sql.extensions" -> "graft.plans.GraftGuards"))
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -1,31 +1,36 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
-/** Per-job wall-time attribution for ONE registered query: runs the query
-  * once (after the standard warmup) and prints every Spark job's duration
-  * and call site, so a multi-job harness query (the streaming sims, the
-  * ANN sweeps) can be broken down without the UI. Usage:
-  * `sbt "runMain graft.tools.JobProf <query> [sfDir]"` */
+import graft.{Harness, Session, SparkEntry}
+
+/** The per-query profiler: after the standard warm-up, each named query
+  * runs three reps, each after `Bench`'s per-rep reset, so its figures
+  * compare with in-bench medians. Per rep it prints
+  * `TIMING <q> rep<i> <wall> s jobs= load= steal_d=` (the job count is a
+  * first-class figure: scheduling latency of many small jobs is what a
+  * contended box amplifies), then the last rep's per-job durations and
+  * call sites (`JOB` lines) and a `TOTAL` line splitting its wall time
+  * into job time and the gap between jobs, so a multi-job harness query
+  * (the streaming sims, the ANN sweeps) can be broken down without the UI.
+  * Usage: `sbt "runMain graft.tools.JobProf <q1>[,<q2>…] [sfDir]"`. */
 object JobProf {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("q92_streaming_semdedup")
+    val names = args.headOption.getOrElse("q92_streaming_semdedup").split(',')
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    graft.omm.OmmFixtures.ensure(spark)
+    val spark = Session()
+    Harness.warmUp(spark, sfDir)
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val site = Option(j.properties)
-          .map(_.getProperty("callSite.short", "?")).getOrElse("?")
+        // the result stage (the job's last) is named after the action's
+        // call site; the "callSite.short" property is set only when a
+        // caller sets one explicitly
+        val site = j.stageInfos.sortBy(_.stageId).lastOption
+          .map(_.name).getOrElse("?")
         starts.put(j.jobId, (j.time, site)); ()
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
@@ -35,23 +40,27 @@ object JobProf {
         ()
       }
     })
-    // one untimed warm rep, then the profiled rep (mirrors BenchOne's
-    // median-of-3 steady state)
-    try { graft.SparkEntry.queries(name)(spark, sfDir).count() }
-    catch { case e: Throwable => println(s"warm rep failed: $e") }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
-    lines.clear()
-    val t0 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, sfDir).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(800) // drain the listener bus
-    import scala.jdk.CollectionConverters._
-    val ls = lines.asScala.toVector
-    ls.foreach(println)
-    val jobSum = ls.map(_.split("\\s+")(2).toDouble).sum
-    println(f"TOTAL $name wall=$wall%.2f s jobs=${ls.size} jobSum=$jobSum%.2f s gap=${wall - jobSum}%.2f s")
+    for (name <- names) {
+      val walls = (1 to 3).map { rep =>
+        Harness.reset(spark)
+        lines.clear()
+        val s0 = Harness.stealJiffies()
+        val t0 = System.nanoTime()
+        SparkEntry.queries(name)(spark, sfDir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        // listener delivery is async: let the bus drain so this rep's job
+        // events do not land in the next rep's window
+        Thread.sleep(800)
+        println(f"TIMING $name rep$rep $wall%.2f s jobs=${lines.size} " +
+          f"load=${Harness.loadavg()}%.2f steal_d=${Harness.stealJiffies() - s0}")
+        wall
+      }
+      val ls = lines.asScala.toVector
+      ls.foreach(println)
+      val jobSum = ls.map(_.split("\\s+")(2).toDouble).sum
+      println(f"TOTAL $name wall=${walls.last}%.2f s jobs=${ls.size} " +
+        f"jobSum=$jobSum%.2f s gap=${walls.last - jobSum}%.2f s")
+    }
     spark.stop()
   }
 }

@@ -15,6 +15,10 @@ import graft.operators.NearDup
   *   - `ops29` — `ClusterStream.ingestPairs(localMaxAliasBytes)`
   *               (§ "size-gated alias-chase").
   *
+  * The SCALE.md figures were taken at `SPARK_GRAFT_CPUS=32` (local[32],
+  * 32 shuffle partitions); the session defaults to every core of the
+  * machine, so set that to reproduce them.
+  *
   * Usage: sbt "runMain graft.tools.ScaleProbe uf|nd|ops29"
   */
 object ScaleProbe {
@@ -182,14 +186,7 @@ object ScaleProbe {
         s"usage: ScaleProbe ${probes.keys.toSeq.sorted.mkString("|")}")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     try probe(spark) finally spark.stop()
   }
 }

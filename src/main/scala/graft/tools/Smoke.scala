@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke harness: drives the library surface on real testdata.
   * Usage: sbt "runMain graft.tools.Smoke [sfDir]"
   * Not part of the driver contract — Verify/Bench are; this is the
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     import org.apache.spark.sql.functions._
 
     import graft.functions.TextExprs
