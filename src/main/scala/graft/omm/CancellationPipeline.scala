@@ -266,21 +266,24 @@ object CancellationPipeline {
       ts = col("event_ts_ms"),
       tieBreak = struct(col("ROUTE_NAME"), col("TITLE")))
 
+  /** The TripCancellation payload of a deduped row: the protobuf message's
+    * 14 fields under their proto names, in field order. */
+  private def payload: Column = struct(
+    col("deviation_case_id"), col("ROUTE_NAME").as("route_id"),
+    col("DIRECTION").as("direction_id"),
+    col("OPERATING_DAY").as("start_date"), col("START_TIME").as("start_time"),
+    col("status"), col("schema_version"), col("trip_id"),
+    col("DEVIATION_CASES_TYPE").as("deviation_cases_type"),
+    col("AFFECTED_DEPARTURES_TYPE").as("affected_departures_type"),
+    col("TITLE").as("title"), col("DESCRIPTION").as("description"),
+    col("CATEGORY").as("category"), col("SUB_CATEGORY").as("sub_category"))
+
   /** U6/S4: the keyed sink envelope — partition key, event time, properties,
     * the payload as a typed struct, protobuf wire bytes as the message
     * `value` (≙ `tripCancellation.toByteArray()`, OmmCancellationHandler
     * .java:236; descriptor at src/main/protobuf/trip_cancellation.proto),
     * and canonical JSON alongside for debuggability. */
-  def envelope(deduped: DataFrame): DataFrame = {
-    val payload = struct(
-      col("deviation_case_id"), col("ROUTE_NAME").as("route_id"),
-      col("DIRECTION").as("direction_id"),
-      col("OPERATING_DAY").as("start_date"), col("START_TIME").as("start_time"),
-      col("status"), col("schema_version"), col("trip_id"),
-      col("DEVIATION_CASES_TYPE").as("deviation_cases_type"),
-      col("AFFECTED_DEPARTURES_TYPE").as("affected_departures_type"),
-      col("TITLE").as("title"), col("DESCRIPTION").as("description"),
-      col("CATEGORY").as("category"), col("SUB_CATEGORY").as("sub_category"))
+  def envelope(deduped: DataFrame): DataFrame =
     deduped.select(
       col("trip_id").as("key"),
       col("event_ts_ms").as("event_time_ms"),
@@ -289,7 +292,6 @@ object CancellationPipeline {
       payload.as("payload"),
       graft.functions.ProtoWire.toProto(payload).as("value"),
       to_json(payload).cast("binary").as("value_json"))
-  }
 
   /** Typed tail of the pipeline (SURVEY.md §1.3–1.4): the protobuf
     * builder's field surface as a case class, with the envelope metadata
@@ -310,17 +312,7 @@ object CancellationPipeline {
     val spark = deduped.sparkSession
     import spark.implicits._
     deduped.select(
-      struct(
-        col("deviation_case_id"), col("ROUTE_NAME").as("route_id"),
-        col("DIRECTION").as("direction_id"),
-        col("OPERATING_DAY").as("start_date"),
-        col("START_TIME").as("start_time"), col("status"),
-        col("schema_version"), col("trip_id"),
-        col("DEVIATION_CASES_TYPE").as("deviation_cases_type"),
-        col("AFFECTED_DEPARTURES_TYPE").as("affected_departures_type"),
-        col("TITLE").as("title"), col("DESCRIPTION").as("description"),
-        col("CATEGORY").as("category"), col("SUB_CATEGORY").as("sub_category")
-      ).as("payload"),
+      payload.as("payload"),
       col("event_ts_ms").as("timestampEpochMs"),
       col("trip_id").as("dvjId"),
       col("deviation_case_id").as("deviationCaseId")

@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   */
 object OmmFixtures {
 
-  val dir = "/root/repo/fixtures/omm"
+  /** `fixtures/omm` under the JVM's working directory — the checkout
+    * root for sbt's forked runs and tests — so every clone reads and
+    * (re)generates its own fixtures. */
+  val dir: String = Paths.get("fixtures", "omm").toAbsolutePath.toString
 
   val now = "2024-05-15 12:00:00"
   val today = "2024-05-15"

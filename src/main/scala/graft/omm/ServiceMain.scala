@@ -1,5 +1,8 @@
 package graft.omm
 
+import java.util.concurrent.TimeUnit
+
+import org.apache.hadoop.util.ShutdownHookManager
 import org.apache.spark.sql.SparkSession
 
 import graft.omm.{CancellationPipeline => P}
@@ -24,8 +27,16 @@ import graft.streaming.CancellationStream
   * the reference wires via `${?VAR}`. The session comes from
   * [[graft.Session]]: spark-submit's master if one is given, else
   * `local[cores]`, so the service also starts as a plain `java` process.
+  *
+  * Shutdown (SIGTERM from a supervisor): a hook lets a running poll finish,
+  * bounded by the poll interval, then stops the query and prints
+  * `[service] stopped`, before Spark's own hooks close its pools.
   */
 object ServiceMain {
+
+  /** Hadoop's shutdown-hook manager runs higher priorities first, and
+    * Spark 4.1.2 registers all of its hooks there at priority 40. */
+  private val StopHookPriority = 50
 
   def main(args: Array[String]): Unit = {
     val confText = sys.env.get("GRAFT_CONF_FILE")
@@ -55,6 +66,14 @@ object ServiceMain {
     val query = CancellationStream.start(spark, tablesDir, sinkDir, stateDir,
       ckptDir, config.mode, config.intervalSeconds,
       config.lookbackSeconds, config.timezone, tableLoader = loader)
+    val intervalNs = TimeUnit.SECONDS.toNanos(config.intervalSeconds.toLong)
+    ShutdownHookManager.get().addShutdownHook(() => {
+      val deadline = System.nanoTime() + intervalNs
+      while (query.status.isTriggerActive && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      query.stop()
+      println("[service] stopped")
+    }, StopHookPriority, config.intervalSeconds + 30L, TimeUnit.SECONDS)
     try query.awaitTermination()
     catch {
       case e: Throwable =>

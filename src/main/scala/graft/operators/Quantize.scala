@@ -128,13 +128,11 @@ object Quantize {
     graft.functions.PqKernels.nearestListsCol(
       vec, coarse, coarse.head._2.length, nProbe)
 
-  /** Residual of `vec` against its assigned coarse centroid — the vector
-    * the RESIDUAL PQ codebook quantizes in full IVFADC. Pure map-side: the
-    * kernel recomputes the argmin and subtracts in one pass, so `listCol`
-    * must BE the argmin list, which is the only thing callers ever pass
-    * here. */
-  def ivfResidualCol(vec: Column, coarse: Seq[(Int, Seq[Double])],
-                     listCol: Column): Column =
+  /** Residual of `vec` against its assigned (argmin, [[ivfListCol]])
+    * coarse centroid — the vector the RESIDUAL PQ codebook quantizes in
+    * full IVFADC. Pure map-side: the kernel recomputes the argmin and
+    * subtracts in one pass. */
+  def ivfResidualCol(vec: Column, coarse: Seq[(Int, Seq[Double])]): Column =
     graft.functions.PqKernels.residualCol(vec, coarse, coarse.head._2.length)
 
   /** Seed-row codebook in RESIDUAL space: each designated row's residual

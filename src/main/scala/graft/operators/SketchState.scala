@@ -27,9 +27,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * No other module knows this protocol: ingests open prior state through
   * [[readOpt]] (one recovery gate, then the read), rewrite-fold streams
-  * commit through [[fold]] (state ∪ increment → merge → swap), and every
-  * other commit is a [[swapReplace]]/[[swapReplaceMany]] or an append
-  * maintained by [[compactIfNeeded]]/[[foldDelta]].
+  * commit through [[fold]] (state ∪ increment → merge → swap), append
+  * stores through [[append]] (gate → append → [[compactIfNeeded]]), and
+  * every other commit is a [[swapReplace]]/[[swapReplaceMany]]. Four
+  * stores append raw, each for a reason named at its site: a sink that
+  * stands in for a topic, an LSM delta owned by [[foldDelta]], a log with
+  * its own rewrite, and a partitioned index that must relayout before it
+  * compacts. Layout parameters live in the layout itself (a hive
+  * partition level such as ContamStream's `nb=`), so every swap carries
+  * them with the data in its one rename.
   */
 object SketchState {
 
@@ -165,14 +171,21 @@ object SketchState {
   def write(df: DataFrame, statePath: String): Unit =
     swapReplace(df.coalesce(1), statePath)
 
-  /** The raw write-swap-delete-rename protocol with the CALLER's layout —
-    * the crash-safe replace for state that is NOT metadata-sized (e.g.
+  /** The raw write-swap-delete-rename protocol with the CALLER's layout
+    * (hive-partitioned by `partitionCols` when given) — the crash-safe
+    * replace for state that is NOT metadata-sized (e.g.
     * NearDupStream's corpus-scale band-index/doc-store compaction, which
     * repartitions by bytes). `df` may read from `statePath` itself: the
     * swap write materializes the full copy before the live dir is
     * touched. Same single-writer contract as [[write]]. */
-  def swapReplace(df: DataFrame, statePath: String): Unit =
-    swapReplaceWrite(df, statePath, identity)
+  def swapReplace(df: DataFrame, statePath: String,
+                  partitionCols: Seq[String] = Nil): Unit = {
+    val w = df.write.mode("overwrite")
+    // the parquet job writes swap/_SUCCESS, the witness [[exists]] adopts
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+      .parquet(swapPath(statePath).toString)
+    publishSwap(df.sparkSession, statePath)
+  }
 
   /** Atomic MULTI-TABLE replace: writes each `(name, df)` as a parquet
     * subdirectory of ONE swap parent, stamps a parent-level `_SUCCESS`
@@ -194,9 +207,8 @@ object SketchState {
   def swapReplaceMany(spark: SparkSession, parts: Seq[(String, DataFrame)],
                       statePath: String): Unit = {
     require(parts.nonEmpty, "swapReplaceMany needs at least one table")
-    val live = new Path(statePath)
     val swap = swapPath(statePath)
-    val fs = fsOf(spark, live)
+    val fs = fsOf(spark, swap)
     if (fs.exists(swap)) fs.delete(swap, true) // dead previous swap
     // caller's layout per table (rollups are metadata-sized and arrive
     // pre-coalesced; keyed tables may legitimately be many partitions)
@@ -204,99 +216,9 @@ object SketchState {
       df.write.mode("overwrite").parquet(new Path(swap, name).toString)
     }
     fs.create(new Path(swap, "_SUCCESS"), true).close() // joint witness
-    dropPendingMerge(fs, statePath) // see swapReplaceWrite
-    if (fs.exists(live)) fs.delete(live, true)
-    if (!fs.rename(swap, live))
-      throw new java.io.IOException(
-        s"SketchState: rename $swap -> $live failed")
-    // invalidate stale listings/plan fragments (see swapReplaceWrite)
-    parts.foreach { case (name, _) =>
-      spark.catalog.refreshByPath(new Path(statePath, name).toString)
-    }
+    publishSwap(spark, statePath)
   }
 
-  /** Marker files: tiny layout-metadata files (`_graft_*` — the leading
-    * underscore keeps them invisible to Spark's parquet reader, like
-    * `_SUCCESS`) that live INSIDE a state directory so they travel
-    * atomically with every swap rename. The use case is layout parameters
-    * that a reader must know to interpret the directory (e.g.
-    * ContamStream's adaptive bucket modulus): storing them in a sibling
-    * file would let a crash between the data rewrite and the metadata
-    * write split the two — inside the dir, the swap protocol commits
-    * data + metadata as one rename. [[compactIfNeeded]] carries existing
-    * `_graft_*` markers through its rewrite for the same reason. */
-  def writeMarker(spark: SparkSession, statePath: String, name: String,
-                  value: String): Unit = {
-    require(name.startsWith("_graft_"), s"marker must be _graft_*: $name")
-    val p = new Path(statePath, name)
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The marker's content, or None when absent (fresh dir / pre-marker
-    * layout). Completes an interrupted swap first, like [[read]]. */
-  def readMarker(spark: SparkSession, statePath: String,
-                 name: String): Option[String] = {
-    if (!exists(spark, statePath)) return None
-    val p = new Path(statePath, name)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](256)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(bytes.toString("UTF-8"))
-      } finally in.close()
-    }
-  }
-
-  private def liveMarkers(spark: SparkSession,
-                          statePath: String): Map[String, String] = {
-    val p = new Path(statePath)
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) Map.empty
-    else fs.listStatus(p).iterator
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_graft_"))
-      .map(s => s.getPath.getName ->
-        readMarker(spark, statePath, s.getPath.getName).getOrElse(""))
-      .toMap
-  }
-
-  /** Excess-triggered compaction of an append-accumulated state or sink
-    * directory — THE one implementation every streaming store uses
-    * (near-dup band index/doc store, segment store, semantic-dedup
-    * vectors, sinks, and the hive-partitioned IVF-PQ codes index via
-    * `partitionCols`). Rewrites `path` when its part-file count exceeds
-    * the EXCESS trigger max(`maxFiles`, 2 × ideal), where ideal =
-    * ceil(bytes / files.maxPartitionBytes) is the file count a fresh
-    * scan would want: read, repartition to ideal, [[swapReplace]] (so a
-    * crash mid-compaction never loses state — a complete swap is adopted
-    * by [[exists]]). Returns true when a rewrite happened (the specs'
-    * witness).
-    *
-    * The trigger must be excess-based, not the flat ceiling alone: a
-    * dataset whose ideal file count EXCEEDS `maxFiles` (any text-carrying
-    * store or sink past ~`maxFiles` × maxPartitionBytes) would otherwise
-    * re-trigger a full O(accumulated) rewrite on EVERY batch — compaction
-    * can never get the count under a ceiling smaller than ideal. With the
-    * excess form a freshly-compacted dataset sits at ideal files and must
-    * roughly DOUBLE its file count before the next rewrite, so rewrites
-    * space out geometrically as the dataset grows and total rewrite cost
-    * over a stream's life stays O(accumulated × log batches).
-    *
-    * With `partitionCols` the rewrite hash-clusters on those columns
-    * before the partitioned write so each partition's rows arrive at one
-    * task — the rewrite emits O(max(ideal, partitions)) files, not
-    * tasks × partitions — and file counting recurses into the partition
-    * directories. The excess trigger then uses the PARTITION-DIR floor,
-    * not just the byte-ideal: a hive-partitioned state can never hold
-    * fewer files than its non-empty partition dirs, so a byte-ideal
-    * below that count would re-trigger a full rewrite on every batch
-    * (the same pathology the excess form exists to prevent, resurfacing
-    * through the directory floor instead of the flat ceiling). */
   /** Recursive `part-*` listing of a state/sink dir as (path, length),
     * skipping HIDDEN (`_`/`.`-prefixed) subdirectories — the same
     * visibility rule Spark's own file index applies, so the listing sees
@@ -348,6 +270,54 @@ object SketchState {
     out.toSeq
   }
 
+  /** The one gated append of an append-accumulated store or sink: the
+    * [[exists]] gate first — it adopts a crash-interrupted compaction
+    * swap or merge, which an append landing first would orphan by
+    * recreating the live dir, silently losing the accumulated state —
+    * then the append, then [[compactIfNeeded]]. An interrupted append may
+    * land a partial file-set (Spark moves files at job commit), and the
+    * recovery is re-running the batch; the gate only ever repairs
+    * compaction crashes, which rewrite rows and never add them. */
+  def append(df: DataFrame, path: String, maxFiles: Int): Unit = {
+    val spark = df.sparkSession
+    exists(spark, path)
+    df.write.mode("append").parquet(path)
+    compactIfNeeded(spark, path, maxFiles)
+    ()
+  }
+
+  /** Excess-triggered compaction of an append-accumulated state or sink
+    * directory — THE one implementation every streaming store uses
+    * (near-dup band index/doc store, segment store, semantic-dedup
+    * vectors, sinks, and the hive-partitioned IVF-PQ codes index via
+    * `partitionCols`). Rewrites `path` when its part-file count exceeds
+    * the EXCESS trigger max(`maxFiles`, 2 × ideal), where ideal =
+    * ceil(bytes / files.maxPartitionBytes) is the file count a fresh
+    * scan would want: read, repartition to ideal, [[swapReplace]] (so a
+    * crash mid-compaction never loses state — a complete swap is adopted
+    * by [[exists]]). Returns true when a rewrite happened (the specs'
+    * witness).
+    *
+    * The trigger must be excess-based, not the flat ceiling alone: a
+    * dataset whose ideal file count EXCEEDS `maxFiles` (any text-carrying
+    * store or sink past ~`maxFiles` × maxPartitionBytes) would otherwise
+    * re-trigger a full O(accumulated) rewrite on EVERY batch — compaction
+    * can never get the count under a ceiling smaller than ideal. With the
+    * excess form a freshly-compacted dataset sits at ideal files and must
+    * roughly DOUBLE its file count before the next rewrite, so rewrites
+    * space out geometrically as the dataset grows and total rewrite cost
+    * over a stream's life stays O(accumulated × log batches).
+    *
+    * With `partitionCols` the rewrite hash-clusters on those columns
+    * before the partitioned write so each partition's rows arrive at one
+    * task — the rewrite emits O(max(ideal, partitions)) files, not
+    * tasks × partitions — and file counting recurses into the partition
+    * directories. The excess trigger then uses the PARTITION-DIR floor,
+    * not just the byte-ideal: a hive-partitioned state can never hold
+    * fewer files than its non-empty partition dirs, so a byte-ideal
+    * below that count would re-trigger a full rewrite on every batch
+    * (the same pathology the excess form exists to prevent, resurfacing
+    * through the directory floor instead of the flat ceiling). */
   def compactIfNeeded(spark: SparkSession, path: String, maxFiles: Int,
                       partitionCols: Seq[String] = Nil): Boolean = {
     if (maxFiles <= 0 || !exists(spark, path)) return false
@@ -393,18 +363,12 @@ object SketchState {
       .map { case (f, len) => (f.getParent.toString, band(len)) }.toSet.size
     if (nParts <= 2L * occupied) return false
     val n = ideal.min(nParts).toInt
-    // existing `_graft_*` layout markers ride the rewrite: compaction
-    // changes file counts, never layout semantics, so the markers must
-    // land in the swap and survive the rename (see [[writeMarker]])
-    val markers = liveMarkers(spark, path)
-    if (partitionCols.isEmpty)
-      swapReplaceWrite(spark.read.parquet(path).repartition(n), path,
-        identity, markers)
-    else
-      swapReplaceWrite(
-        spark.read.parquet(path).repartition(n,
-          partitionCols.map(org.apache.spark.sql.functions.col): _*),
-        path, _.partitionBy(partitionCols: _*), markers)
+    val all = spark.read.parquet(path)
+    swapReplace(
+      if (partitionCols.isEmpty) all.repartition(n)
+      else all.repartition(n,
+        partitionCols.map(org.apache.spark.sql.functions.col): _*),
+      path, partitionCols)
     true
   }
 
@@ -473,7 +437,7 @@ object SketchState {
     *  3. [[completeMerge]] executes it — rename staged files into the
     *     live layout, delete retired ones, drop manifest + staging — and
     *     stale listings of the path are invalidated (the renames bypass
-    *     Spark's writer path, as in [[swapReplaceWrite]]).
+    *     Spark's writer path, as in [[publishSwap]]).
     * After (2), a crash is repaired by [[exists]], which replays (3)
     * idempotently before any SketchState-gated read can observe the
     * directory, so no reader sees duplicates. */
@@ -554,41 +518,14 @@ object SketchState {
     true
   }
 
-  /** [[swapReplace]] for a hive-partitioned layout, plus `_graft_*`
-    * marker files written into the swap BEFORE the rename — layout
-    * metadata and the relaid data commit as one atomic unit
-    * (ContamStream's adaptive rebucket). */
-  def swapReplacePartitionedKeeping(df: DataFrame, statePath: String,
-                                    partitionCols: Seq[String],
-                                    markers: Map[String, String]): Unit =
-    swapReplaceWrite(df, statePath,
-      _.partitionBy(partitionCols: _*), markers)
-
-  private def swapReplaceWrite(df: DataFrame, statePath: String,
-      shape: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      markers: Map[String, String] = Map.empty): Unit = {
-    val spark = df.sparkSession
+  /** The publish tail every swap shares, once `<path>.__swap` holds a
+    * complete replacement (its `_SUCCESS` witness written): drop any
+    * pending merge, delete the live dir, rename the swap onto it, and
+    * refresh Spark's caches of the path. */
+  private def publishSwap(spark: SparkSession, statePath: String): Unit = {
     val live = new Path(statePath)
     val swap = swapPath(statePath)
     val fs = fsOf(spark, live)
-    shape(df.write.mode("overwrite")).parquet(swap.toString)
-    // The parquet job itself creates swap/_SUCCESS — the completeness
-    // witness [[exists]] uses for adoption. Markers must be INSIDE that
-    // witness, not after it: a crash between the parquet commit and the
-    // marker writes would otherwise leave an adoptable swap whose layout
-    // metadata is missing (an adaptive reader then defaults the bucket
-    // modulus against a rebucketed layout and silently mis-prunes). So:
-    // retract the witness, write the markers, re-stamp it — adoption only
-    // ever sees marker-complete swaps (the swapReplaceMany joint-witness
-    // pattern).
-    if (markers.nonEmpty) {
-      val witness = new Path(swap, "_SUCCESS")
-      fs.delete(witness, false)
-      markers.foreach { case (name, v) =>
-        writeMarker(spark, swap.toString, name, v) }
-      fs.create(witness, true).close()
-    }
     // a crashed tiered merge's pending manifest must die WITH the dir it
     // describes: replaying it against the freshly-swapped state would
     // rename stale staged files into the NEW layout (injecting old rows).
@@ -601,9 +538,10 @@ object SketchState {
       throw new java.io.IOException(
         s"SketchState: rename $swap -> $live failed")
     // the delete+rename bypasses Spark's writer path, so cached file
-    // listings / cached plan fragments keyed on this path still name
-    // the deleted part files — any later plan that CacheManager matches
-    // by root path would resurrect them (FAILED_READ_FILE.FILE_NOT_EXIST
+    // listings / cached plan fragments keyed on this path (or, for a
+    // [[swapReplaceMany]] state, on a subtable under it) still name the
+    // deleted part files — any later plan that CacheManager matches by
+    // root path would resurrect them (FAILED_READ_FILE.FILE_NOT_EXIST
     // mid-poll). Invalidate both caches at the swap point.
     spark.catalog.refreshByPath(statePath)
   }

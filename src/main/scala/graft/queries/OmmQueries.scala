@@ -101,44 +101,28 @@ object OmmQueries {
     "null_event_timestamp" ->
       s"epoch_ms(timezone('${F.zone}', ad_last_modified::TIMESTAMP)) IS NOT NULL")
 
-  private def parsedSql(mode: P.Mode, now: String, today: String): String =
+  /** The payload columns that only the full-width parse+dedup carries
+    * (the protobuf round-trip check needs every payload field). */
+  private def fullCols(full: Boolean): String =
+    if (full) ",\n  description, category, sub_category, dc_type, ad_type"
+    else ""
+
+  private def parsedSql(mode: P.Mode, now: String, today: String,
+                        full: Boolean = false): String =
     s"""WITH snap AS (${snapshotSql(mode, now, today, F.lookback)})
        |SELECT dvj_id AS trip_id, deviation_case_id,
        |  CASE WHEN lower(ad_status) = 'deleted' THEN 'RUNNING'
        |       ELSE 'CANCELED' END AS status,
        |  epoch_ms(timezone('${F.zone}', ad_last_modified::TIMESTAMP)) AS event_ts_ms,
-       |  route_name, direction, operating_day, start_time, title
+       |  route_name, direction, operating_day, start_time, title${fullCols(full)}
        |FROM snap
        |WHERE ${parseChecksSql.map(_._2).mkString("\n  AND ")}""".stripMargin
 
-  /** Full-width parse+dedup (every payload field) for the protobuf
-    * round-trip check; same predicates/ordering as parsedSql/dedupSql. */
-  private def parsedFullSql(mode: P.Mode, now: String, today: String): String =
-    s"""WITH snap AS (${snapshotSql(mode, now, today, F.lookback)})
-       |SELECT dvj_id AS trip_id, deviation_case_id,
-       |  CASE WHEN lower(ad_status) = 'deleted' THEN 'RUNNING'
-       |       ELSE 'CANCELED' END AS status,
-       |  epoch_ms(timezone('${F.zone}', ad_last_modified::TIMESTAMP)) AS event_ts_ms,
-       |  route_name, direction, operating_day, start_time, title,
-       |  description, category, sub_category, dc_type, ad_type
-       |FROM snap
-       |WHERE ${parseChecksSql.map(_._2).mkString("\n  AND ")}""".stripMargin
-
-  private def dedupFullSql(mode: P.Mode, now: String, today: String): String =
-    s"""WITH parsed AS (${parsedFullSql(mode, now, today)})
+  private def dedupSql(mode: P.Mode, now: String, today: String,
+                       full: Boolean = false): String =
+    s"""WITH parsed AS (${parsedSql(mode, now, today, full)})
        |SELECT trip_id, deviation_case_id, status, event_ts_ms,
-       |  route_name, direction, operating_day, start_time, title,
-       |  description, category, sub_category, dc_type, ad_type
-       |FROM (SELECT *, row_number() OVER (
-       |        PARTITION BY trip_id, deviation_case_id
-       |        ORDER BY (CASE WHEN status = 'CANCELED' THEN 0 ELSE 1 END),
-       |                 event_ts_ms DESC, route_name, title) AS rn
-       |      FROM parsed) WHERE rn = 1""".stripMargin
-
-  private def dedupSql(mode: P.Mode, now: String, today: String): String =
-    s"""WITH parsed AS (${parsedSql(mode, now, today)})
-       |SELECT trip_id, deviation_case_id, status, event_ts_ms,
-       |  route_name, direction, operating_day, start_time, title
+       |  route_name, direction, operating_day, start_time, title${fullCols(full)}
        |FROM (SELECT *, row_number() OVER (
        |        PARTITION BY trip_id, deviation_case_id
        |        ORDER BY (CASE WHEN status = 'CANCELED' THEN 0 ELSE 1 END),
@@ -271,7 +255,7 @@ object OmmQueries {
          |  route_name AS route_id, status
          |FROM deduped""".stripMargin,
     "omm_envelope_proto" ->
-      s"""WITH deduped AS (${dedupFullSql(P.FromNow, F.now, F.today)})
+      s"""WITH deduped AS (${dedupSql(P.FromNow, F.now, F.today, full = true)})
          |SELECT trip_id AS key, event_ts_ms AS event_time_ms,
          |  deviation_case_id, route_name AS route_id,
          |  direction AS direction_id, operating_day AS start_date,

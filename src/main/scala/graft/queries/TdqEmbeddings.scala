@@ -355,8 +355,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       : DataFrame = {
     val listC = graft.operators.Quantize.ivfListCol(col("embedding"), coarse)
     graft.operators.Quantize.pqEncode(embs, col("vec_id"),
-        graft.operators.Quantize.ivfResidualCol(col("embedding"), coarse,
-          listC),
+        graft.operators.Quantize.ivfResidualCol(col("embedding"), coarse),
         rb, pqM, pqDim, keep = Seq(listC.as("list_id")))
       .drop("distortion")
   }
@@ -1135,7 +1134,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val listC = graft.operators.Quantize.ivfListCol(col("embedding"),
       coarse)
     val resC = graft.operators.Quantize.ivfResidualCol(col("embedding"),
-      coarse, listC)
+      coarse)
     val rb = graft.operators.Quantize.learnedSubCodebooks(embs, resC,
       pqM, pqDim, k = pqSeedIds.size, seed = 7L)
     val codes = graft.operators.Quantize.pqEncode(embs, col("vec_id"),
@@ -1224,10 +1223,8 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val embs = Tables.embeddings(s, d)
     val coarse = graft.operators.Quantize.learnedCoarse(embs,
       col("embedding"), nLists = nLists, seed = 42L)
-    val listC = graft.operators.Quantize.ivfListCol(col("embedding"),
-      coarse)
     val resC = graft.operators.Quantize.ivfResidualCol(col("embedding"),
-      coarse, listC)
+      coarse)
     // OPQ trained on the residuals themselves; the codebook that falls
     // out of the final alternation is the serving codebook
     val (rotM, rcb) = graft.operators.Quantize.learnedOpq(embs, resC,
@@ -1241,7 +1238,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val rListC = graft.operators.Quantize.ivfListCol(col("rvec"),
       rotCoarse)
     val rResC = graft.operators.Quantize.ivfResidualCol(col("rvec"),
-      rotCoarse, rListC)
+      rotCoarse)
     val codes = graft.operators.Quantize.pqEncode(rot, col("vec_id"),
         rResC, rcb, m, pqDim, keep = Seq(rListC.as("list_id")))
       .drop("distortion")
@@ -1396,10 +1393,8 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     // coarse stage is m-independent: one fit serves every arm
     val coarse = graft.operators.Quantize.learnedCoarse(embs,
       col("embedding"), nLists = nLists, seed = 42L)
-    val listC = graft.operators.Quantize.ivfListCol(col("embedding"),
-      coarse)
     val resC = graft.operators.Quantize.ivfResidualCol(col("embedding"),
-      coarse, listC)
+      coarse)
     // r19 (guide §2.6): the per-m pipelines are mutually independent —
     // separate OPQ fits (driver-side breeze over collected samples),
     // separate temp index dirs, separate spills — so they run as
@@ -1421,7 +1416,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
       val rListC = graft.operators.Quantize.ivfListCol(col("rvec"),
         rotCoarse)
       val rResC = graft.operators.Quantize.ivfResidualCol(col("rvec"),
-        rotCoarse, rListC)
+        rotCoarse)
       val codes = graft.operators.Quantize.pqEncode(rot, col("vec_id"),
           rResC, rcb, m, pqDim, keep = Seq(rListC.as("list_id")))
         .drop("distortion")
@@ -1543,10 +1538,8 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
     val train = embs.filter(col("vec_id") % 3 === 0) // first arrivals
     val coarse = graft.operators.Quantize.learnedCoarse(train,
       col("embedding"), nLists = 8, seed = 42L)
-    val listC = graft.operators.Quantize.ivfListCol(col("embedding"),
-      coarse)
     val resC = graft.operators.Quantize.ivfResidualCol(col("embedding"),
-      coarse, listC)
+      coarse)
     val (rotM, rcb) = graft.operators.Quantize.learnedOpq(train, resC,
       pqM, pqDim, k = pqSeedIds.size, seed = 11L)
     val rotCoarse = coarse.map { case (l, c) =>

@@ -295,14 +295,14 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
   // (1 → maxBuckets via the crash-safe swap) between the doc batches, so
   // later appends land in a GROWN layout and the benchmark increments
   // bucket-prune against it. Hits are counted identically at every
-  // modulus (the marker travels inside the swap, so probe modulus ==
-  // layout modulus at every crash point). Runs on a QUARTER corpus
+  // modulus (the modulus is the layout's `nb=` level, which the swap
+  // carries, so probe modulus == layout modulus at every crash point). Runs on a QUARTER corpus
   // slice (doc_id % 4 = 0) — the growth path still triggers at every
   // SF, and the registry doesn't pay the full contam-stream cost twice
   // (q156 already covers the full corpus); q249Sql is q62's oracle
   // restricted to the same slice. TWO polls, not three: growth triggers
   // identically after the first (the 16 KB target rebuckets batch 0's
-  // index at every SF, spec-checked below by the marker read), and the
+  // index at every SF, spec-checked below by the `nb=` listing), and the
   // witness needs exactly one grown-layout append + pruned-probe batch
   // after it — the third poll only repeated that at ~35 Spark jobs of
   // fixture cost (SCALE.md ops28: the floor is job count, not data).
@@ -319,9 +319,8 @@ private[queries] trait TdqStreaming { this: TestdataQueries.type =>
           stateDir = state, n = 3,
           bucketTargetBytes = 1L << 14, maxBuckets = 32)
         if (b == 0) // the growth WITNESS: poll 1 must append + probe GROWN
-          require(new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(s"$state/grams/_graft_nbuckets")))
-            .trim.toInt > 1,
+          require(new java.io.File(s"$state/grams").list()
+            .exists(d => d.startsWith("nb=") && d.stripPrefix("nb=").toInt > 1),
             "q249 growth witness: index must rebucket after poll 0")
     }
     graft.streaming.ContamStream.contamination(s, state)

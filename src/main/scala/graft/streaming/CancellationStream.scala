@@ -98,6 +98,8 @@ object CancellationStream {
 
       // S4: keyed envelope appended per poll (≙ per-record producer.send),
       // in DC.last_modified send order (O1, applied here at the sink).
+      // A raw append, never compacted: the sink stands in for the Pulsar
+      // topic, whose records are never rewritten.
       P.envelope(P.sendOrdered(deduped))
         .withColumn("poll_time", lit(now))
         .write.mode("append").parquet(sinkDir)

@@ -225,6 +225,9 @@ object ClusterStream {
       if (r != n) Some(Row(n, r)) else None
     }
     if (aliasRows.nonEmpty) {
+      // raw append, not SketchState.append: the alias log is maintained
+      // by its own path-compressing rewrite (compressIfNeeded), and the
+      // gate already ran in ingestPairs
       spark.createDataFrame(
           java.util.Arrays.asList(aliasRows: _*), aliasSchema)
         .coalesce(1) // driver-built metadata: one file per poll
@@ -297,6 +300,7 @@ object ClusterStream {
       if (nMerges > 0) {
         // aliases are 16 B/row metadata; land them in O(bytes/64MB) files
         val nFiles = math.max(1L, (nMerges * 16L) >> 26).toInt
+        // raw append: the log's own rewrite maintains it (see above)
         newAliases.coalesce(nFiles).write.mode("append").parquet(path)
         compressIfNeeded(spark, path, compactAfterFiles)
       }

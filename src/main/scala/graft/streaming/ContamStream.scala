@@ -32,13 +32,17 @@ import graft.operators.SketchState
   *
   * State (checkpointed parquet, crash-safe via [[SketchState]]'s
   * swap-replace / adoption discipline; all four dirs get the shared
-  * excess-triggered compaction):
+  * excess-triggered compaction, and all but `grams` append through
+  * [[SketchState.append]]):
   *  - `bench`     distinct benchmark gram hashes (h1, h2) — the 128-bit
   *                key of the batch operator, gram TEXT never persists
   *  - `grams`     (id, h1, h2) accumulated doc-gram index,
-  *                HIVE-PARTITIONED by `b = pmod(h1, N)` where N is the
-  *                CURRENT bucket modulus (the [[IvfPqStream]] layout
-  *                discipline: ingest layout == probe layout)
+  *                HIVE-PARTITIONED as `nb=<N>/b=<k>/` with
+  *                k = pmod(h1, N), where N is the CURRENT bucket modulus
+  *                (the [[IvfPqStream]] layout discipline: ingest layout
+  *                == probe layout). It appends raw, after the gate in
+  *                [[liveBuckets]], because it must rebucket before it
+  *                compacts.
   *  - `docstats`  (id, n_shingles) one row per doc, appended on arrival
   *  - `hits`      (id, n_hits) per-batch overlap increments
   *
@@ -52,11 +56,12 @@ import graft.operators.SketchState
   * N′ = nextPow2(bytes / bucketTargetBytes) (capped at `maxBuckets`) via
   * a crash-safe swap — doubling-triggered like [[SketchState
   * .compactIfNeeded]], so total rebucket cost over a stream's life is
-  * O(index × log batches). The live modulus is a `_graft_nbuckets`
-  * marker INSIDE the grams directory: every layout rewrite (rebucket and
-  * compaction both) commits data + marker in one rename, so no crash
-  * point can leave a reader pruning with a modulus the layout doesn't
-  * have. Passing `nBuckets > 0` pins the legacy fixed layout (the spec's
+  * O(index × log batches). The live modulus is the `nb=` level of the
+  * layout itself: every layout rewrite (rebucket and compaction both)
+  * commits it with the data in one rename, so no crash point can leave a
+  * reader pruning with a modulus the layout doesn't have, and data
+  * without a modulus cannot be written at all. Passing `nBuckets > 0`
+  * pins the legacy fixed layout (the spec's
   * exactness-at-any-modulus sweep and the pruning-law witness of SCALE.md
   * § "Round-15 probe: bucket-pruned ContamStream gram index"
   * need a deterministic N).
@@ -81,8 +86,6 @@ object ContamStream {
 
   private def p(stateDir: String, leaf: String) = s"$stateDir/$leaf"
 
-  private val NBucketsMarker = "_graft_nbuckets"
-
   private def gramHashes(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("id"),
         explode(TextExprs.wordShingles(col("text"), n)).as("g"))
@@ -90,49 +93,28 @@ object ContamStream {
         xxhash64(col("g"), lit(1)).as("h2"))
       .distinct()
 
-  /** True when the directory holds at least one parquet part file —
-    * distinguishes real index data from the marker-only residue a crash
-    * between the first marker stamp and the first data append leaves
-    * behind (reading parquet on a data-less dir fails schema inference).
-    * Only consulted on cold/rare paths: the marker-absent open and the
-    * old-docs probe guard — both listings of a fresh-or-small dir, and
-    * the per-batch compaction already pays a full recursive listing. */
-  private def hasPartFiles(spark: SparkSession, dir: String): Boolean = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return false
-    val it = fs.listFiles(path, true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.startsWith("part-")
-    found
+  /** The gram index's live bucket modulus, read from its layout: after
+    * the [[SketchState.exists]] gate (which adopts an interrupted
+    * rebucket or compaction swap), ONE listing of the `nb=` level gives
+    * both the modulus and whether the index holds data — None means no
+    * data yet. */
+  private def liveBuckets(spark: SparkSession,
+                          gramsPath: String): Option[Int] = {
+    if (!SketchState.exists(spark, gramsPath)) return None
+    val path = new org.apache.hadoop.fs.Path(gramsPath)
+    val nbs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(path).iterator.map(_.getPath.getName)
+      .filter(_.startsWith("nb=")).map(_.stripPrefix("nb=").toInt).toVector
+    require(nbs.size <= 1, s"gram index at $gramsPath holds moduli " +
+      s"${nbs.sorted.mkString(",")}; its layout has exactly one")
+    nbs.headOption
   }
 
-  /** The gram index's live bucket modulus: the in-dir marker, or 1 for a
-    * fresh/adaptive-initial layout. A pinned caller (`nBuckets > 0`) must
-    * match the marker — mixing moduli on one state dir would probe with
-    * a modulus the layout doesn't have. An adaptive caller REFUSES a
-    * non-empty unmarked index for the same reason: with no marker there
-    * is no way to tell a legacy modulus-1 layout from an N-bucket layout
-    * whose marker was lost, and guessing 1 against N-bucket data silently
-    * prunes the probe to bucket 0 only (missed contamination hits). */
-  private def currentBuckets(spark: SparkSession, gramsPath: String,
-                             pinned: Int): Int = {
-    val marked = SketchState.readMarker(spark, gramsPath, NBucketsMarker)
-      .map(_.trim.toInt)
-    if (pinned > 0) {
-      require(marked.forall(_ == pinned),
-        s"gram index at $gramsPath has nBuckets=${marked.get}; " +
-          s"caller pinned $pinned — the modulus is baked into the layout")
-      pinned
-    } else marked.getOrElse {
-      require(!hasPartFiles(spark, gramsPath),
-        s"gram index at $gramsPath has data but no $NBucketsMarker marker; " +
-          "refusing to guess the bucket modulus — stamp the marker with " +
-          "the layout's true modulus to re-open this state adaptively")
-      1
-    }
-  }
+  /** `grams` rows in the layout of modulus `nB`: partition columns
+    * `nb` and `b`. */
+  private def laidOut(grams: DataFrame, nB: Int): DataFrame =
+    grams.withColumn("nb", lit(nB))
+      .withColumn("b", pmod(col("h1"), lit(nB.toLong)).cast("int"))
 
   private def nextPow2(x: Long): Int = {
     var n = 1
@@ -162,12 +144,14 @@ object ContamStream {
     val statsPath = p(stateDir, "docstats")
     val hitsPath = p(stateDir, "hits")
     // the modulus this batch appends AND probes with; a rebucket (end of
-    // batch) only affects the NEXT batch's reads
-    val nB = currentBuckets(spark, gramsPath, nBuckets)
-    // adopt crash-interrupted compaction swaps BEFORE this batch's
-    // appends can recreate the live dirs and orphan them (bench adopts in
-    // readOpt below, grams in currentBuckets' readMarker above)
-    Seq(statsPath, hitsPath).foreach(SketchState.exists(spark, _))
+    // batch) only affects the NEXT batch's reads. A pinned caller
+    // (`nBuckets > 0`) must match the layout: mixing moduli on one state
+    // dir would probe with a modulus the layout doesn't have.
+    val live = liveBuckets(spark, gramsPath)
+    require(nBuckets == 0 || live.forall(_ == nBuckets),
+      s"gram index at $gramsPath has nBuckets=${live.get}; " +
+        s"caller pinned $nBuckets — the modulus is baked into the layout")
+    val nB = if (nBuckets > 0) nBuckets else live.getOrElse(1)
 
     val nd = newDocs.select(col("id"), col("text")).persist()
     val nb = newBench.select(col("id"), col("text")).persist()
@@ -211,11 +195,8 @@ object ContamStream {
       // nothing. The bucket list is collected (bounded: ≤ nB ints) so
       // the restriction is a plan literal → static hive-partition
       // pruning at the file source, no runtime-filter machinery.
-      // hasPartFiles, not bare exists: a crash between the first marker
-      // stamp and the first data append leaves a marker-only grams dir,
-      // which exists but has no readable parquet (and no hits to find)
       val hitsOld = newBenchGrams match {
-        case Some(inc) if nBenchInc > 0 && hasPartFiles(spark, gramsPath) =>
+        case Some(inc) if nBenchInc > 0 && live.nonEmpty =>
           val bks = inc
             .select(pmod(col("h1"), lit(nB.toLong)).cast("int").as("b"))
             .distinct().collect().map(_.getInt(0)).toSeq
@@ -238,50 +219,44 @@ object ContamStream {
       // nB == 1 (adaptive initial) the clustering shuffle buys nothing
       // (one bucket) and is skipped; compaction owns the file count.
       // r19 (guide §2.6): the hits, docstats and grams appends land in
-      // INDEPENDENT state dirs with no mutual ordering contract
-      // (marker-before-data is internal to the grams unit), so they run as
-      // concurrent jobs — per-poll wall at fixture scale is mostly
+      // INDEPENDENT state dirs with no mutual ordering contract, so they
+      // run as concurrent jobs — per-poll wall at fixture scale is mostly
       // driver-side plan/commit latency, which overlaps instead of
-      // summing. The bench append runs AFTER them: its commit refreshes
-      // every cached plan reading benchPath (newBenchGrams is one), and
-      // that refresh re-lists benchState's file index IN PLACE — a hits
-      // job still running would then read this batch's bench grams in
-      // both benchState and the increment and count their hits twice
-      // (q156 over-counted in about half of its runs). Crash class
-      // unchanged: an interrupted poll leaves a partial batch across dirs
-      // and is re-run, exactly as with sequential appends.
+      // summing. The hits and docstats units also compact their own dirs
+      // ([[SketchState.append]]): no unit in the pool compacts a path
+      // that a sibling reads through a cached plan (no sibling reads
+      // `hits` or `docstats` at all), so a compaction's swap and refresh
+      // can never re-list a running sibling's file index. The bench
+      // append stays LAST, after the pool: its commit refreshes every
+      // cached plan reading benchPath (newBenchGrams is one), and that
+      // refresh re-lists benchState's file index IN PLACE — a hits job
+      // still running would then read this batch's bench grams in both
+      // benchState and the increment and count their hits twice (q156
+      // over-counted in about half of its runs). Crash class unchanged:
+      // an interrupted poll leaves a partial batch across dirs and is
+      // re-run, exactly as with sequential appends.
       val appendUnits = Seq.newBuilder[() => Unit]
       hits.foreach(h => appendUnits += (() =>
-        h.observe(hitsObs, coalesce(sum(col("n_hits")), lit(0L)).as("n"))
-          .write.mode("append").parquet(hitsPath)))
+        SketchState.append(
+          h.observe(hitsObs, coalesce(sum(col("n_hits")), lit(0L)).as("n")),
+          hitsPath, compactAfterFiles)))
       newDocGrams.foreach { dg =>
-        appendUnits += (() =>
-          dg.groupBy(col("id")).agg(count(lit(1)).as("n_shingles"))
-            .write.mode("append").parquet(statsPath))
+        appendUnits += (() => SketchState.append(
+          dg.groupBy(col("id")).agg(count(lit(1)).as("n_shingles")),
+          statsPath, compactAfterFiles))
+        // raw append: the gate ran in liveBuckets, and the compaction
+        // waits for the rebucket check below
         appendUnits += (() => {
-          // first-ever append: stamp the live modulus BEFORE the data
-          // lands. A marker without data is harmless (appends never change
-          // the modulus, and readers guard on part files); data without a
-          // marker is not — a pinned-modulus stream crashing after an
-          // N-bucket append but before the stamp would leave a layout a
-          // later adaptive open can only misread (currentBuckets now
-          // refuses it).
-          if (SketchState.readMarker(spark, gramsPath, NBucketsMarker).isEmpty)
-            SketchState.writeMarker(spark, gramsPath, NBucketsMarker,
-              nB.toString)
-          val laid = dg.withColumn("b",
-            pmod(col("h1"), lit(nB.toLong)).cast("int"))
+          val laid = laidOut(dg, nB)
           (if (nB > 1) laid.repartition(col("b")) else laid)
-            .write.mode("append").partitionBy("b").parquet(gramsPath)
+            .write.mode("append").partitionBy("nb", "b").parquet(gramsPath)
         })
       }
       PollOps.inParallel(appendUnits.result())
-      newBenchGrams.foreach(_.write.mode("append").parquet(benchPath))
+      newBenchGrams.foreach(SketchState.append(_, benchPath, compactAfterFiles))
       val nHits = if (hits.isEmpty) 0L
         else hitsObs.get.get("n").flatMap(Option(_))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
-      PollOps.inParallel(Seq(benchPath, statsPath, hitsPath).map(pth =>
-        () => { SketchState.compactIfNeeded(spark, pth, compactAfterFiles); () }))
       // rebucket FIRST: its swap already lands the whole index at one file
       // per bucket, so running compaction before it could pay two full
       // index rewrites back-to-back in one batch; compaction only runs
@@ -291,7 +266,7 @@ object ContamStream {
           maxBuckets) != nB
       if (!rebucketed)
         SketchState.compactIfNeeded(spark, gramsPath, compactAfterFiles,
-          partitionCols = Seq("b"))
+          partitionCols = Seq("nb", "b"))
 
       newDocGrams.foreach(_.unpersist())
       newBenchGrams.foreach(_.unpersist())
@@ -303,29 +278,20 @@ object ContamStream {
 
   /** Doubling-triggered layout growth: rewrite the gram index at
     * N′ = nextPow2(bytes / bucketTargetBytes) once that is ≥ 2 × N. The
-    * rewrite is one crash-safe swap carrying BOTH the relaid partition
-    * dirs and the updated `_graft_nbuckets` marker, so modulus and
-    * layout are never observable split. Returns the new modulus. */
+    * rewrite is one crash-safe swap of the whole `nb=N′/b=<k>/` layout,
+    * so modulus and data are never observable split. Returns the new
+    * modulus. */
   private def rebucketIfNeeded(spark: SparkSession, gramsPath: String,
                                nB: Int, bucketTargetBytes: Long,
                                maxBuckets: Int): Int = {
-    if (!SketchState.exists(spark, gramsPath)) return nB
-    val path = new org.apache.hadoop.fs.Path(gramsPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var bytes = 0L
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.startsWith("part-")) bytes += s.getLen
-    }
+    val bytes = SketchState.listPartFiles(spark, gramsPath).map(_._2).sum
     val ideal = math.min(maxBuckets,
       nextPow2((bytes + bucketTargetBytes - 1) / bucketTargetBytes))
     if (ideal < 2 * nB) return nB
-    SketchState.swapReplacePartitionedKeeping(
-      spark.read.parquet(gramsPath)
-        .withColumn("b", pmod(col("h1"), lit(ideal.toLong)).cast("int"))
+    SketchState.swapReplace(
+      laidOut(spark.read.parquet(gramsPath).drop("nb", "b"), ideal)
         .repartition(col("b")),
-      gramsPath, Seq("b"), Map(NBucketsMarker -> ideal.toString))
+      gramsPath, partitionCols = Seq("nb", "b"))
     ideal
   }
 

@@ -123,8 +123,7 @@ object CurationStream {
       val nSharded = ShardStream.ingestBatch(spark,
         clean.select(col("id"), col("n_tok")), "id", "n_tok", budget,
         shardDir(stateDir))
-      clean.select(col("h")).write.mode("append").parquet(sp)
-      SketchState.compactIfNeeded(spark, sp, 64)
+      SketchState.append(clean.select(col("h")), sp, 64)
       nSharded
     } finally { clean.unpersist(); () }
   }

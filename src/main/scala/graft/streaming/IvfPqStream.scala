@@ -79,12 +79,14 @@ object IvfPqStream {
     // whole extra plan/job per poll for a number the write's tasks see.
     val obs = new org.apache.spark.sql.Observation()
     val codes = Quantize.pqEncode(newVecs, id,
-        Quantize.ivfResidualCol(vec, coarse, listC),
+        Quantize.ivfResidualCol(vec, coarse),
         resCentroids, m, dim, keep = Seq(listC.as("list_id")))
       .drop("distortion")
       .observe(obs, count(lit(1)).as("n"))
     // flat delta append: no shuffle, no per-list files — list_id rides as
-    // a regular column until the fold clusters it into the serving layout
+    // a regular column until the fold clusters it into the serving layout.
+    // Raw, not SketchState.append: the hidden `_delta` belongs to
+    // foldDelta (maintain, below), which the gate above already replayed
     codes.write.mode("append").parquet(deltaPath(path))
     val added = obs.get.get("n").flatMap(Option(_))
       .map(_.asInstanceOf[Long]).getOrElse(0L)

@@ -48,7 +48,7 @@ import graft.operators.{NearDup, SketchState}
   * trigger must be excess-based — the ingest rewrites it to ideal files via
   * [[SketchState.swapReplace]]'s write-swap-delete-rename discipline, so
   * a crash mid-compaction never loses state (a complete swap is adopted
-  * by the next read; sinks get the same adoption via the entry probe).
+  * by the next read, or by the gate of the next [[SketchState.append]]).
   * Rewrites space out geometrically as a dir grows; output pairs are
   * unaffected (the spec pins identical pair output across compacted and
   * uncompacted runs).
@@ -83,10 +83,6 @@ object NearDupStream {
                   compactAfterFiles: Int = 64): BatchResult = {
     val bandsPath = s"$stateDir/bands"
     val docsPath = s"$stateDir/docs"
-    // adopt a crash-interrupted SINK compaction swap BEFORE this batch's
-    // append can recreate the live dir and orphan it (state dirs get the
-    // same adoption via their own readOpt gates below)
-    SketchState.exists(spark, sinkDir)
     val nd = newDocs.select(col("id"), col("text")).persist()
     try {
       val nNew = nd.count() // materialize before the multi-reference fan-out
@@ -165,30 +161,29 @@ object NearDupStream {
           // the write is verified's only consumer, so the old persist +
           // separate count() was a full extra plan/job per poll
           val obs = new org.apache.spark.sql.Observation()
-          verified.observe(obs, count(lit(1)).as("n"))
-            .write.mode("append").parquet(sinkDir)
+          SketchState.append(verified.observe(obs, count(lit(1)).as("n")),
+            sinkDir, compactAfterFiles)
           val nPairs = obs.get.get("n").flatMap(Option(_))
             .map(_.asInstanceOf[Long]).getOrElse(0L)
           // state appends AFTER the sink write (at-least-once on restart,
           // same ordering contract as CancellationStream's key-set state).
+          // The sink's size-triggered compaction rides its append, so it
+          // runs BEFORE the state appends. That leaves the crash class as
+          // it is: a crash anywhere from the sink append to the last state
+          // append leaves a partial batch that is re-run, and a crash
+          // mid-compaction leaves either the old files or a complete swap
+          // that the next append's gate adopts.
           // r19 (guide §2.6, ContamStream's discipline): bands and docs are
           // DISJOINT state dirs with no mutual ordering contract — every
           // partial-append state already leads to the same re-run-the-batch
           // recovery (the append → checkpoint-commit window admits full
-          // duplication in the sequential form too), so running them as
-          // concurrent jobs changes wall, not the crash class.
+          // duplication in the sequential form too), so running them (each
+          // with its own compaction; rows unchanged, layout-only, spec pins
+          // identical output) as concurrent jobs changes wall, not the
+          // crash class.
           PollOps.inParallel(Seq(
-            () => newBands.write.mode("append").parquet(bandsPath),
-            () => nd.write.mode("append").parquet(docsPath)))
-          // size-triggered small-file compaction AFTER the appends: the
-          // batch's state is durable first, and a crash mid-compaction
-          // leaves either the old files or an adoptable complete swap.
-          // Three disjoint dirs (incl. the sink: one file-set per batch
-          // for the stream's life — same excess-triggered rewrite; rows
-          // unchanged, layout-only, spec pins identical output), each
-          // individually crash-safe → concurrent.
-          PollOps.inParallel(Seq(bandsPath, docsPath, sinkDir).map(pth =>
-            () => SketchState.compactIfNeeded(spark, pth, compactAfterFiles)))
+            () => SketchState.append(newBands, bandsPath, compactAfterFiles),
+            () => SketchState.append(nd, docsPath, compactAfterFiles)))
           BatchResult(nNew, nPairs)
         } finally {
           if (restrict) candMat.unpersist()

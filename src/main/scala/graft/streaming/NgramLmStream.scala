@@ -45,7 +45,7 @@ import graft.operators.{SketchState, Vocab}
   * batch may land a PARTIAL append (Spark's commit moves files at job
   * commit); recovery is re-running the interrupted batch's ingest after
   * discarding the partial poll — the swap/tiered-merge recovery that
-  * [[SketchState.exists]] runs on open only ever repairs COMPACTION
+  * [[SketchState.append]]'s gate runs first only ever repairs COMPACTION
   * crashes (which rewrite, never add, rows). */
 object NgramLmStream {
 
@@ -59,22 +59,13 @@ object NgramLmStream {
                   compactAfterFiles: Int = 64): Unit = {
     val toks = tok(batch, id, text).persist()
     try {
-      appendDelta(spark, s"$statePath/tri", Vocab.triTable(toks),
+      SketchState.append(Vocab.triTable(toks), s"$statePath/tri",
         compactAfterFiles)
-      appendDelta(spark, s"$statePath/bi", Vocab.biTable(toks),
+      SketchState.append(Vocab.biTable(toks), s"$statePath/bi",
         compactAfterFiles)
-      appendDelta(spark, s"$statePath/uni", Vocab.uniTable(toks),
+      SketchState.append(Vocab.uniTable(toks), s"$statePath/uni",
         compactAfterFiles)
     } finally toks.unpersist()
-  }
-
-  private def appendDelta(spark: SparkSession, path: String, inc: DataFrame,
-                          compactAfterFiles: Int): Unit = {
-    // adopt any interrupted compaction (swap or tiered merge) BEFORE the
-    // append, so this batch's files land beside a repaired layout
-    SketchState.exists(spark, path)
-    inc.write.mode("append").parquet(path)
-    SketchState.compactIfNeeded(spark, path, compactAfterFiles)
   }
 
   /** One accumulated count table: per-key sum over the delta rows —

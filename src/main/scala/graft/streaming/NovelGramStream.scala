@@ -22,7 +22,8 @@ import graft.operators.SketchState
   * State: `grams` is the accumulated distinct gram-hash set — each batch
   * appends ONLY its novel grams, which keeps the dir exactly the
   * distinct union without ever rewriting it; `series` appends one
-  * metadata row per batch. Scale per batch: one shingle explode of the
+  * metadata row per batch. Both append through [[SketchState.append]],
+  * so both stay under the compaction bound. Scale per batch: one shingle explode of the
   * BATCH, one anti-join against the accumulated set (hash-keyed, batch
   * side tiny), zero text in state. */
 object NovelGramStream {
@@ -62,16 +63,15 @@ object NovelGramStream {
     val novel = SketchState.readOpt(spark, gp)
       .fold(bg)(bg.join(_, Seq("h1", "h2"), "left_anti"))
       .observe(obsN, count(lit(1)).as("n"))
-    novel.write.mode("append").parquet(gp)
+    SketchState.append(novel, gp, compactAfterFiles)
     def got(o: org.apache.spark.sql.Observation): Long =
       o.get.get("n").flatMap(Option(_)).map(_.asInstanceOf[Long])
         .getOrElse(0L)
     val nGrams = got(obsG)
     val nNovel = got(obsN)
-    Seq((batchId, nGrams, nNovel))
-      .toDF("batch_id", "n_grams", "n_novel")
-      .write.mode("append").parquet(seriesPath(stateDir))
-    SketchState.compactIfNeeded(spark, gp, compactAfterFiles)
+    SketchState.append(Seq((batchId, nGrams, nNovel))
+      .toDF("batch_id", "n_grams", "n_novel"), seriesPath(stateDir),
+      compactAfterFiles)
     BatchResult(nGrams, nNovel)
   }
 

@@ -47,22 +47,17 @@ object RetentionStream {
                   compactAfterFiles: Int = 64): Unit = {
     val fp = fPath(stateDir)
     val ap = aPath(stateDir)
-    // adopt a crash-interrupted compaction swap BEFORE the append can
-    // recreate the live dir and orphan it (`active` adopts in readOpt)
-    SketchState.exists(spark, fp)
     val ev = batch.select(col(keyCol).as("k"),
         col(tsCol).cast("timestamp").as("ts"))
       .where(col("k").isNotNull)
-    ev.groupBy(col("k")).agg(min(col("ts")).as("t0"))
-      .write.mode("append").parquet(fp)
+    SketchState.append(ev.groupBy(col("k")).agg(min(col("ts")).as("t0")),
+      fp, compactAfterFiles)
     val bActive = ev
       .select(col("k"), date_trunc("week", col("ts")).cast("date").as("aw"))
       .distinct()
     val newActive = SketchState.readOpt(spark, ap)
       .fold(bActive)(bActive.join(_, Seq("k", "aw"), "left_anti"))
-    newActive.write.mode("append").parquet(ap)
-    Seq(fp, ap).foreach(
-      SketchState.compactIfNeeded(spark, _, compactAfterFiles))
+    SketchState.append(newActive, ap, compactAfterFiles)
   }
 
   /** The accumulated retention matrix — equals the one-shot

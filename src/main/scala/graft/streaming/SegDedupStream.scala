@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Dedup, SketchState}
 
@@ -51,9 +50,6 @@ object SegDedupStream {
                   sinkDir: String, w: Int,
                   compactAfterFiles: Int = 64): BatchResult = {
     val segsPath = s"$stateDir/segs"
-    // adopt a crash-interrupted SINK compaction swap BEFORE this batch's
-    // append can recreate the live dir and orphan it
-    SketchState.exists(spark, sinkDir)
     val base = Dedup.segmentBase(newDocs, col("id"), col("text")).persist()
     try {
       val nNew = base.count()
@@ -75,37 +71,14 @@ object SegDedupStream {
         // The kept-segment count rides the state append as an observed
         // metric (the state write IS the fresh rows), replacing the old
         // separate count() job per poll (guide §1.2: fewer passes)
-        cleaned.write.mode("append").parquet(sinkDir)
+        SketchState.append(cleaned, sinkDir, compactAfterFiles)
         val obs = new org.apache.spark.sql.Observation()
-        fresh.select(col("h1"), col("h2")).observe(obs,
-            count(lit(1)).as("n"))
-          .write.mode("append").parquet(segsPath)
+        SketchState.append(fresh.select(col("h1"), col("h2")).observe(obs,
+            count(lit(1)).as("n")), segsPath, compactAfterFiles)
         val nKept = obs.get.get("n").flatMap(Option(_))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
-        SketchState.compactIfNeeded(spark, segsPath, compactAfterFiles)
-        SketchState.compactIfNeeded(spark, sinkDir, compactAfterFiles)
         BatchResult(nNew, nKept)
       } finally fresh.unpersist()
     } finally base.unpersist()
   }
-
-  /** Start the incremental stream over a parquet drop directory: each new
-    * file of (id, text) docs becomes a micro-batch increment. */
-  def start(spark: SparkSession, incomingDir: String, stateDir: String,
-            sinkDir: String, checkpointDir: String, w: Int,
-            intervalSeconds: Int = 1,
-            compactAfterFiles: Int = 64): StreamingQuery =
-    spark.readStream
-      .schema(NearDupStream.docSchema)
-      .parquet(incomingDir)
-      .writeStream
-      .trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val r = ingestBatch(spark, batch, stateDir, sinkDir, w,
-          compactAfterFiles)
-        println(s"[segdedup batch $batchId] docs=${r.newDocs} " +
-          s"kept=${r.keptSegments}")
-      }
-      .start()
 }

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
 import graft.functions.VectorExprs
 import graft.operators.{Similarity, SketchState}
@@ -57,15 +55,11 @@ import graft.operators.{Similarity, SketchState}
   * state-growth anti-join needs no second state scan: the exact-hit
   * verdicts already say which batch values state has seen, so new-state
   * selection is batch × batch. State grows by distinct NEW vector values
-  * only (dim × 4 B + 24 B per row), and both state and sink ride the
-  * shared excess-triggered swap-replace compaction
-  * ([[SketchState.compactIfNeeded]]).
+  * only (dim × 4 B + 24 B per row), and both state and sink append
+  * through [[SketchState.append]], which runs the shared
+  * excess-triggered swap-replace compaction.
   */
 object SemDedupStream {
-
-  val embSchema: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("emb", ArrayType(FloatType))))
 
   case class BatchResult(newVecs: Long, kept: Long)
 
@@ -84,9 +78,6 @@ object SemDedupStream {
                   broadcastStateRatio: Long = 16L,
                   maxBroadcastVecs: Long = 250000L): BatchResult = {
     val vecsPath = s"$stateDir/vecs"
-    // adopt a crash-interrupted SINK compaction swap BEFORE this batch's
-    // append can recreate the live dir and orphan it
-    SketchState.exists(spark, sinkDir)
     val nv = newVecs.select(col("id"), col("emb")).persist()
     try {
       val nNew = nv.count()
@@ -159,9 +150,9 @@ object SemDedupStream {
             // the write's own tasks already see (guide §1.2: fewer
             // passes; measured in OPTIMIZATION_r18.md).
             val obs = new org.apache.spark.sql.Observation()
-            decisions.observe(obs,
-                sum(when(col("kept"), 1L).otherwise(0L)).as("kept"))
-              .write.mode("append").parquet(sinkDir)
+            SketchState.append(decisions.observe(obs,
+                sum(when(col("kept"), 1L).otherwise(0L)).as("kept")),
+              sinkDir, compactAfterFiles)
             val nKept = obs.get.get("kept").flatMap(Option(_))
               .map(_.asInstanceOf[Long]).getOrElse(0L)
             // state grows by distinct vector values NOT already present —
@@ -170,40 +161,16 @@ object SemDedupStream {
             // verdicts persist decouples this plan from the state scan,
             // so the append below never writes into a directory a live
             // plan is reading)
-            distinctVals.join(
+            SketchState.append(distinctVals.join(
                 verdicts.filter(col("exact_hit"))
                   .select(col("h1"), col("h2")),
                 Seq("h1", "h2"), "left_anti")
               .select(col("h1"), col("h2"), col("bucket"), col("v"),
-                col("n2"))
-              .write.mode("append").parquet(vecsPath)
-            SketchState.compactIfNeeded(spark, vecsPath, compactAfterFiles)
-            SketchState.compactIfNeeded(spark, sinkDir, compactAfterFiles)
+                col("n2")), vecsPath, compactAfterFiles)
             BatchResult(nNew, nKept)
           }
         } finally verdicts.unpersist()
       } finally distinctVals.unpersist()
     } finally nv.unpersist()
   }
-
-  /** Start the incremental stream over a parquet drop directory: each new
-    * file of (id, emb) vectors becomes a micro-batch increment. */
-  def start(spark: SparkSession, incomingDir: String, stateDir: String,
-            sinkDir: String, checkpointDir: String, dim: Int, bits: Int,
-            seed: Long, threshold: Double,
-            intervalSeconds: Int = 1,
-            compactAfterFiles: Int = 64): StreamingQuery =
-    spark.readStream
-      .schema(embSchema)
-      .parquet(incomingDir)
-      .writeStream
-      .trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val r = ingestBatch(spark, batch, stateDir, sinkDir, dim, bits,
-          seed, threshold, compactAfterFiles)
-        println(s"[semdedup batch $batchId] vecs=${r.newVecs} " +
-          s"kept=${r.kept}")
-      }
-      .start()
 }

@@ -109,10 +109,9 @@ class QuantizeSpec extends SparkSpec {
       30L to 37L)
     val rb = Quantize.residualSeedCodebook(embs, col("vec_id"),
       col("embedding"), 10L to 25L, coarse)
-    val listC = Quantize.ivfListCol(col("embedding"), coarse)
     val out = Quantize.pqEncode(
         embs.filter($"vec_id".between(10, 25)), col("vec_id"),
-        Quantize.ivfResidualCol(col("embedding"), coarse, listC),
+        Quantize.ivfResidualCol(col("embedding"), coarse),
         rb, 8, 64)
       .select($"id", $"c0", $"distortion")
       .as[(Long, Int, Double)].collect()
@@ -135,7 +134,7 @@ class QuantizeSpec extends SparkSpec {
       col("embedding"), 10L to 25L, coarse)
     val listC = Quantize.ivfListCol(col("embedding"), coarse)
     val codes = Quantize.pqEncode(embs, col("vec_id"),
-        Quantize.ivfResidualCol(col("embedding"), coarse, listC),
+        Quantize.ivfResidualCol(col("embedding"), coarse),
         rb, 8, 64, keep = Seq(listC.as("list_id")))
       .drop("distortion")
     val out = Quantize.ivfPqResidualTopK(codes, embs.filter($"vec_id" < 5),
@@ -230,9 +229,8 @@ class QuantizeSpec extends SparkSpec {
       .as[(Long, Seq[Int])].collect().toMap
     assert(kernOrder.nonEmpty && kernOrder === litOrder)
     // kernel residual == literal matrix-lookup residual
-    val listC = Quantize.ivfListCol(col("embedding"), coarse)
     val litRes = embs.select(col("vec_id"),
-        Quantize.ivfResidualCol(col("embedding"), coarse, listC).as("r"))
+        Quantize.ivfResidualCol(col("embedding"), coarse).as("r"))
       .as[(Long, Seq[Double])].collect().toMap
     val kernRes = embs.select(col("vec_id"),
         graft.functions.PqKernels.residualCol(col("embedding"), coarse, 64)

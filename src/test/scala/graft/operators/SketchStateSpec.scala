@@ -51,6 +51,19 @@ class SketchStateSpec extends SparkSpec {
       "adopted swap dir must have been renamed into place")
   }
 
+  test("append adopts a complete swap before it appends, so an " +
+    "interrupted compaction's state is never orphaned") {
+    val p = freshPath()
+    SketchState.append(Seq(1L, 2L).toDF("h"), p, maxFiles = 64)
+    // the post-delete pre-rename window of a compaction swap
+    java.nio.file.Files.move(java.nio.file.Paths.get(p),
+      java.nio.file.Paths.get(p + ".__swap"))
+    SketchState.append(Seq(3L).toDF("h"), p, maxFiles = 64)
+    assert(SketchState.read(spark, p).as[Long].collect().sorted.toSeq
+      === Seq(1L, 2L, 3L), "the append orphaned the accumulated state")
+    assert(!new java.io.File(p + ".__swap").exists())
+  }
+
   test("swapReplaceMany: both subtables publish under one rename; an " +
     "incomplete multi-table swap is never adopted") {
     val p = freshPath()
@@ -76,66 +89,6 @@ class SketchStateSpec extends SparkSpec {
       Seq("a" -> Seq(4L).toDF("h"), "b" -> Seq(5L).toDF("h")), p)
     assert(spark.read.parquet(s"$p/a").as[Long].collect().toSeq === Seq(4L))
     assert(spark.read.parquet(s"$p/b").as[Long].collect().toSeq === Seq(5L))
-  }
-
-  test("_graft_* markers are invisible to reads, ride compaction's " +
-    "rewrite, and commit atomically with swapReplacePartitionedKeeping") {
-    val p = freshPath()
-    // flat layout: 10 files + a marker; compaction (ideal=1) must rewrite
-    // to 1 file AND carry the marker into the swapped dir
-    Seq.range(0L, 100L).toDF("h").repartition(10)
-      .write.mode("overwrite").parquet(p)
-    SketchState.writeMarker(spark, p, "_graft_nbuckets", "1")
-    assert(SketchState.read(spark, p).count() === 100L,
-      "marker file must not be read as data")
-    assert(SketchState.compactIfNeeded(spark, p, maxFiles = 3),
-      "10 files over maxFiles=3 must compact")
-    assert(SketchState.readMarker(spark, p, "_graft_nbuckets")
-      === Some("1"), "compaction dropped the layout marker")
-    assert(SketchState.read(spark, p).count() === 100L)
-    // partitioned replace with a marker: data + marker land in one rename
-    SketchState.swapReplacePartitionedKeeping(
-      Seq.range(0L, 100L).toDF("h")
-        .withColumn("b", org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.col("h"),
-          org.apache.spark.sql.functions.lit(4L)).cast("int")),
-      p, Seq("b"), Map("_graft_nbuckets" -> "4"))
-    assert(SketchState.readMarker(spark, p, "_graft_nbuckets")
-      === Some("4"))
-    assert(SketchState.read(spark, p).count() === 100L)
-    // partitioned compaction preserves it too
-    assert(SketchState.readMarker(spark, p, "_graft_absent") === None)
-  }
-
-  test("marker-carrying swaps are adoption-gated on marker completeness: " +
-    "the witness is retracted while markers land, so no crash point " +
-    "leaves an adoptable marker-less swap") {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val p = freshPath()
-    def stage(withMarker: Boolean, withWitness: Boolean): Unit = {
-      Seq.range(0L, 8L).toDF("h")
-        .withColumn("b", pmod(col("h"), lit(4L)).cast("int"))
-        .write.mode("overwrite").partitionBy("b").parquet(p + ".__swap")
-      val witness = new java.io.File(p + ".__swap", "_SUCCESS")
-      witness.delete() // the protocol's retract step
-      if (withMarker)
-        SketchState.writeMarker(spark, p + ".__swap", "_graft_nbuckets", "4")
-      if (withWitness) witness.createNewFile()
-    }
-    // crash inside the marker phase (witness retracted, marker not yet
-    // written), live never created: the state must read as ABSENT —
-    // nothing was committed, so nothing may be adopted
-    stage(withMarker = false, withWitness = false)
-    assert(!SketchState.exists(spark, p),
-      "an unwitnessed swap must never be adopted")
-    // crash in the post-delete pre-rename window: under the retract
-    // protocol the swap at that point ALWAYS holds data + marker +
-    // witness together, and adoption must arrive marker-complete
-    stage(withMarker = true, withWitness = true)
-    assert(SketchState.exists(spark, p), "complete swap must be adopted")
-    assert(SketchState.readMarker(spark, p, "_graft_nbuckets") === Some("4"),
-      "adoption must carry the layout marker with the data")
-    assert(SketchState.read(spark, p).count() === 8L)
   }
 
   test("tiered compaction merges only the over-full size band and leaves " +

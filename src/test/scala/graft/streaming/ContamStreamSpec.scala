@@ -29,6 +29,16 @@ class ContamStreamSpec extends SparkSpec {
     101L -> "unrelated benchmark prose that matches nothing in corpus"
   ).toDF("id", "text")
 
+  /** The gram index's `nb=` dirs: the layout's bucket moduli. */
+  private def moduli(state: String): Seq[Int] =
+    new java.io.File(s"$state/grams").list().toSeq
+      .filter(_.startsWith("nb=")).map(_.stripPrefix("nb=").toInt)
+
+  /** The bucket numbers of the `b=` dirs under modulus `nb`. */
+  private def buckets(state: String, nb: Int): Seq[Int] =
+    new java.io.File(s"$state/grams/nb=$nb").list().toSeq
+      .filter(_.startsWith("b=")).map(_.stripPrefix("b=").toInt)
+
   private def oneShot = Contamination.overlapVsBenchmark(
       corpus, bench, col("id"), col("text"), n = 3)
     .as[(Long, Long, Long, Boolean)].collect().toSet
@@ -61,11 +71,10 @@ class ContamStreamSpec extends SparkSpec {
       val got = ContamStream.contamination(spark, state)
         .as[(Long, Long, Long, Boolean)].collect().toSet
       assert(got === oneShot, s"nBuckets=$nb diverged from batch")
-      val dirs = new java.io.File(s"$state/grams").listFiles()
-        .filter(_.isDirectory).map(_.getName).filter(_.startsWith("b="))
-      assert(dirs.nonEmpty && dirs.forall { d =>
-        val v = d.stripPrefix("b=").toInt; v >= 0 && v < nb
-      }, s"expected b=<0..${nb - 1}> partition dirs, got ${dirs.toSeq}")
+      assert(moduli(state) === Seq(nb), s"expected one nb=$nb level")
+      val bs = buckets(state, nb)
+      assert(bs.nonEmpty && bs.forall(v => v >= 0 && v < nb),
+        s"expected b=<0..${nb - 1}> partition dirs, got $bs")
     }
   }
 
@@ -131,16 +140,14 @@ class ContamStreamSpec extends SparkSpec {
     // second batch appends INTO the grown layout
     ContamStream.ingestBatch(spark, corpus.filter(col("id") <= 3),
       bench.limit(0), state, n = 3, bucketTargetBytes = 1L, maxBuckets = 8)
-    val grown = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$state/grams/_graft_nbuckets"))).trim.toInt
-    assert(grown === 8, s"1-byte target must grow to the 8-bucket cap")
+    assert(moduli(state) === Seq(8),
+      s"1-byte target must grow to the 8-bucket cap, got ${moduli(state)}")
     ContamStream.ingestBatch(spark, corpus.filter(col("id") > 3),
       bench.limit(0), state, n = 3, bucketTargetBytes = 1L, maxBuckets = 8)
-    val dirs = new java.io.File(s"$state/grams").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("b="))
-    assert(dirs.forall { d =>
-      val v = d.stripPrefix("b=").toInt; v >= 0 && v < 8
-    }, s"grown layout must be b=<0..7>, got ${dirs.toSeq}")
+    assert(moduli(state) === Seq(8))
+    val bs = buckets(state, 8)
+    assert(bs.nonEmpty && bs.forall(v => v >= 0 && v < 8),
+      s"grown layout must be b=<0..7>, got $bs")
     // benchmark arrives LAST: every hit comes from the bucket-pruned
     // old-docs probe against the grown layout
     ContamStream.ingestBatch(spark, corpus.limit(0), bench, state,
@@ -161,9 +168,8 @@ class ContamStreamSpec extends SparkSpec {
         stateDir = state, n = 3, compactAfterFiles = 1,
         bucketTargetBytes = 1L, maxBuckets = 8)
     }
-    val marker = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$state/grams/_graft_nbuckets"))).trim
-    assert(marker === "8", "compaction must carry the layout marker")
+    assert(moduli(state) === Seq(8),
+      s"compaction must keep the nb=8 level, got ${moduli(state)}")
     val got = ContamStream.contamination(spark, state)
       .as[(Long, Long, Long, Boolean)].collect().toSet
     assert(got === oneShot)
@@ -175,43 +181,26 @@ class ContamStreamSpec extends SparkSpec {
       s"pinned-modulus mismatch must name the live layout: ${e.getMessage}")
   }
 
-  test("crash residue between the first marker stamp and the first data " +
-    "append (marker-only grams dir) is recovered, not tripped over") {
-    val state = CacheHygiene.tempDir("contamstream_mk")
-    // the residue the marker-first stamp order can leave: a grams dir
-    // holding ONLY the modulus marker, no parquet
-    graft.operators.SketchState.writeMarker(spark, s"$state/grams",
-      "_graft_nbuckets", "8")
-    // pinned caller must still match the marker
-    intercept[IllegalArgumentException] {
-      ContamStream.ingestBatch(spark, corpus, bench, state, n = 3,
-        nBuckets = 4)
-    }
-    // an adaptive caller resumes at the marked modulus and the stream
-    // converges to the batch answer — benchmark arriving LAST exercises
-    // the old-docs probe against the recovered layout
-    ContamStream.ingestBatch(spark, corpus, bench.limit(0), state, n = 3)
-    ContamStream.ingestBatch(spark, corpus.limit(0), bench, state, n = 3)
+  test("a crash between a rebucket swap's delete and rename is adopted: " +
+    "the next poll probes with the grown modulus") {
+    val state = CacheHygiene.tempDir("contamstream")
+    // docs only; the 1-byte target rebuckets the index to nb=8 by swap
+    ContamStream.ingestBatch(spark, corpus, bench.limit(0), state, n = 3,
+      bucketTargetBytes = 1L, maxBuckets = 8)
+    assert(moduli(state) === Seq(8))
+    // the crash point: live grams deleted, the complete rebucketed
+    // layout (with `_SUCCESS`) still under the swap name
+    Files.move(java.nio.file.Paths.get(s"$state/grams"),
+      java.nio.file.Paths.get(s"$state/grams.__swap"))
+    assert(new java.io.File(s"$state/grams.__swap/_SUCCESS").exists)
+    // benchmark arrives LAST: every hit comes from the bucket-pruned
+    // old-docs probe, which finds them only at the adopted modulus
+    ContamStream.ingestBatch(spark, corpus.limit(0), bench, state, n = 3,
+      bucketTargetBytes = 1L, maxBuckets = 8)
+    assert(moduli(state) === Seq(8), "the rebucket swap was not adopted")
     val got = ContamStream.contamination(spark, state)
       .as[(Long, Long, Long, Boolean)].collect().toSet
-    assert(got === oneShot, "marker-only residue broke batch equivalence")
-    assert(graft.operators.SketchState.readMarker(spark, s"$state/grams",
-      "_graft_nbuckets") === Some("8"), "recovered modulus must persist")
-  }
-
-  test("an adaptive open REFUSES a non-empty unmarked gram index instead " +
-    "of guessing modulus 1 against an unknown layout") {
-    val state = CacheHygiene.tempDir("contamstream_um")
-    // fabricate pre-marker-era residue: partitioned gram data, no marker
-    corpus.select(col("id"), xxhash64(col("text")).as("h1"),
-        xxhash64(col("text"), lit(1)).as("h2"))
-      .withColumn("b", pmod(col("h1"), lit(8L)).cast("int"))
-      .write.mode("overwrite").partitionBy("b").parquet(s"$state/grams")
-    val e = intercept[IllegalArgumentException] {
-      ContamStream.ingestBatch(spark, corpus, bench, state, n = 3)
-    }
-    assert(e.getMessage.contains("_graft_nbuckets"),
-      s"refusal must name the missing marker, got: ${e.getMessage}")
+    assert(got === oneShot, "the adopted layout's probe diverged")
   }
 
   test("compaction keeps results identical") {

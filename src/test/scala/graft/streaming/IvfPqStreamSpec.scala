@@ -41,7 +41,7 @@ class IvfPqStreamSpec extends SparkSpec {
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
     val listC = Quantize.ivfListCol(col("embedding"), coarse)
     val batchCodes = Quantize.pqEncode(embs, col("vec_id"),
-        Quantize.ivfResidualCol(col("embedding"), coarse, listC),
+        Quantize.ivfResidualCol(col("embedding"), coarse),
         rb, m, dim, keep = Seq(listC.as("list_id")))
       .drop("distortion")
     val batch = Quantize.ivfPqResidualTopK(batchCodes, queries, "vec_id",

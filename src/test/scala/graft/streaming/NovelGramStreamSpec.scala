@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.TextExprs
-import graft.operators.CacheHygiene
+import graft.operators.{CacheHygiene, SketchState}
 
 /** Novelty series: first-seen attribution, the Σ n_novel conservation
   * law under any arrival order, and compaction transparency. */
@@ -54,5 +54,26 @@ class NovelGramStreamSpec extends SparkSpec {
       }.sum
       assert(total === distinctGrams, s"order $order broke conservation")
     }
+  }
+
+  test("the series store is compacted too, and compaction leaves the " +
+    "series unchanged") {
+    def run(compactAfterFiles: Int): (String, Seq[(Long, Long, Long, Double)]) = {
+      val state = CacheHygiene.tempDir("novel")
+      Seq(1L, 2L, 3L, 4L).zipWithIndex.foreach { case (id, b) =>
+        NovelGramStream.ingestBatch(spark, docs.filter(col("id") === id),
+          col("text"), b.toLong, state, compactAfterFiles = compactAfterFiles)
+      }
+      (state, NovelGramStream.noveltySeries(spark, state).orderBy("batch_id")
+        .as[(Long, Long, Long, Double)].collect().toSeq)
+    }
+    val (state, compacted) = run(compactAfterFiles = 1)
+    // one one-row file per batch: the excess trigger max(1, 2 × ideal)
+    // bounds the metadata-sized series at 2 files
+    val files = SketchState.listPartFiles(spark, s"$state/series").size
+    assert(files <= 2, s"series holds $files files after 4 batches")
+    assert(compacted === Seq((0L, 3L, 3L, 1.0), (1L, 3L, 0L, 0.0),
+      (2L, 2L, 2L, 1.0), (3L, 2L, 1L, 0.5)))
+    assert(compacted === run(compactAfterFiles = 64)._2)
   }
 }
