@@ -1,18 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftext.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
+import org.apache.spark.sql.types.{BooleanType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Membership probe against a pre-built [[BloomFilter]], as a codegen'd
-  * expression. The filter rides the plan as a REFERENCE OBJECT (the
-  * PqKernels technique): tasks get it with their closure, the generated
-  * code is one `mightContainLong` call, and no filter bytes appear in
-  * the generated source.
+  * kernel. The filter rides the plan as a REFERENCE OBJECT (a [[Kernel]]
+  * constant, like the PQ codebook): tasks get it with their closure, the
+  * generated code is one static [[probe]] call, and no filter bytes
+  * appear in the generated source.
   *
   * The filter answers "possibly in the set" with no false negatives —
   * callers that need exact semantics confirm positives against the real
@@ -23,29 +19,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * a distributed aggregate), so construction scales with the set. */
 object BloomProbe {
 
-  case class BloomMightContain(child: Expression, filter: BloomFilter)
-      extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case LongType => TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects a LONG probe key, got $t")
-      }
-    override def dataType: DataType = BooleanType
-    override def prettyName: String = "bloom_might_contain"
-    override protected def nullSafeEval(v: Any): Any =
-      filter.mightContainLong(v.asInstanceOf[Long])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("bloomFilter", filter,
-        classOf[BloomFilter].getName)
-      defineCodeGen(ctx, ev, v => s"$ref.mightContainLong($v)")
-    }
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
+  def probe(key: Long, filter: BloomFilter): Boolean =
+    filter.mightContainLong(key)
 
   def mightContain(key: Column, filter: BloomFilter): Column =
-    ColumnBridge.column(BloomMightContain(ColumnBridge.expression(key),
-      filter))
+    Kernel.call("bloom_might_contain", this, "probe", BooleanType,
+      Seq(key -> Seq(LongType)), filter)
 }

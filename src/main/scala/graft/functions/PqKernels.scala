@@ -2,27 +2,23 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-import org.apache.spark.sql.graftext.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** Codegen'd product-quantization kernels for LARGE codebooks.
   *
-  * `Quantize`'s plan-literal formulation unrolls k×m distance expressions
-  * into the generated code; at 64 codes/subspace the projection method
-  * overflows janino's 64 KB limit and the whole stage falls out of
-  * codegen (measured in SCALE.md § "Round-10 probe: IVF-PQ / IVFADC").
+  * A plan-literal formulation unrolls k×m distance expressions into the
+  * generated code; at 64 codes/subspace the projection method overflows
+  * janino's 64 KB limit and the whole stage falls out of codegen
+  * (measured in SCALE.md § "Round-10 probe: IVF-PQ / IVFADC").
   * Production PQ runs 256 codes/subspace, so the codebook must NOT live
   * in the source text.
-  * Here it rides the plan as a REFERENCE OBJECT (`ctx.addReferenceObj` —
-  * a field on the generated class, like any broadcast scalar): the
-  * generated code is a fixed-size kernel call regardless of k, and the
-  * argmin/table loops run as tight JVM loops over a flat double[].
+  * Here it rides the plan as a REFERENCE OBJECT (a [[Kernel]] constant,
+  * `ctx.addReferenceObj` — a field on the generated class, like any
+  * broadcast scalar): the generated code is a fixed-size kernel call
+  * regardless of k, and the argmin/table loops run as tight JVM loops
+  * over a flat double[].
   *
   * Arithmetic is EXACTLY the literal path's: per-subspace squared-L2
   * accumulated left-to-right in double (float widened exactly), argmin
@@ -36,22 +32,42 @@ import org.apache.spark.sql.types._
   * way, and the whole-row null is the stricter, documented behavior). */
 object PqKernels {
 
-  private def elemKind(dt: DataType): Option[Int] = dt match {
-    case ArrayType(DoubleType, _) => Some(0)
-    case ArrayType(FloatType, _) => Some(1)
-    case _ => None
+  /** `v` widened to a double[] (exact for float), or null when it does
+    * not hold exactly `dim` non-null elements. */
+  private def widen(v: ArrayData, kind: Int, dim: Int): Array[Double] = {
+    if (v.numElements() != dim) return null
+    val out = new Array[Double](dim)
+    var i = 0
+    while (i < dim) {
+      if (v.isNullAt(i)) return null
+      out(i) = Kernel.elem(v, i, kind)
+      i += 1
+    }
+    out
   }
 
-  private def elem(a: ArrayData, i: Int, kind: Int): Double =
-    if (kind == 0) a.getDouble(i) else a.getFloat(i).toDouble
+  /** Squared L2 between x[from, from+len) and the same span of code c's
+    * centroid, accumulated left to right. `cb` is row-major: code c's
+    * full-dim centroid occupies cb[c*dim .. c*dim+dim). */
+  private def dist(x: Array[Double], cb: Array[Double], c: Int, from: Int,
+                   len: Int): Double = {
+    val base = c * x.length
+    var acc = 0.0
+    var i = from
+    while (i < from + len) {
+      val d = x(i) - cb(base + i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
 
-  /** Per-subspace argmin codes + summed distortion. `cb` is row-major:
-    * code c's full-dim centroid occupies cb[c*dim .. c*dim+dim). */
+  /** Per-subspace argmin codes + summed distortion. */
   def encode(v: ArrayData, kind: Int, cb: Array[Double], m: Int,
              sub: Int): InternalRow = {
-    val dim = m * sub
-    val k = cb.length / dim
-    if (v.numElements() != dim) return null
+    val x = widen(v, kind, m * sub)
+    if (x == null) return null
+    val k = cb.length / x.length
     val codes = new Array[Int](m)
     var distortion = 0.0
     var j = 0
@@ -60,16 +76,8 @@ object PqKernels {
       var bestC = 0
       var c = 0
       while (c < k) {
-        var acc = 0.0
-        var i = 0
-        while (i < sub) {
-          val idx = j * sub + i
-          if (v.isNullAt(idx)) return null
-          val d = elem(v, idx, kind) - cb(c * dim + idx)
-          acc += d * d
-          i += 1
-        }
-        if (acc < best) { best = acc; bestC = c }
+        val d = dist(x, cb, c, j * sub, sub)
+        if (d < best) { best = d; bestC = c }
         c += 1
       }
       codes(j) = bestC
@@ -84,27 +92,15 @@ object PqKernels {
     * query's per-code subspace-j squared-L2 distances, indexed by code. */
   def adcTables(v: ArrayData, kind: Int, cb: Array[Double], m: Int,
                 sub: Int): ArrayData = {
-    val dim = m * sub
-    val k = cb.length / dim
-    if (v.numElements() != dim) return null
+    val x = widen(v, kind, m * sub)
+    if (x == null) return null
+    val k = cb.length / x.length
     val tables = new Array[Any](m)
     var j = 0
     while (j < m) {
       val t = new Array[Double](k)
       var c = 0
-      while (c < k) {
-        var acc = 0.0
-        var i = 0
-        while (i < sub) {
-          val idx = j * sub + i
-          if (v.isNullAt(idx)) return null
-          val d = elem(v, idx, kind) - cb(c * dim + idx)
-          acc += d * d
-          i += 1
-        }
-        t(c) = acc
-        c += 1
-      }
+      while (c < k) { t(c) = dist(x, cb, c, j * sub, sub); c += 1 }
       tables(j) = UnsafeArrayData.fromPrimitiveArray(t)
       j += 1
     }
@@ -115,22 +111,17 @@ object PqKernels {
     * identical ordering to the literal array_sort-of-structs probe. */
   def nearestLists(v: ArrayData, kind: Int, cb: Array[Double], dim: Int,
                    nProbe: Int): ArrayData = {
-    val k = cb.length / dim
-    if (v.numElements() != dim) return null
+    val x = widen(v, kind, dim)
+    if (x == null) return null
+    nearest(x, cb, nProbe)
+  }
+
+  private def nearest(x: Array[Double], cb: Array[Double],
+                      nProbe: Int): ArrayData = {
+    val k = cb.length / x.length
     val dists = new Array[Double](k)
     var c = 0
-    while (c < k) {
-      var acc = 0.0
-      var i = 0
-      while (i < dim) {
-        if (v.isNullAt(i)) return null
-        val d = elem(v, i, kind) - cb(c * dim + i)
-        acc += d * d
-        i += 1
-      }
-      dists(c) = acc
-      c += 1
-    }
+    while (c < k) { dists(c) = dist(x, cb, c, 0, x.length); c += 1 }
     val n = math.min(nProbe, k)
     // selection of n smallest by (dist, id): n·k scan, n and k are both
     // index-side constants (nProbe ≤ nLists ≪ corpus)
@@ -155,134 +146,50 @@ object PqKernels {
   /** v minus its nearest centroid (the IVF residual), one pass. */
   def residual(v: ArrayData, kind: Int, cb: Array[Double],
                dim: Int): ArrayData = {
-    val lists = nearestLists(v, kind, cb, dim, 1)
-    if (lists == null) return null
-    val c = lists.getInt(0)
-    val out = new Array[Double](dim)
+    val x = widen(v, kind, dim)
+    if (x == null) return null
+    val c = nearest(x, cb, 1).getInt(0)
     var i = 0
-    while (i < dim) {
-      out(i) = elem(v, i, kind) - cb(c * dim + i)
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
-
-  /** Base for the four kernel expressions: one array child, a flat
-    * codebook reference, mode-specific kernel dispatch. `cb` is a Seq so
-    * case-class equality (plan canonicalization, CSE) is structural. */
-  sealed abstract class PqKernelExpr extends UnaryExpression {
-    def cb: Seq[Double]
-    @transient protected lazy val cbArr: Array[Double] = cb.toArray
-    protected lazy val kind: Int = elemKind(child.dataType).get
-    override def checkInputDataTypes(): TypeCheckResult =
-      elemKind(child.dataType) match {
-        case Some(_) => TypeCheckResult.TypeCheckSuccess
-        case None => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<float|double>, got ${child.dataType}")
-      }
-    override def nullable: Boolean = true
-    /** kernel call rendered into generated code; `$a` is the child. */
-    protected def kernelCall(cbRef: String, a: String): String
-    protected def kernelEval(a: ArrayData): Any
-    override protected def nullSafeEval(a: Any): Any =
-      kernelEval(a.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext,
-                                     ev: ExprCode): ExprCode = {
-      val cbRef = ctx.addReferenceObj("pqCodebook", cbArr, "double[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("pqR")
-        val t = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-          .javaType(dataType)
-        s"""
-           |$t $r = ($t) ${kernelCall(cbRef, a)};
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = $r; }
-         """.stripMargin
-      })
-    }
-  }
-
-  case class PqEncodeExpr(child: Expression, cb: Seq[Double], m: Int,
-                          sub: Int) extends PqKernelExpr {
-    override def dataType: DataType = StructType(Seq(
-      StructField("codes", ArrayType(IntegerType, containsNull = false)),
-      StructField("distortion", DoubleType, nullable = false)))
-    override def prettyName: String = "pq_encode_k"
-    override protected def kernelCall(cbRef: String, a: String): String =
-      s"graft.functions.PqKernels.encode($a, $kind, $cbRef, $m, $sub)"
-    override protected def kernelEval(a: ArrayData): Any =
-      encode(a, kind, cbArr, m, sub)
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  case class AdcTablesExpr(child: Expression, cb: Seq[Double], m: Int,
-                           sub: Int) extends PqKernelExpr {
-    override def dataType: DataType =
-      ArrayType(ArrayType(DoubleType, containsNull = false),
-        containsNull = false)
-    override def prettyName: String = "pq_adc_tables_k"
-    override protected def kernelCall(cbRef: String, a: String): String =
-      s"graft.functions.PqKernels.adcTables($a, $kind, $cbRef, $m, $sub)"
-    override protected def kernelEval(a: ArrayData): Any =
-      adcTables(a, kind, cbArr, m, sub)
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  case class NearestListsExpr(child: Expression, cb: Seq[Double], dim: Int,
-                              nProbe: Int) extends PqKernelExpr {
-    override def dataType: DataType =
-      ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "ivf_nearest_lists_k"
-    override protected def kernelCall(cbRef: String, a: String): String =
-      s"graft.functions.PqKernels.nearestLists($a, $kind, $cbRef, $dim, $nProbe)"
-    override protected def kernelEval(a: ArrayData): Any =
-      nearestLists(a, kind, cbArr, dim, nProbe)
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  case class ResidualExpr(child: Expression, cb: Seq[Double], dim: Int)
-      extends PqKernelExpr {
-    override def dataType: DataType =
-      ArrayType(DoubleType, containsNull = false)
-    override def prettyName: String = "ivf_residual_k"
-    override protected def kernelCall(cbRef: String, a: String): String =
-      s"graft.functions.PqKernels.residual($a, $kind, $cbRef, $dim)"
-    override protected def kernelEval(a: ArrayData): Any =
-      residual(a, kind, cbArr, dim)
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
+    while (i < dim) { x(i) -= cb(c * dim + i); i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(x)
   }
 
   /** Flatten a (code → centroid) codebook into the kernels' row-major
     * layout, requiring contiguous codes 0..k-1 (what `seedCodebook`
-    * mints — the same requirement the literal matrix path has). */
-  def flatten(cb: Seq[(Int, Seq[Double])]): Seq[Double] = {
+    * mints). */
+  def flatten(cb: Seq[(Int, Seq[Double])]): Array[Double] = {
     val sorted = cb.sortBy(_._1)
     require(sorted.map(_._1) == sorted.indices.toSeq,
       s"codebook codes must be contiguous 0..${cb.size - 1}")
-    sorted.flatMap(_._2)
+    sorted.flatMap(_._2).toArray
   }
+
+  /** The kernels read array<double> or array<float> vectors. */
+  private val Vectors: Seq[DataType] = Kernel.NumericArrays.take(2)
 
   def encodeCol(vec: Column, cb: Seq[(Int, Seq[Double])], m: Int,
                 sub: Int): Column =
-    ColumnBridge.column(PqEncodeExpr(ColumnBridge.expression(vec),
-      flatten(cb), m, sub))
+    Kernel.call("pq_encode_k", this, "encode", StructType(Seq(
+      StructField("codes", ArrayType(IntegerType, containsNull = false)),
+      StructField("distortion", DoubleType, nullable = false))),
+      Seq(vec -> Vectors), flatten(cb), m, sub)
 
   def adcTablesCol(vec: Column, cb: Seq[(Int, Seq[Double])], m: Int,
                    sub: Int): Column =
-    ColumnBridge.column(AdcTablesExpr(ColumnBridge.expression(vec),
-      flatten(cb), m, sub))
+    Kernel.call("pq_adc_tables_k", this, "adcTables",
+      ArrayType(ArrayType(DoubleType, containsNull = false),
+        containsNull = false),
+      Seq(vec -> Vectors), flatten(cb), m, sub)
 
   def nearestListsCol(vec: Column, cb: Seq[(Int, Seq[Double])], dim: Int,
                       nProbe: Int): Column =
-    ColumnBridge.column(NearestListsExpr(ColumnBridge.expression(vec),
-      flatten(cb), dim, nProbe))
+    Kernel.call("ivf_nearest_lists_k", this, "nearestLists",
+      ArrayType(IntegerType, containsNull = false),
+      Seq(vec -> Vectors), flatten(cb), dim, nProbe)
 
   def residualCol(vec: Column, cb: Seq[(Int, Seq[Double])],
                   dim: Int): Column =
-    ColumnBridge.column(ResidualExpr(ColumnBridge.expression(vec),
-      flatten(cb), dim))
+    Kernel.call("ivf_residual_k", this, "residual",
+      ArrayType(DoubleType, containsNull = false),
+      Seq(vec -> Vectors), flatten(cb), dim)
 }

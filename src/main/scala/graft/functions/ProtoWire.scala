@@ -4,8 +4,6 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftext.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,9 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * `spark-protobuf` is not on this classpath, so the wire format (varint
   * tags + length-delimited strings — the whole message is flat) is encoded
-  * directly by a pair of Catalyst expressions whose `doGenCode` emits a
-  * static kernel call — the sink projection stays inside whole-stage
-  * codegen, and the byte layout lives in one auditable place.
+  * directly by a pair of static kernels called through [[Kernel]] — the
+  * sink projection stays inside whole-stage codegen, and the byte layout
+  * lives in one auditable place.
   *
   * CONFORMANCE: the encoding is SCHEMA-faithful but not WIRE-compatible
   * with the reference's downstream consumers. The reference serializes
@@ -165,58 +163,13 @@ object ProtoWire {
     InternalRow.fromSeq(values.toIndexedSeq)
   }
 
-  case class TripCancellationToProto(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = BinaryType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case s: StructType if s.length == payloadSchema.length &&
-          s.fields.map(_.dataType).sameElements(payloadSchema.fields.map(_.dataType)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"expected TripCancellation payload struct, got $other")
-      }
-    override protected def nullSafeEval(input: Any): Any =
-      encode(input.asInstanceOf[InternalRow])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.ProtoWire.encode((org.apache.spark.sql.catalyst.InternalRow) $c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-    override def prettyName: String = "trip_cancellation_to_proto"
-  }
-
-  case class TripCancellationFromProto(child: Expression)
-      extends UnaryExpression {
-    override def dataType: DataType = payloadSchema
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case BinaryType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"expected binary protobuf bytes, got $other")
-      }
-    override protected def nullSafeEval(input: Any): Any =
-      decode(input.asInstanceOf[Array[Byte]])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.ProtoWire.decode((byte[]) $c)")
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-    override def prettyName: String = "trip_cancellation_from_proto"
-  }
-
   /** `to_protobuf`-shaped Column API. */
   def toProto(payload: Column): Column =
-    ColumnBridge.column(TripCancellationToProto(ColumnBridge.expression(payload)))
+    Kernel.call("trip_cancellation_to_proto", this, "encode", BinaryType,
+      Seq(payload -> Seq(payloadSchema)))
 
   /** `from_protobuf`-shaped Column API. */
   def fromProto(bytes: Column): Column =
-    ColumnBridge.column(TripCancellationFromProto(ColumnBridge.expression(bytes)))
+    Kernel.call("trip_cancellation_from_proto", this, "decode",
+      payloadSchema, Seq(bytes -> Seq(BinaryType)))
 }

@@ -49,7 +49,7 @@ object TextExprs {
     * short docs joinable in near-dup pipelines). */
   // Empty doc → empty shingle set (not [""]): otherwise every empty doc
   // becomes a mutual near-dup candidate of every other empty doc. r18:
-  // one codegen'd kernel call (TextKernels.WordGrams, SHINGLE mode)
+  // one codegen'd kernel call (TextKernels.wordShingles)
   // replacing the interpreted transform/array_join/array_distinct HOF
   // chain — element-identical incl. first-occurrence distinct order,
   // pinned against the HOF reference in TextExprsSpec.
@@ -116,7 +116,7 @@ object TextExprs {
     * the characters (h ← (h·31 + code) mod 1e9+7). Same recurrence is
     * expressible in ANSI SQL (list_reduce), giving an oracle-checkable
     * fingerprint — unlike xxhash64 which is engine-specific. Evaluated by
-    * the codegen'd `HashKernels.PolyHash` (bit-identical to the HOF fold
+    * the codegen'd `HashKernels.polyHash` (bit-identical to the HOF fold
     * it replaces — pinned by HashKernelsSpec and the oracle gate). */
   def polyFingerprint(text: Column): Column =
     HashKernels.polyHash(text, 31L, 1000000007L)

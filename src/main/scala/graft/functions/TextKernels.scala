@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftext.ColumnBridge
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd text kernels for the near-dup hot path.
@@ -15,9 +13,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * cells; the band computes at most (2k+1)·min(|a|,|b|) and exits the
   * moment a whole band row exceeds k — for a verify stage that mostly
   * REJECTS candidate pairs (the common case in blocker→verify dedup),
-  * rejection costs O(k²) instead of O(n²). The expression participates in
-  * whole-stage codegen via `doGenCode` (a static-call kernel, the same
-  * shape Spark's own string expressions use) — no boxing, no fallback.
+  * rejection costs O(k²) instead of O(n²). Every kernel here is called
+  * from inside whole-stage codegen through [[Kernel]] (a static call,
+  * the same shape Spark's own string expressions use) — no boxing, no
+  * fallback.
   */
 object TextKernels {
 
@@ -68,39 +67,11 @@ object TextKernels {
     if (row(n) <= k) row(n) else -1
   }
 
-  case class BoundedLevenshtein(first: Expression, second: Expression,
-                                third: Expression)
-      extends TernaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult =
-      (first.dataType, second.dataType, third.dataType) match {
-        case (StringType, StringType, IntegerType) =>
-          TypeCheckResult.TypeCheckSuccess
-        case other =>
-          TypeCheckResult.TypeCheckFailure(
-            s"bounded_levenshtein expects (string, string, int), got $other")
-      }
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "bounded_levenshtein"
-
-    override protected def nullSafeEval(a: Any, b: Any, k: Any): Any =
-      boundedLevenshtein(a.asInstanceOf[UTF8String],
-        b.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, (a, b, k) =>
-        s"graft.functions.TextKernels.boundedLevenshtein($a, $b, $k)")
-
-    override protected def withNewChildrenInternal(
-        newFirst: Expression, newSecond: Expression,
-        newThird: Expression): Expression =
-      copy(first = newFirst, second = newSecond, third = newThird)
-  }
-
   /** Column API: exact distance if ≤ `bound`, −1 otherwise. */
   def boundedLevenshtein(a: Column, b: Column, bound: Int): Column =
-    ColumnBridge.column(BoundedLevenshtein(
-      ColumnBridge.expression(a), ColumnBridge.expression(b),
-      org.apache.spark.sql.catalyst.expressions.Literal(bound)))
+    Kernel.call("bounded_levenshtein", this, "boundedLevenshtein",
+      IntegerType, Seq(a -> Strings, b -> Strings,
+        lit(bound) -> Seq(IntegerType)))
 
   /** Unicode NFC normalization (canonical composition): "é" as e+combining
     * acute and "é" precomposed become the SAME string — the prerequisite
@@ -110,9 +81,7 @@ object TextKernels {
     * so no `toString` materialization is ever paid for them. Non-ASCII
     * already-NFC strings pay one String copy for the quick-check
     * (`isNormalized`) and pass the original through; only denormalized
-    * input pays the full normalize. Static-call kernel with `doGenCode`:
-    * stays inside whole-stage codegen like the Levenshtein and PolyHash
-    * kernels. */
+    * input pays the full normalize. */
   def nfc(s: UTF8String): UTF8String = {
     if (s.isFullAscii) return s
     val str = s.toString
@@ -121,29 +90,10 @@ object TextKernels {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  case class NfcNormalize(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"nfc_normalize expects a string input, got $other")
-    }
-    override def dataType: DataType = StringType
-    override def prettyName: String = "nfc_normalize"
-
-    override protected def nullSafeEval(input: Any): Any =
-      nfc(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.TextKernels.nfc($c)")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** Column API: Unicode NFC canonical composition. */
   def nfcNormalize(text: Column): Column =
-    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(text)))
+    Kernel.call("nfc_normalize", this, "nfc", StringType,
+      Seq(text -> Strings))
 
   /** Number of letter CODE POINTS in the string — the exact value of
     * `length(regexp_replace(text, "[^\\p{L}]", ""))` computed in ONE
@@ -182,29 +132,10 @@ object TextKernels {
     }
   }
 
-  case class LetterUnits(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"letter_units expects a string input, got $other")
-    }
-    override def dataType: DataType = IntegerType
-    override def prettyName: String = "letter_units"
-
-    override protected def nullSafeEval(input: Any): Any =
-      letterUnits(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.TextKernels.letterUnits($c)")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** Column API: letter-code-unit count (see [[letterUnits]]). */
   def letterUnits(text: Column): Column =
-    ColumnBridge.column(LetterUnits(ColumnBridge.expression(text)))
+    Kernel.call("letter_units", this, "letterUnits", IntegerType,
+      Seq(text -> Strings))
 
   /** Word n-grams of a token array as ONE kernel call (r18) — the hot
     * map-side pass under every shingle/gram operator (contamination,
@@ -226,14 +157,11 @@ object TextKernels {
     *    order); an empty token array → empty set.
     *
     * Parity with the HOF forms is pinned in TextExprsSpec. */
-  def wordGramsKernel(ts: org.apache.spark.sql.catalyst.util.ArrayData,
-                      n: Int, shingle: Boolean)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+  def wordGramsKernel(ts: ArrayData, n: Int, shingle: Boolean): ArrayData = {
     val k = ts.numElements()
     val empty = if (shingle) k == 0 else k < n
     if (empty)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array.empty[Any])
+      return new GenericArrayData(Array.empty[Any])
     val toks = new Array[UTF8String](k)
     var i = 0
     while (i < k) {
@@ -241,69 +169,33 @@ object TextKernels {
       i += 1
     }
     val sep = UTF8String.fromString(" ")
-    val last = math.max(k - n, 0)
-    if (!shingle) {
-      val out = new Array[Any](last + 1)
-      var g = 0
-      while (g <= last) {
-        val win = java.util.Arrays.copyOfRange(toks, g, g + n)
-        out(g) = UTF8String.concatWs(sep, win: _*)
-        g += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-    } else {
-      val seen = new java.util.LinkedHashSet[UTF8String]()
-      var g = 0
-      while (g <= last) {
-        val win = java.util.Arrays.copyOfRange(toks, g, math.min(g + n, k))
-        seen.add(UTF8String.concatWs(sep, win: _*))
-        g += 1
-      }
-      val out = new Array[Any](seen.size)
-      val it = seen.iterator()
-      var r = 0
-      while (it.hasNext) { out(r) = it.next(); r += 1 }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    // SLIDE has k >= n here, so only SHINGLE's last windows are truncated
+    val out = new Array[Any](math.max(k - n, 0) + 1)
+    var g = 0
+    while (g < out.length) {
+      val win = java.util.Arrays.copyOfRange(toks, g, math.min(g + n, k))
+      out(g) = UTF8String.concatWs(sep, win: _*)
+      g += 1
     }
+    new GenericArrayData(if (shingle) out.distinct else out)
   }
 
-  case class WordGrams(child: Expression, n: Int, shingle: Boolean)
-      extends UnaryExpression {
+  private def wordGrams(tokens: Column, n: Int, shingle: Boolean): Column = {
     require(n >= 1, s"word_grams needs n >= 1, got $n")
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(StringType, _) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"word_grams expects array<string>, got $other")
-    }
-    override def dataType: DataType =
-      org.apache.spark.sql.types.ArrayType(StringType,
-        containsNull = false)
-    override def prettyName: String =
-      if (shingle) "word_shingles_k" else "word_grams_k"
-
-    override protected def nullSafeEval(input: Any): Any =
-      wordGramsKernel(
-        input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-        n, shingle)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.TextKernels.wordGramsKernel($c, $n, $shingle)")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
+    Kernel.call(if (shingle) "word_shingles_k" else "word_grams_k", this,
+      "wordGramsKernel", ArrayType(StringType, containsNull = false),
+      Seq(tokens -> Seq(ArrayType(StringType))), n, shingle)
   }
 
-  /** Column API: SLIDE-mode [[WordGrams]] (full windows, no distinct). */
+  /** Column API: SLIDE-mode [[wordGramsKernel]] (full windows, no
+    * distinct). */
   def slideGrams(tokens: Column, n: Int): Column =
-    ColumnBridge.column(WordGrams(ColumnBridge.expression(tokens), n,
-      shingle = false))
+    wordGrams(tokens, n, shingle = false)
 
-  /** Column API: SHINGLE-mode [[WordGrams]] (clamped windows, distinct). */
+  /** Column API: SHINGLE-mode [[wordGramsKernel]] (clamped windows,
+    * distinct). */
   def wordShingles(tokens: Column, n: Int): Column =
-    ColumnBridge.column(WordGrams(ColumnBridge.expression(tokens), n,
-      shingle = true))
+    wordGrams(tokens, n, shingle = true)
 
   /** Shannon entropy (nats) of the string's CODE-POINT distribution,
     * replicating TextExprs.charEntropy's interpreted HOF formulation
@@ -339,29 +231,12 @@ object TextKernels {
     ent
   }
 
-  case class CharEntropy(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"char_entropy expects a string input, got $other")
-    }
-    override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-    override def prettyName: String = "char_entropy"
-
-    override protected def nullSafeEval(input: Any): Any =
-      charEntropyNats(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      defineCodeGen(ctx, ev, c =>
-        s"graft.functions.TextKernels.charEntropyNats($c)")
-
-    override protected def withNewChildInternal(newChild: Expression): Expression =
-      copy(child = newChild)
-  }
-
   /** Column API: un-rounded code-point entropy in nats (callers own the
     * empty-string guard and the oracle-grain rounding — see
     * TextExprs.charEntropy). */
   def charEntropyNats(text: Column): Column =
-    ColumnBridge.column(CharEntropy(ColumnBridge.expression(text)))
+    Kernel.call("char_entropy", this, "charEntropyNats", DoubleType,
+      Seq(text -> Strings))
+
+  private val Strings = Seq(StringType)
 }

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftext.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Native codegen'd dense-vector kernels — the inner loop of every
   * similarity operator (brute-force/IVF top-k scoring, embedding
@@ -17,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, Fl
   * product (or squared difference) accumulated left-to-right in double.
   * float→double widening is exact and the loop preserves the fold's
   * addition order, so results are bit-identical to the higher-order
-  * form (pinned by VecKernelsSpec and the oracle gate). Like PolyHash,
+  * form (pinned by VecKernelsSpec and the oracle gate). Like poly_hash,
   * the HOF pipeline ran interpreted (HOFs never enter whole-stage
-  * codegen) and boxed every element; this expression walks the two
+  * codegen) and boxed every element; this kernel walks the two
   * ArrayData buffers once per row inside codegen.
   *
   * Null semantics mirror the HOF form: null array, mismatched lengths
@@ -28,11 +24,11 @@ object VecKernels {
 
   /** mode 0: Σ a·b (dot); mode 1: Σ (a−b)² (squared L2). Boxed return
     * carries the null case; one box per ROW, vs one per element before.
-    * `kind` selects the element reader (0=double 1=float 2=long 3=int
-    * 4=short 5=byte) — integer arrays are widened to double per element,
-    * exactly what the pre-kernel `cast('array<double>')` fallback did, so
-    * external callers with numeric (non-float) embeddings keep working. */
-  def combine(a: ArrayData, b: ArrayData, aKind: Int, bKind: Int,
+    * The kinds select the element reader ([[Kernel.elem]]) — integer
+    * arrays are widened to double per element, exactly what the
+    * pre-kernel `cast('array<double>')` fallback did, so external callers
+    * with numeric (non-float) embeddings keep working. */
+  def combine(a: ArrayData, aKind: Int, b: ArrayData, bKind: Int,
       mode: Int): java.lang.Double = {
     val n = a.numElements()
     if (b.numElements() != n) return null
@@ -40,74 +36,19 @@ object VecKernels {
     var i = 0
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
-      val x = elem(a, i, aKind)
-      val y = elem(b, i, bKind)
+      val x = Kernel.elem(a, i, aKind)
+      val y = Kernel.elem(b, i, bKind)
       acc += (if (mode == 0) x * y else (x - y) * (x - y))
       i += 1
     }
     java.lang.Double.valueOf(acc)
   }
 
-  private def elem(a: ArrayData, i: Int, kind: Int): Double = kind match {
-    case 0 => a.getDouble(i)
-    case 1 => a.getFloat(i).toDouble
-    case 2 => a.getLong(i).toDouble
-    case 3 => a.getInt(i).toDouble
-    case 4 => a.getShort(i).toDouble
-    case _ => a.getByte(i).toDouble
-  }
+  private def vec(name: String, a: Column, b: Column, mode: Int): Column =
+    Kernel.call(name, this, "combine", DoubleType,
+      Seq(a -> Kernel.NumericArrays, b -> Kernel.NumericArrays), mode)
 
-  case class VecCombine(left: Expression, right: Expression, mode: Int)
-      extends BinaryExpression {
-    private def elemKind(dt: DataType): Option[Int] = dt match {
-      case ArrayType(DoubleType, _) => Some(0)
-      case ArrayType(FloatType, _) => Some(1)
-      case ArrayType(LongType, _) => Some(2)
-      case ArrayType(IntegerType, _) => Some(3)
-      case ArrayType(ShortType, _) => Some(4)
-      case ArrayType(ByteType, _) => Some(5)
-      case _ => None
-    }
-    override def checkInputDataTypes(): TypeCheckResult =
-      (elemKind(left.dataType), elemKind(right.dataType)) match {
-        case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
-        case _ => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects arrays of float/double/integral elements, " +
-            s"got (${left.dataType}, ${right.dataType})")
-      }
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = true
-    override def prettyName: String =
-      if (mode == 0) "vec_dot" else "vec_l2sq"
+  def dot(a: Column, b: Column): Column = vec("vec_dot", a, b, 0)
 
-    private lazy val aKind = elemKind(left.dataType).get
-    private lazy val bKind = elemKind(right.dataType).get
-
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      combine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-        aKind, bKind, mode)
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val r = ctx.freshName("vecR")
-        s"""
-           |java.lang.Double $r = graft.functions.VecKernels.combine(
-           |  $a, $b, $aKind, $bKind, $mode);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = $r.doubleValue(); }
-         """.stripMargin
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  def dot(a: Column, b: Column): Column =
-    ColumnBridge.column(VecCombine(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), 0))
-
-  def l2sq(a: Column, b: Column): Column =
-    ColumnBridge.column(VecCombine(
-      ColumnBridge.expression(a), ColumnBridge.expression(b), 1))
+  def l2sq(a: Column, b: Column): Column = vec("vec_l2sq", a, b, 1)
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * The arithmetic contract is the plain left-to-right fold
   * `aggregate(zip_with(a, b, x·y), 0.0, +)` in double — reproducible and
   * oracle-comparable. `dot`/`l2sq` are evaluated by the codegen'd
-  * `VecKernels.VecCombine` (bit-identical to that fold — higher-order
+  * `VecKernels.combine` kernel (bit-identical to that fold — higher-order
   * functions run interpreted and boxed every element; see
   * VecKernelsSpec for the pinned parity).
   */

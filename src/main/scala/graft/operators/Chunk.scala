@@ -65,13 +65,13 @@ object Chunk {
     *
     * Pure map-side like [[tokenChunks]]: cut positions come from ONE
     * codegen'd kernel call per row ([[graft.functions.HashKernels
-    * .CdcCuts]] — NOT a filter/transform HOF, which evaluates
+    * .cdcCuts]] — NOT a filter/transform HOF, which evaluates
     * interpreted per element and benched 34× slower at sf0.1), chunk
     * spans from zipping `[0, cuts+1]` with `[cuts, n-1]`, and the
     * explode emits `slice` windows — no shuffle, no window function,
     * the corpus streams through one projection. The hash is the
     * oracle-portable polynomial fold ([[graft.functions.HashKernels
-    * .polyHash]] — CdcCuts evaluates exactly it per token), so every
+    * .polyHash]] — cdc_cuts evaluates exactly it per token), so every
     * boundary decision AND every chunk hash replays relationally (the
     * oracle formulates the same chunking as an exclusive prefix sum
     * over cut flags — provably the same partition of each doc).
@@ -89,7 +89,7 @@ object Chunk {
     val mod = 1000000007L
     val ts = col("__ts")
     val n = org.apache.spark.sql.functions.size(ts)
-    // cut scan is ONE codegen'd kernel call per row (HashKernels.CdcCuts)
+    // cut scan is ONE codegen'd kernel call per row (HashKernels.cdcCuts)
     // — the equivalent filter-HOF form runs interpreted per element and
     // benched 34x slower at sf0.1
     val base = df.select(id.as("id"), TextExprs.tokens(text).as("__ts"))

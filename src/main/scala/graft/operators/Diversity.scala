@@ -31,7 +31,7 @@ object Diversity {
   /** Every n-gram occurrence of the token array (NOT deduplicated —
     * unlike `TextExprs.wordShingles`, which is a distinct SET for
     * similarity). Empty when the doc has fewer than n tokens. */
-  // r18: one codegen'd kernel call (TextKernels.WordGrams, SLIDE mode)
+  // r18: one codegen'd kernel call (TextKernels.slideGrams)
   // replacing the interpreted transform/array_join HOF — identical
   // output (full n-windows only; < n tokens → empty), pinned against
   // the HOF reference in TextExprsSpec.

@@ -6,12 +6,16 @@ Usage: python3 tools/verify_diff.py <verifyOutA> <verifyOutB>
 For every query dir in either tree: the parquet schemas (column names and
 types, in order) must be equal, and the rows, sorted, must be equal value
 for value (exact: floats compare by their shortest round-trip repr, no
-rounding). `oracle_sql.json` must be byte-identical. Prints one line per
-difference and a summary; exits 1 on any difference. Use it to show that
-a refactor leaves every registered query's output unchanged.
+rounding). `oracle_sql.json` must be byte-identical once each side's
+absolute OMM fixture root (`read_parquet('<checkout>/fixtures/omm/`, which
+the oracles embed so DuckDB can run them from any directory) is replaced
+by one fixed token, so dumps from two checkouts compare equal. Prints one
+line per difference and a summary; exits 1 on any difference. Use it to
+show that a refactor leaves every registered query's output unchanged.
 """
 import glob
 import os
+import re
 import sys
 
 import pyarrow.parquet as pq
@@ -49,6 +53,16 @@ def load(qdir):
     return fields, sorted(rows)
 
 
+FIXTURE_ROOT = re.compile(rb"read_parquet\('[^']*/fixtures/omm/")
+
+
+def oracle_bytes(path):
+    """oracle_sql.json with the checkout's fixture root masked."""
+    with open(path, "rb") as f:
+        return FIXTURE_ROOT.sub(b"read_parquet('<checkout>/fixtures/omm/",
+                                f.read())
+
+
 def query_dirs(out_dir):
     return {os.path.basename(q.rstrip("/"))
             for q in glob.glob(os.path.join(out_dir, "*/"))}
@@ -65,8 +79,7 @@ def main(a, b):
     oa, ob = (os.path.join(d, "oracle_sql.json") for d in (a, b))
     oracle_same = os.path.exists(oa) and os.path.exists(ob)
     if oracle_same:
-        with open(oa, "rb") as fa, open(ob, "rb") as fb:
-            oracle_same = fa.read() == fb.read()
+        oracle_same = oracle_bytes(oa) == oracle_bytes(ob)
     if not oracle_same:
         fail("oracle_sql.json is missing or not byte-identical")
     qa, qb = query_dirs(a), query_dirs(b)
