@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.TimeExprs
 import graft.operators.Dedup
 import graft.sources.ParquetContract
+import graft.streaming.PollOps
 
 /** The flagship OMM trip-cancellation pipeline, re-expressed Spark-first.
   *
@@ -27,6 +28,17 @@ import graft.sources.ParquetContract
   * dimension data and is broadcast. DVJ/VJ/VJT/KVV grow with the timetable —
   * they shuffle-join on their keys, and every filter is a plain pushdown-able
   * predicate, so the plan survives a 100× scale-up without changes.
+  *
+  * The seven timetable relations join into `departures`, which the poll
+  * (`CancellationStream.pollOnce`) holds persisted per file version, so a
+  * warm poll joins only the incident tables to it. The version covers each
+  * relation's schema and, per file, its file key (the inode, so a hard
+  * link is the same file) or path, length and modification time
+  * (`ParquetContract.version`). A JDBC relation lists no files and has no
+  * version, so the service's JDBC path builds the dimension per poll, as
+  * before. The held copy is bounded by the timetable after F3–F6 (a row
+  * per journey and accepted key type, six columns) and is stored
+  * MEMORY_AND_DISK.
   */
 object CancellationPipeline {
 
@@ -51,12 +63,14 @@ object CancellationPipeline {
 
   /** The 11 tables as `<dir>/<table>.parquet`, each opened with its
     * `OmmSchemas` contract: no schema-inference job, and a footer check
-    * that fails loudly on a missing or retyped contract column. */
+    * that fails loudly on a missing or retyped contract column. The opens
+    * are driver-side listings and footer reads, so they run concurrently. */
   def loadTables(spark: SparkSession, dir: String): OmmTables = {
-    val tables = OmmSchemas.contracts.map { case (name, schema) =>
-      name -> ParquetContract.read(spark, name, s"$dir/$name.parquet", schema)
-    }.toMap
-    OmmTables.byName(tables)
+    val opened = PollOps.inParallel(OmmSchemas.contracts.map {
+      case (name, schema) =>
+        () => ParquetContract.read(spark, name, s"$dir/$name.parquet", schema)
+    })
+    OmmTables.byName(OmmSchemas.contracts.map(_._1).zip(opened).toMap)
   }
 
   private val wallClockFmt =
@@ -78,22 +92,70 @@ object CancellationPipeline {
     * per-poll wall-clock parameter bindings (S2, OmmConnector.java:61–81);
     * `lookback` is the PAST-mode re-emission bound, pre-rendered driver-side
     * (see `lookbackBound`) so the instant-space subtraction semantics are
-    * preserved across DST transitions. */
+    * preserved across DST transitions. `held` is a copy of `departures(t)`
+    * the caller keeps across polls (see `snapshotBase`). */
   def snapshot(t: OmmTables, mode: Mode, now: String, today: String,
                lookback: String,
-               cancellationTypesOnly: Boolean = false): DataFrame =
-    applyValidity(snapshotBase(t, cancellationTypesOnly),
+               cancellationTypesOnly: Boolean = false,
+               held: Option[DataFrame] = None): DataFrame =
+    applyValidity(snapshotBase(t, cancellationTypesOnly, held),
       mode, now, today, lookback)
 
-  /** The poll-INVARIANT part of the snapshot: joins J1–J10, static filters
-    * F1/F3–F7, and the 17-column projection (plus the raw
-    * `OperatingDayDate` the validity predicate needs). Split out so a
-    * caller evaluating the SAME data under several `(now, today)` bindings
+  /** The departure dimension: the seven Jore timetable relations joined
+    * (J5–J10) and filtered (F3–F6), with the projections that read only
+    * the timetable, keyed by the DVJ id J4 joins on. Nothing in it depends
+    * on the incident tables or on the poll's `now`, so it is the same
+    * relation on every poll while the timetable files are unchanged. */
+  def departures(t: OmmTables): DataFrame = {
+    val dvj = t.dvj.select(
+      col("Id").as("dvj_raw_id"), col("OperatingDayDate"),
+      col("IsBasedOnVehicleJourneyId"), col("IsBasedOnVehicleJourneyTemplateId"),
+      col("IsReplacedById"), col("PlannedStartOffsetDateTime"))
+    val vj = t.vj.select(col("Id").as("vj_id"))
+    val vjt = t.vjt.select(col("Id").as("vjt_id"),
+      col("IsWorkedOnDirectionOfLineGid").as("gid"))
+    val kvv = t.kvv.select(col("IsForObjectId"), col("IsOfKeyVariantTypeId"),
+      col("StringValue").as("ROUTE_NAME"))
+    val kvt = t.kvt.select(col("Id").as("kvt_id"), col("IsForKeyTypeId"))
+    val kt = t.kt.select(col("Id").as("kt_id"),
+      col("ExtendsObjectTypeNumber"), col("Name").as("kt_name"))
+    val ot = t.ot.select(col("Number").as("ot_number"), col("Name").as("ot_name"))
+
+    dvj
+      .join(vj, col("vj_id") === col("IsBasedOnVehicleJourneyId")) // J5
+      .join(vjt, col("vjt_id") === col("IsBasedOnVehicleJourneyTemplateId")) // J6
+      .join(kvv, col("IsForObjectId") === col("vj_id")) // J7
+      .join(broadcast(kvt), col("kvt_id") === col("IsOfKeyVariantTypeId")) // J8
+      .join(broadcast(kt), col("kt_id") === col("IsForKeyTypeId")) // J9
+      .join(broadcast(ot), col("ot_number") === col("ExtendsObjectTypeNumber")) // J10
+      .filter(col("kt_name").isin("JoreIdentity", "JoreRouteIdentity", "RouteName")) // F3
+      .filter(col("ot_name") === "VehicleJourney") // F4
+      .filter(col("gid").isNotNull) // F5
+      .filter(col("IsReplacedById").isNull) // F6
+      .select(
+        col("dvj_raw_id"), col("ROUTE_NAME"),
+        substring(col("gid"), 12, 1).cast("int").as("DIRECTION"), // P3+P4
+        TimeExprs.style112(col("OperatingDayDate")).as("OPERATING_DAY"), // P5
+        TimeExprs.serviceDayTime( // P6+P7+P8: >24h-safe service-day time
+          lit("1900-01-01 00:00:00").cast("timestamp"),
+          col("PlannedStartOffsetDateTime")).as("START_TIME"),
+        col("OperatingDayDate")) // raw date for applyValidity
+  }
+
+  /** The poll-INVARIANT part of the snapshot: the incident side
+    * (DC ⟕ AD ⟕ BLM ⟕ B, J1–J3) inner-joined to `departures(t)` (J4),
+    * static filters F1/F7, and the 17-column projection (plus the raw
+    * `OperatingDayDate` the validity predicate needs). Every timetable join
+    * is inner, so joining the filtered dimension is the reference's join
+    * tree re-associated: same rows. `held`, when given, stands for
+    * `departures(t)` (a copy persisted across polls). Split out so a caller
+    * evaluating the SAME data under several `(now, today)` bindings
     * (batch-over-batch diff, backfills) can persist this subtree once and
     * apply each per-poll validity filter to the cached relation instead of
     * re-running the whole join tree per binding. */
   def snapshotBase(t: OmmTables,
-                   cancellationTypesOnly: Boolean = false): DataFrame = {
+                   cancellationTypesOnly: Boolean = false,
+                   held: Option[DataFrame] = None): DataFrame = {
     val dc = t.dc.select(
       col("deviation_case_id"), col("bulletin_id").as("dc_bulletin_id"),
       col("valid_from").as("VALID_FROM"), col("valid_to").as("VALID_TO"),
@@ -111,19 +173,6 @@ object CancellationPipeline {
     val b = t.b.select(
       col("bulletins_id").as("b_bulletins_id"),
       col("category").as("CATEGORY"), col("sub_category").as("SUB_CATEGORY"))
-    val dvj = t.dvj.select(
-      col("Id").as("dvj_raw_id"), col("OperatingDayDate"),
-      col("IsBasedOnVehicleJourneyId"), col("IsBasedOnVehicleJourneyTemplateId"),
-      col("IsReplacedById"), col("PlannedStartOffsetDateTime"))
-    val vj = t.vj.select(col("Id").as("vj_id"))
-    val vjt = t.vjt.select(col("Id").as("vjt_id"),
-      col("IsWorkedOnDirectionOfLineGid").as("gid"))
-    val kvv = t.kvv.select(col("IsForObjectId"), col("IsOfKeyVariantTypeId"),
-      col("StringValue").as("ROUTE_NAME"))
-    val kvt = t.kvt.select(col("Id").as("kvt_id"), col("IsForKeyTypeId"))
-    val kt = t.kt.select(col("Id").as("kt_id"),
-      col("ExtendsObjectTypeNumber"), col("Name").as("kt_name"))
-    val ot = t.ot.select(col("Number").as("ot_number"), col("Name").as("ot_name"))
 
     // F7: the reference ships this predicate commented out (CC:31) — all
     // deviation types flow through by default; kept available behind a flag.
@@ -137,18 +186,9 @@ object CancellationPipeline {
       .join(ad, col("deviation_case_id") === col("ad_case_id"), "left") // J1
       .join(blm, col("dc_bulletin_id") === col("blm_bulletins_id"), "left") // J2
       .join(b, col("dc_bulletin_id") === col("b_bulletins_id"), "left") // J3
-      .join(dvj, col("dvj_raw_id") === col("ad_departure_id")) // J4
-      .join(vj, col("vj_id") === col("IsBasedOnVehicleJourneyId")) // J5
-      .join(vjt, col("vjt_id") === col("IsBasedOnVehicleJourneyTemplateId")) // J6
-      .join(kvv, col("IsForObjectId") === col("vj_id")) // J7
-      .join(broadcast(kvt), col("kvt_id") === col("IsOfKeyVariantTypeId")) // J8
-      .join(broadcast(kt), col("kt_id") === col("IsForKeyTypeId")) // J9
-      .join(broadcast(ot), col("ot_number") === col("ExtendsObjectTypeNumber")) // J10
+      .join(held.getOrElse(departures(t)),
+        col("dvj_raw_id") === col("ad_departure_id")) // J4
       .filter(col("language_code") === "fi") // F1 (turns J2 inner for null BLM)
-      .filter(col("kt_name").isin("JoreIdentity", "JoreRouteIdentity", "RouteName")) // F3
-      .filter(col("ot_name") === "VehicleJourney") // F4
-      .filter(col("gid").isNotNull) // F5
-      .filter(col("IsReplacedById").isNull) // F6
       .filter(typeFilter) // F7 (disabled by default, as in the reference)
       .select( // P1: the 17-column result relation (CC:1–19)
         col("deviation_case_id"),
@@ -158,12 +198,8 @@ object CancellationPipeline {
         col("AFFECTED_DEPARTURES_STATUS"), col("AFFECTED_DEPARTURES_TYPE"),
         col("TITLE"), col("DESCRIPTION"), col("CATEGORY"), col("SUB_CATEGORY"),
         col("dvj_raw_id").cast("string").as("DVJ_ID"), // P2 (Java reads back as long)
-        col("ROUTE_NAME"),
-        substring(col("gid"), 12, 1).cast("int").as("DIRECTION"), // P3+P4
-        TimeExprs.style112(col("OperatingDayDate")).as("OPERATING_DAY"), // P5
-        TimeExprs.serviceDayTime( // P6+P7+P8: >24h-safe service-day time
-          lit("1900-01-01 00:00:00").cast("timestamp"),
-          col("PlannedStartOffsetDateTime")).as("START_TIME"),
+        col("ROUTE_NAME"), col("DIRECTION"), col("OPERATING_DAY"),
+        col("START_TIME"),
         col("OperatingDayDate")) // raw date for applyValidity; dropped there
   }
 

@@ -1,12 +1,18 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Parquet read by schema contract: the relation is opened with the
@@ -27,6 +33,31 @@ object ParquetContract {
     check(spark, table, path, schema)
     spark.read.schema(schema).parquet(path)
   }
+
+  /** What identifies the rows of a bare parquet scan: its schema, and for
+    * each file in its file index the filesystem's file key where there is
+    * one (so a hard link is the same file), else its path, with the file's
+    * length and modification time. None for any other relation (a JDBC or
+    * in-memory relation, a filtered or limited scan): no file listing
+    * stands for its rows. */
+  def version(df: DataFrame): Option[Seq[Any]] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+            .map(_.fileStatus).sortBy(_.getPath.toString)
+          Some(df.schema +: files.map(f =>
+            (fileKey(f.getPath), f.getLen, f.getModificationTime)))
+        case _ => None
+      }
+      case _ => None
+    }
+
+  private def fileKey(p: Path): Any =
+    if (p.toUri.getScheme != "file") p.toString
+    else Try(Files.readAttributes(Paths.get(p.toUri),
+        classOf[BasicFileAttributes]).fileKey()).toOption
+      .flatMap(Option(_)).getOrElse(p.toString)
 
   /** Throws when a contract column is absent from, or differently typed
     * in, the footer of the first data file under `path`. */

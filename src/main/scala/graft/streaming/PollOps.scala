@@ -1,16 +1,39 @@
 package graft.streaming
 
 import java.util.UUID
-import java.util.concurrent.{Callable, ExecutionException, Executors}
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.{Callable, ConcurrentHashMap, ExecutionException, Executors}
 
 import scala.util.{Failure, Try}
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Shared driver-side helpers for the streaming operators and the
   * multi-arm queries. */
 private[graft] object PollOps {
+
+  /** Tags of `inParallel` calls with a failed unit, until the call returns. */
+  private val failedTags = ConcurrentHashMap.newKeySet[String]()
+  private val watched = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkContext, java.lang.Boolean]())
+
+  private def siblingFailed(tag: String) = s"a sibling unit of $tag failed"
+
+  /** One listener per SparkContext: a job that starts carrying a failed
+    * call's tag is cancelled (`cancelJobsWithTag` reaches only the jobs
+    * running when a unit fails). */
+  private def cancelLateJobs(sc: SparkContext): Unit = watched.synchronized {
+    if (watched.add(sc)) sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(','))
+        tags.find(failedTags.contains).foreach(tag =>
+          sc.cancelJob(e.jobId, siblingFailed(tag)))
+      }
+    })
+  }
 
   /** Run independent driver-side units (per-poll appends/compactions on
     * DISJOINT state dirs, independent query arms) as concurrent Spark
@@ -25,8 +48,9 @@ private[graft] object PollOps {
     * Failure: the first failing unit cancels its siblings' Spark jobs
     * (every unit's jobs carry one job tag per call; a tag, not a job
     * group, because a group set here would replace the streaming query's
-    * own, which `query.stop()` cancels; a job a sibling starts after the
-    * cancellation still runs). Every unit is still settled
+    * own, which `query.stop()` cancels). The tag stays marked failed until
+    * the call returns, so a job a sibling starts after the failure is
+    * cancelled as it starts. Every unit is still settled
     * before anything is thrown, so no sibling is still writing state when
     * the caller's recovery starts (a batch interrupted mid-append is
     * re-run, the same crash class as the sequential form). The first
@@ -39,23 +63,25 @@ private[graft] object PollOps {
       val sc = SparkSession.getActiveSession
         .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
         .filterNot(_.isStopped)
+      sc.foreach(cancelLateJobs)
       val tag = s"graft-in-parallel-${UUID.randomUUID}"
-      val cancelled = new AtomicBoolean(false)
       val pool = Executors.newFixedThreadPool(units.size)
-      val futures = try units.map(u => pool.submit(new Callable[A] {
-        override def call(): A = {
-          sc.foreach(_.addJobTag(tag))
-          try u()
-          catch { case e: Throwable =>
-            if (cancelled.compareAndSet(false, true)) sc.foreach(
-              _.cancelJobsWithTag(tag, s"a sibling unit of $tag failed"))
-            throw e
-          } finally sc.foreach(_.removeJobTag(tag))
-        }
-      })) finally pool.shutdown()
-      val settled = futures.map(f => Try(f.get()).recoverWith {
-        case e: ExecutionException if e.getCause != null => Failure(e.getCause)
-      })
+      val settled = try {
+        val futures = try units.map(u => pool.submit(new Callable[A] {
+          override def call(): A = {
+            sc.foreach(_.addJobTag(tag))
+            try u()
+            catch { case e: Throwable =>
+              if (failedTags.add(tag))
+                sc.foreach(_.cancelJobsWithTag(tag, siblingFailed(tag)))
+              throw e
+            } finally sc.foreach(_.removeJobTag(tag))
+          }
+        })) finally pool.shutdown()
+        futures.map(f => Try(f.get()).recoverWith {
+          case e: ExecutionException if e.getCause != null => Failure(e.getCause)
+        })
+      } finally failedTags.remove(tag)
       def byCancel(e: Throwable): Boolean =
         Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
           .exists(c => String.valueOf(c.getMessage).contains(tag))

@@ -6,7 +6,7 @@ import java.time.Instant
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkSpec
-import graft.omm.{CancellationPipeline => P, OmmFixtures => F, OmmSchemas}
+import graft.omm.{CancellationPipeline => P, OmmFixtures => F}
 import graft.operators.CacheHygiene
 
 /** S5 polling semantics: per-poll now-binding, A2 cross-poll diff via
@@ -46,35 +46,6 @@ class CancellationStreamSpec extends SparkSpec {
     assert(sunk.select("poll_time").distinct().count() === 2)
   }
 
-  /** Per SQL execution `f` runs: its action call site and how many
-    * parquet scans in its executed plan produced rows in it. The plan
-    * graph of an execution that reads the per-poll cache also holds the
-    * cached plan's scans, but their row metrics only count in the
-    * execution whose jobs ran them. */
-  private def scansRunBy(f: => Unit): Seq[(String, Int)] = {
-    val store = spark.sharedState.statusStore
-    val before = store.executionsList().map(_.executionId).toSet
-    f
-    // the status listener consumes events in order: once a later
-    // sentinel execution has ended, every execution of `f` has too
-    spark.range(1).tail(1)
-    val deadline = System.nanoTime() + 30_000_000_000L
-    def ended = store.executionsList().filterNot(e => before(e.executionId))
-      .filter(_.completionTime.isDefined)
-    while (!ended.exists(_.description.startsWith("tail at")) &&
-      System.nanoTime() < deadline) Thread.sleep(50)
-    val execs = ended.filterNot(_.description.startsWith("tail at"))
-    assert(execs.nonEmpty, "no SQL execution of the poll reached the status store")
-    execs.map { e =>
-      val values = store.executionMetrics(e.executionId)
-      val ran = store.planGraph(e.executionId).allNodes
-        .filter(_.name.startsWith("Scan parquet"))
-        .count(_.metrics.exists(m => m.name == "number of output rows" &&
-          values.get(m.accumulatorId).exists(_ != "0")))
-      (e.description, ran)
-    }.toSeq
-  }
-
   test("one poll evaluates the snapshot pipeline once: downstream actions " +
     "read the persisted InMemoryRelation") {
     F.ensure(spark)
@@ -83,21 +54,24 @@ class CancellationStreamSpec extends SparkSpec {
     CancellationStream.pollOnce(spark, F.dir, s"$base/sink", s"$base/state",
       P.FromNow, t1, F.lookbackSeconds, F.zone)
     var r: CancellationStream.PollResult = null
-    val execs = scansRunBy {
+    val execs = ScansRun(spark) {
       r = CancellationStream.pollOnce(spark, F.dir, s"$base/sink",
         s"$base/state", P.FromNow, t2, F.lookbackSeconds, F.zone)
     }
     assert(r === CancellationStream.PollResult(6, 2, 3))
     assert(execs.size >= 3, s"expected counts + sink + state, got $execs")
-    val scanning = execs.filter(_._2 > 0)
+    val scanning = execs.filter(_._2.nonEmpty)
     assert(scanning.size === 1,
-      s"the 11-table join tree ran in ${scanning.size} of the poll's " +
+      s"the join tree ran in ${scanning.size} of the poll's " +
         s"executions, expected one: $execs")
     // the one action that runs it is the counting action, which also fills
-    // the cache the sink and state writes read: 11 table scans + the state
+    // the cache the sink and state writes read: the four incident tables
+    // + the state; the unchanged timetable is read from the held copy
     val (site, ran) = scanning.head
     assert(site.startsWith("collect at CancellationStream"), site)
-    assert(ran === OmmSchemas.contracts.size + 1, s"$site ran $ran scans")
+    assert(ran.size === 5, s"$site ran scans of $ran")
+    assert(!execs.exists(_._2.exists(ScansRun.timetable)),
+      s"a timetable table was scanned: $execs")
   }
 
   test("an empty snapshot counts 0 sent, new and repeated, with and " +
@@ -216,12 +190,14 @@ class CancellationStreamSpec extends SparkSpec {
         s"only ${q.recentProgress.length}/8 polls completed in 240s — " +
           "too few to observe per-poll cache behavior")
     } finally q.stop()
-    // bounded in-flight state: at most the one per-poll persist (+1 slack
-    // for the non-blocking unpersist to drain), never a growing backlog
-    assert(maxDuring <= baseline + 2,
+    // bounded in-flight state: the held departure dimension, the one
+    // per-poll persist (+1 slack for the non-blocking unpersist to drain),
+    // never a growing backlog
+    assert(maxDuring <= baseline + 3,
       s"persisted-RDD count grew to $maxDuring during the poll loop")
-    assert(sc.getPersistentRDDs.size <= baseline,
-      "a poll leaked persisted state past its finally block")
+    assert(sc.getPersistentRDDs.size <= baseline + 1,
+      "a poll leaked persisted state past its finally block (only the " +
+        "held departure dimension may stay)")
   }
 
   test("fail-fast: a poisoned poll stops the query and propagates the error") {
