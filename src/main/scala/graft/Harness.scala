@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** What the measuring mains (`Bench`, `Verify`, `tools.JobProf`) share:
-  * the untimed warm-up, the between-rep reset, the JSON string escape and
-  * the /proc contention witnesses. */
+  * the untimed warm-up, the between-rep reset, the one timed rep and the
+  * rep count, the JSON string escape and the /proc contention witnesses. */
 object Harness {
 
   /** Untimed warm-up: JVM/codegen/parquet-footer costs land here, not on
@@ -31,6 +31,24 @@ object Harness {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
+  }
+
+  /** Reps per query for every timing main (`Bench`, `tools.JobProf`), so
+    * their figures are the same measurement; the middle rep is the median. */
+  val Reps = 3
+
+  /** One timed rep of a registered query: `reset`, build the DataFrame,
+    * `count()` it. Returns the DataFrame (for its plan) and the wall
+    * seconds of build plus count. The reset drops what a previous rep
+    * persisted: cache lookup is by canonicalized plan, so without it reps
+    * 2..n of a persist-using query would read rep 1's cache. */
+  def rep(spark: SparkSession, sfDir: String,
+      query: (SparkSession, String) => DataFrame): (DataFrame, Double) = {
+    reset(spark)
+    val t0 = System.nanoTime()
+    val df = query(spark, sfDir)
+    df.count()
+    (df, (System.nanoTime() - t0) / 1e9)
   }
 
   /** JSON string literal: backslash, quote, and ALL control chars (<0x20)

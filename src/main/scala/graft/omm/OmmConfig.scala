@@ -97,8 +97,4 @@ object OmmConfig {
         .getOrElse(P.FromNow),
       connectionString = env.get("TRANSITDATA_PUBTRANS_CONN_STRING"))
   }
-
-  /** Env-only construction (same result as `fromConf(defaultConf, env)`). */
-  def fromEnv(env: Map[String, String] = sys.env): OmmConfig =
-    fromConf(defaultConf, env)
 }

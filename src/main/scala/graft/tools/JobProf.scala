@@ -7,8 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
 import graft.{Harness, Session, SparkEntry}
 
 /** The per-query profiler: after the standard warm-up, each named query
-  * runs three reps, each after `Bench`'s per-rep reset, so its figures
-  * compare with in-bench medians. Per rep it prints
+  * runs `Harness.Reps` reps of `Harness.rep`, the same timed rep `Bench`
+  * runs, so its figures are in-bench figures. Per rep it prints
   * `TIMING <q> rep<i> <wall> s jobs= load= steal_d=` (the job count is a
   * first-class figure: scheduling latency of many small jobs is what a
   * contended box amplifies), then the last rep's per-job durations and
@@ -41,13 +41,10 @@ object JobProf {
       }
     })
     for (name <- names) {
-      val walls = (1 to 3).map { rep =>
-        Harness.reset(spark)
+      val walls = (1 to Harness.Reps).map { rep =>
         lines.clear()
         val s0 = Harness.stealJiffies()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (_, wall) = Harness.rep(spark, sfDir, SparkEntry.queries(name))
         // listener delivery is async: let the bus drain so this rep's job
         // events do not land in the next rep's window
         Thread.sleep(800)

@@ -8,7 +8,7 @@ import graft.omm.{CancellationPipeline => P}
 class OmmConfigSpec extends AnyFunSuite {
 
   test("defaults mirror the reference HOCON") {
-    val c = OmmConfig.fromEnv(Map.empty)
+    val c = OmmConfig.fromConf(env = Map.empty)
     assert(c.intervalSeconds === 30)
     assert(c.timezone === "Europe/Helsinki")
     assert(c.mode === P.FromNow)
@@ -17,7 +17,7 @@ class OmmConfigSpec extends AnyFunSuite {
   }
 
   test("environment variables override, as in the reference") {
-    val c = OmmConfig.fromEnv(Map(
+    val c = OmmConfig.fromConf(env = Map(
       "POLLER_INTERVAL_SECS" -> "60",
       "OMM_DATA_TIMEZONE" -> "UTC",
       "CANCELLATIONS_FROM_TIME" -> "PAST",
@@ -31,7 +31,7 @@ class OmmConfigSpec extends AnyFunSuite {
 
   test("unknown mode fails at startup (Type:15-21), not silently") {
     intercept[IllegalArgumentException] {
-      OmmConfig.fromEnv(Map("CANCELLATIONS_FROM_TIME" -> "YESTERDAY"))
+      OmmConfig.fromConf(env = Map("CANCELLATIONS_FROM_TIME" -> "YESTERDAY"))
     }
   }
 

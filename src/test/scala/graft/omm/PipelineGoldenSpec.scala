@@ -64,6 +64,13 @@ class PipelineGoldenSpec extends SparkSpec {
     assert(rows.contains(("601", 1L)) && rows.contains(("601", 11L))) // D6
   }
 
+  test("SparkEntry.entry is the flagship run over the fixtures: the same 6 cancellations") {
+    def cases(df: org.apache.spark.sql.DataFrame) =
+      df.select("trip_id", "deviation_case_id").as[(String, Long)].collect().sorted
+    assert(cases(graft.SparkEntry.entry(spark)) === cases(deduped))
+    assert(cases(deduped).length === 6)
+  }
+
   test("D4 tiebreak: the later of the two RUNNING rows wins") {
     val ts = deduped.filter(col("trip_id") === "604")
       .select("event_ts_ms").as[Long].head()
