@@ -3,8 +3,6 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 import Harness.{json => q, loadavg, stealJiffies}
 
@@ -119,25 +117,15 @@ object Bench {
       s"""$run,"slowest":$slow,"detail":${q(detailPath)}}"""
   }
 
-  // Static-plan fingerprint: a preorder node-name walk of the prepared
-  // physical plan (AQE unwrapped to its initial plan; subqueries
-  // included), hashed. It must walk executedPlan: EnsureRequirements runs
-  // only in preparation, so sparkPlan has no Exchange nodes. Node names
-  // carry no expression ids, so equal fingerprints across runs mean the
-  // formulation did not change. Spill-terminal queries return a
-  // read-back scan, so several of them share one fingerprint.
-  private def unwrap(p: SparkPlan): SparkPlan = p match {
-    case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
-    case s: QueryStageExec => unwrap(s.plan)
-    case other => other
-  }
-  private def planWalk(p: SparkPlan): Seq[String] = {
-    val h = unwrap(p)
-    h.nodeName +: (h.children.flatMap(planWalk) ++ h.subqueries.flatMap(planWalk))
-  }
+  // Static-plan fingerprint: the node names of `Harness.planWalk` over
+  // the prepared physical plan (AQE at its initial plan: `count()` runs
+  // a different plan), hashed. Node names carry no expression ids, so
+  // equal fingerprints across runs mean the formulation did not change.
+  // Spill-terminal queries return a read-back scan, so several of them
+  // share one fingerprint.
   private def planInfo(df: DataFrame): (String, String) =
     try {
-      val ns = planWalk(df.queryExecution.executedPlan)
+      val ns = Harness.planWalk(df.queryExecution.executedPlan).map(_.nodeName)
       val sha = java.security.MessageDigest.getInstance("SHA-1")
         .digest(ns.mkString("|").getBytes("UTF-8"))
         .take(4).map(b => f"$b%02x").mkString

@@ -1,23 +1,25 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** What the measuring mains (`Bench`, `Verify`, `tools.JobProf`) share:
-  * the untimed warm-up, the between-rep reset, the one timed rep and the
-  * rep count, the JSON string escape and the /proc contention witnesses. */
+/** What the measuring mains (`Bench`, `Verify`, `tools.JobProf`,
+  * `tools.Explain`) share: the untimed warm-up, the between-rep reset,
+  * the one timed rep and the rep count, the physical-plan walk, the JSON
+  * string escape and the /proc contention witnesses. */
 object Harness {
 
   /** Untimed warm-up: JVM/codegen/parquet-footer costs land here, not on
-    * whichever query happens to run first. OMM fixture generation and a
-    * first read of every table family are warmed too — otherwise the
-    * first omm_* query pays fixture generation for the whole family and
-    * its figure misattributes the cost. */
+    * whichever query happens to run first. The flagship OMM pipeline
+    * runs once (fixture generation if absent, the OMM tables' first
+    * reads, the pipeline's codegen) and every table family gets a first
+    * read — otherwise the first omm_* query in sorted order pays for the
+    * whole family and its figure misattributes the cost. */
   def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
       spark.range(1000000L).selectExpr("sum(id)").collect()
-      graft.omm.OmmFixtures.ensure(spark)
-      spark.read.parquet(graft.omm.OmmFixtures.path("deviation_cases"))
-        .limit(1).count()
+      SparkEntry.entry(spark).count()
       Seq("lineitem", "orders", "events", "documents", "embeddings")
         .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count())
     } catch { case _: Throwable => () }
@@ -49,6 +51,24 @@ object Harness {
     val df = query(spark, sfDir)
     df.count()
     (df, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** The plan under the adaptive wrapper and its query stages: the FINAL
+    * plan once the DataFrame's own plan has run (`collect()`), the
+    * initial one otherwise (`count()` runs a different plan). Pass it
+    * `queryExecution.executedPlan`: EnsureRequirements runs only in
+    * preparation, so `sparkPlan` has no Exchange nodes. */
+  def unwrap(p: SparkPlan): SparkPlan = p match {
+    case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+    case s: QueryStageExec => unwrap(s.plan)
+    case other => other
+  }
+
+  /** Every node of `unwrap(p)` in preorder, subqueries included, each
+    * child unwrapped the same way. */
+  def planWalk(p: SparkPlan): Seq[SparkPlan] = {
+    val h = unwrap(p)
+    h +: (h.children.flatMap(planWalk) ++ h.subqueries.flatMap(planWalk))
   }
 
   /** JSON string literal: backslash, quote, and ALL control chars (<0x20)

@@ -37,12 +37,14 @@ object OmmFixtures {
 
   def path(table: String): String = s"$dir/$table.parquet"
 
-  /** Generate-if-absent; call from any OMM query. Cheap marker check. */
+  /** Generate-if-absent; call from any OMM query. Cheap marker check:
+    * deleting `fixtures/omm/_GENERATED` makes the next call regenerate
+    * (deterministic), e.g. after editing this object. */
   def ensure(spark: SparkSession): Unit = synchronized {
     if (!Files.exists(Paths.get(s"$dir/_GENERATED"))) generate(spark)
   }
 
-  def generate(spark: SparkSession): Unit = {
+  private def generate(spark: SparkSession): Unit = {
     import spark.implicits._
 
     def write(df: DataFrame, table: String): Unit =

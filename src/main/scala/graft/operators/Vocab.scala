@@ -119,7 +119,7 @@ object Vocab {
     * count plans to this function, and Catalyst inlines each reference
     * — the executed q175 plan re-scans the corpus once per marginal
     * join (4 scans total, one AQE stage reuse; measured via
-    * `tools.ExecutedPlan`). At fixture scale that's noise; a caller
+    * `tools.Explain`). At fixture scale that's noise; a caller
     * mining collocations from a petabyte corpus should materialize the
     * two vocab-sized count tables first (one scan each) and call this
     * entry, paying 2 corpus scans total. */

@@ -951,8 +951,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
   // values documented in SCALE.md.
 
   /** Per-query hit counts of an approximate arm against its exact
-    * baseline — the raw recall table the floors below assert over (and
-    * what RecallMeasure prints when re-measuring the documented figures). */
+    * baseline — the raw recall table the floors below assert over. */
   private[queries] def recallHits(qset: DataFrame, ann: DataFrame,
                          exact: DataFrame): DataFrame = {
     val hitCounts = ann.select("query_id", "neighbor_id")
@@ -997,7 +996,6 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
   //   q243  sf0.001: Σ46 (.92)   sf0.01: Σ40 (.80)   sf0.1: Σ36 (.72)
   // — the codebook ladder at the scale where the shortlist is tight:
   // flat seed .56 < seed residual .68 < learned-subspace residual .72.
-  // (re-measure with `runMain graft.tools.RecallMeasure`).
   private[queries] lazy val q145NProbe = 4 // half the lists: the recall queries' probe budget
   private[queries] lazy val q145Shortlist = 200 // ADC shortlist R >> k, exact-reranked
   private[queries] lazy val q145PerQueryFloor = 1L
@@ -1122,8 +1120,7 @@ private[queries] trait TdqEmbeddings { this: TestdataQueries.type =>
   // (Quantize.learnedSubCodebooks) replacing q148's seed-row residual
   // codebook — same coarse quantizer, serving shape (nProbe-pruned ADC
   // shortlist → exact re-rank), floors discipline, and recall-floor
-  // oracle. The measured uplift vs the seed arm is in SCALE.md
-  // (`runMain graft.tools.RecallMeasure` prints all three arms).
+  // oracle. The measured uplift vs the seed arm is in SCALE.md.
   private[queries] lazy val q243PerQueryFloor = 1L
   private[queries] lazy val q243TotalFloor = 20L
 

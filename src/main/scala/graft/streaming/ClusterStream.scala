@@ -166,39 +166,12 @@ object ClusterStream {
         import spark.implicits._
         val ids: Set[Long] =
           pairRows.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-        val eps = ids.toSeq.toDF("id")
-        var cur = eps.select(col("id"), col("id").as("root"))
-        // track the PERSISTED frame itself: unpersisting a derived
-        // frame (e.g. nxt.drop) misses the cache entry, and a leaked
-        // entry is a stale-file time bomb — CacheManager matches later
-        // polls' plans by root path, resurrecting scans of files a
-        // compaction swap already deleted
-        var pinned = cur.persist()
-        pinned.count()
-        val al = spark.read.parquet(path)
-          .select(col("node").as("root"), col("parent").as("__p"))
-        var moved = 1L
-        var hops = 0
-        while (moved > 0) {
-          require(hops < maxChase,
-            s"alias chain deeper than maxChase=$maxChase — compaction broken?")
-          val nxt = cur.join(al, Seq("root"), "left")
-            .select(col("id"),
-              coalesce(col("__p"), col("root")).as("root"),
-              col("__p").isNotNull.as("__m"))
-            .persist()
-          moved = nxt.filter(col("__m")).count()
-          pinned.unpersist()
-          pinned = nxt
-          cur = nxt.drop("__m")
-          hops += 1
-        }
         // batch-local union-find over resolved roots, driver-side
         // (rows ≤ 2 × batch pair count)
-        val out = cur.collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        pinned.unpersist()
-        out
+        withChasedRoots(spark, ids.toSeq.toDF("id"), path, hasState,
+            maxChase) { roots =>
+          roots.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        }
       }
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -256,8 +229,51 @@ object ClusterStream {
       val eps = pairs.select(col("id_a").as("id"))
         .union(pairs.select(col("id_b").as("id")))
         .distinct()
-      var cur = eps.select(col("id"), col("id").as("root"))
-      var pinned = cur.persist()
+      withChasedRoots(spark, eps, path, hasState, maxChase) { cur =>
+        val rootEdges = pairs
+          .join(cur.select(col("id").as("id_a"), col("root").as("src")),
+            Seq("id_a"))
+          .join(cur.select(col("id").as("id_b"), col("root").as("dst")),
+            Seq("id_b"))
+          .select(col("src"), col("dst"))
+          .filter(col("src") =!= col("dst"))
+          .distinct()
+        val rootVertices = rootEdges.select(col("src").as("id"))
+          .union(rootEdges.select(col("dst").as("id")))
+          .distinct()
+        val newAliases = DupClusters
+          .connectedComponents(rootVertices, rootEdges,
+            failOnNonConvergence = true)
+          .filter(col("id") =!= col("cluster_rep"))
+          .select(col("id").as("node"), col("cluster_rep").as("parent"))
+          .persist()
+        val nMerges = newAliases.count()
+        if (nMerges > 0) {
+          // aliases are 16 B/row metadata; land them in O(bytes/64MB) files
+          val nFiles = math.max(1L, (nMerges * 16L) >> 26).toInt
+          // raw append: the log's own rewrite maintains it (see above)
+          newAliases.coalesce(nFiles).write.mode("append").parquet(path)
+          compressIfNeeded(spark, path, compactAfterFiles)
+        }
+        newAliases.unpersist()
+        BatchResult(nPairs, nMerges)
+      }
+    }
+
+  /** Resolve the batch endpoints `eps` (one `id` column) through the
+    * CURRENT forest at `path`: one join per chain hop, the endpoint side
+    * batch-bounded throughout. `use` gets the (id, root) frame while it
+    * is cached; it is unpersisted after. */
+  private def withChasedRoots[A](spark: SparkSession, eps: DataFrame,
+      path: String, hasState: Boolean, maxChase: Int)(use: DataFrame => A): A = {
+    var cur = eps.select(col("id"), col("id").as("root"))
+    // track the PERSISTED frame itself: unpersisting a derived frame
+    // (e.g. nxt.drop) misses the cache entry, and a leaked entry is a
+    // stale-file time bomb — CacheManager matches later polls' plans by
+    // root path, resurrecting scans of files a compaction swap already
+    // deleted
+    var pinned = cur.persist()
+    try {
       pinned.count()
       if (hasState) {
         val al = spark.read.parquet(path)
@@ -279,35 +295,9 @@ object ClusterStream {
           hops += 1
         }
       }
-      val rootEdges = pairs
-        .join(cur.select(col("id").as("id_a"), col("root").as("src")),
-          Seq("id_a"))
-        .join(cur.select(col("id").as("id_b"), col("root").as("dst")),
-          Seq("id_b"))
-        .select(col("src"), col("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      val rootVertices = rootEdges.select(col("src").as("id"))
-        .union(rootEdges.select(col("dst").as("id")))
-        .distinct()
-      val newAliases = DupClusters
-        .connectedComponents(rootVertices, rootEdges,
-          failOnNonConvergence = true)
-        .filter(col("id") =!= col("cluster_rep"))
-        .select(col("id").as("node"), col("cluster_rep").as("parent"))
-        .persist()
-      val nMerges = newAliases.count()
-      if (nMerges > 0) {
-        // aliases are 16 B/row metadata; land them in O(bytes/64MB) files
-        val nFiles = math.max(1L, (nMerges * 16L) >> 26).toInt
-        // raw append: the log's own rewrite maintains it (see above)
-        newAliases.coalesce(nFiles).write.mode("append").parquet(path)
-        compressIfNeeded(spark, path, compactAfterFiles)
-      }
-      pinned.unpersist()
-      newAliases.unpersist()
-      BatchResult(nPairs, nMerges)
-    }
+      use(cur)
+    } finally pinned.unpersist()
+  }
 
   /** Label a vertex universe with its duplicate-cluster representative
     * (the component minimum — q44's labeling): resolve the forest by

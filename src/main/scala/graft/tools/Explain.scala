@@ -1,9 +1,16 @@
 package graft.tools
 
-/** Physical-plan inspection: prints `explain("formatted")` for the named
-  * registered queries (or a default set of the structurally interesting
-  * ones). Usage: sbt "runMain graft.tools.Explain [sfDir] [q1 q2 ...]"
-  */
+import graft.Harness
+
+/** Final-plan inspection: runs each named registered query (or a default
+  * set of the structurally interesting ones) and prints its post-AQE
+  * physical plan, with the scan / shuffle / broadcast / reuse node counts
+  * of that plan — the numbers plan-shape claims in SURVEY/SCALE cite. A
+  * static `explain` hides runtime exchange reuse and join re-planning
+  * behind `AdaptiveSparkPlan isFinalPlan=false`; `PushedFilters` still
+  * shows on every `FileScan`. The walk is `Harness.planWalk`, the one
+  * `Bench` fingerprints. Usage:
+  * `sbt "runMain graft.tools.Explain [sfDir] [q1 q2 ...]"` */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -16,11 +23,20 @@ object Explain {
       "q61_zorder_key", "q62_decontaminate", "q64_kmv_by_group",
       "q68_bm25_topk", "q70_countmin", "q71_bpe_pairs", "q72_bigram_nll",
       "q73_mix_sample", "q74_pack_examples", "q84_doc_chunks",
-      "q85_knn_classify")
+      "q85_knn_classify", "q175_pmi_collocations")
     val spark = graft.Session()
+    spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n######## $n ########")
-      graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val nodes = Harness.planWalk(plan).map(_.nodeName)
+      def c(s: String) = nodes.count(_.contains(s))
+      println(s"[executed] scans=${c("Scan")} " +
+        s"shuffles=${c("Exchange") - c("ReusedExchange") - c("Broadcast")} " +
+        s"broadcasts=${c("BroadcastExchange")} reused=${c("Reused")}")
+      println(Harness.unwrap(plan).toString)
     }
     spark.stop()
   }

@@ -1,11 +1,12 @@
 package graft.tools
 
 /** End-to-end proof of the GraftGuards EXTENSION WIRING (the
-  * GraftGuardsSpec tests the rule object directly; this drives the
-  * `spark.sql.extensions` config path in a fresh session, which a unit
-  * suite sharing one SparkSession cannot): builds a guarded session,
-  * asserts a hint-less cartesian and a global window FAIL at planning,
-  * the sanctioned forms pass, and the escape hatch works.
+  * GraftGuardsSpec tests the rule object directly, and runs this main in
+  * a child JVM: it drives the `spark.sql.extensions` config path in a
+  * fresh session, which a suite sharing one SparkSession cannot):
+  * builds a guarded session, asserts a hint-less cartesian and a global
+  * window FAIL at planning, the sanctioned forms pass, and the escape
+  * hatch works.
   * Run: sbt "runMain graft.tools.GuardsDemo" — exits non-zero on any
   * violation of the expected verdicts. */
 object GuardsDemo {

@@ -192,7 +192,7 @@ class PlanShapeSpec extends SparkSpec {
     val p = plan("q216_source_affinity")
     // every shuffle keys on src (the static plan repeats the identical
     // wide-agg exchange 4x; AQE reuses one at runtime — the
-    // tools.ExecutedPlan audit in SCALE.md records 1 exchange reused 3x)
+    // executed-plan audit in SCALE.md records 1 exchange reused 3x)
     val exchangeBlocks = p.split("(?m)^\\(\\d+\\) ")
       .filter(b => b.startsWith("Exchange"))
     assert(exchangeBlocks.nonEmpty &&

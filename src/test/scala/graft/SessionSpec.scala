@@ -1,7 +1,5 @@
 package graft
 
-import java.lang.management.ManagementFactory
-import java.nio.file.Paths
 import java.util.concurrent.{ConcurrentLinkedQueue, TimeUnit}
 
 import scala.concurrent.{Await, Future, Promise}
@@ -29,16 +27,7 @@ class SessionSpec extends SparkSpec {
     "reaches its first poll") {
     OmmFixtures.ensure(spark)
     val base = CacheHygiene.tempDir("service")
-    val java = Paths.get(System.getProperty("java.home"), "bin", "java")
-    // the JDK 17 module opens Spark needs (spark-submit would add them);
-    // nothing else of this JVM's options, so no spark.* property leaks in
-    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filter(_.startsWith("--add-opens"))
-    val pb = new ProcessBuilder((Seq(java.toString, "-Xmx1g",
-        s"-Djava.io.tmpdir=$base") ++
-      opens ++ Seq("-cp", System.getProperty("java.class.path"),
-        "graft.omm.ServiceMain")).asJava)
-      .redirectErrorStream(true)
+    val pb = ChildJvm("graft.omm.ServiceMain", base)
     val env = pb.environment()
     env.remove("TRANSITDATA_PUBTRANS_CONN_STRING")
     env.put("GRAFT_TABLES_DIR", OmmFixtures.dir)

@@ -63,7 +63,7 @@ class OmmConfigSpec extends AnyFunSuite {
     assert(conf("omm.interval") === "30")
   }
 
-  test("fromConf over a full conf file mirrors fromEnv semantics") {
+  test("fromConf over the default conf file takes the env overrides") {
     val c = OmmConfig.fromConf(OmmConfig.defaultConf,
       Map("CANCELLATIONS_FROM_TIME" -> "PAST"))
     assert(c.mode === P.FromPast)

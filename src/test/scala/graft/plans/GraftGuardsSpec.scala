@@ -1,15 +1,24 @@
 package graft.plans
 
+import java.util.concurrent.TimeUnit
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{ChildJvm, SparkSpec}
+import graft.operators.CacheHygiene
 
 /** The scale-guard rule: flags the banned shapes, admits the sanctioned
   * ones, and — the strong claim — every registered query's ANALYZED
-  * plan passes, so the library obeys the rule it ships to users. */
+  * plan passes, so the library obeys the rule it ships to users. The
+  * `spark.sql.extensions` wiring needs a fresh session, so
+  * `tools.GuardsDemo` proves it in a child JVM. */
 class GraftGuardsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -73,5 +82,21 @@ class GraftGuardsSpec extends SparkSpec {
           a.guardError.map(g => s"$name: $g").toSeq
       }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("GuardsDemo: a session built with spark.sql.extensions = " +
+      "GraftGuards rejects the banned shapes (child JVM)") {
+    val proc = ChildJvm("graft.tools.GuardsDemo",
+      CacheHygiene.tempDir("guards")).start()
+    val out = Future(scala.io.Source.fromInputStream(proc.getInputStream).mkString)
+    try {
+      assert(proc.waitFor(4, TimeUnit.MINUTES), "GuardsDemo did not exit")
+      val log = Await.result(out, 30.seconds)
+      assert(proc.exitValue() === 0, log)
+      assert(log.linesIterator.contains("[guards] OK"), log)
+    } finally {
+      proc.destroy()
+      if (!proc.waitFor(30, TimeUnit.SECONDS)) proc.destroyForcibly().waitFor()
+    }
   }
 }
